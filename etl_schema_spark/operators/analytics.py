@@ -1036,7 +1036,7 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: event_type is a hot key, so ranks come from the
     distributed two-phase pattern (``distributed.grouped_running_sum`` of
-    1s over a range partition = per-group global rank with bounded task
+    1s over order-key chunks = per-group global rank with bounded task
     state) — never `row_number() OVER (PARTITION BY event_type)`, which
     sorts a whole type in one task. Two rank passes (value, then
     |value - median|), each joined back via broadcast of the
@@ -1059,10 +1059,9 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.3): each pass SELECTS one order statistic, so the full
     # per-row rank (sort every chunk + offsets join onto every row) is
     # replaced by grouped_rank_pick — per-chunk counts locate the median's
-    # chunk, only that chunk sorts. The pass's materialized range split
-    # (p1.rows / p2.rows) still feeds the next stage — one events scan
-    # total, the `counts` table now derived from the split's own chunk
-    # counts instead of a second scan.
+    # chunk, only that chunk sorts. The pass's input (p1.rows / p2.rows)
+    # feeds the next stage, and the `counts` table comes from the pass's
+    # own chunk counts instead of a separate count query.
     # single_target=True (r14): one median rank per type, so the
     # per-chunk target-array aggregate buys nothing and measurably cost
     # ~0.2-0.4 s per pass here (see grouped_rank_pick).
@@ -1161,7 +1160,7 @@ def tail_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles are not).
 
     Scale shape: one two-phase distributed rank pass
-    (``distributed.grouped_running_sum`` of 1s over a range partition by
+    (``distributed.grouped_running_sum`` of 1s over chunks of
     (event_type, value)) serves ALL percentiles at once — the rank table
     is computed once and filtered against the |types| x |percentiles|
     broadcast target list. Never `percentile() OVER (PARTITION BY
@@ -1939,7 +1938,7 @@ def trimmed_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: event_type is a hot key, so ranks come from the
     distributed two-phase pattern (``distributed.grouped_running_sum`` —
-    range partition + per-partition window + broadcast prefix offsets),
+    order-key chunks + per-chunk window + broadcast prefix offsets),
     never `row_number() OVER (PARTITION BY event_type)` (one task per
     type at 100 TB). Tail bounds join back via a broadcast of the
     |event_type|-sized count table.

@@ -289,13 +289,13 @@ def epoch_shuffle(spark: SparkSession, sf_dir: str, seed: str = "epoch0") -> Dat
 
     The scale point is the *rank*, not the sort: a global ROW_NUMBER is a
     single-partition window — the one shape that cannot scale. Here the
-    permutation rank is computed distributed: range-partition by the
-    shuffle key (Spark's total-order sort machinery), count rows per
-    partition (a metadata-sized aggregate), turn counts into cumulative
-    offsets, and add the within-partition rank — position = offset +
-    local rank, exactly the global rank because range partitions are
-    ordered and md5 keys are unique. No stage ever holds more than one
-    partition's rows; the offset table is |partitions| rows, broadcast.
+    permutation rank is computed distributed: chunk by the shuffle key's
+    hex prefix (an order-preserving bucket), count rows per chunk (a
+    metadata-sized aggregate), turn counts into cumulative offsets, and
+    add the within-chunk rank — position = offset + local rank, exactly
+    the global rank because chunks are ordered and md5 keys are unique.
+    No stage ever holds more than one chunk's rows; the offset table is
+    |chunks| rows, broadcast.
 
     At 100 TB, writing the result back partitioned by `position div
     block_size` yields the shuffled shards a data loader streams
@@ -305,23 +305,14 @@ def epoch_shuffle(spark: SparkSession, sf_dir: str, seed: str = "epoch0") -> Dat
     keyed = docs.withColumn(
         "shuffle_key", F.md5(F.concat(F.lit(f"{seed}:"), F.col("doc_id").cast("string")))
     )
-    # r14 (guide §2.4): the chunk id is a PURE FUNCTION of the md5 key
-    # (hex_prefix_bucket — monotone in shuffle_key, uniform by
-    # construction), so the offset aggregate and the rank join compute
-    # the identical chunk assignment under any re-execution or partition
-    # recompute. The r12/r13 sampled range split — whose boundary sampler
-    # is RDD-id-seeded and therefore needed the materialize seam to
-    # freeze one execution — is gone, and with it the per-call checkpoint
-    # write + read (distributed.py module docstring: deterministic-bucket
-    # mode). The rank join's hash exchange is the only full-data shuffle
-    # and AQE sizes it adaptively.
-    from ..session import shuffle_partitions
-    from .distributed import BUCKETS_PER_PARTITION, hex_prefix_bucket
+    # The chunk id is a PURE FUNCTION of the md5 key (distributed.chunk_id
+    # — monotone in shuffle_key, uniform by construction), so the offset
+    # aggregate and the rank join compute the identical chunk assignment
+    # under any re-execution or partition recompute. The rank join's hash
+    # exchange is the only full-data shuffle and AQE sizes it adaptively.
+    from .distributed import chunk_id
 
-    nb = BUCKETS_PER_PARTITION * shuffle_partitions(spark)
-    sorted_df = keyed.withColumn(
-        "_pid", hex_prefix_bucket(F.col("shuffle_key"), nb)
-    )
+    sorted_df = keyed.withColumn("_pid", chunk_id(keyed, "shuffle_key"))
     counts = sorted_df.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
     w_off = (
         Window.orderBy("_pid")
@@ -367,10 +358,10 @@ def source_token_budget(
     subset (the "take N tokens per domain" stage of a data-mixture build).
 
     The per-source cumulative sum comes from the distributed two-phase
-    pattern (``distributed.grouped_running_sum``: range-partition by
-    (source, md5 key) + broadcast prefix offsets + partition-local
-    window) — never ``Window.partitionBy(source)``, which would sort an
-    entire source in one task at 100 TB. The md5 ordering makes the kept
+    pattern (``distributed.grouped_running_sum``: chunk by (source, md5
+    prefix) + broadcast prefix offsets + chunk-local window) — never
+    ``Window.partitionBy(source)``, which would sort an entire source in
+    one task at 100 TB. The md5 ordering makes the kept
     set a uniform random — but reproducible — sample of each source.
     """
     # NULL-key contract (edge fuzz wave 6): a NULL source is outside the
@@ -388,18 +379,9 @@ def source_token_budget(
         .filter(F.col("source").isNotNull())
         .select("doc_id", "source", "n_chars")
     )
-    # r14: the order key is an md5, so the chunk id can be its
-    # hex-prefix bucket — deterministic, monotone, uniform — instead of
-    # the sampled range split + materialize seam (guide §2.4; see
-    # distributed.py "deterministic buckets").
-    from ..session import shuffle_partitions
-    from .distributed import BUCKETS_PER_PARTITION, hex_prefix_bucket
-
-    order_key = F.md5(F.col("doc_id").cast("string"))
-    nb = BUCKETS_PER_PARTITION * shuffle_partitions(spark)
     cum = grouped_running_sum(
-        docs, "source", order_key, "n_chars", "cum_chars",
-        bucket_of=hex_prefix_bucket(order_key, nb),
+        docs, "source", F.md5(F.col("doc_id").cast("string")), "n_chars",
+        "cum_chars",
     )
     return (
         cum.filter(F.col("cum_chars") <= budget_chars)

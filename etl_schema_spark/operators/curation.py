@@ -1226,8 +1226,8 @@ def ccnet_source_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     within and are excluded (wave-6 NULL-key contract, both sides).
 
     Scale shape: the per-source rank comes from the distributed
-    two-phase pattern (grouped_running_sum: range-partition by (source,
-    score), broadcast prefix offsets) — never Window.partitionBy(source),
+    two-phase pattern (grouped_running_sum: chunk by (source, score),
+    broadcast prefix offsets) — never Window.partitionBy(source),
     which would sort a whole domain in one task; source sizes are a
     broadcast dim. Tertile boundaries are exact rank arithmetic (3*rk vs
     n), so ties resolve deterministically by (logprob, doc_id).

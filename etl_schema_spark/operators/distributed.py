@@ -8,59 +8,57 @@ generalizing the two-phase distributed-rank pattern proven in
 ``corpus.epoch_shuffle``:
 
   grouped_running_sum   SUM(v) OVER (PARTITION BY g ORDER BY o ROWS
-                        UNBOUNDED PRECEDING) — range-partition by
-                        (g, o), aggregate per-(partition, g) subtotals
-                        (a metadata-sized table: |partitions| × |groups|
-                        rows), prefix-sum those into broadcast offsets,
-                        then add a (partition, g)-local running sum.
-                        No task ever sorts more than one range
-                        partition's worth of one group.
+                        UNBOUNDED PRECEDING) — chunk each group by
+                        (g, chunk_id(o)), aggregate per-(chunk, g)
+                        subtotals (a metadata-sized table), prefix-sum
+                        those into broadcast offsets, then add a
+                        (chunk, g)-local running sum. No task ever sorts
+                        more than one chunk's worth of one group.
 
-The local window keys on (_pid, g) — cardinality |partitions| × |groups|
-— so its exchange hash-distributes evenly even when ``g`` alone is hot.
-Correctness does not depend on where the sampled range boundaries land:
-offsets are computed from the partitioning actually materialized (the
-ranged frame is scratch-materialized so both consumers read the same
-immutable split, exactly as in epoch_shuffle).
+The local window keys on (_pid, g) — cardinality |chunks| × |groups| — so
+its exchange hash-distributes evenly even when ``g`` alone is hot.
 
-TWO CHUNKING MODES (r14). The two-phase pattern needs chunks that are
-contiguous in (group, order); how chunks are assigned decides whether the
-materialize seam is needed:
+ONE CHUNKING MODE. The two-phase pattern needs chunks that are contiguous
+in (group, order). :func:`chunk_id` derives the chunk from the order key
+with a PURE, order-preserving row function — a log-linear bin of a
+numeric lead (the deterministic-bin idea of ``sketches``' log-histogram
+and the reference's ``FLOOR(LOG10(x)/0.02)`` distribution buckets), the
+hex-prefix bucket of an md5-style string lead. Both phases (the offsets
+aggregate and the local window) compute the identical assignment under
+any re-execution, partition count or task retry, so the input is plain
+lineage: no sampling job, no frozen copy, and a lost partition simply
+recomputes. The cost is that each phase evaluates the upstream itself;
+the chunk exchange is the (chunk, group) hash shuffle the local window
+needs anyway, and AQE coalesces it.
 
-  sampled range split (default)    ``repartitionByRange`` — balanced for
-      ANY order-key distribution, but the boundary sampler is seeded by
-      the runtime RDD id (RangePartitioner.sketch), so two executions of
-      the same plan split DIFFERENTLY even over byte-identical input.
-      Both phases must therefore observe one frozen execution: the
-      ranged frame goes through scratch.materialize (VERDICT r12 item 4;
-      verified empirically in r14 — an unfrozen shared range subtree
-      returned wrong medians even over a deterministic parquet scan, and
-      exchange reuse does NOT rescue it because branch-specific column
-      pruning makes the two exchange subtrees non-identical).
-
-  deterministic buckets (``bucket_of``)    when the order key carries a
-      uniform hash prefix (md5-keyed shuffles: epoch_shuffle,
-      source_token_budget, triplet/label rings), the chunk id can be a
-      PURE FUNCTION of the key (``hex_prefix_bucket``) — monotone in the
-      order, uniform by construction, identical under any re-execution
-      or partition recompute. No sampling job, no materialize seam, no
-      checkpoint I/O; the chunk exchange is a plain hash shuffle that
-      AQE coalesces adaptively. This is the sampling-free fast path; it
-      is NOT valid for value-ordered ranks (mad/tail percentiles), whose
-      key distribution is arbitrary — those stay on the frozen range
-      split.
+A sampled ``repartitionByRange`` split cannot replace the bin: its
+boundary sampler is seeded by the runtime RDD id, so two executions of
+the same plan split differently and the offsets silently disagree with
+the rows they are added to (verified in r14 over a deterministic scan).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-# Deterministic buckets per session shuffle partition: >= 20-100x more
+# Deterministic hex buckets per session shuffle partition: >= 20-100x more
 # distinct bucket values than partitions so the hash exchange spreads
 # evenly (guide §2.5 — too few synthetic keys leave partitions empty),
 # while the offsets table stays metadata-sized (|buckets| x |groups|).
 BUCKETS_PER_PARTITION = 32
+
+# Log-linear chunk id of a numeric lead: 2^MANTISSA_BITS equal-width bins
+# per power of two (relative bin width 2^-MANTISSA_BITS). An integer lead
+# below 2^(MANTISSA_BITS + 1) gets a bin of its own.
+MANTISSA_BITS = 14
+_EXP_LO = -1022  # smallest normal exponent: |x| below 2^_EXP_LO bins with 0
+# +-inf and NaN (which Spark sorts above +inf) bin above every finite |x|
+_MAG_MAX = ((1024 - _EXP_LO) << MANTISSA_BITS) + 1
+_BIN_NULL = -(_MAG_MAX + 1)  # Spark sorts NULL first ascending
+# The next field's bin, shifted non-negative, fits below one lead step.
+_NEXT_SPAN = 2 * _MAG_MAX + 3
 
 
 def hex_prefix_bucket(key: Column, n_buckets: int) -> Column:
@@ -70,13 +68,123 @@ def hex_prefix_bucket(key: Column, n_buckets: int) -> Column:
 
     Monotone nondecreasing in the key's string order (hex digit order ==
     numeric order), uniform for hash-derived keys, and a pure function of
-    the row — so both phases of a two-phase rank compute the identical
-    chunk assignment under any re-execution, with no sampling and no
-    materialize seam (module docstring). ``v * n_buckets`` stays exact:
-    v < 2^32 and n_buckets <= 2^20 keep the product under 2^52.
+    the row. ``v * n_buckets`` stays exact: v < 2^32 and n_buckets <= 2^20
+    keep the product under 2^52. A NULL key takes bucket -1 (Spark sorts
+    NULL first). Any other key that does not start with 8 lowercase hex
+    digits fails the query through ``raise_error``: ``conv`` would parse
+    its valid prefix and land it in a bucket that breaks the order.
     """
     v = F.conv(F.substring(key, 1, 8), 16, 10).cast("bigint")
-    return F.shiftright(v * F.lit(int(n_buckets)), 32)
+    return (
+        F.when(key.isNull(), F.lit(-1).cast("bigint"))
+        .when(key.rlike("^[0-9a-f]{8}"), F.shiftright(v * F.lit(int(n_buckets)), 32))
+        .otherwise(
+            F.raise_error(
+                F.concat(F.lit("chunk key is not lowercase hex: "), key)
+            )
+        )
+    )
+
+
+def _numeric_bin(x: Column) -> Column:
+    """Order-preserving log-linear bin of a numeric column: the sign, then
+    exponent and top MANTISSA_BITS mantissa bits of |x|.
+
+    ``floor(log2 |x|)`` may land one off near a power of two; the mantissa
+    term then reads -1 or 2^M and the sum is still the true bin, because
+    ``|x| / 2^e`` is exact. Magnitudes below 2^_EXP_LO (zeros, subnormals)
+    share bin 0 and NULL takes the lowest bin. The exponent is clamped at
+    1023 and the mantissa ratio at 2, so +-inf and NaN land in one bin
+    above every finite magnitude and no intermediate can overflow (ANSI
+    mode raises ARITHMETIC_OVERFLOW on an infinite exponent cast to
+    bigint)."""
+    a = F.abs(x.cast("double"))
+    e = F.floor(F.least(F.log2(a), F.lit(1023.0)))
+    ratio = F.least(a / F.pow(F.lit(2.0), e), F.lit(2.0))
+    m = F.floor((ratio - 1) * (1 << MANTISSA_BITS))
+    mag = F.when(a < 2.0**_EXP_LO, 0).otherwise(
+        (e - _EXP_LO) * (1 << MANTISSA_BITS) + m + 1
+    )
+    sign = F.when(x < 0, -1).otherwise(1)
+    return F.when(x.isNull(), _BIN_NULL).otherwise(sign * mag)
+
+
+def chunk_id(df: DataFrame, order_col: str) -> Column:
+    """The chunk id of every two-phase rank: a pure, order-preserving
+    (monotone nondecreasing) bigint function of the leading field of
+    ``df[order_col]`` (the column itself unless it is a struct).
+
+    - numeric lead: :func:`_numeric_bin`. An integer lead whose bin is
+      exact (|x| < 2^(MANTISSA_BITS+1)) appends the bin of a numeric next
+      field, so heavy ties on a small count split by their unique id.
+      Monotone: leads sharing a bin are either equal (then the next field
+      decides) or both inexact (both append 0).
+    - string lead: :func:`hex_prefix_bucket`, which fails loudly on a key
+      that is not lowercase hex.
+    """
+    dtype = df.schema[order_col].dataType
+    col = F.col(order_col)
+    fields = dtype.fields if isinstance(dtype, T.StructType) else []
+    if fields:
+        lead, lead_t = col.getField(fields[0].name), fields[0].dataType
+    else:
+        lead, lead_t = col, dtype
+    if isinstance(lead_t, T.StringType):
+        from ..session import shuffle_partitions
+
+        nb = BUCKETS_PER_PARTITION * shuffle_partitions(df.sparkSession)
+        return hex_prefix_bucket(lead, nb)
+    if not isinstance(lead_t, T.NumericType):
+        raise TypeError(f"no chunk id for an order key led by {lead_t}")
+    lead_bin = _numeric_bin(lead)
+    if (
+        not isinstance(lead_t, T.IntegralType)
+        or len(fields) < 2
+        or not isinstance(fields[1].dataType, T.NumericType)
+    ):
+        return lead_bin
+    exact = F.abs(lead.cast("double")) < float(2 << MANTISSA_BITS)
+    nxt = _numeric_bin(col.getField(fields[1].name)) - _BIN_NULL
+    return lead_bin * _NEXT_SPAN + F.when(exact, nxt).otherwise(0)
+
+
+def _free_name(df: DataFrame, base: str) -> str:
+    """``base`` with leading underscores added until no column of ``df``
+    carries it: temp columns must not clobber caller columns (plan-audit
+    regexes match ``_+pid``)."""
+    name = base
+    while name in df.columns:
+        name = "_" + name
+    return name
+
+
+def _ranged_chunks(df, group_col, order_c, weight):
+    """Shared first phase: chunk ``df`` by (group, chunk_id(order)) and
+    return (ranged, chunk, c_ord, c_pid, c_off, c_cnt) where chunk is the
+    metadata-sized per-chunk table (_pid, group, _off, _cnt) — _cnt the
+    chunk's sum of ``weight``, _off the group's sum in earlier chunks."""
+    c_ord, c_pid, c_off, c_cnt = (
+        _free_name(df, b) for b in ("_ord", "_pid", "_off", "_cnt")
+    )
+    keyed = df.withColumn(c_ord, order_c)
+    ranged = keyed.withColumn(c_pid, chunk_id(keyed, c_ord))
+    per = ranged.groupBy(c_pid, group_col).agg(F.sum(weight).alias(c_cnt))
+    w_off = (
+        Window.partitionBy(group_col)
+        .orderBy(c_pid)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    chunk = per.select(
+        c_pid,
+        group_col,
+        F.coalesce(F.sum(c_cnt).over(w_off), F.lit(0)).alias(c_off),
+        c_cnt,
+    )
+    return ranged, chunk, c_ord, c_pid, c_off, c_cnt
+
+
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
 
 
 def grouped_running_sum(
@@ -85,92 +193,18 @@ def grouped_running_sum(
     order_col: Column | str,
     value_col: Column | str,
     out_col: str,
-    num_partitions: int | None = None,
-    bucket_of: Column | None = None,
 ) -> DataFrame:
     """Per-group running sum (inclusive of the current row) in
     ``order_col`` order, without ever placing a whole group in one task.
 
     Equivalent to ``SUM(value) OVER (PARTITION BY group ORDER BY order
     ROWS UNBOUNDED PRECEDING)`` for unique ``(group, order)`` keys.
-    Adds ``out_col``; preserves every input column.
-
-    ``num_partitions`` defaults to the session's
-    ``spark.sql.shuffle.partitions`` (VERDICT r11 item 5 — a constant 32
-    pinned LOCAL-mode parallelism into every consumer: on a 1000-executor
-    cluster where shuffle.partitions is ~8000, the range split must scale
-    with the session, and the per-partition offset table stays
-    metadata-sized — |partitions| x |groups| rows — either way).
-
-    ``bucket_of`` (r14): a deterministic chunk-id column, monotone
-    nondecreasing in ``order_col`` within each group (build it with
-    :func:`hex_prefix_bucket` for md5-style keys). When given, the
-    sampled range split AND its materialize seam are skipped entirely —
-    chunk assignment is a pure row function, so re-executions and
-    partition recomputes reproduce it exactly (module docstring).
+    Adds ``out_col``; preserves every input column. The chunk
+    offsets are the per-chunk sums of ``value_col`` (module docstring).
     """
-    if num_partitions is None:
-        from ..session import shuffle_partitions
-
-        num_partitions = shuffle_partitions(df.sparkSession)
-    order_c = F.col(order_col) if isinstance(order_col, str) else order_col
-    value_c = F.col(value_col) if isinstance(value_col, str) else value_col
-
-    # Temp columns must not clobber caller columns; escalate with leading
-    # underscores until free (plan-audit regexes match `_+pid`).
-    def tmp(base: str) -> str:
-        name = base
-        while name in df.columns:
-            name = "_" + name
-        return name
-
-    c_ord, c_val, c_pid, c_goff, c_psum = (
-        tmp("_ord"), tmp("_val"), tmp("_pid"), tmp("_goff"), tmp("_psum")
-    )
-    keyed = df.withColumn(c_ord, order_c).withColumn(c_val, value_c)
-    if bucket_of is not None:
-        # Deterministic chunk id: no range sampling, no seam. The chunk
-        # exchange is the (c_pid, group) hash shuffle the local window
-        # itself requires; the offsets branch aggregates map-side first,
-        # so its extra pass over the upstream is partial-agg-sized.
-        ranged = keyed.withColumn(c_pid, bucket_of.cast("bigint"))
-    else:
-        # Range partition on (group, order): each group's rows split
-        # across many partitions but stay contiguous-and-ordered across
-        # the split.
-        #
-        # DETERMINISM: correctness requires the offsets branch and the
-        # final join to observe the IDENTICAL partition assignment.
-        # RangePartitioner's boundary sampler is seeded by the RDD id
-        # (sketch()), so ANY re-execution — the second branch of this
-        # plan, or a lost partition recomputing through the shuffle —
-        # can re-split differently and silently corrupt the sums, even
-        # over a deterministic scan (verified empirically, r14). VERDICT
-        # r12 item 4: the previous MEMORY_AND_DISK_2 persist guarded
-        # that but was unreleasable; the materialize seam freezes the
-        # assignment in immutable bytes (recompute impossible) AND is
-        # reclaimed by release_scratch(). r13: the seam is an eager
-        # DISK_ONLY local checkpoint (one job, no commit/re-read)
-        # instead of a parquet round trip — same guarantees, cheaper
-        # (see scratch.materialize; SPARK_GRAFT_SEAM=parquet restores
-        # the shared-storage form for multi-node deployments).
-        from ..streaming.scratch import materialize
-
-        ranged = materialize(
-            keyed.repartitionByRange(num_partitions, F.col(group_col), F.col(c_ord))
-            .withColumn(c_pid, F.spark_partition_id()),
-            "grsum_",
-        )
-    per = ranged.groupBy(c_pid, group_col).agg(F.sum(c_val).alias(c_psum))
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy(c_pid)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = per.select(
-        c_pid,
-        group_col,
-        F.coalesce(F.sum(c_psum).over(w_off), F.lit(0)).alias(c_goff),
+    value_c = _col(value_col)
+    ranged, chunk, c_ord, c_pid, c_off, c_cnt = _ranged_chunks(
+        df, group_col, _col(order_col), value_c
     )
     w_local = (
         Window.partitionBy(c_pid, group_col)
@@ -178,20 +212,21 @@ def grouped_running_sum(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        ranged.join(F.broadcast(offsets), [c_pid, group_col])
-        .withColumn(out_col, F.col(c_goff) + F.sum(c_val).over(w_local))
-        .drop(c_pid, c_goff, c_ord, c_val)
+        ranged.join(F.broadcast(chunk.drop(c_cnt)), [c_pid, group_col])
+        .withColumn(out_col, F.col(c_off) + F.sum(value_c).over(w_local))
+        .drop(c_pid, c_off, c_ord)
     )
 
 
 class _RankedSplit:
     """Result of grouped_rank_pick / grouped_rank_slice.
 
-    rows    — the materialized range-partitioned input, original columns
-              only (read it instead of re-deriving the input: it is the
-              frozen split both selection branches observed).
-    counts  — (group, n) per-group row counts, derived from the split's
-              own per-chunk counts (metadata-sized; no second input scan).
+    rows    — the input, original columns only, as lineage: downstream
+              stages read it instead of re-deriving the input by hand;
+              every read re-evaluates it (the chunk id is a pure row
+              function, so nothing needs freezing).
+    counts  — (group, n) per-group row counts, derived from the chunk
+              table (metadata-sized; no separate count query).
     picked  — grouped_rank_pick only: the rows at the requested global
               ranks, original columns plus the rank column.
     kept    — grouped_rank_slice only: the rows inside (lo, hi].
@@ -204,38 +239,13 @@ class _RankedSplit:
         self.picked, self.kept = picked, kept
 
 
-def _ranged_chunks(df, group_col, order_c, num_partitions, tmp):
-    """Shared first phase: freeze the (group, order) range split and
-    return (ranged, chunk, c_ord, c_pid, c_off, c_cnt) where chunk is the
-    metadata-sized per-chunk table (_pid, group, n, _off, _cnt) — n the
-    group total, _off the rows of the group in earlier chunks, _cnt the
-    rows here. The internal chunk columns go through tmp() like every
-    other internal name (ADVICE r13: the fixed '_off'/'_cnt' collided
-    with caller columns and made grouped_rank_slice's edge join
-    ambiguous)."""
-    from ..streaming.scratch import materialize
-
-    c_ord, c_pid = tmp("_ord"), tmp("_pid")
-    c_off, c_cnt = tmp("_off"), tmp("_cnt")
-    ranged = materialize(
-        df.withColumn(c_ord, order_c)
-        .repartitionByRange(num_partitions, F.col(group_col), F.col(c_ord))
-        .withColumn(c_pid, F.spark_partition_id()),
-        "grpick_",
+def _counted_chunks(df, group_col, order_c):
+    """_ranged_chunks counting rows, plus each group's total ``n``."""
+    assert group_col != "n", "group_col 'n' collides with the count alias"
+    ranged, chunk, c_ord, c_pid, c_off, c_cnt = _ranged_chunks(
+        df, group_col, order_c, F.lit(1)
     )
-    per = ranged.groupBy(c_pid, group_col).agg(F.count(F.lit(1)).alias(c_cnt))
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy(c_pid)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    chunk = per.select(
-        c_pid,
-        group_col,
-        F.sum(c_cnt).over(Window.partitionBy(group_col)).alias("n"),
-        F.coalesce(F.sum(c_cnt).over(w_off), F.lit(0)).alias(c_off),
-        c_cnt,
-    )
+    chunk = chunk.withColumn("n", F.sum(c_cnt).over(Window.partitionBy(group_col)))
     return ranged, chunk, c_ord, c_pid, c_off, c_cnt
 
 
@@ -245,7 +255,6 @@ def grouped_rank_pick(
     order_col: Column | str,
     targets_of_n: Column,
     rank_col: str = "rk",
-    num_partitions: int | None = None,
     single_target: bool = False,
 ) -> _RankedSplit:
     """Rows at specific per-group GLOBAL ranks (1-based, in ``order_col``
@@ -259,39 +268,21 @@ def grouped_rank_pick(
     metadata-sized chunk table, so target arithmetic is integer-exact.
     ``group_col`` must not itself be named ``n``.
 
-    Where the running-sum form range-partitions, then SORTS EVERY chunk
-    and joins offsets onto EVERY row, this computes only per-chunk counts
-    (one unsorted pass with map-side partials), locates each target's
-    chunk from the broadcast prefix offsets, and sorts ONLY the chunks
-    that contain a target. r14 (ADVICE r13): the targets landing in one
-    chunk ride a single per-chunk LOCAL-RANK ARRAY, so the broadcast join
-    never replicates a chunk and each selected chunk sorts exactly ONCE
-    under a (pid, group) window (the r13 form exploded targets before the
-    join — a chunk holding t targets was replicated and sorted t times).
-    Correctness is split-independent: ``order_col`` must be a total order
-    (tie-broken), so the row at global rank t is the same row under any
-    range split; the materialize seam (same guarantees as
-    grouped_running_sum's) only pins WHICH split both the count pass and
-    the selection pass observe.
+    Where the running-sum form SORTS EVERY chunk and joins offsets onto
+    EVERY row, this computes only per-chunk counts (one unsorted pass
+    with map-side partials), locates each target's chunk from the
+    broadcast prefix offsets, and sorts ONLY the chunks that contain a
+    target. r14 (ADVICE r13): the targets landing in one chunk ride a
+    single per-chunk LOCAL-RANK ARRAY, so the broadcast join never
+    replicates a chunk and each selected chunk sorts exactly ONCE under a
+    (pid, group) window. ``order_col`` must be a total order (tie-broken),
+    so the row at global rank t is the same row under any chunking.
     """
-    if num_partitions is None:
-        from ..session import shuffle_partitions
-
-        num_partitions = shuffle_partitions(df.sparkSession)
-    assert group_col != "n", "group_col 'n' collides with the count alias"
     assert rank_col not in df.columns, f"rank_col {rank_col!r} already in input"
-    order_c = F.col(order_col) if isinstance(order_col, str) else order_col
-
-    def tmp(base: str) -> str:
-        name = base
-        while name in df.columns:
-            name = "_" + name
-        return name
-
-    ranged, chunk, c_ord, c_pid, c_off, c_cnt = _ranged_chunks(
-        df, group_col, order_c, num_partitions, tmp
+    ranged, chunk, c_ord, c_pid, c_off, c_cnt = _counted_chunks(
+        df, group_col, _col(order_col)
     )
-    c_lrn = tmp("_lrn")
+    c_lrn = _free_name(df, "_lrn")
     w_local = Window.partitionBy(c_pid, group_col).orderBy(c_ord)
     targets = (
         chunk.select(
@@ -315,7 +306,7 @@ def grouped_rank_pick(
         # of extra stage latency per pass on mad_outliers at sf0.1 while
         # buying nothing for single-target selections (a lone target
         # cannot collide with itself).
-        c_lt = tmp("_lt")
+        c_lt = _free_name(df, "_lt")
         sel = targets.select(
             c_pid, group_col, (F.col(rank_col) - F.col(c_off)).alias(c_lt), rank_col
         )
@@ -331,7 +322,7 @@ def grouped_rank_pick(
         # collapse via array_distinct before the explode, and a chunk
         # holding several targets joins ONCE and sorts ONCE (ADVICE r13:
         # the r13 form replicated the chunk per target).
-        c_lts = tmp("_lts")
+        c_lts = _free_name(df, "_lts")
         sel = targets.groupBy(c_pid, group_col, c_off).agg(
             F.array_sort(F.collect_list(F.col(rank_col) - F.col(c_off))).alias(c_lts)
         )
@@ -352,7 +343,6 @@ def grouped_rank_slice(
     order_col: Column | str,
     lo_of_n: Column,
     hi_of_n: Column,
-    num_partitions: int | None = None,
 ) -> _RankedSplit:
     """Rows whose per-group global rank rk (1-based, ``order_col`` order)
     satisfies lo < rk <= hi, without ranking interior chunks.
@@ -367,23 +357,10 @@ def grouped_rank_slice(
     sums / counts), which every rank consumer in this codebase already
     does for engine portability.
     """
-    if num_partitions is None:
-        from ..session import shuffle_partitions
-
-        num_partitions = shuffle_partitions(df.sparkSession)
-    assert group_col != "n", "group_col 'n' collides with the count alias"
-    order_c = F.col(order_col) if isinstance(order_col, str) else order_col
-
-    def tmp(base: str) -> str:
-        name = base
-        while name in df.columns:
-            name = "_" + name
-        return name
-
-    ranged, chunk, c_ord, c_pid, c_off, c_cnt = _ranged_chunks(
-        df, group_col, order_c, num_partitions, tmp
+    ranged, chunk, c_ord, c_pid, c_off, c_cnt = _counted_chunks(
+        df, group_col, _col(order_col)
     )
-    c_lo, c_hi = tmp("_lo"), tmp("_hi")
+    c_lo, c_hi = _free_name(df, "_lo"), _free_name(df, "_hi")
     touched = chunk.select(
         c_pid,
         group_col,
@@ -401,7 +378,7 @@ def grouped_rank_slice(
     edge = touched.filter(~inside).select(c_pid, group_col, c_off, c_lo, c_hi)
     orig = [c for c in ranged.columns if c not in (c_ord, c_pid)]
     kept_i = ranged.join(F.broadcast(interior), [c_pid, group_col]).select(*orig)
-    c_lrn = tmp("_lrn")
+    c_lrn = _free_name(df, "_lrn")
     w_local = Window.partitionBy(c_pid, group_col).orderBy(c_ord)
     kept_e = (
         ranged.join(F.broadcast(edge), [c_pid, group_col])

@@ -225,12 +225,6 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize_image(payload: bytes, target: int) -> bytes:
-    """Real resize hook — requires PIL, not present in this container. The
-    plumbing below uses the nearest-neighbor byte downsample instead."""
-    raise NotImplementedError("image resize requires PIL; stubbed in this environment")
-
-
 def _fake_resize(payload: bytes, target: int = RESIZE_TARGET) -> bytes:
     """STUB resize: 1-D nearest-neighbor downsample of the payload byte
     stream to `target` samples — index math identical to a NN image resize

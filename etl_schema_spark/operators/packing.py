@@ -21,10 +21,9 @@ Scale notes:
 - pack_sequences needs a per-source running token offset. ``source`` is a
   low-cardinality key, so ``Window.partitionBy(source)`` would be a
   single-reducer sort over a whole source — instead the offset comes from
-  ``distributed.grouped_running_sum`` (range-partition by (source,
-  doc_id) + broadcast per-(source, partition) prefix offsets + a
-  (partition, source)-local window): no task ever holds more than one
-  range partition's worth of one source.
+  ``distributed.grouped_running_sum`` (chunk by (source, doc_id bin) +
+  broadcast per-(source, chunk) prefix offsets + a (chunk, source)-local
+  window): no task ever holds more than one chunk's worth of one source.
 - doc_chunks is a narrow projection + per-row explode (~n_tok/stride
   rows out per doc): zero shuffle, whole-stage-codegen end to end.
 - domain_mix_weights aggregates to |domains| rows, then two 1-row scalar
@@ -398,7 +397,7 @@ def pack_efficiency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     amortize attention overhead but waste more padding on short tails).
 
     One two-phase running sum serves every budget: the per-source token
-    offsets are computed once (the expensive range-partitioned pass), and
+    offsets are computed once (the expensive chunked pass), and
     each budget's bin id is pure arithmetic over the same cum column —
     |budgets| cheap aggregations, not |budgets| repacking runs.
     """

@@ -1543,19 +1543,7 @@ def triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.md5(F.concat(F.lit("tm:"), F.col("vec_id").cast("string"))).alias("_h"),
     )
-    # r14: the ring order is an md5, so the rank's chunk id is its
-    # hex-prefix bucket — deterministic and uniform — instead of the
-    # sampled range split + materialize seam (guide §2.4; distributed.py
-    # "deterministic buckets"). Skips a checkpoint write+read per call.
-    from ..session import shuffle_partitions
-    from .distributed import BUCKETS_PER_PARTITION, hex_prefix_bucket
-
-    ranked = grouped_running_sum(
-        hashed, "label", F.col("_h"), F.lit(1), "_rk",
-        bucket_of=hex_prefix_bucket(
-            F.col("_h"), BUCKETS_PER_PARTITION * shuffle_partitions(spark)
-        ),
-    )
+    ranked = grouped_running_sum(hashed, "label", F.col("_h"), F.lit(1), "_rk")
     sizes = ranked.groupBy("label").agg(F.count(F.lit(1)).alias("_size"))
     members = ranked.select(
         "label",
@@ -2307,7 +2295,7 @@ def label_balance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     same device source_token_budget uses for its quota sample.
 
     Scale shape: the per-class rank comes from the distributed two-phase
-    pattern (grouped_running_sum: range-partition by (label, md5),
+    pattern (grouped_running_sum: chunk by (label, md5 prefix),
     broadcast prefix offsets) — never Window.partitionBy(label), which
     would sort a whole class in one task on a skewed corpus. The target
     is a 1-row broadcast aggregate of per-class counts. NULL labels are
@@ -2324,18 +2312,7 @@ def label_balance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = emb.withColumn(
         "_h", F.md5(F.concat(F.lit("lb:"), F.col("vec_id").cast("string")))
     )
-    # r14: md5 order key → deterministic hex-prefix chunk id, no sampled
-    # range split, no materialize seam (guide §2.4; distributed.py
-    # "deterministic buckets").
-    from ..session import shuffle_partitions
-    from .distributed import BUCKETS_PER_PARTITION, hex_prefix_bucket
-
-    ranked = grouped_running_sum(
-        hashed, "label", F.col("_h"), F.lit(1), "rk",
-        bucket_of=hex_prefix_bucket(
-            F.col("_h"), BUCKETS_PER_PARTITION * shuffle_partitions(spark)
-        ),
-    )
+    ranked = grouped_running_sum(hashed, "label", F.col("_h"), F.lit(1), "rk")
     target = (
         ranked.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -156,8 +156,8 @@ def key_skew_profile(spark, sf_dir: str) -> DataFrame:
     Plan (r11 rebuild — VERDICT r10 item 1, the single-task-sort fix):
     ONE partial-aggregated groupBy(event_type, user_id) reduces the
     corpus to the key frame, and the per-stream ascending rank comes from
-    ``distributed.grouped_running_sum`` — the two-phase range-partitioned
-    rank user_activity_gini / mad_outliers already ride — NOT from
+    ``distributed.grouped_running_sum`` — the two-phase chunked rank
+    user_activity_gini / mad_outliers already ride — NOT from
     `row_number() OVER (PARTITION BY event_type)`, which would sort a
     stream's ENTIRE distinct-key set (billions of keys at 100 TB) in one
     task. No second (descending) rank pass exists: every rank-derived
@@ -191,10 +191,8 @@ def key_skew_profile(spark, sf_dir: str) -> DataFrame:
     )
     # |streams| rows (~handful): broadcast nk back onto the ranked frame
     # for the percentile-position and top-K-threshold predicates. nk is
-    # derived FROM the ranked frame, whose lineage reads the helper's
-    # persisted range partitioning — not from per_key, which would
-    # re-scan and re-aggregate the raw events a second time (ADVICE r11;
-    # the unreferenced rank window prunes out of this count's plan).
+    # derived FROM the ranked frame (ADVICE r11; the unreferenced rank
+    # window prunes out of this count's plan).
     nk_df = ranked0.groupBy("_gk").agg(F.count(F.lit(1)).alias("nk"))
     ranked = ranked0.join(F.broadcast(nk_df), "_gk")
     dec = "decimal(19,0)"

@@ -849,8 +849,8 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: bucket boundaries are EXACT order statistics picked by
     global rank — and the global rank comes from the distributed
     two-phase pattern (``grouped_running_sum`` of 1s over a constant
-    group: range-partition by score, broadcast per-partition prefix
-    counts), never `row_number() OVER ()` (one task for the corpus).
+    group: chunk by score, broadcast per-chunk prefix counts), never
+    `row_number() OVER ()` (one task for the corpus).
     The 4 boundary rows then broadcast back over the scored table; a doc's
     bucket is how many boundaries its score exceeds, so boundary ties
     land deterministically in the lower bucket.
@@ -894,10 +894,12 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SCORED population, docs with >= 1 token — exactly the oracle's
     # COUNT(*) OVER () domain; the chunk table replaces the separate
     # n_scored aggregate), and the final bucket join reads the pass's
-    # materialized split (p.rows) instead of re-deriving `scored` a third
-    # time from the token stream.
+    # input (p.rows). `scored` is pinned: the rank's count pass, its
+    # selection pass and the bucket join each read it, and each read
+    # would otherwise re-run the token aggregation.
     from .distributed import grouped_rank_pick
 
+    scored = swap_pin("text.ppl.scored", scored)
     p = grouped_rank_pick(
         scored.withColumn("_g", F.lit(1)),
         "_g",

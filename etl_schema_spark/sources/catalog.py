@@ -249,16 +249,6 @@ def unique_scan_sql(name: str) -> str:
     )
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every table as a temp view so operators can be written in SQL.
-
-    Parity: cmd/bq_create_view/main.go materializes dataset views; temp views
-    are the Spark-session equivalent.
-    """
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def wildcard_scan(spark: SparkSession, pattern: str) -> DataFrame:
     """Glob scan unioned by the source, schema-merged.
 

@@ -14,46 +14,22 @@ storage with a TTL/lifecycle rule — the dir is an output location, not a
 driver buffer.
 
 EVALUATE-BEFORE-RELEASE CONTRACT (ADVICE r12, low): a DataFrame returned
-by an entry that reads a scratch dir — or one frozen by ``materialize``'s
-local checkpoint — is backed by immutable BYTES, not by lineage.
-``release_scratch()`` deletes those bytes, so any held frame evaluated
-afterwards fails fast (path-not-found / missing-block), unlike
-``release_pins()``, where lineage recomputes. Harnesses must collect /
-materialize every result they still need BEFORE calling
-``release_scratch()`` — exactly how bench.py orders it (warm passes, then
-release). The atexit hook is safe by construction: nothing evaluates
-after interpreter teardown.
+by an entry that reads a scratch dir is backed by the dir's BYTES, not by
+lineage. ``release_scratch()`` deletes them, so any held frame evaluated
+afterwards fails fast (path-not-found), unlike ``release_pins()``, where
+lineage recomputes. Harnesses must collect every drain result they still
+need BEFORE calling ``release_scratch()`` — exactly how bench.py orders it
+(warm passes, then release). The atexit hook is safe by construction:
+nothing evaluates after interpreter teardown.
 """
 
 from __future__ import annotations
 
 import atexit
-import logging
-import os
 import shutil
 import tempfile
 
-log = logging.getLogger(__name__)
-
 _SCRATCH_DIRS: list[str] = []
-# Ids (ints) of live local-checkpoint RDDs (see materialize). Holding the
-# bare id — never the py4j RDD handle — means an unreleased checkpoint
-# whose consumer frame is dropped can still be reclaimed by the JVM's
-# ContextCleaner (ADVICE r13: permanently-held py4j refs pinned the JVM
-# RDD objects, so GC-based reclamation could never fire and disk
-# accumulated with no fallback). release_scratch() re-resolves the ids
-# through JavaSparkContext.getPersistentRDDs at release time; ids already
-# collected by the cleaner are simply absent there.
-_LOCAL_CHECKPOINT_IDS: list[int] = []
-
-# Seam selector (ADVICE r13, low): "checkpoint" (default) is the
-# single-JVM-optimal form; "parquet" restores the r12 shared-storage
-# materialization — the form a multi-node deployment wants, because a
-# localCheckpoint's blocks live on executor local disk and an executor
-# loss fail-stops the job, where parquet on shared storage survives it.
-# Cluster deployments flip SPARK_GRAFT_SEAM=parquet (and point the scratch
-# root at the job's staging prefix) without code changes.
-_SEAM_ENV = "SPARK_GRAFT_SEAM"
 
 
 def scratch_dir(prefix: str) -> str:
@@ -63,94 +39,10 @@ def scratch_dir(prefix: str) -> str:
     return d
 
 
-def materialize(df, prefix: str):
-    """Freeze ``df`` into an immutable, releasable materialization and
-    return a DataFrame over the frozen bytes (VERDICT r12 item 4; r13
-    optimization).
-
-    r12 shipped this seam as a parquet round-trip through a registered
-    scratch dir. r13 keeps both guarantees at a fraction of the cost
-    (guide §5: ``localCheckpoint()`` is the cheap lineage cut): an EAGER
-    local checkpoint at DISK_ONLY level. r14 (ADVICE r13): the parquet
-    form stays selectable via ``SPARK_GRAFT_SEAM=parquet`` for cluster
-    deployments that need the materialization to survive executor loss.
-
-    - DETERMINISM: the checkpoint truncates lineage, so a downstream
-      consumer can never recompute through the range shuffle (whose
-      boundary sampling over a nondeterministically ordered upstream can
-      re-split differently and silently corrupt offsets). A lost block is
-      a fail-stop missing-block error, not a silent re-split — the same
-      class as deleted parquet bytes. On a multi-node cluster an executor
-      loss therefore kills the job; the cluster-scale form of this seam
-      stays stage materialization to shared storage (the parquet branch
-      below), while local checkpoint is the single-JVM-optimal form the
-      local harness runs.
-    - RELEASABILITY: the checkpointed RDD's ID is registered and
-      ``release_scratch()`` unpersists its blocks alongside dir cleanup —
-      the r11 pinned-frame accumulation class stays closed, under the
-      same evaluate-before-release contract (a held frame evaluated after
-      release fails fast on missing blocks, like path-not-found). Only
-      the id is held, so a checkpoint whose frames are all dropped remains
-      reclaimable by ContextCleaner even if release_scratch() never runs.
-    - COST: one job storing serialized blocks on local disk, vs parquet's
-      write job + commit protocol + fresh read plan + footer reads. The
-      r13 interim tree measured the parquet seam at ~0.3-0.7 s per call /
-      ~8-10 s cold across the grouped_running_sum + epoch_shuffle bench
-      consumers (BENCH_NOTES); the checkpoint form returns most of that.
-
-    DISK_ONLY keeps the scratch-dir accumulation profile: repeated calls
-    before a release cost local disk bytes, not executor heap.
-
-    ``prefix`` is kept for the spy/label seam (tests monkeypatch
-    ``materialize`` and key on it).
-    """
-    if os.environ.get(_SEAM_ENV, "checkpoint") == "parquet":
-        d = scratch_dir(prefix)
-        path = os.path.join(d, "data")
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-    from pyspark.storagelevel import StorageLevel
-
-    out = df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    try:
-        _LOCAL_CHECKPOINT_IDS.append(
-            out._jdf.queryExecution().analyzed().rdd().id()
-        )
-    except Exception:
-        # the checkpoint still works; it just cannot be released eagerly —
-        # ContextCleaner reclaims it after the consumer frames drop
-        log.warning(
-            "materialize(%s): could not register checkpoint RDD id; "
-            "blocks will be reclaimed by ContextCleaner GC only",
-            prefix,
-            exc_info=True,
-        )
-    return out
-
-
 def release_scratch() -> int:
-    """Remove every registered scratch dir and unpersist every registered
-    local checkpoint; returns the count released. Safe to call repeatedly;
-    harnesses call it alongside release_pins()."""
-    n = len(_SCRATCH_DIRS) + len(_LOCAL_CHECKPOINT_IDS)
-    if _LOCAL_CHECKPOINT_IDS:
-        try:
-            from pyspark.sql import SparkSession
-
-            spark = SparkSession.getActiveSession()
-            if spark is not None:
-                jmap = spark.sparkContext._jsc.getPersistentRDDs()
-                for rid in _LOCAL_CHECKPOINT_IDS:
-                    jrdd = jmap.get(rid)
-                    if jrdd is not None:
-                        jrdd.unpersist(False)
-        except Exception:
-            log.warning(
-                "release_scratch: checkpoint unpersist failed; blocks fall "
-                "back to ContextCleaner GC",
-                exc_info=True,
-            )
-    _LOCAL_CHECKPOINT_IDS.clear()
+    """Remove every registered scratch dir; returns the count released.
+    Safe to call repeatedly; harnesses call it alongside release_pins()."""
+    n = len(_SCRATCH_DIRS)
     for d in _SCRATCH_DIRS:
         shutil.rmtree(d, ignore_errors=True)
     _SCRATCH_DIRS.clear()

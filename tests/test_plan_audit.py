@@ -104,7 +104,7 @@ def test_no_cartesian_or_rowudf(name, spark, sf_dir):
 
 
 @pytest.mark.parametrize("name", ["pack_sequences", "source_token_budget"])
-def test_no_single_reducer_source_window(name, spark, sf_dir, monkeypatch):
+def test_no_single_reducer_source_window(name, spark, sf_dir):
     """The per-source running sums must use the distributed two-phase
     pattern: a chunked split on (source, order) feeding a (chunk, source)
     local window — never a full-table window partitioned by `source`
@@ -112,41 +112,17 @@ def test_no_single_reducer_source_window(name, spark, sf_dir, monkeypatch):
     window DOES remain over the per-(chunk, source) offset table — that
     input is metadata-sized by construction, so it is exempt.)
 
-    Two chunking modes exist (r14, distributed.py): pack_sequences orders
-    by doc_id, so it keeps the SAMPLED range split whose determinism
-    requires the materialize seam (the range shuffle lives in the seam's
-    write-job plan, captured by the spy); source_token_budget orders by
-    an md5 key, so its chunk id is the deterministic hex-prefix bucket —
-    no seam, the conv()-derived bucket feeds the local window directly in
-    the returned plan."""
+    Both chunk by distributed.chunk_id, a pure row function of the order
+    key, so neither plan holds a sampled range split: pack_sequences
+    orders by doc_id (a log-linear bin: log2 in the plan),
+    source_token_budget by an md5 key (the hex-prefix bucket: conv)."""
     import re
 
-    from etl_schema_spark.streaming import scratch
-
-    write_plans: list[str] = []
-    real = scratch.materialize
-
-    def spy(df, prefix):
-        write_plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return real(df, prefix)
-
-    monkeypatch.setattr(scratch, "materialize", spy)
     df = QUERIES[name](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    if name == "pack_sequences":
-        assert write_plans, f"{name}: running sum no longer materializes"
-        assert any("rangepartitioning" in p for p in write_plans), (
-            f"{name}: no range partition in the materialized split\n"
-            + "\n".join(write_plans)
-        )
-    else:
-        # deterministic-bucket mode: no seam, no sampled range split;
-        # the chunk id comes from the md5 hex prefix (conv in the plan)
-        assert not write_plans, f"{name}: unexpected materialize seam"
-        assert "rangepartitioning" not in plan, f"{name}: sampled split returned\n{plan}"
-        assert re.search(r"conv\(substring\(", plan), (
-            f"{name}: no hex-prefix bucket in plan\n{plan}"
-        )
+    assert "rangepartitioning" not in plan, f"{name}: sampled split returned\n{plan}"
+    chunk_fn = "LOG2(" if name == "pack_sequences" else "conv(substring("
+    assert chunk_fn in plan, f"{name}: no chunk id in plan\n{plan}"
     local = re.search(r"windowspecdefinition\(_+pid\w*#\d+L?, source#\d+", plan)
     assert local, f"{name}: no (chunk, source)-local window\n{plan}"
 

@@ -15,6 +15,7 @@ from hypothesis import HealthCheck, given, settings
 from pyspark.sql import types as T
 
 from etl_schema_spark.operators.dedup import JACCARD_TAU, dedup_ngram_jaccard
+from etl_schema_spark.operators.distributed import MANTISSA_BITS
 from etl_schema_spark.schemas.evolution import (
     diff_schemas,
     evolve_schema,
@@ -284,7 +285,7 @@ def test_interval_point_join_matches_bruteforce(spark, intervals, points):
 runsum_strategy = st.lists(
     st.tuples(
         st.sampled_from(["a", "b", "hot"]),       # group (one deliberately hot)
-        st.integers(min_value=0, max_value=50),   # order key (dups allowed)
+        st.integers(min_value=0, max_value=5000), # order key (dups allowed)
         st.integers(min_value=-5, max_value=5),   # value
     ),
     min_size=1,
@@ -299,9 +300,9 @@ runsum_strategy = st.lists(
 )
 @given(rows=runsum_strategy)
 def test_grouped_running_sum_equals_window(spark, rows):
-    """The range-partition + broadcast-offset running sum must equal the
-    single-task window formulation for ANY group skew and ANY partition
-    count — including partitions > rows and all rows in one hot group.
+    """The chunked + broadcast-offset running sum must equal the
+    single-task window formulation for ANY group skew — including all
+    rows in one hot group.
     (Order keys are de-duplicated per group: the helper's contract.)"""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -317,7 +318,7 @@ def test_grouped_running_sum_equals_window(spark, rows):
     df = spark.createDataFrame(uniq, "g string, o int, v int")
     got = {
         (r.g, r.o): r.cum
-        for r in grouped_running_sum(df, "g", "o", "v", "cum", num_partitions=5).collect()
+        for r in grouped_running_sum(df, "g", "o", "v", "cum").collect()
     }
     w = Window.partitionBy("g").orderBy("o").rowsBetween(Window.unboundedPreceding, 0)
     want = {
@@ -325,6 +326,59 @@ def test_grouped_running_sum_equals_window(spark, rows):
         for r in df.withColumn("cum", F.sum("v").over(w)).collect()
     }
     assert got == want
+
+
+# --- chunk id: monotone in the order key's Spark sort order -----------------
+
+_F64_EDGES = [
+    0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308, 1.0, 2.0, 3.0,
+    1.7976931348623157e308, -1.7976931348623157e308,
+    float("inf"), float("-inf"), float("nan"),
+]
+_EXACT = 2 << MANTISSA_BITS  # integer leads below this bin exactly
+_I64_EDGES = [-(2**63), 2**63 - 1, -1, 0, 1, _EXACT - 1, _EXACT, _EXACT + 1, -_EXACT]
+chunk_rows_strategy = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.sampled_from(_F64_EDGES), st.floats()),
+        # heavy integer ties next to the full Long range
+        st.one_of(
+            st.none(),
+            st.sampled_from([1, 2, 3]),
+            st.sampled_from(_I64_EDGES),
+            st.integers(min_value=-(2**63), max_value=2**63 - 1),
+        ),
+        st.one_of(st.none(), st.integers(min_value=-(2**63), max_value=2**63 - 1)),
+    ),
+    min_size=1,
+    max_size=60,
+)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(rows=chunk_rows_strategy)
+def test_chunk_id_monotone(spark, rows):
+    """distributed.chunk_id must be nondecreasing along Spark's own sort
+    order of the key — across +-0, subnormals, +-inf, NaN, Long min/max,
+    NULL (first ascending) and heavy integer ties split by the next
+    field — or the two-phase offsets would be added to the wrong rows."""
+    from pyspark.sql import functions as F
+
+    from etl_schema_spark.operators.distributed import chunk_id
+
+    df = spark.createDataFrame(rows, "d double, l long, i long")
+    for key in (F.col("d"), F.col("l"), F.struct("l", "i"), F.struct("d", "i")):
+        keyed = df.withColumn("k", key)
+        bins = [
+            r.b
+            for r in keyed.select("k", chunk_id(keyed, "k").alias("b"))
+            .orderBy("k")
+            .collect()
+        ]
+        assert bins == sorted(bins), (key, rows)
 
 
 # --- interval-coverage island sweep vs brute-force union -----------------

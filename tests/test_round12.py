@@ -10,13 +10,14 @@
 - the incremental_dedup two-join restructure keeps a broadcast-only
   plan (no sort-merge join — the silently-ignored broadcast right-outer
   hint class, ADVICE r11)
-- grouped_running_sum defaults its range split to the session's
-  shuffle parallelism
+- grouped_running_sum's chunk exchange takes the session's shuffle
+  parallelism
 - streaming drains return lazy distributed reads; scratch dirs live
   until release_scratch()
 """
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -214,31 +215,18 @@ def test_grouped_running_sum_defaults_to_session_parallelism(spark, monkeypatch)
     from pyspark.sql import Window
 
     from etl_schema_spark.operators.distributed import grouped_running_sum
-    from etl_schema_spark.streaming import scratch
 
     df = spark.range(0, 1000).select(
         (F.col("id") % 3).alias("g"), F.col("id").alias("o"), F.lit(1).alias("v")
     )
-    # The materialize seam (an eager local checkpoint since r13) truncates
-    # the returned frame's lineage, so the range split must be asserted on
-    # the frame ENTERING the seam — same spy pattern as
-    # test_no_single_reducer_source_window.
-    seam_plans: list[str] = []
-    real = scratch.materialize
-
-    def spy(frame, prefix):
-        seam_plans.append(frame._jdf.queryExecution().analyzed().toString())
-        return real(frame, prefix)
-
-    monkeypatch.setattr(scratch, "materialize", spy)
     out = grouped_running_sum(df, "g", "o", "v", "cum")
-    # the range split under the result carries the SESSION's parallelism,
-    # not a constant (VERDICT r11 item 5)
+    # the (chunk, group) exchange under the result carries the SESSION's
+    # parallelism, not a constant (VERDICT r11 item 5), and no sampled
+    # range split is left
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert seam_plans, "running sum no longer materializes its range split"
-    assert any(
-        "RepartitionByExpression [g" in p and f", {n}" in p for p in seam_plans
-    ), "\n".join(seam_plans)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert re.search(rf"hashpartitioning\(_+pid#\d+L, g#\d+L, {n}\)", plan), plan
+    assert "rangepartitioning" not in plan
     # correctness unchanged vs the window definition
     w = Window.partitionBy("g").orderBy("o").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

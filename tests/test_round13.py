@@ -4,8 +4,6 @@
   copy of a batch-1 ADMITTED doc verdicts 'duplicate' (exact tier) or
   'near_dup' (banding tier) against the run's index deltas, which the
   static session-pinned index alone could never see; redelivery converges
-- grouped_running_sum / epoch_shuffle scratch-materialize their range
-  split (releasable, recompute-proof) instead of bare-persisting it
 - session.shuffle_partitions tolerates non-numeric conf values
 - the neardup band index carries the LSH_BUCKET_CAP occupancy cap
 """
@@ -150,49 +148,6 @@ def test_front_door_quality_tier_in_stream(spark, tmp_path):
     assert out2[copy_id].verdict == "admitted"
 
 
-def test_grouped_running_sum_materializes_range_split(spark, monkeypatch):
-    """VERDICT r12 item 4 (r13 form): the determinism guard is an eager
-    DISK_ONLY local checkpoint at the materialize seam — the checkpoint
-    input's plan carries the range partition, the returned frame is
-    lineage-free (recompute through the range shuffle impossible), and
-    release_scratch unpersists the registered checkpoint blocks."""
-    from etl_schema_spark.operators.distributed import grouped_running_sum
-    from etl_schema_spark.streaming import scratch
-
-    captured = []
-    real = scratch.materialize
-
-    def spy(df, prefix):
-        captured.append(
-            (prefix, df._jdf.queryExecution().executedPlan().toString())
-        )
-        return real(df, prefix)
-
-    monkeypatch.setattr(scratch, "materialize", spy)
-    before_ids = set(scratch._LOCAL_CHECKPOINT_IDS)
-    df = spark.range(0, 1000).select(
-        (F.col("id") % 7).alias("g"), F.col("id").alias("o"), F.lit(1).alias("v")
-    )
-    out = grouped_running_sum(df, "g", "o", "v", "rs")
-    rows = {(r.g, r.o): r.rs for r in out.collect()}
-    # spot-check the running sum: within group g, rs = rank of o in group
-    assert rows[(0, 0)] == 1 and rows[(0, 7)] == 2 and rows[(0, 700)] == 101
-    assert captured and captured[0][0] == "grsum_"
-    assert "rangepartitioning" in captured[0][1]
-    # the checkpoint is registered BY ID for release (r14, ADVICE r13:
-    # holding the py4j RDD handle pinned the JVM object and blocked
-    # ContextCleaner's fallback reclamation), its blocks live on disk
-    created = [i for i in scratch._LOCAL_CHECKPOINT_IDS if i not in before_ids]
-    assert created, "materialize registered no checkpoint RDD id"
-    sc = spark.sparkContext._jsc.sc()
-    live_ids = {i.id() for i in sc.getRDDStorageInfo()}
-    assert any(i in live_ids for i in created)
-    scratch.release_scratch()
-    live_after = {i.id() for i in sc.getRDDStorageInfo()}
-    assert not any(i in live_after for i in created)
-    assert not scratch._LOCAL_CHECKPOINT_IDS
-
-
 def test_shuffle_partitions_tolerates_auto(spark):
     """ADVICE r12 (low): a non-numeric conf value falls back instead of
     raising ValueError out of every range-split consumer. Vanilla Spark
@@ -254,8 +209,8 @@ def test_neardup_band_index_capped(spark):
 
 def test_grouped_rank_pick_matches_full_rank(spark):
     """r13 rank-selection pushdown: picked rows at requested global ranks
-    equal the full-ranking answer under ANY range split (here forced to
-    many small chunks so targets straddle chunk boundaries), duplicate
+    equal the full-ranking answer (the v leads span several chunks, so
+    targets straddle chunk boundaries), duplicate
     targets collapse, counts come from the split's own chunk table, and
     only target-holding chunks feed the local sort (broadcast-join-bounded
     selection, never a full-input window rank)."""
@@ -269,9 +224,7 @@ def test_grouped_rank_pick_matches_full_rank(spark):
     )
     # median + p90 + a duplicated target (array_distinct must collapse it)
     targets = F.expr("array((n + 1) div 2, (n * 9) div 10, (n + 1) div 2)")
-    p = grouped_rank_pick(
-        df, "g", F.struct("v", "tie"), targets, num_partitions=16
-    )
+    p = grouped_rank_pick(df, "g", F.struct("v", "tie"), targets)
     got = {(r.g, r.rk): (r.v, r.tie) for r in p.picked.collect()}
     w = Window.partitionBy("g").orderBy("v", "tie")
     full = df.withColumn("rk", F.row_number().over(w))
@@ -284,7 +237,7 @@ def test_grouped_rank_pick_matches_full_rank(spark):
             if r.rk == t:
                 want[(r.g, t)] = (r.v, r.tie)
     assert got == want
-    # rows is the frozen split with original columns only
+    # rows is the input with original columns only
     assert set(p.rows.columns) == {"g", "v", "tie"}
     assert p.rows.count() == 2000
     # selection is broadcast-bounded: the picked plan joins the metadata
@@ -312,7 +265,6 @@ def test_grouped_rank_slice_matches_full_rank(spark):
         F.struct("v", "tie"),
         F.expr("n div 10"),
         F.expr("n - n div 10"),
-        num_partitions=16,
     )
     got = sorted((r.g, r.v, r.tie) for r in s.kept.collect())
     w = Window.partitionBy("g").orderBy("v", "tie")

@@ -1,16 +1,13 @@
 """Round-14 optimization tests:
 
-- deterministic hex-prefix bucketing replaces the sampled range split for
-  md5-keyed two-phase ranks (no materialize seam; chunk id is a pure row
-  function — monotone, uniform, recompute-stable)
+- deterministic hex-prefix bucketing chunks md5-keyed two-phase ranks
+  (the chunk id is a pure row function — monotone, uniform,
+  recompute-stable)
 - grouped_rank_pick sorts each selected chunk ONCE (per-chunk local-rank
   arrays; ADVICE r13 replicated a chunk per target)
 - grouped_rank_slice tolerates caller columns named _off/_cnt (ADVICE r13
   collision)
-- the materialize seam's parquet form stays selectable (SPARK_GRAFT_SEAM)
 """
-
-import os
 
 import pytest
 from pyspark.sql import Window
@@ -39,37 +36,20 @@ def test_hex_prefix_bucket_monotone_and_bounded(spark):
 
 
 def test_grouped_running_sum_bucketed_equals_window(spark):
-    """bucket_of mode == the full window ranking, with NO materialize
-    seam and no sampled range split in the plan."""
-    from etl_schema_spark.operators.distributed import (
-        grouped_running_sum,
-        hex_prefix_bucket,
-    )
-    from etl_schema_spark.streaming import scratch
-
-    called = []
-    real = scratch.materialize
-
-    def spy(df, prefix):
-        called.append(prefix)
-        return real(df, prefix)
-
-    import unittest.mock as mock
+    """An md5-keyed running sum chunks by the hex-prefix bucket and equals
+    the full window ranking, with no sampled range split in the plan."""
+    from etl_schema_spark.operators.distributed import grouped_running_sum
 
     df = spark.range(0, 2000).select(
         (F.col("id") % 5).alias("g"),
         F.md5(F.col("id").cast("string")).alias("k"),
         (F.col("id") % 7 + 1).alias("v"),
     )
-    with mock.patch.object(scratch, "materialize", spy):
-        out = grouped_running_sum(
-            df, "g", F.col("k"), "v", "rs",
-            bucket_of=hex_prefix_bucket(F.col("k"), 96),
-        )
-        got = {(r.g, r.k): r.rs for r in out.collect()}
-    assert not called, "bucket_of mode must not materialize a seam"
+    out = grouped_running_sum(df, "g", F.col("k"), "v", "rs")
+    got = {(r.g, r.k): r.rs for r in out.collect()}
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in plan
+    assert "conv(substring(" in plan
     w = (
         Window.partitionBy("g")
         .orderBy("k")
@@ -83,21 +63,21 @@ def test_grouped_running_sum_bucketed_equals_window(spark):
 
 
 def test_grouped_rank_pick_multiple_targets_one_chunk(spark):
-    """ADVICE r13: with few chunks, several targets land in ONE chunk —
+    """ADVICE r13: when several targets land in ONE chunk,
     the selected chunk must still sort once (a single (pid, group)
     window) and every target row must come back with its global rank."""
     from etl_schema_spark.operators.distributed import grouped_rank_pick
 
     df = spark.range(0, 500).select(
         (F.col("id") % 2).alias("g"),
-        ((F.col("id") * 31) % 500).alias("v"),
+        (F.lit(1 << 40) + (F.col("id") * 31) % 500).alias("v"),
         F.col("id").alias("tie"),
     )
-    # 2 partitions for 2 groups -> p25/p50/p75 usually share chunks
+    # every v shares one log-linear bin (2^40 + [0, 500) is inside one
+    # bin for any MANTISSA_BITS <= 30), so p25/p50/p75 of a group land in
+    # ONE chunk
     targets = F.expr("array(n div 4, (n + 1) div 2, (3 * n) div 4)")
-    p = grouped_rank_pick(
-        df, "g", F.struct("v", "tie"), targets, num_partitions=2
-    )
+    p = grouped_rank_pick(df, "g", F.struct("v", "tie"), targets)
     got = {(r.g, r.rk): (r.v, r.tie) for r in p.picked.collect()}
     w = Window.partitionBy("g").orderBy("v", "tie")
     full = df.withColumn("rk", F.row_number().over(w))
@@ -132,12 +112,9 @@ def test_grouped_rank_pick_single_target_path(spark):
     )
     targets = F.expr("array((n + 1) div 2)")
     p1 = grouped_rank_pick(
-        df, "g", F.struct("v", "tie"), targets, num_partitions=8,
-        single_target=True,
+        df, "g", F.struct("v", "tie"), targets, single_target=True
     )
-    p2 = grouped_rank_pick(
-        df, "g", F.struct("v", "tie"), targets, num_partitions=8,
-    )
+    p2 = grouped_rank_pick(df, "g", F.struct("v", "tie"), targets)
     got1 = {(r.g, r.rk): (r.v, r.tie) for r in p1.picked.collect()}
     got2 = {(r.g, r.rk): (r.v, r.tie) for r in p2.picked.collect()}
     assert got1 == got2
@@ -170,7 +147,6 @@ def test_grouped_rank_slice_tolerates_off_cnt_columns(spark):
     s = grouped_rank_slice(
         df, "g", F.struct("v", "tie"),
         F.expr("n div 10"), F.expr("n - n div 10"),
-        num_partitions=8,
     )
     got = sorted((r.g, r.v, r.tie) for r in s.kept.collect())
     w = Window.partitionBy("g").orderBy("v", "tie")
@@ -184,23 +160,3 @@ def test_grouped_rank_slice_tolerates_off_cnt_columns(spark):
     assert got == want
     # caller columns survive untouched
     assert {"_off", "_cnt"} <= set(s.kept.columns)
-
-
-def test_materialize_parquet_seam_flag(spark, monkeypatch):
-    """ADVICE r13: SPARK_GRAFT_SEAM=parquet restores the shared-storage
-    materialization (scratch dir registered + released) for cluster
-    deployments where a localCheckpoint would fail-stop on executor
-    loss."""
-    from etl_schema_spark.streaming import scratch
-
-    monkeypatch.setenv("SPARK_GRAFT_SEAM", "parquet")
-    before = list(scratch._SCRATCH_DIRS)
-    df = spark.range(0, 100).select("id", (F.col("id") * 2).alias("v"))
-    out = scratch.materialize(df, "seamtest_")
-    assert out.count() == 100
-    created = [d for d in scratch._SCRATCH_DIRS if d not in before]
-    assert created and os.path.isdir(created[0])
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan parquet" in plan  # frozen bytes, not lineage
-    scratch.release_scratch()
-    assert not os.path.exists(created[0])

@@ -5,6 +5,7 @@ Parity with the reference's own test strategy: schema round-trip
 main_test.go)."""
 
 import json
+import os
 
 from pyspark.sql import types as T
 
@@ -31,13 +32,44 @@ def test_bigquery_json_roundtrip():
     assert bigquery_json_to_struct(back) == struct
 
 
+_TESTS = os.path.dirname(os.path.abspath(__file__))
+# The reference checkout sits beside this repository's checkout.
+_REFERENCE_NDT = os.path.join(
+    os.path.dirname(os.path.dirname(_TESTS)), "reference", "schema", "ndt.json"
+)
+# Excerpt of the reference's schema/ndt.json (same dialect: explicit modes,
+# descriptions, nested RECORDs, a REPEATED RECORD), for hosts without the
+# reference checkout.
+_NDT_EXCERPT = os.path.join(_TESTS, "data", "ndt_excerpt.json")
+
+
 def test_reference_ndt_schema_loads():
-    """The reference's actual schema/ndt.json must load unchanged."""
-    with open("/root/reference/schema/ndt.json") as f:
-        struct = bigquery_json_to_struct(f.read())
+    """The reference's schema/ndt.json (or its checked-in excerpt) must
+    load unchanged: nested RECORDs become structs, a REPEATED RECORD an
+    array of structs, modes map to nullability, descriptions survive, and
+    the struct serializes back to the same JSON."""
+    path = _REFERENCE_NDT if os.path.exists(_REFERENCE_NDT) else _NDT_EXCERPT
+    with open(path) as f:
+        doc = json.load(f)
+    struct = bigquery_json_to_struct(doc)
     assert "web100_log_entry" in struct.fieldNames()
-    conn = struct["web100_log_entry"].dataType["connection_spec"].dataType
+    entry = struct["web100_log_entry"]
+    assert isinstance(entry.dataType, T.StructType) and entry.nullable
+    conn = entry.dataType["connection_spec"].dataType
+    assert isinstance(conn, T.StructType)
     assert conn["remote_ip"].dataType == T.StringType()
+    assert conn["remote_ip"].metadata.get("description")
+    repeated = [
+        f for f in struct.fields
+        if isinstance(f.dataType, T.ArrayType)
+        and isinstance(f.dataType.elementType, T.StructType)
+    ]
+    assert repeated, "no REPEATED RECORD field"
+    assert not struct["test_id"].nullable  # mode REQUIRED
+    back = struct_to_bigquery_json(struct)
+    assert bigquery_json_to_struct(back) == struct
+    if path == _NDT_EXCERPT:  # every field spells out type, mode, description
+        assert back == doc
 
 
 def test_registry_matches_disk(spark, sf_dir):

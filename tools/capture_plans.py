@@ -4,7 +4,7 @@ Usage: python tools/capture_plans.py <round_dir> <suffix> <query> [query ...]
 e.g.   python tools/capture_plans.py r14 before mad_outliers triplet_mining
 
 Plans are captured at sf0.01 (plan shape is SF-independent). The full
-plan executes nothing except eager seams (materialize) and broadcast
+plan executes nothing except eager build-time jobs and broadcast
 sizing done at explain time; scratch/pins are released at exit.
 """
 
