@@ -101,10 +101,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r14) and rotate by age like any helper-changed cohort. ---------
         "multimodal_meta": multimodal.multimodal_meta,  # last green r12
         "simhash_fingerprint": dedup.simhash_fingerprint,  # last green r10
-        # -- group 2: oldest-verdict rotation fill (24: the ten r7 tails
-        # deferred from r13 plus the oldest r8 cohort; streaming_topk_keys
-        # and unified_view_events are the two r8s displaced by group 1b
-        # and lead the below-cap region for the next rotation). ----------
+        # -- group 1c: the streaming sinks now share one exactly-once
+        # drain (jobs.drain_exactly_once), one arriving-documents reader,
+        # one sink read-back and catalog.restore_unique; the five entries
+        # that drain those sinks rotate in (tools/verdict_freshness.py). --
+        "streaming_incremental_dedup": streaming.streaming_incremental_dedup,  # last green r13
+        "streaming_ingest_front_door": streaming.streaming_ingest_front_door,  # last green r13
+        "streaming_neardup": streaming.streaming_neardup,  # last green r13
+        "streaming_quality_gated_publish": streaming.streaming_quality_gated_publish,  # last green r12
+        "streaming_rule_drift_gate": streaming.streaming_rule_drift_gate,  # last green r13
+        # -- group 2: oldest-verdict rotation fill (19: the ten r7 tails
+        # deferred from r13 plus the oldest r8 cohort). The five r8s that
+        # group 1c displaced lead the below-cap region for the next
+        # rotation; streaming_topk_keys and unified_view_events, displaced
+        # by group 1b, follow the r13 cohort. ----------------------------
         "sidestream_view": rollups.sidestream_view,  # last green r07
         "skew_salted_daily_users": skew.skew_salted_daily_users,  # last green r07
         "sliding_window_stats": rollups.sliding_window_stats,  # last green r07
@@ -124,13 +134,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fn_geomean_download_complete": lambda s, d: table_functions.metric_geomean( s, d, direction="download", fleet="complete" ),  # last green r08
         "fn_pdf_upload_2021": lambda s, d: table_functions.metric_pdf( s, d, direction="upload", fleet="2021" ),  # last green r08
         "hourly_rollup": rollups.hourly_rollup,  # last green r08
+        # ---------------- 50-entry scoring cap lands here ----------------
         "length_filter_sweep": curation.length_filter_sweep,  # last green r08
         "new_vs_returning": analytics.new_vs_returning,  # last green r08
         "restore_unique_docs": corpus.restore_unique_docs,  # last green r08
         "streaming_hopping_counts": streaming.streaming_hopping_counts,  # last green r08
         "streaming_hourly_counts": streaming.streaming_hourly_counts,  # last green r08
-        # ---------------- 50-entry scoring cap lands here ----------------
-        "streaming_ingest_front_door": streaming.streaming_ingest_front_door,  # last green r13
         "containment_dup": dedup.containment_dup,  # last green r13
         "cross_lang_contamination": curation.cross_lang_contamination,  # last green r13
         "cross_source_overlap": corpus.cross_source_overlap,  # last green r13
@@ -140,9 +149,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ingest_front_door": dedup.ingest_front_door,  # last green r13
         "kmv_set_ops": sketches.kmv_set_ops,  # last green r13
         "seasonal_baseline": analytics.seasonal_baseline,  # last green r13
-        "streaming_incremental_dedup": streaming.streaming_incremental_dedup,  # last green r13
-        "streaming_neardup": streaming.streaming_neardup,  # last green r13
-        "streaming_rule_drift_gate": streaming.streaming_rule_drift_gate,  # last green r13
         "template_communities": graph.template_communities,  # last green r13
         "tfidf_top_terms": text.tfidf_top_terms,  # last green r13
         "topk_drift_weekly": drift.topk_drift_weekly,  # last green r13
@@ -171,7 +177,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "psi_value_drift": drift.psi_value_drift,  # last green r12
         "quality_rule_drift": drift.quality_rule_drift,  # last green r12
         "semdedup_clusters": similarity.semdedup_clusters,  # last green r12
-        "streaming_quality_gated_publish": streaming.streaming_quality_gated_publish,  # last green r12
         "multimodal_resize": multimodal.multimodal_resize,  # last green r12
         "q12_shipmode": relational_ext.q12_shipmode,  # last green r12
         "repetition_stats": curation.repetition_stats,  # last green r12

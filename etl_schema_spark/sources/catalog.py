@@ -187,6 +187,14 @@ def load_table_unique(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     consumer helper-stale, so adopting it fleet-wide must ride a
     rotation window like the r7 ``_vdec`` contract.
     """
+    return restore_unique(load_table(spark, sf_dir, name), name)
+
+
+def restore_unique(df: DataFrame, name: str) -> DataFrame:
+    """The exactly-once restore of :func:`load_table_unique` over any frame
+    carrying table ``name``'s columns (a streaming micro-batch, say): one
+    row per primary key, the row_number()==1 row under the remaining
+    columns' ascending NULLS-LAST order."""
     from pyspark.sql.window import Window
 
     if PRIMARY_KEYS.get(name) is None:
@@ -195,13 +203,13 @@ def load_table_unique(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "restore needs a row identity; dedupe such facts by full-row "
             "content (dropDuplicates()) as an explicit policy instead"
         )
-    df = load_table(spark, sf_dir, name)
     pk = list(PRIMARY_KEYS[name])
     # Tie-break order comes from the SCHEMA REGISTRY, not df.columns: the
     # oracle twin (unique_scan_sql) orders by registry field order, and if
-    # the parquet physical order ever drifts from it (schema evolution,
-    # rewritten files) the two sides would pick different conflicting-
-    # replay winners (ADVICE r8). One source of truth for both.
+    # the physical column order ever drifts from it (schema evolution,
+    # rewritten files, a micro-batch's projection) the two sides would pick
+    # different conflicting-replay winners (ADVICE r8). One source of truth
+    # for both.
     rest = _unique_tiebreak_cols(name, df.columns)
     order = [F.col(c).asc_nulls_last() for c in rest] or [F.lit(1)]
     w = Window.partitionBy(*pk).orderBy(*order)
@@ -215,7 +223,7 @@ def load_table_unique(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _unique_tiebreak_cols(name: str, present: list[str] | None = None) -> list[str]:
     """The non-PK columns of ``name`` in SCHEMA-REGISTRY field order — the
     single source of truth for the exactly-once restore's deterministic
-    tie-break, shared by load_table_unique and unique_scan_sql so a
+    tie-break, shared by restore_unique and unique_scan_sql so a
     physical-column-order drift can never make the two sides pick
     different conflicting-replay winners (ADVICE r8). ``present`` (the
     scan's actual columns) drops registry fields a given file vintage

@@ -54,8 +54,11 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     # remedy is materializing the parse first. Caching here also means each
     # archive line is parsed once, not once per output branch — load batches
     # are bounded (one partition/day of archive per job), not the whole
-    # corpus, so the cache footprint is the batch, and callers unpersist via
-    # clean.unpersist() when the batch is written.
+    # corpus, so the cache footprint is the batch. The cache entry belongs
+    # to the parse frame, which is not returned, so callers cannot release
+    # it: clean.unpersist() leaves the entry in Spark's CacheManager, and a
+    # later split_corrupt(read_jsonl(...)) of the same path plans an
+    # InMemoryRelation over it (an open ROADMAP item).
     df = df.cache()
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull())

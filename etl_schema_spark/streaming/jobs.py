@@ -20,6 +20,8 @@ the source is declarative.
 from __future__ import annotations
 
 import itertools
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -207,6 +209,85 @@ def run_available_now(df: DataFrame, name: str, mode: str = "complete") -> DataF
     return out
 
 
+def drain_exactly_once(
+    stream: DataFrame, target: str, per_batch, mode: str = "append"
+) -> None:
+    """Drain ``stream`` with Trigger.AvailableNow through foreachBatch,
+    running ``per_batch(batch_df, batch_id) -> outcome`` once per batch id.
+
+    Two layers under ``target`` make the drain exactly-once. The
+    checkpoint holds the source offsets, so a restarted drain resumes
+    after the last committed batch. The batch-id ledger holds one marker
+    per batch, written LAST with the outcome ``per_batch`` returned:
+    foreachBatch redelivers a batch that ran but whose checkpoint commit
+    did not land (a crash in between), and the marker turns that
+    redelivery into a no-op. A crash before the marker redelivers the
+    batch whole, so ``per_batch`` must itself converge under a re-run — a
+    key-merge (merge_upsert_batch) or batch-id-scoped overwrites.
+    Underscore dirs stay invisible to parquet readers of ``target``.
+    """
+    ledger = os.path.join(target, "_batches")
+    os.makedirs(ledger, exist_ok=True)
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        marker = os.path.join(ledger, f"{batch_id}.done")
+        if os.path.exists(marker):
+            return
+        outcome = per_batch(batch_df, batch_id)
+        with open(marker, "w") as f:
+            json.dump({"outcome": outcome}, f)
+
+    (
+        stream.writeStream.foreachBatch(run)
+        .outputMode(mode)
+        .option("checkpointLocation", os.path.join(target, "_chk"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _arriving_docs(
+    spark: SparkSession,
+    sf_dir: str,
+    arriving_dir: str | None = None,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The arriving-documents stream the ingest gates adjudicate: the
+    sf_dir slice the batch twins treat as new (doc_id % NEW_BATCH_MOD ==
+    NEW_BATCH_MOD - 1), or every documents-schema file in
+    ``arriving_dir`` at ``max_files_per_trigger`` files per micro-batch.
+    NULL doc_ids never arrive: a NULL PK is not a restorable key."""
+    from ..operators.dedup import NEW_BATCH_MOD
+
+    m = NEW_BATCH_MOD
+    reader = spark.readStream.schema(physical_schema(spark, sf_dir, "documents"))
+    keep = F.col("doc_id").isNotNull()
+    if arriving_dir is None:
+        reader = reader.option("pathGlobFilter", "documents.parquet")
+        keep = keep & (F.col("doc_id") % m == m - 1)
+    elif max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(arriving_dir or sf_dir).filter(keep)
+
+
+def _read_sink(spark: SparkSession, path: str, schema: str, *order: str) -> DataFrame:
+    """A drained sink dir as a DISTRIBUTED read (streaming.scratch
+    lifecycle — evaluate before release_scratch, never a driver collect,
+    VERDICT r11 item 6), projected and cast to the DDL ``schema``. No
+    batch wrote there (every batch quarantined, or an empty drain): an
+    empty frame of ``schema``."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import StructType
+
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException:
+        return spark.createDataFrame([], schema)
+    cols = [F.col(f.name).cast(f.dataType) for f in StructType.fromDDL(schema)]
+    return df.select(*cols).orderBy(*order)
+
+
 def attribution_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: each purchase joined to the same user's
     clicks in the preceding hour (classic attribution).
@@ -303,28 +384,13 @@ def upsert_hourly_sink(spark: SparkSession, sf_dir: str, target: str) -> DataFra
 
     Returns the final target table as a DataFrame.
     """
-    import os
-
     agg = hourly_counts_stream(spark, sf_dir).withColumn("date", F.to_date("hour"))
-    ledger = os.path.join(target, "_batches")
-    os.makedirs(ledger, exist_ok=True)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger, f"{batch_id}.done")
-        if os.path.exists(marker):
-            return
+    def merge(batch_df: DataFrame, batch_id: int) -> str:
         merge_upsert_batch(batch_df, target, ["hour", "event_type"], "date")
-        with open(marker, "w") as f:
-            f.write("done")
+        return "published"
 
-    q = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(target, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_exactly_once(agg, target, merge, "update")
     return spark.read.parquet(target)
 
 
@@ -574,44 +640,25 @@ def quality_gated_sink(
     "reports": [...]} for the drain (ops harness); in production the
     reports flow to the metrics sink instead.
     """
-    import json
-    import os
-
     agg = hourly_counts_stream(spark, sf_dir).withColumn("date", F.to_date("hour"))
-    ledger = os.path.join(target, "_batches")
-    os.makedirs(ledger, exist_ok=True)
     stats = {"published": 0, "quarantined": 0, "reports": []}
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger, f"{batch_id}.done")
-        if os.path.exists(marker):
-            return
+    def gate(batch_df: DataFrame, batch_id: int) -> str:
         report = build_check(batch_df).run(batch_df)
         stats["reports"].append(report)
         if report.passed:
             merge_upsert_batch(batch_df, target, ["hour", "event_type"], "date")
-            stats["published"] += 1
-            outcome = {"outcome": "published"}
+            outcome = "published"
         else:
             qdir = os.path.join(target, "_quarantine", f"batch={batch_id}")
             batch_df.write.mode("overwrite").parquet(qdir)
             with open(os.path.join(qdir, "_report.json"), "w") as f:
                 json.dump(report.as_rows(), f)
-            stats["quarantined"] += 1
-            outcome = {"outcome": "quarantined"}
-        # ledger written LAST: a crash before this line redelivers the
-        # batch, and both paths are idempotent under redelivery
-        with open(marker, "w") as f:
-            json.dump(outcome, f)
+            outcome = "quarantined"
+        stats[outcome] += 1
+        return outcome
 
-    q = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(target, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_exactly_once(agg, target, gate, "update")
     return stats
 
 
@@ -651,32 +698,14 @@ def streaming_quality_gated_publish(spark: SparkSession, sf_dir: str) -> DataFra
             .accepted_values("event_type", list(STANDARD_EVENT_TYPES))
         )
 
-    empty_schema = "hour timestamp, event_type string, n bigint, date date"
-    from pyspark.errors import AnalysisException
-
-    # Drain, then return the published table as a DISTRIBUTED read over
-    # the scratch sink — no driver-side materialization of the output
-    # (VERDICT r11 item 6; the previous collect-then-rmtree shape could
-    # not survive a 100 TB drain). The dir is registered with
-    # streaming.scratch and removed at session teardown / harness
-    # release_scratch(), which also closes the ADVICE-r9 mkdtemp leak
-    # the collect was originally added for.
     quality_gated_sink(spark, sf_dir, target, build_check)
-    try:
-        return (
-            spark.read.parquet(target)
-            .select(
-                "hour",
-                "event_type",
-                F.col("n").cast("bigint").alias("n"),
-                F.col("date").cast("date").alias("date"),
-            )
-            .orderBy("hour", "event_type")
-        )
-    except AnalysisException:
-        # every batch quarantined: nothing published (underscore dirs
-        # — _quarantine/_batches/_chk — are invisible to the reader)
-        return spark.createDataFrame([], empty_schema)
+    return _read_sink(
+        spark,
+        target,
+        "hour timestamp, event_type string, n bigint, date date",
+        "hour",
+        "event_type",
+    )
 
 
 def streaming_quality_gated_publish_oracle() -> str:
@@ -818,13 +847,8 @@ def incremental_dedup_sink(spark: SparkSession, sf_dir: str, target: str) -> Non
     keyed upsert sink (merge_upsert_batch) collapses them downstream,
     same contract as streaming_ingest_restore's update-mode note.
     """
-    import os
-
     from ..operators.dedup import NEW_BATCH_MOD, _normalized
-    from ..sources.catalog import (
-        _unique_tiebreak_cols,
-        load_table_unique,
-    )
+    from ..sources.catalog import load_table_unique, restore_unique
 
     m = NEW_BATCH_MOD
     corpus = (
@@ -832,23 +856,9 @@ def incremental_dedup_sink(spark: SparkSession, sf_dir: str, target: str) -> Non
         .filter(F.col("doc_id") % m != m - 1)
         .select("doc_id", F.md5(_normalized()).alias("content_md5"))
     )
-    stream = (
-        spark.readStream.schema(physical_schema(spark, sf_dir, "documents"))
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .filter(F.col("doc_id").isNotNull() & (F.col("doc_id") % m == m - 1))
-    )
 
-    def verdicts(batch_df: DataFrame, batch_id: int) -> None:
-        rest = _unique_tiebreak_cols("documents", batch_df.columns)
-        order = [F.col(c).asc_nulls_last() for c in rest] or [F.lit(1)]
-        w = Window.partitionBy("doc_id").orderBy(*order)
-        restored = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        hashed = restored.select(
+    def verdicts(batch_df: DataFrame, batch_id: int) -> str:
+        hashed = restore_unique(batch_df, "documents").select(
             F.col("doc_id").alias("new_doc_id"),
             F.md5(_normalized()).alias("content_md5"),
         )
@@ -864,20 +874,12 @@ def incremental_dedup_sink(spark: SparkSession, sf_dir: str, target: str) -> Non
             F.col("dup_of").isNotNull().alias("is_duplicate"),
             "dup_of",
         )
-        # batch-id-scoped overwrite: idempotent under availableNow
-        # redelivery (ADVICE r12 medium — append was only at-least-once)
         out.write.mode("overwrite").parquet(
             os.path.join(target, "out", f"batch={batch_id}")
         )
+        return "adjudicated"
 
-    q = (
-        stream.writeStream.foreachBatch(verdicts)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(target, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_exactly_once(_arriving_docs(spark, sf_dir), target, verdicts)
 
 
 def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -889,27 +891,16 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the drain's sink dir (session-scoped, cleaned by
     streaming.scratch at teardown), never a driver collect (VERDICT r11
     item 6)."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
     from .scratch import scratch_dir
 
     target = scratch_dir("sq_incdedup_")
     incremental_dedup_sink(spark, sf_dir, target)
-    sch = "doc_id long, is_duplicate boolean, dup_of long"
-    try:
-        return (
-            spark.read.parquet(os.path.join(target, "out"))
-            .select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                "is_duplicate",
-                F.col("dup_of").cast("long").alias("dup_of"),
-            )
-            .orderBy("doc_id")
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], sch)
+    return _read_sink(
+        spark,
+        os.path.join(target, "out"),
+        "doc_id long, is_duplicate boolean, dup_of long",
+        "doc_id",
+    )
 
 
 def streaming_incremental_dedup_oracle() -> str:
@@ -939,56 +930,29 @@ def neardup_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
     availableNow redelivery (ADVICE r12 medium: a plain append was only
     at-least-once across a crash window).
     """
-    import os
-
     from ..operators.dedup import (
-        NEW_BATCH_MOD,
         _shingles_of,
         _sig_banded,
         neardup_band_index,
         neardup_verdicts,
     )
-    from ..sources.catalog import _unique_tiebreak_cols
+    from ..sources.catalog import restore_unique
 
-    m = NEW_BATCH_MOD
     index = neardup_band_index(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(physical_schema(spark, sf_dir, "documents"))
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .filter(F.col("doc_id").isNotNull() & (F.col("doc_id") % m == m - 1))
-    )
 
-    def verdicts(batch_df: DataFrame, batch_id: int) -> None:
-        rest = _unique_tiebreak_cols("documents", batch_df.columns)
-        order = [F.col(c).asc_nulls_last() for c in rest] or [F.lit(1)]
-        w = Window.partitionBy("doc_id").orderBy(*order)
-        restored = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    def verdicts(batch_df: DataFrame, batch_id: int) -> str:
         arriving = _sig_banded(
-            restored.select(
+            restore_unique(batch_df, "documents").select(
                 "doc_id",
                 _shingles_of(F.split(F.col("text"), r"\s+")).alias("shingles"),
             ).filter(F.size("shingles") > 0)
         )
-        out = neardup_verdicts(index, arriving)
-        # batch-id-scoped overwrite: idempotent under availableNow
-        # redelivery (ADVICE r12 medium — append was only at-least-once)
-        out.write.mode("overwrite").parquet(
+        neardup_verdicts(index, arriving).write.mode("overwrite").parquet(
             os.path.join(target, "out", f"batch={batch_id}")
         )
+        return "adjudicated"
 
-    q = (
-        stream.writeStream.foreachBatch(verdicts)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(target, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_exactly_once(_arriving_docs(spark, sf_dir), target, verdicts)
 
 
 def streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -999,32 +963,17 @@ def streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch, so the verdicts equal the batch twin's
     (incremental_neardup) row for row — the oracle IS the batch oracle.
     """
-    import os
-
-    from pyspark.errors import AnalysisException
-
     from .scratch import scratch_dir
 
     target = scratch_dir("sq_neardup_")
     neardup_sink(spark, sf_dir, target)
-    sch = (
+    return _read_sink(
+        spark,
+        os.path.join(target, "out"),
         "doc_id long, n_candidates long, best_agree long, "
-        "is_near_dup boolean, dup_of long"
+        "is_near_dup boolean, dup_of long",
+        "doc_id",
     )
-    try:
-        return (
-            spark.read.parquet(os.path.join(target, "out"))
-            .select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.col("n_candidates").cast("long").alias("n_candidates"),
-                F.col("best_agree").cast("long").alias("best_agree"),
-                "is_near_dup",
-                F.col("dup_of").cast("long").alias("dup_of"),
-            )
-            .orderBy("doc_id")
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], sch)
 
 
 def streaming_neardup_oracle() -> str:
@@ -1058,13 +1007,10 @@ def drift_gated_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
     byte-for-byte on all three routes (ADVICE r12 medium: the previous
     plain appends were only at-least-once).
     """
-    import json
-    import os
-
     from ..operators.cachereg import memo_pin
     from ..operators.dedup import NEW_BATCH_MOD
     from ..operators.drift import _psi_cells_tail, rule_tagged
-    from ..sources.catalog import _unique_tiebreak_cols, load_table_unique
+    from ..sources.catalog import load_table_unique, restore_unique
 
     m = NEW_BATCH_MOD
 
@@ -1085,27 +1031,9 @@ def drift_gated_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
         build_baseline,
         inputs=(os.path.join(sf_dir, "documents.parquet"),),
     )
-    stream = (
-        spark.readStream.schema(physical_schema(spark, sf_dir, "documents"))
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .filter(F.col("doc_id").isNotNull() & (F.col("doc_id") % m == m - 1))
-    )
-    ledger = os.path.join(target, "_batches")
-    os.makedirs(ledger, exist_ok=True)
 
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger, f"{batch_id}.done")
-        if os.path.exists(marker):
-            return
-        rest = _unique_tiebreak_cols("documents", batch_df.columns)
-        order = [F.col(c).asc_nulls_last() for c in rest] or [F.lit(1)]
-        w = Window.partitionBy("doc_id").orderBy(*order)
-        restored = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    def gate(batch_df: DataFrame, batch_id: int) -> str:
+        restored = restore_unique(batch_df, "documents")
         cur = (
             rule_tagged(restored, F.lit(1))
             .groupBy("source", "rule", "bucket")
@@ -1123,12 +1051,6 @@ def drift_gated_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
         any_drift = report.agg(
             F.coalesce(F.bool_or("drifted"), F.lit(False)).alias("_any")
         )
-        # batch-id-scoped overwrites (ADVICE r12 medium): a plain append
-        # was only at-least-once — a crash after the append and before
-        # the ledger marker redelivers the batch and duplicates rows in
-        # report/published. Overwriting batch=<id> subdirs (the
-        # _quarantine pattern) makes every routing path converge under
-        # redelivery, keeping the ledger marker as the commit point.
         (
             report.join(F.broadcast(any_drift))
             .withColumn("published", ~F.col("_any"))
@@ -1137,26 +1059,13 @@ def drift_gated_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
             .parquet(os.path.join(target, "report", f"batch={batch_id}"))
         )
         drifted = bool(any_drift.first()["_any"])
-        if drifted:
-            qdir = os.path.join(target, "_quarantine", f"batch={batch_id}")
-            restored.write.mode("overwrite").parquet(qdir)
-        else:
-            restored.write.mode("overwrite").parquet(
-                os.path.join(target, "published", f"batch={batch_id}")
-            )
-        # ledger written LAST: a crash before this line redelivers the
-        # batch, and every routing path is idempotent under redelivery
-        with open(marker, "w") as f:
-            json.dump({"outcome": "quarantined" if drifted else "published"}, f)
+        route = "_quarantine" if drifted else "published"
+        restored.write.mode("overwrite").parquet(
+            os.path.join(target, route, f"batch={batch_id}")
+        )
+        return "quarantined" if drifted else "published"
 
-    q = (
-        stream.writeStream.foreachBatch(gate)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(target, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_exactly_once(_arriving_docs(spark, sf_dir), target, gate)
 
 
 def streaming_rule_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1168,26 +1077,18 @@ def streaming_rule_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake slice's rule cells, current = the arriving slice's, published
     = no (source, rule) drifted anywhere in the batch — exactly what
     the oracle states."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
     from .scratch import scratch_dir
 
     target = scratch_dir("sq_driftgate_")
     drift_gated_sink(spark, sf_dir, target)
-    sch = (
+    return _read_sink(
+        spark,
+        os.path.join(target, "report"),
         "source string, rule string, n_ref bigint, n_cur bigint, "
-        "n_buckets bigint, psi double, drifted boolean, published boolean"
+        "n_buckets bigint, psi double, drifted boolean, published boolean",
+        "source",
+        "rule",
     )
-    try:
-        return (
-            spark.read.parquet(os.path.join(target, "report"))
-            .drop("batch")  # partition-discovered batch=<id> scoping col
-            .orderBy("source", "rule")
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], sch)
 
 
 def streaming_rule_drift_gate_oracle() -> str:
@@ -1303,8 +1204,6 @@ def ingest_front_door_sink(
     ``maxFilesPerTrigger`` controlling micro-batch granularity — the
     multi-batch replay harness.
     """
-    import os
-
     from pyspark.errors import AnalysisException
 
     from ..operators.dedup import (
@@ -1315,7 +1214,7 @@ def ingest_front_door_sink(
         front_door_verdicts,
         neardup_band_index,
     )
-    from ..sources.catalog import _unique_tiebreak_cols, load_table_unique
+    from ..sources.catalog import load_table_unique, restore_unique
 
     m = NEW_BATCH_MOD
     corpus = load_table_unique(spark, sf_dir, "documents").filter(
@@ -1323,21 +1222,6 @@ def ingest_front_door_sink(
     )
     md5_index = corpus.select("doc_id", F.md5(_normalized()).alias("content_md5"))
     band_index = neardup_band_index(spark, sf_dir)
-
-    reader = spark.readStream.schema(physical_schema(spark, sf_dir, "documents"))
-    if arriving_dir is None:
-        stream = (
-            reader.option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-            .filter(F.col("doc_id").isNotNull() & (F.col("doc_id") % m == m - 1))
-        )
-    else:
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(arriving_dir).filter(F.col("doc_id").isNotNull())
-
-    ledger = os.path.join(target, "_batches")
-    os.makedirs(ledger, exist_ok=True)
     md5_delta_dir = os.path.join(target, "_index", "md5")
     band_delta_dir = os.path.join(target, "_index", "band")
 
@@ -1351,18 +1235,8 @@ def ingest_front_door_sink(
             return None
         return d.filter(F.col("batch") < batch_id).drop("batch")
 
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger, f"{batch_id}.done")
-        if os.path.exists(marker):
-            return
-        rest = _unique_tiebreak_cols("documents", batch_df.columns)
-        order = [F.col(c).asc_nulls_last() for c in rest] or [F.lit(1)]
-        w = Window.partitionBy("doc_id").orderBy(*order)
-        restored = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    def admit(batch_df: DataFrame, batch_id: int) -> str:
+        restored = restore_unique(batch_df, "documents")
         d_md5 = _deltas_before(md5_delta_dir, batch_id)
         d_band = _deltas_before(band_delta_dir, batch_id)
         mi = md5_index if d_md5 is None else md5_index.unionByName(d_md5)
@@ -1398,19 +1272,10 @@ def ingest_front_door_sink(
             .write.mode("overwrite")
             .parquet(os.path.join(band_delta_dir, f"batch={batch_id}"))
         )
-        # ledger written LAST: every write above is batch-id-scoped
-        # overwrite, so redelivery before this line converges
-        with open(marker, "w") as f:
-            f.write('{"outcome": "adjudicated"}')
+        return "adjudicated"
 
-    q = (
-        stream.writeStream.foreachBatch(admit)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(target, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _arriving_docs(spark, sf_dir, arriving_dir, max_files_per_trigger)
+    drain_exactly_once(stream, target, admit)
 
 
 def streaming_ingest_front_door(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1426,28 +1291,16 @@ def streaming_ingest_front_door(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-1 admit verdicts 'duplicate'/'near_dup') is pinned by
     tests/test_round13.py's replay harness, which streams multiple
     files at maxFilesPerTrigger=1."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
     from .scratch import scratch_dir
 
     target = scratch_dir("sq_frontdoor_")
     ingest_front_door_sink(spark, sf_dir, target)
-    sch = "doc_id long, verdict string, witness long, detail string"
-    try:
-        return (
-            spark.read.parquet(os.path.join(target, "out"))
-            .select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                "verdict",
-                F.col("witness").cast("long").alias("witness"),
-                "detail",
-            )
-            .orderBy("doc_id")
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], sch)
+    return _read_sink(
+        spark,
+        os.path.join(target, "out"),
+        "doc_id long, verdict string, witness long, detail string",
+        "doc_id",
+    )
 
 
 def streaming_ingest_front_door_oracle() -> str:

@@ -30,6 +30,7 @@ def test_load_table_unique_restores_pk_uniqueness(spark, tmp_path_factory):
         PRIMARY_KEYS,
         load_table,
         load_table_unique,
+        restore_unique,
     )
 
     spec = importlib.util.spec_from_file_location(
@@ -51,6 +52,19 @@ def test_load_table_unique_restores_pk_uniqueness(spark, tmp_path_factory):
         a = sorted(map(str, uniq.collect()))
         b = sorted(map(str, load_table_unique(spark, d, table).collect()))
         assert a == b
+        # the in-frame restore the streaming sinks run on each micro-batch
+        # picks the same winners whatever the frame's physical column order
+        shuffled = raw.select(*reversed(raw.columns))
+        c = restore_unique(shuffled, table).select(*raw.columns)
+        assert sorted(map(str, c.collect())) == a
+    # a conflict the two column orders resolve differently: the registry
+    # order (text before n_chars) decides, not the frame's physical order
+    pair = spark.createDataFrame(
+        [(1, "a", "en", "s", 9), (1, "b", "en", "s", 1)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    flipped = pair.select(*reversed(pair.columns))
+    assert [r.text for r in restore_unique(flipped, "documents").collect()] == ["a"]
 
     # conflicting replay resolves to the asc-NULLS-LAST minimum payload:
     # wave 9 plants (max doc_id, 'conflicting replay payload...') next to

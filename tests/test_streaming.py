@@ -303,3 +303,52 @@ def test_quality_gated_sink_quarantines_bad_batches(spark, sf_dir, tmp_path):
     # quarantined rows are intact (re-processable)
     n_q = spark.read.parquet(qdirs[0]).count()
     assert n_q > 0
+
+
+def test_drain_exactly_once_skips_redelivered_batch(spark, tmp_path):
+    """The batch-id ledger, exercised on its own: a batch that ran but
+    whose checkpoint commit never landed (deleting ``_chk/commits/0`` and
+    its checksum mimics a crash between the two) is redelivered on restart, and the
+    ledger marker must turn that redelivery into a no-op."""
+    import json
+    import os
+
+    src, target = str(tmp_path / "src"), str(tmp_path / "sink")
+    spark.range(20).selectExpr("id", "id % 3 AS k").coalesce(1).write.parquet(src)
+    calls = {}
+
+    def write(batch_df, batch_id):
+        calls[batch_id] = calls.get(batch_id, 0) + 1
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(target, "out", f"batch={batch_id}")
+        )
+        return "written"
+
+    def drain():
+        stream = spark.readStream.schema("id long, k long").parquet(src)
+        streaming.drain_exactly_once(stream, target, write)
+
+    def output_bytes():
+        out = os.path.join(target, "out")
+        return {
+            os.path.relpath(os.path.join(d, f), out): open(os.path.join(d, f), "rb").read()
+            for d, _, files in os.walk(out)
+            for f in files
+        }
+
+    drain()
+    assert calls == {0: 1}
+    first = output_bytes()
+    assert first
+    commit = os.path.join(target, "_chk", "commits", "0")
+    os.remove(commit)
+    os.remove(os.path.join(target, "_chk", "commits", ".0.crc"))
+
+    drain()
+    # Spark did redeliver batch 0 (it committed it again) ...
+    assert os.path.exists(commit)
+    # ... and the ledger skipped it: one run, untouched output
+    assert calls == {0: 1}
+    assert output_bytes() == first
+    with open(os.path.join(target, "_batches", "0.done")) as f:
+        assert json.load(f) == {"outcome": "written"}
