@@ -61,28 +61,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # tests/test_plan_audit.py::test_stale_entries_sort_into_scored_window.
     return {
         # -- group 1: implementation or oracle changed since the entry's
-        # last green verdict (24, tools/verdict_freshness.py): the r14
-        # work set — deterministic hex-prefix bucketing (epoch_shuffle /
-        # source_token_budget / triplet_mining / label_balance_sample and
-        # every other grouped_running_sum/rank consumer re-rotates via the
-        # distributed.py helper change), the rank-pick single-sort
-        # selection (mad / tail / trimmed / perplexity), and the oracle
-        # CTE rewrites (jpairs posting-intersection: dedup_ngram_jaccard +
-        # the dup-graph family; levenshtein-once: dedup_editdistance). ----
+        # last green verdict (35, tools/verdict_freshness.py). ----------
+        # (a) the r14 work set: deterministic hex-prefix bucketing (every
+        # grouped_running_sum/rank consumer re-rotates via the
+        # distributed.py helper change) and the rank-pick single-sort
+        # selection (mad / tail / trimmed / perplexity). -----------------
         "ccnet_source_split": curation.ccnet_source_split,  # last green r13
-        "dedup_aware_split": graph.dedup_aware_split,  # last green r12
-        "dedup_editdistance": dedup.dedup_editdistance,  # last green r13
-        "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,  # last green r12
-        "dup_cluster_stats": graph.dup_cluster_stats,  # last green r12
-        "dup_components": graph.dup_components,  # last green r12
-        "dup_pagerank": graph.dup_pagerank,  # last green r12
         "embedding_outliers": similarity.embedding_outliers,  # last green r13
         "epoch_shuffle": corpus.epoch_shuffle,  # last green r13
         "key_skew_profile": skew.key_skew_profile,  # last green r13
         "label_balance_sample": similarity.label_balance_sample,  # last green r13
         "mad_outliers": analytics.mad_outliers,  # last green r13
-        "minhash_pr_eval": dedup.minhash_pr_eval,  # last green r12
-        "near_dup_keep_plan": graph.near_dup_keep_plan,  # last green r12
         "pack_efficiency_sweep": packing.pack_efficiency_sweep,  # last green r13
         "pack_fill_audit": packing.pack_fill_audit,  # last green r13
         "pack_sequences": packing.pack_sequences,  # last green r13
@@ -93,28 +82,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "triplet_mining": similarity.triplet_mining,  # last green r13
         "user_activity_gini": analytics.user_activity_gini,  # last green r13
         "vocab_growth_curve": corpus.vocab_growth_curve,  # last green r13
-        # -- group 1b: own code changed but outside the freshness tool's
-        # in-package trace (sources.catalog.cpu_parallel's bytes-derived
-        # fan-out, r14): the two entries whose plans/timings moved most
-        # rotate in explicitly; the other ~28 cpu_parallel consumers carry
-        # the local 210/210 sf0.01 + sf0.001 oracle gates (BENCH_NOTES
-        # r14) and rotate by age like any helper-changed cohort. ---------
-        "multimodal_meta": multimodal.multimodal_meta,  # last green r12
-        "simhash_fingerprint": dedup.simhash_fingerprint,  # last green r10
-        # -- group 1c: the streaming sinks now share one exactly-once
-        # drain (jobs.drain_exactly_once), one arriving-documents reader,
-        # one sink read-back and catalog.restore_unique; the five entries
-        # that drain those sinks rotate in (tools/verdict_freshness.py). --
+        # (b) the streaming sinks share one exactly-once drain
+        # (jobs.drain_exactly_once), one arriving-documents reader, one
+        # sink read-back and catalog.restore_unique. ----------------------
         "streaming_incremental_dedup": streaming.streaming_incremental_dedup,  # last green r13
         "streaming_ingest_front_door": streaming.streaming_ingest_front_door,  # last green r13
         "streaming_neardup": streaming.streaming_neardup,  # last green r13
         "streaming_quality_gated_publish": streaming.streaming_quality_gated_publish,  # last green r12
         "streaming_rule_drift_gate": streaming.streaming_rule_drift_gate,  # last green r13
-        # -- group 2: oldest-verdict rotation fill (19: the ten r7 tails
-        # deferred from r13 plus the oldest r8 cohort). The five r8s that
-        # group 1c displaced lead the below-cap region for the next
-        # rotation; streaming_topk_keys and unified_view_events, displaced
-        # by group 1b, follow the r13 cohort. ----------------------------
+        # (c) one PDF/CDF and geomean (table_functions, direction=None),
+        # one validity text (views_layer.VALID_BEST_SQL / VALID_2021_SQL),
+        # one wildcard scan (catalog.wildcard_scan) and one min-label
+        # closure (graph._min_label_closure + _closure_ctes_sql). --------
+        "daily_deciles": rollups.daily_deciles,  # last green r13
+        "dedup_aware_split": graph.dedup_aware_split,  # last green r14
+        "dedup_best_per_user": rollups.dedup_best_per_user,  # last green r14
+        "dup_cluster_stats": graph.dup_cluster_stats,  # last green r14
+        "dup_components": graph.dup_components,  # last green r14
+        "fn_geomean_download_complete": lambda s, d: table_functions.metric_geomean( s, d, direction="download", fleet="complete" ),  # last green r14
+        "fn_pdf_upload_2021": lambda s, d: table_functions.metric_pdf( s, d, direction="upload", fleet="2021" ),  # last green r14
+        "geomean_by_type": lambda s, d: table_functions.metric_geomean(s, d, direction=None),  # last green r13
+        "hourly_rollup": rollups.hourly_rollup,  # last green r14
+        "log_pdf_cdf": lambda s, d: table_functions.metric_pdf(s, d, direction=None),  # last green r13
+        "near_dup_keep_plan": graph.near_dup_keep_plan,  # last green r14
+        "template_communities": graph.template_communities,  # last green r13
+        "unified_view_events": views_layer.unified_view,  # last green r08
+        "wildcard_union": rollups.wildcard_union,  # last green r09
+        # -- group 2: oldest-verdict rotation fill (15: the r07 tails and
+        # the oldest r08 cohort). -----------------------------------------
         "sidestream_view": rollups.sidestream_view,  # last green r07
         "skew_salted_daily_users": skew.skew_salted_daily_users,  # last green r07
         "sliding_window_stats": rollups.sliding_window_stats,  # last green r07
@@ -127,13 +122,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top_clients_per_type": sessions.top_clients_per_type,  # last green r07
         "autojoin_tiered_counts": view_families.autojoin_tiered_counts,  # last green r08
         "cross_source_dup_leakage": corpus.cross_source_dup_leakage,  # last green r08
-        "dedup_best_per_user": rollups.dedup_best_per_user,  # last green r08
         "dedup_minhash_lsh": dedup.dedup_minhash_lsh,  # last green r08
         "dedup_minhash_portable": dedup.dedup_minhash_portable,  # last green r08
         "dsir_importance_weights": curation.dsir_importance_weights,  # last green r08
-        "fn_geomean_download_complete": lambda s, d: table_functions.metric_geomean( s, d, direction="download", fleet="complete" ),  # last green r08
-        "fn_pdf_upload_2021": lambda s, d: table_functions.metric_pdf( s, d, direction="upload", fleet="2021" ),  # last green r08
-        "hourly_rollup": rollups.hourly_rollup,  # last green r08
         # ---------------- 50-entry scoring cap lands here ----------------
         "length_filter_sweep": curation.length_filter_sweep,  # last green r08
         "new_vs_returning": analytics.new_vs_returning,  # last green r08
@@ -149,19 +140,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ingest_front_door": dedup.ingest_front_door,  # last green r13
         "kmv_set_ops": sketches.kmv_set_ops,  # last green r13
         "seasonal_baseline": analytics.seasonal_baseline,  # last green r13
-        "template_communities": graph.template_communities,  # last green r13
         "tfidf_top_terms": text.tfidf_top_terms,  # last green r13
         "topk_drift_weekly": drift.topk_drift_weekly,  # last green r13
         "corr_value_hour": analytics.corr_value_hour,  # last green r13
-        "daily_deciles": rollups.daily_deciles,  # last green r13
         "gapfill_interp": analytics.gapfill_interp,  # last green r13
         "gapfill_locf": analytics.gapfill_locf,  # last green r13
-        "geomean_by_type": rollups.geomean_by_type,  # last green r13
         "histogram_quantile_sketch": sketches.histogram_quantile_sketch,  # last green r13
         "image_ahash_dup": multimodal.image_ahash_dup,  # last green r13
         "json_extract_props": corpus.json_extract_props,  # last green r13
         "linear_trend": analytics.linear_trend,  # last green r13
-        "log_pdf_cdf": rollups.log_pdf_cdf,  # last green r13
         "multigrain_stats": analytics.multigrain_stats,  # last green r13
         "multimodal_wav_energy": multimodal.multimodal_wav_energy,  # last green r13
         "multistream_throughput": rollups.multistream_throughput,  # last green r13
@@ -187,7 +174,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "annotate_renest": views_layer.annotate_renest,  # last green r12
         "churned_users": analytics.churned_users,  # last green r12
         "streaming_topk_keys": streaming.streaming_topk_keys,  # last green r08
-        "unified_view_events": views_layer.unified_view,  # last green r08
         "unigram_lm_pieces": text.unigram_lm_pieces,  # last green r08
         "user_transition_matrix": analytics.user_transition_matrix,  # last green r08
         "weighted_sample_ares": corpus.weighted_sample_ares,  # last green r08
@@ -227,7 +213,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "retention_cohorts": analytics.retention_cohorts,  # last green r09
         "rolling_active_users": rollups.rolling_active_users,  # last green r09
         "vocab_coverage": text.vocab_coverage,  # last green r09
-        "wildcard_union": rollups.wildcard_union,  # last green r09
         "ann_pq_topk": similarity.ann_pq_topk,  # last green r10
         "asof_attribution": asof.asof_attribution,  # last green r10
         "asof_nearest": asof.asof_nearest,  # last green r10
@@ -295,6 +280,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "windowed_funnel": analytics.windowed_funnel,  # last green r11
         "winnowing_fingerprint": dedup.winnowing_fingerprint,  # last green r11
         "zipf_term_stats": corpus.zipf_term_stats,  # last green r11
+        # -- the six r14 work-set entries whose r14 verdicts are current:
+        # the newest verdicts, so last in the rotation. -------------------
+        "dedup_editdistance": dedup.dedup_editdistance,  # last green r14
+        "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,  # last green r14
+        "dup_pagerank": graph.dup_pagerank,  # last green r14
+        "minhash_pr_eval": dedup.minhash_pr_eval,  # last green r14
+        "multimodal_meta": multimodal.multimodal_meta,  # last green r14
+        "simhash_fingerprint": dedup.simhash_fingerprint,  # last green r14
     }
 
 
@@ -355,8 +348,8 @@ def oracle_sql() -> dict[str, str]:
         "dedup_best_per_user": rollups.dedup_best_per_user_oracle(),
         "hourly_rollup": rollups.hourly_rollup_oracle(),
         "daily_deciles": rollups.daily_deciles_oracle(),
-        "log_pdf_cdf": rollups.log_pdf_cdf_oracle(),
-        "geomean_by_type": rollups.geomean_by_type_oracle(),
+        "log_pdf_cdf": table_functions.metric_pdf_oracle(direction=None),
+        "geomean_by_type": table_functions.metric_geomean_oracle(direction=None),
         "switch_utilization": rollups.switch_utilization_oracle(),
         "sidestream_view": rollups.sidestream_view_oracle(),
         "wildcard_union": rollups.wildcard_union_oracle(),

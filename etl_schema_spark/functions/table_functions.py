@@ -20,8 +20,16 @@ Parity: functions/ops.ndt7_download_pdf_managed.sql (log10 binning, PDF =
 count / SUM OVER site, CDF = cumulative SUM OVER bin), functions/
 ops.ndt7_geomean_managed.sql (COUNT / AVG / EXP(AVG(LN))).
 
-Scale: same single narrow groupBy as rollups.log_pdf_cdf — bin ordinals are
-computed arithmetically, never cross-joined against a bin table.
+`direction=None` keeps every event type: `metric_pdf(spark, sf_dir, None)`
+and `metric_geomean(spark, sf_dir, None)` are the registry's `log_pdf_cdf`
+and `geomean_by_type` (the reference's un-directed managed-fleet files).
+
+Scale: the reference builds bins with GENERATE_ARRAY(log10(xmin),
+log10(xmax), .02) and CROSS JOINs every row against every bin, which is
+O(rows x bins). Here each row's bin ordinal is computed from log10(value)
+and lands in the same centered bin (xright = 10^(x+0.01)). The whole PDF
+is one narrow groupBy plus two window functions over the tiny
+(event_type x bin) aggregate, so the shuffle carries bin counts, not rows.
 """
 
 from __future__ import annotations
@@ -30,8 +38,11 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.views_layer import (
+    _EXTENDED_SQL,
     DOWNLOAD_TYPES,
     UPLOAD_TYPES,
+    VALID_2021_SQL,
+    VALID_BEST_SQL,
     extended_view,
     is_valid_2021,
     is_valid_best,
@@ -53,20 +64,23 @@ def _fleet_predicate(fleet: str) -> Column:
     raise ValueError(f"unknown fleet {fleet!r} (best | 2021 | complete)")
 
 
-def _filtered(spark: SparkSession, sf_dir: str, direction: str, fleet: str) -> DataFrame:
-    if direction not in DIRECTIONS:
-        raise ValueError(f"unknown direction {direction!r} (download | upload)")
-    return (
-        extended_view(spark, sf_dir)
-        .filter(F.col("event_type").isin(*DIRECTIONS[direction]))
-        .filter(_fleet_predicate(fleet))
-    )
+def _filtered(
+    spark: SparkSession, sf_dir: str, direction: str | None, fleet: str
+) -> DataFrame:
+    """The extended view restricted to one direction (None: every event
+    type) and one fleet."""
+    ext = extended_view(spark, sf_dir)
+    if direction is not None:
+        if direction not in DIRECTIONS:
+            raise ValueError(f"unknown direction {direction!r} (download | upload | None)")
+        ext = ext.filter(F.col("event_type").isin(*DIRECTIONS[direction]))
+    return ext.filter(_fleet_predicate(fleet))
 
 
 def metric_pdf(
     spark: SparkSession,
     sf_dir: str,
-    direction: str = "download",
+    direction: str | None = "download",
     fleet: str = "best",
     xmin: float = 0.01,
     xmax: float = 500.0,
@@ -104,7 +118,7 @@ def metric_pdf(
 def metric_geomean(
     spark: SparkSession,
     sf_dir: str,
-    direction: str = "download",
+    direction: str | None = "download",
     fleet: str = "best",
 ) -> DataFrame:
     """COUNT / mean / geometric mean per event_type for one
@@ -124,28 +138,24 @@ def metric_geomean(
 # --- DuckDB oracle builders ----------------------------------------------
 
 _FLEET_SQL = {
-    "best": """is_complete AND is_production AND NOT is_error AND NOT is_oam
-               AND NOT is_small AND NOT is_short AND NOT is_long""",
-    "2021": """is_complete AND is_production AND NOT is_error AND NOT is_oam
-               AND NOT is_small AND NOT is_short AND NOT is_long
-               AND (is_congested OR is_bloated)""",
+    "best": VALID_BEST_SQL,
+    "2021": VALID_2021_SQL,
     "complete": "is_complete AND NOT is_error",
 }
 
 _DIRECTION_SQL = {
     "download": "event_type IN ('click','view')",
     "upload": "event_type IN ('purchase','signup')",
+    None: "TRUE",
 }
 
 
 def metric_pdf_oracle(
-    direction: str = "download",
+    direction: str | None = "download",
     fleet: str = "best",
     xmin: float = 0.01,
     xmax: float = 500.0,
 ) -> str:
-    from ..operators.views_layer import _EXTENDED_SQL
-
     return f"""
         WITH extended AS ({_EXTENDED_SQL}),
         binned AS (
@@ -172,9 +182,7 @@ def metric_pdf_oracle(
     """
 
 
-def metric_geomean_oracle(direction: str = "download", fleet: str = "best") -> str:
-    from ..operators.views_layer import _EXTENDED_SQL
-
+def metric_geomean_oracle(direction: str | None = "download", fleet: str = "best") -> str:
     return f"""
         WITH extended AS ({_EXTENDED_SQL})
         SELECT event_type, COUNT(*) AS tests,

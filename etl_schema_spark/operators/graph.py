@@ -51,30 +51,24 @@ from .dedup import JACCARD_TAU, jaccard_pairs_ctes_sql, verified_pairs_pinned
 MAX_ROUNDS = 25
 
 
-def dup_components(
-    spark: SparkSession, sf_dir: str, tau: float = JACCARD_TAU, max_rounds: int = MAX_ROUNDS
+def _min_label_closure(
+    name: str, docs: DataFrame, pairs: DataFrame, max_rounds: int
 ) -> DataFrame:
-    """Near-dup components over word-3-gram Jaccard pairs at `tau`.
+    """Min-label propagation over the undirected ``pairs`` (doc_a, doc_b)
+    graph: returns (doc_id, comp) for every doc in ``docs``, comp = the
+    min doc_id reachable (capped at ``max_rounds`` rounds).
 
-    Output: one row per document — its component id (min doc_id reachable
-    through near-dup pairs), the component's member count, and whether
-    this doc is the canonical representative (the min itself). Singleton
-    docs are their own component of size 1.
+    The edge and seed-label frames pin under ``<name>.edges`` /
+    ``<name>.labels`` (swap_pin: exception-safe release on the next
+    invocation + fleet-wide release_pins() at bench/sweep exit) and are
+    released here through release_pins once the loop no longer reads them.
     """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    # the session-pinned verified pair table (VERDICT r9 item 1): the
-    # expensive ngram-Jaccard verify materializes ONCE per session and
-    # all four dup-graph consumers read the same cached frame
-    pairs = verified_pairs_pinned(spark, sf_dir, tau)
-    # swap_pin (not bare persist): exception-safe release on the next
-    # invocation + fleet-wide release_pins() at bench/sweep exit
     edges = swap_pin(
-        "dup_components.edges",
+        f"{name}.edges",
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a"))).toDF("src", "dst"),
     )
     labels = swap_pin(
-        "dup_components.labels",
-        docs.select("doc_id", F.col("doc_id").alias("comp")),
+        f"{name}.labels", docs.select("doc_id", F.col("doc_id").alias("comp"))
     )
     for _ in range(max_rounds):
         prop = edges.join(labels, edges.src == labels.doc_id).select(
@@ -97,11 +91,50 @@ def dup_components(
             .limit(1)
             .count()
         )
-        labels.unpersist()
+        release_pins(f"{name}.labels")  # only the seed labels are pinned
         labels = new_labels
         if changed == 0:
             break
-    edges.unpersist()
+    release_pins(f"{name}.edges")
+    return labels
+
+
+def _closure_ctes_sql(pairs_cte: str, label: str) -> str:
+    """Oracle twin of _min_label_closure: CTEs ``edges``, ``reach`` and
+    ``lab(doc_id, <label>)`` over the (doc_a, doc_b) CTE ``pairs_cte``
+    (splice after ``WITH RECURSIVE``)."""
+    return f"""
+        edges AS (
+          SELECT doc_a AS src, doc_b AS dst FROM {pairs_cte}
+          UNION ALL
+          SELECT doc_b, doc_a FROM {pairs_cte}
+        ),
+        reach(id, comp) AS (
+          SELECT doc_id, doc_id FROM documents
+          UNION
+          SELECT r.id, e.dst FROM reach r JOIN edges e ON r.comp = e.src
+        ),
+        lab AS (
+          SELECT id AS doc_id, MIN(comp) AS {label} FROM reach GROUP BY id
+        )"""
+
+
+def dup_components(
+    spark: SparkSession, sf_dir: str, tau: float = JACCARD_TAU, max_rounds: int = MAX_ROUNDS
+) -> DataFrame:
+    """Near-dup components over word-3-gram Jaccard pairs at `tau`.
+
+    Output: one row per document — its component id (min doc_id reachable
+    through near-dup pairs), the component's member count, and whether
+    this doc is the canonical representative (the min itself). Singleton
+    docs are their own component of size 1.
+    """
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    # the session-pinned verified pair table (VERDICT r9 item 1): the
+    # expensive ngram-Jaccard verify materializes ONCE per session and
+    # all four dup-graph consumers read the same cached frame
+    pairs = verified_pairs_pinned(spark, sf_dir, tau)
+    labels = _min_label_closure("dup_components", docs, pairs, max_rounds)
     w = Window.partitionBy("component_id")
     return (
         labels.select("doc_id", F.col("comp").alias("component_id"))
@@ -115,19 +148,7 @@ def dup_components(
 def dup_components_oracle(tau: float = JACCARD_TAU) -> str:
     return f"""
         WITH RECURSIVE {jaccard_pairs_ctes_sql(tau)},
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM jpairs
-          UNION ALL
-          SELECT doc_b, doc_a FROM jpairs
-        ),
-        reach(id, comp) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.id, e.dst FROM reach r JOIN edges e ON r.comp = e.src
-        ),
-        lab AS (
-          SELECT id AS doc_id, MIN(comp) AS component_id FROM reach GROUP BY id
-        )
+        {_closure_ctes_sql("jpairs", "component_id")}
         SELECT doc_id, component_id,
                COUNT(*) OVER (PARTITION BY component_id) AS n_members,
                CAST(doc_id = component_id AS INT) AS is_canonical
@@ -164,19 +185,7 @@ def dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dup_cluster_stats_oracle(tau: float = JACCARD_TAU) -> str:
     return f"""
         WITH RECURSIVE {jaccard_pairs_ctes_sql(tau)},
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM jpairs
-          UNION ALL
-          SELECT doc_b, doc_a FROM jpairs
-        ),
-        reach(id, comp) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.id, e.dst FROM reach r JOIN edges e ON r.comp = e.src
-        ),
-        lab AS (
-          SELECT id AS doc_id, MIN(comp) AS component_id FROM reach GROUP BY id
-        ),
+        {_closure_ctes_sql("jpairs", "component_id")},
         sizes AS (
           SELECT component_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
           FROM lab GROUP BY component_id
@@ -323,8 +332,7 @@ def template_communities(
     now one groupBy(shingle) bucket aggregate with in-row <= C(cap, 2)
     pairing and the two-phase narrow-key multiplicity count, exactly the
     device that retired containment_dup's spill. Closure: the same
-    one-shuffle-per-round min-label propagation as dup_components, exact
-    recursive-CTE oracle.
+    _min_label_closure as dup_components, exact recursive-CTE oracle.
     """
     from .dedup import _shingled_docs, rare_shared_pairs
 
@@ -334,39 +342,11 @@ def template_communities(
     pairs = rare_shared_pairs(
         posting, TEMPLATE_DF_CAP, TEMPLATE_MIN_SHARED, "template_communities"
     )
-    edges = swap_pin(
-        "template_communities.edges",
-        pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a"))).toDF("src", "dst"),
-    )
-    labels = swap_pin(
-        "template_communities.labels",
-        docs.select("doc_id", F.col("doc_id").alias("fam")),
-    )
-    for _ in range(max_rounds):
-        prop = edges.join(labels, edges.src == labels.doc_id).select(
-            F.col("dst").alias("doc_id"), "fam"
-        )
-        new_labels = (
-            labels.union(prop)
-            .groupBy("doc_id")
-            .agg(F.min("fam").alias("fam"))
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            labels.withColumnRenamed("fam", "old")
-            .join(new_labels, "doc_id")
-            .filter(F.col("old") != F.col("fam"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    release_pins("template_communities.edges", "template_communities.buckets")
+    labels = _min_label_closure("template_communities", docs, pairs, max_rounds)
+    release_pins("template_communities.buckets")
     w = Window.partitionBy("family_id")
     return (
-        labels.select("doc_id", F.col("fam").alias("family_id"))
+        labels.select("doc_id", F.col("comp").alias("family_id"))
         .withColumn("n_members", F.count(F.lit(1)).over(w).cast("bigint"))
         .orderBy("doc_id")
     )
@@ -392,19 +372,7 @@ def template_communities_oracle() -> str:
           GROUP BY a.doc_id, b.doc_id
           HAVING COUNT(*) >= {TEMPLATE_MIN_SHARED}
         ),
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM tpairs
-          UNION ALL
-          SELECT doc_b, doc_a FROM tpairs
-        ),
-        reach(id, fam) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.id, e.dst FROM reach r JOIN edges e ON r.fam = e.src
-        ),
-        lab AS (
-          SELECT id AS doc_id, MIN(fam) AS family_id FROM reach GROUP BY id
-        )
+        {_closure_ctes_sql("tpairs", "family_id")}
         SELECT doc_id, family_id,
                CAST(COUNT(*) OVER (PARTITION BY family_id) AS BIGINT) AS n_members
         FROM lab
@@ -482,19 +450,7 @@ def dedup_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_aware_split_oracle(tau: float = JACCARD_TAU) -> str:
     return f"""
         WITH RECURSIVE {jaccard_pairs_ctes_sql(tau)},
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM jpairs
-          UNION ALL
-          SELECT doc_b, doc_a FROM jpairs
-        ),
-        reach(id, comp) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.id, e.dst FROM reach r JOIN edges e ON r.comp = e.src
-        ),
-        lab AS (
-          SELECT id AS doc_id, MIN(comp) AS component_id FROM reach GROUP BY id
-        )
+        {_closure_ctes_sql("jpairs", "component_id")}
         SELECT l.doc_id, d.source, l.component_id,
                COUNT(*) OVER (PARTITION BY l.component_id) AS n_members,
                CASE WHEN CAST(('0x' || substr(md5('{DEDUP_SPLIT_SALT}' ||

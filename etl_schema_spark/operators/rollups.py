@@ -12,23 +12,17 @@ Parity map:
                        We use *exact* percentiles (Spark `percentile`) so the
                        DuckDB oracle (quantile_cont) hash-matches; at cluster
                        scale swap in percentile_approx — same plan shape.
-  log_pdf_cdf          functions/ops.ndt7_download_pdf_managed.sql —
-                       log10 bins, per-site PDF (count / window total), CDF
-                       (cumulative window sum).
-  geomean_by_type      functions/ops.ndt7_geomean_managed.sql —
-                       COUNT / AVG / EXP(AVG(LN)) per site with validity
-                       filter and `LossRate > 0`-style guard.
   switch_utilization   views/utilization/switch.sql + schema/switch.json —
                        per-hour per-interface counter rollup (max/avg).
   sidestream_view      views/sidestream/web100.sql + the website views'
                        mbps-from-counters derivation.
 
+The registry's `log_pdf_cdf` and `geomean_by_type` (functions/
+ops.ndt7_download_pdf_managed.sql, ops.ndt7_geomean_managed.sql) are
+functions.table_functions.metric_pdf / metric_geomean with no direction
+filter on the `best` fleet.
+
 Scale notes:
-  - log_pdf_cdf avoids the reference's CROSS JOIN against the bin table
-    (O(rows x bins)) — the bin index is computed arithmetically per row, so
-    the whole thing is one narrow groupBy + two window functions over the
-    tiny (site x bin) aggregate. At 100 TB the shuffle carries only bin
-    counts, not rows.
   - Window partitions are (site) / (user) keyed — high cardinality, low
     skew. The deciles window is per-day: ~365 partitions/year, each small
     because percentile aggregates before the explode.
@@ -39,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, wildcard_scan
 from .contracts import (
     FINITE_VALUE_SQL,
     VCLEAN_SQL,
@@ -48,7 +42,14 @@ from .contracts import (
     vclean,
     vdec4,
 )
-from .views_layer import extended_view, is_valid_best
+from .views_layer import (
+    _EXTENDED_SQL,
+    DOWNLOAD_TYPES,
+    UPLOAD_TYPES,
+    VALID_BEST_SQL,
+    extended_view,
+    is_valid_best,
+)
 
 DECILE_PROBS = [i / 10.0 for i in range(11)]
 
@@ -78,10 +79,10 @@ def hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     + GROUP BY + UNION ALL of web100/ndt5 branches).
     """
     ext = extended_view(spark, sf_dir).filter(is_valid_best())
-    down = ext.filter(F.col("event_type").isin("click", "view")).withColumn(
+    down = ext.filter(F.col("event_type").isin(*DOWNLOAD_TYPES)).withColumn(
         "system", F.lit("downloads")
     )
-    up = ext.filter(F.col("event_type").isin("purchase", "signup")).withColumn(
+    up = ext.filter(F.col("event_type").isin(*UPLOAD_TYPES)).withColumn(
         "system", F.lit("uploads")
     )
     return (
@@ -111,65 +112,6 @@ def daily_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("decile_value", F.round("decile_value", 6))
         .orderBy("partition_date", "decile")
-    )
-
-
-def log_pdf_cdf(
-    spark: SparkSession,
-    sf_dir: str,
-    xmin: float = 0.01,
-    xmax: float = 500.0,
-) -> DataFrame:
-    """Log10-binned histogram PDF + CDF per event_type.
-
-    Parity: functions/ops.ndt7_download_pdf_managed.sql. The reference builds
-    bins with GENERATE_ARRAY(log10(xmin), log10(xmax), .02) and CROSS JOINs
-    every row against every bin; we compute the bin ordinal directly:
-        k = floor((log10(v) - log10(xmin)) / 0.02 + 0.5)
-    which lands each value in the same centered bin (xright = 10^(x+0.01))
-    without the O(rows x bins) blowup.
-    """
-    ext = extended_view(spark, sf_dir).filter(is_valid_best())
-    logmin = F.log10(F.lit(xmin))
-    k = F.floor((F.log10(F.col("value")) - logmin) / 0.02 + 0.5)
-    binned = (
-        ext.filter(F.col("value").between(xmin, xmax))
-        .withColumn("bin", k)
-        .groupBy("event_type", "bin")
-        .agg(F.count(F.lit(1)).alias("bin_count"))
-    )
-    w_tot = Window.partitionBy("event_type")
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pdf = F.col("bin_count") / F.sum("bin_count").over(w_tot)
-    return (
-        binned.withColumn("xright", F.round(F.pow(F.lit(10.0), logmin + F.col("bin") * 0.02 + 0.01), 6))
-        .withColumn("pdf", pdf)
-        .withColumn("cdf", F.round(F.sum(pdf).over(w_cum), 6))
-        .withColumn("pdf", F.round("pdf", 6))
-        .select("event_type", "bin", "xright", "bin_count", "pdf", "cdf")
-        .orderBy("event_type", "bin")
-    )
-
-
-def geomean_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COUNT / mean / geometric mean of `value` per event_type.
-
-    Parity: functions/ops.ndt7_geomean_managed.sql (EXP(AVG(LN(metric))) with
-    the validity filter and the `a.LossRate > 0` guard → `value > 0`).
-    """
-    ext = extended_view(spark, sf_dir).filter(is_valid_best() & (F.col("value") > 0))
-    return (
-        ext.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("tests"),
-            F.round(F.avg("value"), 4).alias("mean"),
-            F.round(F.exp(F.avg(F.log("value"))), 4).alias("geomean"),
-        )
-        .orderBy("event_type")
     )
 
 
@@ -234,10 +176,7 @@ def wildcard_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables). The glob pattern hits the parquet source directly, so partition
     pruning and schema merge behave as they would over yearly snapshots.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.option("mergeSchema", "true").parquet(f"{sf_dir}/events*.parquet")
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    df = wildcard_scan(spark, f"{sf_dir}/events*.parquet", "events")
     return (
         df.groupBy(F.col("ts").cast("date").alias("date"))
         .agg(F.count(F.lit(1)).alias("rows"))
@@ -247,13 +186,6 @@ def wildcard_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- DuckDB oracles -------------------------------------------------------
 
-from .views_layer import _EXTENDED_SQL  # noqa: E402
-
-_VALID = """
-      is_complete AND is_production AND NOT is_error AND NOT is_oam
-      AND NOT is_small AND NOT is_short AND NOT is_long
-"""
-
 
 def dedup_best_per_user_oracle() -> str:
     return f"""
@@ -262,7 +194,7 @@ def dedup_best_per_user_oracle() -> str:
           SELECT *, ROW_NUMBER() OVER (
               PARTITION BY user_id
               ORDER BY value DESC, ts ASC, event_id ASC) AS rn
-          FROM extended WHERE {_VALID}
+          FROM extended WHERE {VALID_BEST_SQL}
         )
         SELECT user_id, event_id, ts, event_type, value
         FROM ranked WHERE rn = 1 ORDER BY user_id
@@ -272,7 +204,7 @@ def dedup_best_per_user_oracle() -> str:
 def hourly_rollup_oracle() -> str:
     return f"""
         WITH extended AS ({_EXTENDED_SQL}),
-        valid AS (SELECT * FROM extended WHERE {_VALID}),
+        valid AS (SELECT * FROM extended WHERE {VALID_BEST_SQL}),
         unioned AS (
           SELECT *, 'downloads' AS system FROM valid
           WHERE event_type IN ('click','view')
@@ -292,7 +224,7 @@ def daily_deciles_oracle() -> str:
         per_day AS (
           SELECT partition_date, COUNT(*) AS tests,
                  quantile_cont(value, [{probs}]) AS qs
-          FROM extended WHERE {_VALID}
+          FROM extended WHERE {VALID_BEST_SQL}
           GROUP BY partition_date
         ),
         idx AS (SELECT unnest(generate_series(0, 10)) AS decile)
@@ -300,44 +232,6 @@ def daily_deciles_oracle() -> str:
                ROUND(qs[decile + 1], 6) AS decile_value
         FROM per_day CROSS JOIN idx
         ORDER BY partition_date, decile
-    """
-
-
-def log_pdf_cdf_oracle(xmin: float = 0.01, xmax: float = 500.0) -> str:
-    return f"""
-        WITH extended AS ({_EXTENDED_SQL}),
-        binned AS (
-          SELECT event_type,
-                 FLOOR((log10(value) - log10({xmin})) / 0.02 + 0.5) AS bin,
-                 COUNT(*) AS bin_count
-          FROM extended
-          WHERE {_VALID} AND value BETWEEN {xmin} AND {xmax}
-          GROUP BY 1, 2
-        ),
-        with_pdf AS (
-          SELECT event_type, CAST(bin AS BIGINT) AS bin,
-                 ROUND(POW(10, log10({xmin}) + bin * 0.02 + 0.01), 6) AS xright,
-                 bin_count,
-                 bin_count / SUM(bin_count) OVER (PARTITION BY event_type) AS raw_pdf
-          FROM binned
-        )
-        SELECT event_type, bin, xright, bin_count,
-               ROUND(raw_pdf, 6) AS pdf,
-               ROUND(SUM(raw_pdf) OVER (PARTITION BY event_type ORDER BY bin
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS cdf
-        FROM with_pdf ORDER BY event_type, bin
-    """
-
-
-def geomean_by_type_oracle() -> str:
-    return f"""
-        WITH extended AS ({_EXTENDED_SQL})
-        SELECT event_type, COUNT(*) AS tests,
-               ROUND(AVG(value), 4) AS mean,
-               ROUND(EXP(AVG(LN(value))), 4) AS geomean
-        FROM extended
-        WHERE {_VALID} AND value > 0
-        GROUP BY event_type ORDER BY event_type
     """
 
 

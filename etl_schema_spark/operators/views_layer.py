@@ -114,6 +114,14 @@ def is_valid_2021() -> Column:
     return is_valid_best() & (F.col("is_congested") | F.col("is_bloated"))
 
 
+# The oracles' spelling of the two predicates above, written out
+# independently of the Column forms so the DuckDB twin stays a second
+# implementation rather than a rendering of the first.
+VALID_BEST_SQL = """(is_complete AND is_production AND NOT is_error AND NOT is_oam
+     AND NOT is_small AND NOT is_short AND NOT is_long)"""
+VALID_2021_SQL = f"({VALID_BEST_SQL} AND (is_congested OR is_bloated))"
+
+
 def unified_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unified view: UNION ALL over direction-split extended views, validity
     composition, filter, and flag projection-out.
@@ -192,8 +200,7 @@ def unified_view_oracle() -> str:
         SELECT event_id, partition_date, ts, user_id, event_type, direction,
                protocol, value, k_value
         FROM unioned
-        WHERE is_complete AND is_production AND NOT is_error AND NOT is_oam
-          AND NOT is_small AND NOT is_short AND NOT is_long
+        WHERE {VALID_BEST_SQL}
     """
 
 

@@ -53,13 +53,8 @@ _DEFAULTS = {
     # memory-hungry aggregates spill against phantom storage (the r11
     # containment_dup full-session 10 GB vs fresh-session 1.28 GB gap).
     # Spark's own periodic-GC escape hatch, tightened from its 30min
-    # default to the inter-query timescale of a sweep. Env-overridable so
-    # the r13 A/B (VERDICT r12 item 1b: quiet-to-quiet warm drifted +17%
-    # with zero plan changes and this conf was the prime suspect) can be
-    # replayed: SPARK_GRAFT_PERIODIC_GC=30min restores the Spark default.
-    "spark.cleaner.periodicGC.interval": os.environ.get(
-        "SPARK_GRAFT_PERIODIC_GC", "2min"
-    ),
+    # default to the inter-query timescale of a sweep.
+    "spark.cleaner.periodicGC.interval": "2min",
 }
 
 

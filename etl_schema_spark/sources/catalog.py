@@ -38,6 +38,9 @@ TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+# cpu_parallel's fan-out target: input bytes of parquet per partition.
+CPU_PARALLEL_TARGET_BYTES = 64 * 1024
+
 
 def _set_reader_confs(spark: SparkSession) -> None:
     """Runtime confs the scans rely on, set defensively so load_table works
@@ -94,11 +97,10 @@ def cpu_parallel(df: DataFrame) -> DataFrame:
     arrive with thousands of splits and this is a no-op (the gate avoids a
     pointless shuffle).
 
-    Config gate (``spark.etlSchemaSpark.cpuParallel``): the partition-count
-    probe builds the DataFrame→RDD lineage eagerly, which is worth paying
-    only on single-file local scans. Default ``auto`` = probe on local[...]
-    masters only; ``on``/``off`` force either way, so cluster plans never
-    touch ``df.rdd`` unless explicitly asked to.
+    Master gate: the partition-count probe builds the DataFrame→RDD
+    lineage eagerly, which is worth paying only on single-file local
+    scans, so it runs on local[...] masters only and cluster plans never
+    touch ``df.rdd``.
 
     Fan-out sizing (r14, guide §2.2/§2.5 scale-adaptive partitioning): the
     target is no longer a flat ``defaultParallelism`` — on a tiny input
@@ -106,34 +108,25 @@ def cpu_parallel(df: DataFrame) -> DataFrame:
     core for nothing (measured: the fan-out alone cost +0.18 s at 32
     cores vs +0.04 s at 8 on a 600 KB scan, and the Arrow-codec
     consumers ran SLOWER at 32 cores than at 8). The partition count is
-    derived from the scan's input bytes
-    (``spark.etlSchemaSpark.cpuParallelTargetBytes`` per partition,
-    default 64 KiB of parquet) and capped at defaultParallelism, so
+    derived from the scan's input bytes (CPU_PARALLEL_TARGET_BYTES of
+    parquet per partition) and capped at defaultParallelism, so
     production-sized inputs still fan out to every core while KB-scale
     local scans keep a handful of tasks.
     """
     sess = df.sparkSession
-    mode = sess.conf.get("spark.etlSchemaSpark.cpuParallel", "auto")
-    if mode == "off":
-        return df
-    if mode == "auto" and not sess.conf.get("spark.master", "").startswith("local"):
+    if not sess.conf.get("spark.master", "").startswith("local"):
         return df
     n = sess.sparkContext.defaultParallelism
     cur = df.rdd.getNumPartitions()
     if cur >= n:
         return df
     try:
-        target = int(
-            sess.conf.get(
-                "spark.etlSchemaSpark.cpuParallelTargetBytes", str(64 * 1024)
-            )
-        )
         total = sum(
             os.path.getsize(p[len("file:"):] if p.startswith("file:") else p)
             for p in df.inputFiles()
         )
-        if total and target > 0:
-            n = min(n, max(cur, -(-total // target)))
+        if total:
+            n = min(n, max(cur, -(-total // CPU_PARALLEL_TARGET_BYTES)))
     except Exception:
         pass  # unknown input size: keep the defaultParallelism target
     if cur < n:
@@ -257,8 +250,9 @@ def unique_scan_sql(name: str) -> str:
     )
 
 
-def wildcard_scan(spark: SparkSession, pattern: str) -> DataFrame:
-    """Glob scan unioned by the source, schema-merged.
+def wildcard_scan(spark: SparkSession, pattern: str, name: str) -> DataFrame:
+    """Glob scan unioned by the source, schema-merged, over files holding
+    table ``name`` (its nanos-era columns are normalized like load_table's).
 
     Parity: views/statistics/v0_cities.sql (`FROM `...cities_2*``) — BigQuery
     wildcard tables. Spark's parquet source accepts globs natively and merges
@@ -266,4 +260,6 @@ def wildcard_scan(spark: SparkSession, pattern: str) -> DataFrame:
     yearly snapshots (same reason the reference versions its statistics
     tables by year).
     """
-    return spark.read.option("mergeSchema", "true").parquet(pattern)
+    _set_reader_confs(spark)
+    df = spark.read.option("mergeSchema", "true").parquet(pattern)
+    return normalize_nanos(df, name)

@@ -3,7 +3,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this suite belongs to, not whichever copy is installed
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from etl_schema_spark.session import get_spark
 

@@ -1,15 +1,11 @@
-"""Source-catalog behavior: the cpu_parallel config gate."""
+"""Source-catalog behavior: the cpu_parallel master gate and the
+exactly-once restore."""
+
+import os
 
 from etl_schema_spark.sources.catalog import cpu_parallel, load_table
 
-
-def test_cpu_parallel_off_is_identity(spark, sf_dir):
-    df = load_table(spark, sf_dir, "region")
-    spark.conf.set("spark.etlSchemaSpark.cpuParallel", "off")
-    try:
-        assert cpu_parallel(df) is df  # no RDD probe, no repartition
-    finally:
-        spark.conf.unset("spark.etlSchemaSpark.cpuParallel")
+from .conftest import REPO
 
 
 def test_cpu_parallel_auto_probes_local(spark, sf_dir):
@@ -34,7 +30,7 @@ def test_load_table_unique_restores_pk_uniqueness(spark, tmp_path_factory):
     )
 
     spec = importlib.util.spec_from_file_location(
-        "fuzz_edge_docs", "/root/repo/tools/fuzz_edge_docs.py"
+        "fuzz_edge_docs", os.path.join(REPO, "tools", "fuzz_edge_docs.py")
     )
     fuzz = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(fuzz)

@@ -10,11 +10,12 @@ audit, ~12 min; this subset is the permanent gate.)
 """
 
 import importlib.util
+import os
 
 import duckdb
 import pytest
 
-from .conftest import assert_matches_oracle
+from .conftest import REPO, assert_matches_oracle
 
 FIXED_ENTRIES = [
     # cosine family: zero-norm vector -> NULL cosine (was: DIVIDE_BY_ZERO
@@ -66,7 +67,7 @@ FIXED_ENTRIES = [
 
 def _load_fuzz():
     spec = importlib.util.spec_from_file_location(
-        "fuzz_edge_docs", "/root/repo/tools/fuzz_edge_docs.py"
+        "fuzz_edge_docs", os.path.join(REPO, "tools", "fuzz_edge_docs.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -9,9 +9,13 @@ Every queries() entry must compile to a scale-worthy plan:
     when the query needs a subset — spot-checked on the widest scans).
 """
 
+import os
+
 import pytest
 
 import __spark_entry__ as entry
+
+from .conftest import REPO
 
 # all-pairs by definition (exactness baselines or deliberate small-side
 # cross joins): ann brute force broadcasts a tiny query set against the
@@ -160,7 +164,7 @@ def test_registry_synced_with_survey_and_plans():
 
     qs = set(entry.queries())
 
-    survey = open("/root/repo/SURVEY.md").read()
+    survey = open(os.path.join(REPO, "SURVEY.md")).read()
     sec2 = survey.split("\n## §2")[1].split("\n## §3")[0]
     survey_keys = set(re.findall(r"^\| `([a-z0-9_]+)`", sec2, re.M))
     assert survey_keys == qs, (
@@ -168,7 +172,7 @@ def test_registry_synced_with_survey_and_plans():
         f"stale: {sorted(survey_keys - qs)}"
     )
 
-    plans = open("/root/repo/PLANS.md").read()
+    plans = open(os.path.join(REPO, "PLANS.md")).read()
     plan_keys = set(re.findall(r"^\| ([a-z0-9_]+) \|", plans, re.M)) - {"query"}
     assert plan_keys == qs, (
         f"PLANS.md missing: {sorted(qs - plan_keys)}; "
@@ -180,7 +184,7 @@ def _registry_order_and_cap():
     """Parse __spark_entry__.py source: (ordered entry names, cap index)."""
     import re
 
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = open(os.path.join(REPO, "__spark_entry__.py")).read()
     body = src.split("def queries()")[1].split("def oracle_sql()")[0]
     names, cap_at = [], None
     for line in body.splitlines():
@@ -212,7 +216,7 @@ def test_unverdicted_entries_sort_into_scored_window():
 
     names, _ = _registry_order_and_cap()
     latest: dict[str, dict] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         for key, rec in json.load(open(path)).items():
             latest[key] = rec
 
@@ -243,7 +247,7 @@ def test_stale_entries_sort_into_scored_window():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "verdict_freshness", "/root/repo/tools/verdict_freshness.py"
+        "verdict_freshness", os.path.join(REPO, "tools", "verdict_freshness.py")
     )
     vf = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(vf)

@@ -35,24 +35,6 @@ def test_daily_deciles_shape(spark, sf_dir):
         assert vals == sorted(vals)  # monotone
 
 
-def test_log_pdf_cdf(spark, sf_dir, duck):
-    assert_matches_oracle(rollups.log_pdf_cdf(spark, sf_dir), duck, rollups.log_pdf_cdf_oracle())
-
-
-def test_log_pdf_cdf_is_probability(spark, sf_dir):
-    rows = rollups.log_pdf_cdf(spark, sf_dir).collect()
-    by_type = {}
-    for r in rows:
-        by_type.setdefault(r.event_type, []).append(r)
-    for t, rs in by_type.items():
-        assert abs(sum(r.pdf for r in rs) - 1.0) < 1e-4
-        assert abs(max(r.cdf for r in rs) - 1.0) < 1e-4
-
-
-def test_geomean(spark, sf_dir, duck):
-    assert_matches_oracle(rollups.geomean_by_type(spark, sf_dir), duck, rollups.geomean_by_type_oracle())
-
-
 def test_switch_utilization(spark, sf_dir, duck):
     assert_matches_oracle(
         rollups.switch_utilization(spark, sf_dir), duck, rollups.switch_utilization_oracle()

@@ -7,7 +7,7 @@ from etl_schema_spark import functions as tf
 from .conftest import assert_matches_oracle
 
 
-@pytest.mark.parametrize("direction", ["download", "upload"])
+@pytest.mark.parametrize("direction", ["download", "upload", None])
 @pytest.mark.parametrize("fleet", ["best", "2021", "complete"])
 def test_pdf_all_instantiations(spark, sf_dir, duck, direction, fleet):
     assert_matches_oracle(
@@ -17,7 +17,7 @@ def test_pdf_all_instantiations(spark, sf_dir, duck, direction, fleet):
     )
 
 
-@pytest.mark.parametrize("direction", ["download", "upload"])
+@pytest.mark.parametrize("direction", ["download", "upload", None])
 @pytest.mark.parametrize("fleet", ["best", "2021", "complete"])
 def test_geomean_all_instantiations(spark, sf_dir, duck, direction, fleet):
     assert_matches_oracle(
@@ -27,10 +27,18 @@ def test_geomean_all_instantiations(spark, sf_dir, duck, direction, fleet):
     )
 
 
-def test_pdf_is_normalized(spark, sf_dir):
-    out = tf.metric_pdf(spark, sf_dir).groupBy("event_type").sum("pdf").collect()
+@pytest.mark.parametrize("direction", ["download", "upload", None])
+def test_pdf_is_normalized(spark, sf_dir, direction):
+    out = (
+        tf.metric_pdf(spark, sf_dir, direction)
+        .groupBy("event_type")
+        .agg({"pdf": "sum", "cdf": "max"})
+        .collect()
+    )
+    assert out
     for r in out:
         assert abs(r["sum(pdf)"] - 1.0) < 1e-3
+        assert abs(r["max(cdf)"] - 1.0) < 1e-4
 
 
 def test_bad_params_raise(spark, sf_dir):

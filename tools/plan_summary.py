@@ -95,7 +95,6 @@ def main() -> None:
         )
 
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
-    out = os.path.join("/root/repo", "PLANS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out} ({len(lines) - 6} queries)")

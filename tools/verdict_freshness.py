@@ -10,8 +10,8 @@ granularity over-approximates: one shared-helper fix would flag every
 entry in the module and overflow the 50-entry scoring window):
 
 1. Each registry entry resolves to its implementing function via
-   ``callable.__module__`` / ``__name__`` (the two ``fn_*`` lambdas map
-   to their ``table_functions`` targets explicitly).
+   ``callable.__module__`` / ``__name__`` (the registry lambdas map to
+   their ``table_functions`` targets explicitly, via LAMBDA_IMPL).
 2. The entry's *fingerprint* is an md5 over the ast.dump of that function
    plus every module-level function it transitively references — within
    the module and across ``etl_schema_spark``-relative imports — plus any
@@ -50,12 +50,13 @@ PKG = "etl_schema_spark"
 INFRA_MODULES = {f"{PKG}.sources.catalog", f"{PKG}.session"}
 
 # Registry lambdas that wrap a named implementation elsewhere.
+_PDF = (f"{PKG}.functions.table_functions", "metric_pdf")
+_GEOMEAN = (f"{PKG}.functions.table_functions", "metric_geomean")
 LAMBDA_IMPL = {
-    "fn_pdf_upload_2021": (f"{PKG}.functions.table_functions", "metric_pdf"),
-    "fn_geomean_download_complete": (
-        f"{PKG}.functions.table_functions",
-        "metric_geomean",
-    ),
+    "fn_pdf_upload_2021": _PDF,
+    "fn_geomean_download_complete": _GEOMEAN,
+    "log_pdf_cdf": _PDF,
+    "geomean_by_type": _GEOMEAN,
 }
 
 
