@@ -20,6 +20,11 @@ Spark recomputes the subtree instead of reading cache.
 At real cluster scale the equivalent is stage materialization to durable
 storage (a bucketed temp table); MEMORY_AND_DISK persist is the local
 single-session form of the same plan shape.
+
+Pins are AQE-coalesced: the session sets
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``, so a pin
+whose plan ends in a shuffle holds as many partitions as its bytes need
+(at most ``spark.sql.shuffle.partitions``), not always the ceiling.
 """
 
 from __future__ import annotations

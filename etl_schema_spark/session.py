@@ -6,6 +6,9 @@ Scale notes (100 TB / 1000-executor target):
   - ``spark.sql.shuffle.partitions`` is a *ceiling* under AQE; on a real
     cluster set it to ~2-3x total cores (e.g. 8000 for 1000 executors x 4
     cores) via `extra_conf` — AQE coalesces down.
+  - Session pins (``cachereg.swap_pin`` / ``memo_pin``) are AQE-coalesced
+    like any other shuffle: ``canChangeCachedPlanOutputPartitioning`` lets
+    the last shuffle of a persisted plan shrink to the data it holds.
   - Broadcast threshold raised to 64 MB: every dimension table in the star
     schema (region/nation/customer/supplier/part at any SF) and the bin /
     centroid tables our rollup + ANN operators build stay broadcast-able,
@@ -43,6 +46,13 @@ _DEFAULTS = {
     # 1.8-3.4x on the events-scan path at sf0.1).
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.shuffle.partitions": "32",
+    # Let AQE coalesce the last shuffle inside a persisted plan too. Spark's
+    # default keeps a cached plan's output partitioning, so a swap_pin /
+    # memo_pin ending in a shuffle would hold all shuffle.partitions
+    # partitions and every stage reading it would run that many tasks.
+    # Results do not depend on a pin's width: a join over a coalesced pin
+    # re-shuffles it when its layout no longer matches the other side.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Whole-stage codegen stays on (default); Python round-trips are confined
     # to the few Pandas-UDF operators (multimodal decode), Arrow-batched.
     "spark.sql.execution.pythonUDF.arrow.enabled": "true",

@@ -131,6 +131,35 @@ def test_no_single_reducer_source_window(name, spark, sf_dir):
     assert local, f"{name}: no (chunk, source)-local window\n{plan}"
 
 
+@pytest.mark.skipif(
+    os.environ.get("ETL_TEST_AQE", "true") == "false",
+    reason="pin coalescing is an AQE decision",
+)
+def test_session_pin_is_coalesced(spark):
+    """A session pin whose plan ends in a shuffle must not keep all
+    shuffle.partitions partitions: the session lets AQE coalesce a cached
+    plan's last shuffle (canChangeCachedPlanOutputPartitioning), so every
+    stage that reads a small pin runs a few tasks, not one per partition.
+    A join over the coalesced pin still equals the join over the unpinned
+    frame (the join plans its own exchange when the widths differ)."""
+    from pyspark.sql import functions as F
+
+    from etl_schema_spark.operators.cachereg import release_pins, swap_pin
+    from etl_schema_spark.session import shuffle_partitions
+
+    base = spark.range(100).withColumn("k", F.col("id") % 7)
+    counts = base.groupBy("k").agg(F.count("*").alias("n"), F.sum("id").alias("s"))
+    dim = spark.range(7).select(F.col("id").alias("k"), (F.col("id") * 10).alias("w"))
+    try:
+        pinned = swap_pin("test_plan_audit.pin_coalesced", counts)
+        assert pinned.count() == 7
+        assert pinned.rdd.getNumPartitions() < shuffle_partitions(spark)
+        joined = sorted(pinned.join(dim, "k").collect())
+        assert joined == sorted(counts.join(dim, "k").collect())
+    finally:
+        release_pins("test_plan_audit.pin_coalesced")
+
+
 def test_scans_prune_columns(spark, sf_dir):
     """The widest fact scans must read only the columns the query needs."""
     from etl_schema_spark.operators import relational

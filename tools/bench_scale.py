@@ -19,12 +19,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from etl_schema_spark.session import get_spark  # noqa: E402
 
 BASE = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-BIG = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scale/sf1eq"
+BIG = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scale", "sf1eq")
 PASSES = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 ONLY = sys.argv[4:]  # optional: restrict to these registry entries
 

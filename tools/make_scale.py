@@ -2,7 +2,7 @@
 corpus for local scale evidence (VERDICT r4 §Next-round item 4).
 
 Usage: python tools/make_scale.py [K] [src_sf_dir] [out_dir]
-       (defaults: 10, /root/testdata/sf0.1, /root/repo/.scale/sf1eq)
+       (defaults: 10, the sf0.1 test data, <repo>/.scale/sf1eq)
 
 Replication is *replica-disjoint*, not cloning — cloning would plant exact
 duplicates across replicas and grow every dedup pair set quadratically,
@@ -37,7 +37,8 @@ import duckdb
 
 K = int(sys.argv[1]) if len(sys.argv) > 1 else 10
 SRC = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-OUT = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/.scale/sf1eq"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OUT = sys.argv[3] if len(sys.argv) > 3 else os.path.join(REPO, ".scale", "sf1eq")
 
 COPY_TABLES = "region nation customer supplier part orders lineitem".split()
 

@@ -3,8 +3,8 @@ A = current (dfreq aggregate + posting-dfreq join),
 B = window count over partitionBy(shingle) (single shingle exchange).
 Times the ORDERED PREFIX BUILD only (the stage the rewrite changes), and
 verifies identical prefix tables."""
-import sys, time, collections
-sys.path.insert(0, "/root/repo")
+import os, sys, time, collections
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 from pyspark.sql import Window, functions as F
 from etl_schema_spark.session import get_spark
 from etl_schema_spark.operators import dedup

@@ -8,7 +8,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 from etl_schema_spark.session import get_spark

@@ -1,8 +1,8 @@
 """Probe: deterministic hex-prefix bucketing as the chunk id for the
 two-phase running sum — correctness vs full window rank, plan shape,
 and timing vs the seam form (alternating A/B in one session)."""
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 from pyspark.sql import Window, functions as F
 from etl_schema_spark.session import get_spark
 

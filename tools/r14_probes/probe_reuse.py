@@ -6,8 +6,8 @@ Also checks the final formatted plan for ReusedExchange / reused query
 stages, and that a freeze=False-style rank pick over a parquet scan gives
 the same answer as a full window ranking.
 """
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 from pyspark.sql import Window, functions as F
 from etl_schema_spark.session import get_spark
 

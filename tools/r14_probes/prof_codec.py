@@ -1,8 +1,8 @@
 """Item 6 profile: multimodal_meta / simhash_fingerprint / knn_classify
 core-scaling inversion at sf0.1. Runs each at the given core count with
 warm passes, and also times the cpu_parallel fan-out itself."""
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 cores = sys.argv[1]
 from pyspark.sql import functions as F
 from etl_schema_spark.session import get_spark

@@ -1,7 +1,7 @@
 """Stage-split profile of dedup_ngram_jaccard at sf0.1: time each pinned
 build and the downstream stages separately (one session, local[8])."""
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 from pyspark.sql import functions as F
 from etl_schema_spark.session import get_spark
 from etl_schema_spark.operators import dedup

@@ -17,11 +17,12 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from etl_schema_spark.session import get_spark  # noqa: E402
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf10eq"
+SF_DIR = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scale", "sf10eq")
 
 HEAVY = [
     "embedding_cosine_dup",
