@@ -51,140 +51,92 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the driver scores only the FIRST 50 entries each round. Order as:
     #   1. entries with NO driver verdict yet (new this round or never
     #      scored because they landed past the cap),
-    #   2. entries whose implementation changed since their last verdict
-    #      (mechanically: tools/verdict_freshness.py — AST fingerprint of
-    #      the implementing function + transitive in-package helpers +
-    #      referenced constants, HEAD vs the entry's verdict-round commit),
+    #   2. entries whose executed plan changed since their last verdict
+    #      (mechanically: tools/verdict_freshness.py — the entry's plan
+    #      fingerprint in FINGERPRINTS.json, written by
+    #      tools/check_correctness.py, against its fingerprint at the
+    #      verdict round),
     #   3. everything else, OLDEST verdict first (re-verification rotation).
     # When adding an operator, insert it in group 1 — an entry appended at
     # the tail will NOT be scored this round. Enforced by
     # tests/test_plan_audit.py::test_stale_entries_sort_into_scored_window.
     return {
-        # -- group 1: implementation or oracle changed since the entry's
-        # last green verdict (35, tools/verdict_freshness.py). ----------
-        # (a) the r14 work set: deterministic hex-prefix bucketing (every
-        # grouped_running_sum/rank consumer re-rotates via the
-        # distributed.py helper change) and the rank-pick single-sort
-        # selection (mad / tail / trimmed / perplexity). -----------------
-        "ccnet_source_split": curation.ccnet_source_split,  # last green r13
-        "embedding_outliers": similarity.embedding_outliers,  # last green r13
-        "epoch_shuffle": corpus.epoch_shuffle,  # last green r13
-        "key_skew_profile": skew.key_skew_profile,  # last green r13
-        "label_balance_sample": similarity.label_balance_sample,  # last green r13
-        "mad_outliers": analytics.mad_outliers,  # last green r13
-        "pack_efficiency_sweep": packing.pack_efficiency_sweep,  # last green r13
-        "pack_fill_audit": packing.pack_fill_audit,  # last green r13
-        "pack_sequences": packing.pack_sequences,  # last green r13
-        "perplexity_buckets": text.perplexity_buckets,  # last green r13
-        "source_token_budget": corpus.source_token_budget,  # last green r13
-        "tail_latency_percentiles": analytics.tail_latency_percentiles,  # last green r13
-        "trimmed_mean_value": analytics.trimmed_mean_value,  # last green r13
-        "triplet_mining": similarity.triplet_mining,  # last green r13
-        "user_activity_gini": analytics.user_activity_gini,  # last green r13
-        "vocab_growth_curve": corpus.vocab_growth_curve,  # last green r13
-        # (b) the streaming sinks share one exactly-once drain
-        # (jobs.drain_exactly_once), one arriving-documents reader, one
-        # sink read-back and catalog.restore_unique. ----------------------
-        "streaming_incremental_dedup": streaming.streaming_incremental_dedup,  # last green r13
-        "streaming_ingest_front_door": streaming.streaming_ingest_front_door,  # last green r13
-        "streaming_neardup": streaming.streaming_neardup,  # last green r13
-        "streaming_quality_gated_publish": streaming.streaming_quality_gated_publish,  # last green r12
-        "streaming_rule_drift_gate": streaming.streaming_rule_drift_gate,  # last green r13
-        # (c) one PDF/CDF and geomean (table_functions, direction=None),
-        # one validity text (views_layer.VALID_BEST_SQL / VALID_2021_SQL),
-        # one wildcard scan (catalog.wildcard_scan) and one min-label
-        # closure (graph._min_label_closure + _closure_ctes_sql). --------
-        "daily_deciles": rollups.daily_deciles,  # last green r13
-        "dedup_aware_split": graph.dedup_aware_split,  # last green r14
-        "dedup_best_per_user": rollups.dedup_best_per_user,  # last green r14
-        "dup_cluster_stats": graph.dup_cluster_stats,  # last green r14
-        "dup_components": graph.dup_components,  # last green r14
-        "fn_geomean_download_complete": lambda s, d: table_functions.metric_geomean( s, d, direction="download", fleet="complete" ),  # last green r14
-        "fn_pdf_upload_2021": lambda s, d: table_functions.metric_pdf( s, d, direction="upload", fleet="2021" ),  # last green r14
-        "geomean_by_type": lambda s, d: table_functions.metric_geomean(s, d, direction=None),  # last green r13
-        "hourly_rollup": rollups.hourly_rollup,  # last green r14
-        "log_pdf_cdf": lambda s, d: table_functions.metric_pdf(s, d, direction=None),  # last green r13
-        "near_dup_keep_plan": graph.near_dup_keep_plan,  # last green r14
-        "template_communities": graph.template_communities,  # last green r13
-        "unified_view_events": views_layer.unified_view,  # last green r08
-        "wildcard_union": rollups.wildcard_union,  # last green r09
-        # -- group 2: executed plan changed since the last green verdict:
-        # the entry reads a session pin whose plan ends in a shuffle, and
-        # AQE now coalesces that shuffle (session.py,
-        # canChangeCachedPlanOutputPartitioning). 15 of 16 fit; the
-        # overflow leads the below-cap region. ---------------------------
-        "kmv_distinct_estimate": sketches.kmv_distinct_estimate,  # last green r10
-        "mix_epoch_plan": packing.mix_epoch_plan,  # last green r10
+        # -- group 2 (group 1, no verdict yet, is empty): executed plan
+        # changed since the last green verdict (68,
+        # tools/verdict_freshness.py), oldest verdict first; those past
+        # the cap lead the next round. -------------------------------
+        "unigram_lm_pieces": text.unigram_lm_pieces,  # last green r08
+        "repeat_profile_automaton": dedup.repeat_profile_automaton,  # last green r09
+        "vocab_coverage": text.vocab_coverage,  # last green r09
+        "bm25_retrieval": text.bm25_retrieval,  # last green r10
+        "bpe_merge_candidates": text.bpe_merge_candidates,  # last green r10
+        "lm_domain_perplexity": curation.lm_domain_perplexity,  # last green r10
+        "quality_logreg_score": curation.quality_logreg_score,  # last green r10
+        "quality_score_calibration": curation.quality_score_calibration,  # last green r10
+        "audio_vad_segments": multimodal.audio_vad_segments,  # last green r11
+        "bigram_surprisal": text.bigram_surprisal,  # last green r11
+        "decontaminate_ngram_overlap": curation.decontaminate_ngram_overlap,  # last green r11
+        "doc_entropy": text.doc_entropy,  # last green r11
+        "doremi_excess_reweight": curation.doremi_excess_reweight,  # last green r11
+        "multimodal_bmp_meta": multimodal.multimodal_bmp_meta,  # last green r11
+        "multimodal_decode_ppm": multimodal.multimodal_decode_ppm,  # last green r11
+        "multimodal_frame_sample": multimodal.multimodal_frame_sample,  # last green r11
+        "ngram_novelty_score": curation.ngram_novelty_score,  # last green r11
+        "winnowing_fingerprint": dedup.winnowing_fingerprint,  # last green r11
+        "zipf_term_stats": corpus.zipf_term_stats,  # last green r11
+        "annotate_renest": views_layer.annotate_renest,  # last green r12
         "lsh_tuning_curve": dedup.lsh_tuning_curve,  # last green r12
+        "minhash_jaccard_estimate": dedup.minhash_jaccard_estimate,  # last green r12
+        "multimodal_resize": multimodal.multimodal_resize,  # last green r12
+        "repetition_stats": curation.repetition_stats,  # last green r12
         "semdedup_clusters": similarity.semdedup_clusters,  # last green r12
+        "streaming_quality_gated_publish": streaming.streaming_quality_gated_publish,  # last green r12
+        "substring_repeat_ladder": dedup.substring_repeat_ladder,  # last green r12
         "containment_dup": dedup.containment_dup,  # last green r13
+        "cross_lang_contamination": curation.cross_lang_contamination,  # last green r13
         "cross_source_overlap": corpus.cross_source_overlap,  # last green r13
         "dedup_impact_curve": dedup.dedup_impact_curve,  # last green r13
         "domain_mix_weights": packing.domain_mix_weights,  # last green r13
+        "image_ahash_dup": multimodal.image_ahash_dup,  # last green r13
         "incremental_neardup": dedup.incremental_neardup,  # last green r13
         "ingest_front_door": dedup.ingest_front_door,  # last green r13
         "kmv_set_ops": sketches.kmv_set_ops,  # last green r13
-        "seasonal_baseline": analytics.seasonal_baseline,  # last green r13
-        "tfidf_top_terms": text.tfidf_top_terms,  # last green r13
-        "dup_pagerank": graph.dup_pagerank,  # last green r14
-        "minhash_pr_eval": dedup.minhash_pr_eval,  # last green r14
-        # ---------------- 50-entry scoring cap lands here ----------------
-        # overflow of the group-2 census (its output is also oracle-checked
-        # on every perfbench llm_curation run); first to rotate in next.
-        "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,  # last green r14
-        "sidestream_view": rollups.sidestream_view,  # last green r07
-        "skew_salted_daily_users": skew.skew_salted_daily_users,  # last green r07
-        "sliding_window_stats": rollups.sliding_window_stats,  # last green r07
-        "source_quality_profile": curation.source_quality_profile,  # last green r07
-        "static_mapping": transforms.static_mapping,  # last green r07
-        "streaming_distinct_keys": streaming.streaming_distinct_keys,  # last green r07
-        "substring_dup_spans": dedup.substring_dup_spans,  # last green r07
-        "switch_utilization": rollups.switch_utilization,  # last green r07
-        "tiered_views": view_families.tiered_views,  # last green r07
-        "top_clients_per_type": sessions.top_clients_per_type,  # last green r07
-        "autojoin_tiered_counts": view_families.autojoin_tiered_counts,  # last green r08
-        "cross_source_dup_leakage": corpus.cross_source_dup_leakage,  # last green r08
-        "dedup_minhash_lsh": dedup.dedup_minhash_lsh,  # last green r08
-        "dedup_minhash_portable": dedup.dedup_minhash_portable,  # last green r08
-        "dsir_importance_weights": curation.dsir_importance_weights,  # last green r08
-        "length_filter_sweep": curation.length_filter_sweep,  # last green r08
-        "new_vs_returning": analytics.new_vs_returning,  # last green r08
-        "restore_unique_docs": corpus.restore_unique_docs,  # last green r08
-        "streaming_hopping_counts": streaming.streaming_hopping_counts,  # last green r08
-        "streaming_hourly_counts": streaming.streaming_hourly_counts,  # last green r08
-        "cross_lang_contamination": curation.cross_lang_contamination,  # last green r13
-        "topk_drift_weekly": drift.topk_drift_weekly,  # last green r13
-        "corr_value_hour": analytics.corr_value_hour,  # last green r13
-        "gapfill_interp": analytics.gapfill_interp,  # last green r13
-        "gapfill_locf": analytics.gapfill_locf,  # last green r13
-        "histogram_quantile_sketch": sketches.histogram_quantile_sketch,  # last green r13
-        "image_ahash_dup": multimodal.image_ahash_dup,  # last green r13
-        "json_extract_props": corpus.json_extract_props,  # last green r13
-        "linear_trend": analytics.linear_trend,  # last green r13
-        "multigrain_stats": analytics.multigrain_stats,  # last green r13
         "multimodal_wav_energy": multimodal.multimodal_wav_energy,  # last green r13
-        "multistream_throughput": rollups.multistream_throughput,  # last green r13
         "pmi_cooccur_terms": text.pmi_cooccur_terms,  # last green r13
-        "reservoir_sample_per_key": corpus.reservoir_sample_per_key,  # last green r13
-        "rfm_features": analytics.rfm_features,  # last green r13
-        "rollup_revenue": analytics.rollup_revenue,  # last green r13
-        "ann_graph_expand_eval": similarity.ann_graph_expand_eval,  # last green r12
-        "doc_length_drift": drift.doc_length_drift,  # last green r12
-        "incremental_dedup": dedup.incremental_dedup,  # last green r12
-        "minhash_jaccard_estimate": dedup.minhash_jaccard_estimate,  # last green r12
-        "psi_value_drift": drift.psi_value_drift,  # last green r12
-        "quality_rule_drift": drift.quality_rule_drift,  # last green r12
-        "multimodal_resize": multimodal.multimodal_resize,  # last green r12
-        "q12_shipmode": relational_ext.q12_shipmode,  # last green r12
-        "repetition_stats": curation.repetition_stats,  # last green r12
-        "stratified_sample": corpus.stratified_sample,  # last green r12
-        "streaming_attribution_join": streaming.streaming_attribution_join,  # last green r12
-        "substring_repeat_ladder": dedup.substring_repeat_ladder,  # last green r12
-        "text_quality": text.text_quality,  # last green r12
-        "annotate_renest": views_layer.annotate_renest,  # last green r12
-        "churned_users": analytics.churned_users,  # last green r12
+        "seasonal_baseline": analytics.seasonal_baseline,  # last green r13
+        "streaming_incremental_dedup": streaming.streaming_incremental_dedup,  # last green r13
+        "streaming_ingest_front_door": streaming.streaming_ingest_front_door,  # last green r13
+        "streaming_neardup": streaming.streaming_neardup,  # last green r13
+        "streaming_rule_drift_gate": streaming.streaming_rule_drift_gate,  # last green r13
+        "template_communities": graph.template_communities,  # last green r13
+        "tfidf_top_terms": text.tfidf_top_terms,  # last green r13
+        "ccnet_source_split": curation.ccnet_source_split,  # last green r14
+        "dedup_aware_split": graph.dedup_aware_split,  # last green r14
+        "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,  # last green r14
+        "dup_cluster_stats": graph.dup_cluster_stats,  # last green r14
+        "dup_components": graph.dup_components,  # last green r14
+        # ---------------- 50-entry scoring cap lands here ----------------
+        "dup_pagerank": graph.dup_pagerank,  # last green r14
+        "embedding_outliers": similarity.embedding_outliers,  # last green r14
+        "epoch_shuffle": corpus.epoch_shuffle,  # last green r14
+        "key_skew_profile": skew.key_skew_profile,  # last green r14
+        "label_balance_sample": similarity.label_balance_sample,  # last green r14
+        "mad_outliers": analytics.mad_outliers,  # last green r14
+        "minhash_pr_eval": dedup.minhash_pr_eval,  # last green r14
+        "near_dup_keep_plan": graph.near_dup_keep_plan,  # last green r14
+        "pack_efficiency_sweep": packing.pack_efficiency_sweep,  # last green r14
+        "pack_fill_audit": packing.pack_fill_audit,  # last green r14
+        "pack_sequences": packing.pack_sequences,  # last green r14
+        "perplexity_buckets": text.perplexity_buckets,  # last green r14
+        "source_token_budget": corpus.source_token_budget,  # last green r14
+        "tail_latency_percentiles": analytics.tail_latency_percentiles,  # last green r14
+        "trimmed_mean_value": analytics.trimmed_mean_value,  # last green r14
+        "triplet_mining": similarity.triplet_mining,  # last green r14
+        "user_activity_gini": analytics.user_activity_gini,  # last green r14
+        "vocab_growth_curve": corpus.vocab_growth_curve,  # last green r14
+        # -- group 3: everything else, oldest green verdict first. ------
         "streaming_topk_keys": streaming.streaming_topk_keys,  # last green r08
-        "unigram_lm_pieces": text.unigram_lm_pieces,  # last green r08
+        "unified_view_events": views_layer.unified_view,  # last green r08
         "user_transition_matrix": analytics.user_transition_matrix,  # last green r08
         "weighted_sample_ares": corpus.weighted_sample_ares,  # last green r08
         "zscore_outliers": analytics.zscore_outliers,  # last green r08
@@ -219,16 +171,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q9_product_type_profit": relational_ext.q9_product_type_profit,  # last green r09
         "quality_expectation_report": quality.expectation_report,  # last green r09
         "range_interval_join": rangejoin.range_interval_join,  # last green r09
-        "repeat_profile_automaton": dedup.repeat_profile_automaton,  # last green r09
         "retention_cohorts": analytics.retention_cohorts,  # last green r09
         "rolling_active_users": rollups.rolling_active_users,  # last green r09
-        "vocab_coverage": text.vocab_coverage,  # last green r09
+        "wildcard_union": rollups.wildcard_union,  # last green r09
         "ann_pq_topk": similarity.ann_pq_topk,  # last green r10
         "asof_attribution": asof.asof_attribution,  # last green r10
         "asof_nearest": asof.asof_nearest,  # last green r10
-        "bm25_retrieval": text.bm25_retrieval,  # last green r10
         "boundary_templates": dedup.boundary_templates,  # last green r10
-        "bpe_merge_candidates": text.bpe_merge_candidates,  # last green r10
         "centroid_shift_drift": similarity.centroid_shift_drift,  # last green r10
         "code_detect": text.code_detect,  # last green r10
         "concurrency_peak": sessions.concurrency_peak,  # last green r10
@@ -239,7 +188,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "funnel_conversion": analytics.funnel_conversion,  # last green r10
         "gopher_quality_flags": curation.gopher_quality_flags,  # last green r10
         "joined_view_template": view_families.joined_view_template,  # last green r10
-        "lm_domain_perplexity": curation.lm_domain_perplexity,  # last green r10
+        "kmv_distinct_estimate": sketches.kmv_distinct_estimate,  # last green r10
+        "mix_epoch_plan": packing.mix_epoch_plan,  # last green r10
         "pii_risk_profile": text.pii_risk_profile,  # last green r10
         "pivot_event_counts": analytics.pivot_event_counts,  # last green r10
         "q16_parts_supplier": relational_ext.q16_parts_supplier,  # last green r10
@@ -248,34 +198,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q20_potential_promotion": relational_ext.q20_potential_promotion,  # last green r10
         "q21_suppliers_kept_waiting": relational_ext.q21_suppliers_kept_waiting,  # last green r10
         "q22_inactive_customers": transforms.q22_inactive_customers,  # last green r10
-        "quality_logreg_score": curation.quality_logreg_score,  # last green r10
-        "quality_score_calibration": curation.quality_score_calibration,  # last green r10
         "raw_view_events": views_layer.raw_view,  # last green r10
         "streaming_ingest_restore": streaming.streaming_ingest_restore,  # last green r10
         "token_count": text.token_count,  # last green r10
         "trailing_window_view": view_families.trailing_window_view,  # last green r10
-        "audio_vad_segments": multimodal.audio_vad_segments,  # last green r11
-        "bigram_surprisal": text.bigram_surprisal,  # last green r11
         "bloom_membership": sketches.bloom_membership,  # last green r11
         "canonical_pick": corpus.canonical_pick,  # last green r11
         "chunk_dedup": packing.chunk_dedup,  # last green r11
         "cms_frequency_estimate": sketches.cms_frequency_estimate,  # last green r11
         "daily_modal_event": analytics.daily_modal_event,  # last green r11
         "dataset_card": corpus.dataset_card,  # last green r11
-        "decontaminate_ngram_overlap": curation.decontaminate_ngram_overlap,  # last green r11
         "doc_chunks": packing.doc_chunks,  # last green r11
-        "doc_entropy": text.doc_entropy,  # last green r11
-        "doremi_excess_reweight": curation.doremi_excess_reweight,  # last green r11
         "extended_view_events": views_layer.extended_view,  # last green r11
         "hashing_trick_features": text.hashing_trick_features,  # last green r11
         "hll_daily_merge": sketches.hll_daily_merge,  # last green r11
         "interval_coverage": sessions.interval_coverage,  # last green r11
         "langid_heuristic": text.langid_heuristic,  # last green r11
         "late_arrival_audit": analytics.late_arrival_audit,  # last green r11
-        "multimodal_bmp_meta": multimodal.multimodal_bmp_meta,  # last green r11
-        "multimodal_decode_ppm": multimodal.multimodal_decode_ppm,  # last green r11
-        "multimodal_frame_sample": multimodal.multimodal_frame_sample,  # last green r11
-        "ngram_novelty_score": curation.ngram_novelty_score,  # last green r11
         "running_totals": sessions.running_totals,  # last green r11
         "scd2_history": analytics.scd2_history,  # last green r11
         "session_top_paths": sessions.session_top_paths,  # last green r11
@@ -286,13 +225,58 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_count_bpe": text.token_count_bpe,  # last green r11
         "tokenizer_fertility": text.tokenizer_fertility,  # last green r11
         "windowed_funnel": analytics.windowed_funnel,  # last green r11
-        "winnowing_fingerprint": dedup.winnowing_fingerprint,  # last green r11
-        "zipf_term_stats": corpus.zipf_term_stats,  # last green r11
-        # -- the r14 work-set entries whose r14 verdicts are current: the
-        # newest verdicts, so last in the rotation. ----------------------
+        "ann_graph_expand_eval": similarity.ann_graph_expand_eval,  # last green r12
+        "churned_users": analytics.churned_users,  # last green r12
+        "doc_length_drift": drift.doc_length_drift,  # last green r12
+        "incremental_dedup": dedup.incremental_dedup,  # last green r12
+        "psi_value_drift": drift.psi_value_drift,  # last green r12
+        "q12_shipmode": relational_ext.q12_shipmode,  # last green r12
+        "quality_rule_drift": drift.quality_rule_drift,  # last green r12
+        "stratified_sample": corpus.stratified_sample,  # last green r12
+        "streaming_attribution_join": streaming.streaming_attribution_join,  # last green r12
+        "text_quality": text.text_quality,  # last green r12
+        "corr_value_hour": analytics.corr_value_hour,  # last green r13
+        "daily_deciles": rollups.daily_deciles,  # last green r13
+        "gapfill_interp": analytics.gapfill_interp,  # last green r13
+        "gapfill_locf": analytics.gapfill_locf,  # last green r13
+        "geomean_by_type": lambda s, d: table_functions.metric_geomean(s, d, direction=None),  # last green r13
+        "histogram_quantile_sketch": sketches.histogram_quantile_sketch,  # last green r13
+        "json_extract_props": corpus.json_extract_props,  # last green r13
+        "linear_trend": analytics.linear_trend,  # last green r13
+        "log_pdf_cdf": lambda s, d: table_functions.metric_pdf(s, d, direction=None),  # last green r13
+        "multigrain_stats": analytics.multigrain_stats,  # last green r13
+        "multistream_throughput": rollups.multistream_throughput,  # last green r13
+        "reservoir_sample_per_key": corpus.reservoir_sample_per_key,  # last green r13
+        "rfm_features": analytics.rfm_features,  # last green r13
+        "rollup_revenue": analytics.rollup_revenue,  # last green r13
+        "topk_drift_weekly": drift.topk_drift_weekly,  # last green r13
+        "autojoin_tiered_counts": view_families.autojoin_tiered_counts,  # last green r14
+        "cross_source_dup_leakage": corpus.cross_source_dup_leakage,  # last green r14
+        "dedup_best_per_user": rollups.dedup_best_per_user,  # last green r14
         "dedup_editdistance": dedup.dedup_editdistance,  # last green r14
+        "dedup_minhash_lsh": dedup.dedup_minhash_lsh,  # last green r14
+        "dedup_minhash_portable": dedup.dedup_minhash_portable,  # last green r14
+        "dsir_importance_weights": curation.dsir_importance_weights,  # last green r14
+        "fn_geomean_download_complete": lambda s, d: table_functions.metric_geomean( s, d, direction="download", fleet="complete" ),  # last green r14
+        "fn_pdf_upload_2021": lambda s, d: table_functions.metric_pdf( s, d, direction="upload", fleet="2021" ),  # last green r14
+        "hourly_rollup": rollups.hourly_rollup,  # last green r14
+        "length_filter_sweep": curation.length_filter_sweep,  # last green r14
         "multimodal_meta": multimodal.multimodal_meta,  # last green r14
+        "new_vs_returning": analytics.new_vs_returning,  # last green r14
+        "restore_unique_docs": corpus.restore_unique_docs,  # last green r14
+        "sidestream_view": rollups.sidestream_view,  # last green r14
         "simhash_fingerprint": dedup.simhash_fingerprint,  # last green r14
+        "skew_salted_daily_users": skew.skew_salted_daily_users,  # last green r14
+        "sliding_window_stats": rollups.sliding_window_stats,  # last green r14
+        "source_quality_profile": curation.source_quality_profile,  # last green r14
+        "static_mapping": transforms.static_mapping,  # last green r14
+        "streaming_distinct_keys": streaming.streaming_distinct_keys,  # last green r14
+        "streaming_hopping_counts": streaming.streaming_hopping_counts,  # last green r14
+        "streaming_hourly_counts": streaming.streaming_hourly_counts,  # last green r14
+        "substring_dup_spans": dedup.substring_dup_spans,  # last green r14
+        "switch_utilization": rollups.switch_utilization,  # last green r14
+        "tiered_views": view_families.tiered_views,  # last green r14
+        "top_clients_per_type": sessions.top_clients_per_type,  # last green r14
     }
 
 

@@ -16,7 +16,7 @@ merge order varies run to run.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
@@ -25,6 +25,7 @@ from .contracts import (
     PLAUSIBLE_TS_SQL,
     VDEC4_SQL,
     VDEC_SQL as _VDEC_SQL,
+    _trunc6,
     finite_value,
     plausible_ts,
     vdec as _vdec,
@@ -32,10 +33,6 @@ from .contracts import (
 )
 
 DEC = "decimal(18,4)"
-
-
-def _trunc6(c: Column) -> Column:
-    return F.floor(c * 1e6) / 1e6
 
 
 # _vdec / _VDEC_SQL are the central guarded lifts from .contracts: the

@@ -85,9 +85,7 @@ def input_fingerprint(*paths: str) -> tuple:
     return tuple(out)
 
 
-def memo_pin(
-    key: str, spark, params: tuple, builder, level=None, inputs: tuple = ()
-) -> DataFrame:
+def memo_pin(key: str, spark, params: tuple, builder, inputs: tuple = ()) -> DataFrame:
     """Cross-invocation pin: return the frame already pinned under ``key``
     if it was built with the same ``params`` (and, when ``inputs`` names
     the source files, the same on-disk bytes) on the same live session;
@@ -117,18 +115,15 @@ def memo_pin(
                 return cur
         except Exception:
             pass  # torn-down session: fall through and rebuild
-    out = swap_pin(key, builder(), level or StorageLevel.MEMORY_AND_DISK)
+    out = swap_pin(key, builder())
     _PIN_PARAMS[key] = params
     return out
 
 
-def swap_pin(
-    key: str,
-    df: DataFrame,
-    level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-) -> DataFrame:
-    """Persist ``df`` under ``key``, releasing whatever was pinned there
-    by a previous invocation. Returns the persisted frame."""
+def swap_pin(key: str, df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK) under ``key``, releasing whatever
+    was pinned there by a previous invocation. Returns the persisted
+    frame."""
     _PIN_PARAMS.pop(key, None)  # a direct swap invalidates any memo record
     prev = _PINS.pop(key, None)
     if prev is not None:
@@ -136,7 +131,7 @@ def swap_pin(
             prev.unpersist(blocking=False)
         except Exception:
             pass  # a torn-down session's frame has nothing left to release
-    out = df.persist(level)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _PINS[key] = out
     return out
 

@@ -50,6 +50,13 @@ def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def _trunc6(c: Column) -> Column:
+    # floor-truncation to 6 decimals: floor(x * 1e6) / 1e6 is the identical
+    # IEEE op sequence in Spark and DuckDB, where round() is not (the two
+    # engines disagree on .5 boundaries)
+    return F.floor(c * 1e6) / 1e6
+
+
 def finite_value(col: str | Column = "value") -> Column:
     """Boolean guard: col is in the measurable value domain."""
     c = _c(col)

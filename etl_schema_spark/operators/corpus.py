@@ -19,17 +19,13 @@ groups — so the reduce side is trivially small at any corpus size.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import cpu_parallel, load_table
+from .contracts import _trunc6
 from .distributed import grouped_running_sum
 from .similarity import finite_scan, load_vectors
-
-
-def _trunc6(c: Column) -> Column:
-    # floor-truncation: identical IEEE op sequence in Spark and DuckDB
-    return F.floor(c * 1e6) / 1e6
 
 
 def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:

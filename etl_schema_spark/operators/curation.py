@@ -27,13 +27,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import cpu_parallel, load_table
+from .contracts import _trunc6
 from .dedup import SHINGLE_CTES_SQL, _shingled_docs
 
 EVAL_MOD = 20  # doc_id % 20 == 0 -> held-out "benchmark" split (~5%)
-
-
-def _trunc6(c: Column) -> Column:
-    return F.floor(c * 1e6) / 1e6
 
 
 def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:

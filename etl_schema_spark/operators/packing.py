@@ -33,19 +33,16 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .contracts import _trunc6
 from .distributed import grouped_running_sum
 
 PACK_BUDGET = 2048  # tokens per packed training sequence
 CHUNK_TOKENS = 32  # tokens per retrieval chunk
 CHUNK_STRIDE = 24  # chunk stride (8-token overlap)
-
-
-def _trunc6(c: Column) -> Column:
-    return F.floor(c * 1e6) / 1e6
 
 
 def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:

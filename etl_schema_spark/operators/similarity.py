@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
-from .contracts import observe_cap
+from .contracts import _trunc6, observe_cap
 
 N_QUERIES = 5
 TOP_K = 10
@@ -182,10 +182,6 @@ def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(kept, 1).otherwise(0)).cast("bigint").alias("rows_kept"),
         )
     return finite_vectors(raw)
-
-
-def _trunc6(c: Column) -> Column:
-    return F.floor(c * 1e6) / 1e6
 
 
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

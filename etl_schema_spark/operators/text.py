@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import cpu_parallel, load_table
+from .contracts import _trunc6
 
 STOPWORDS = ("the", "a", "of", "and", "to")
 
@@ -29,12 +30,6 @@ LANG_MARKERS = {
 
 def _tokens() -> Column:
     return F.split(F.col("text"), r"\s+")
-
-
-def _trunc6(c: Column) -> Column:
-    # floor-truncation: identical IEEE op sequence in Spark and DuckDB
-    # (engine round() implementations disagree on .5 boundaries)
-    return F.floor(c * 1e6) / 1e6
 
 
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:

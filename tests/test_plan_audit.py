@@ -15,7 +15,7 @@ import pytest
 
 import __spark_entry__ as entry
 
-from .conftest import REPO
+from .conftest import REPO, SF_DIR
 
 # all-pairs by definition (exactness baselines or deliberate small-side
 # cross joins): ann brute force broadcasts a tiny query set against the
@@ -266,14 +266,27 @@ def test_unverdicted_entries_sort_into_scored_window():
 
 def test_stale_entries_sort_into_scored_window():
     """The changed-since-verdict half of the rotation guard (r4 brief item
-    7, finished in r6): any entry whose implementing function — or a
-    transitively referenced in-package helper or constant — differs from
-    its state at the round-boundary commit of the entry's latest green
-    verdict MUST sort inside the scored-50 window, so the driver re-scores
-    the code that actually exists. embedding_cosine_dup carried an r2
-    verdict across an r5 adaptive-banding rewrite precisely because this
-    check did not exist (VERDICT r5's single `weak`)."""
+    7, finished in r6): any entry whose executed-plan fingerprint
+    (FINGERPRINTS.json, written by tools/check_correctness.py) differs from
+    its fingerprint at the round of its latest green verdict MUST sort
+    inside the scored-50 window (when more than 50 changed: ahead of every
+    unchanged entry), so the driver re-scores the plan that actually runs.
+    embedding_cosine_dup carried an r2 verdict across an r5
+    adaptive-banding rewrite precisely because this check did not exist
+    (VERDICT r5's single `weak`). The committed map must describe the
+    sources in this tree, or the check reads a stale plan."""
     import importlib.util
+    import json
+
+    from tools.check_correctness import source_digest
+
+    with open(os.path.join(REPO, "FINGERPRINTS.json")) as f:
+        recorded = json.load(f)["sources"]
+    assert recorded == source_digest(), (
+        "FINGERPRINTS.json was captured from other sources than this tree's "
+        "etl_schema_spark/ + __spark_entry__.py: re-run "
+        "`python tools/check_correctness.py` and commit FINGERPRINTS.json"
+    )
 
     spec = importlib.util.spec_from_file_location(
         "verdict_freshness", os.path.join(REPO, "tools", "verdict_freshness.py")
@@ -282,28 +295,68 @@ def test_stale_entries_sort_into_scored_window():
     spec.loader.exec_module(vf)
 
     names, _ = _registry_order_and_cap()
-    scored = set(names[:50])
     fresh = vf.freshness()
-    # r8: the deferral allowlist retires EMPTY (VERDICT r7 item 3). The
-    # window holds exactly 50 = 9 new + 17 own-changed + 24
-    # helper-changed — every r7 deferral sits IN-window and gets a fresh
-    # driver verdict this round. Re-populate this set ONLY as a
-    # one-round defer when a rotation genuinely overflows the window,
-    # with the same in-window-owner-per-change-class argument r7 used.
-    DEFERRED_HELPER_ONLY: set[str] = set()
-    for k in DEFERRED_HELPER_ONLY:
-        assert fresh[k].get("reason") == "helper changed", (
-            f"{k} is deferred but its OWN function changed — not deferrable"
-        )
     stale = [k for k, v in fresh.items() if not v["fresh"]]
-    outside = [k for k in stale if k not in scored and k not in DEFERRED_HELPER_ONLY]
+    # with more than 50 changed entries the window holds only changed ones
+    # and the rest lead the below-cap region, to rotate in next round
+    window = set(names[: max(50, len(stale))])
+    outside = [k for k in stale if k not in window]
     assert not outside, (
         f"{len(outside)} entries changed since their last driver verdict "
-        f"but sit past the 50-entry scoring cap: {sorted(outside)}"
+        f"but sit past the first {len(window)} entries: {sorted(outside)}"
     )
-    # deferred entries must lead the below-cap region so r7 scores them
-    below_cap = names[50:]
-    assert set(below_cap[: len(DEFERRED_HELPER_ONLY)]) == DEFERRED_HELPER_ONLY
+
+
+def _capture(*names, target_bytes=None):
+    """{entry: plan fingerprint} from a fresh tools/check_correctness.py
+    process over ``names`` at sf0.001, optionally with
+    catalog.CPU_PARALLEL_TARGET_BYTES patched before the run."""
+    import re
+    import subprocess
+    import sys
+
+    argv = ["tools/check_correctness.py", SF_DIR, *names]
+    patch = f"catalog.CPU_PARALLEL_TARGET_BYTES = {target_bytes}\n" if target_bytes else ""
+    code = (
+        "import runpy, sys\n"
+        "from etl_schema_spark.sources import catalog\n"
+        f"{patch}sys.argv = {argv!r}\n"
+        "runpy.run_path(sys.argv[0], run_name='__main__')\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True
+    ).stdout
+    prints = dict(re.findall(r"^(?:ok  |FAIL) (\w+):.* plan ([0-9a-f]{32})$", out, re.M))
+    assert set(prints) == set(names), out
+    return prints
+
+
+# two entries whose final plans differ run to run in AQE stage order: in
+# codegen and query-stage ids, which the captured plan graph does not hold
+AQE_ORDER_NOISE = ("q21_suppliers_kept_waiting", "centroid_shift_drift")
+CPU_PARALLEL_CONSUMER = "bigram_surprisal"
+EVENTS_ONLY = "funnel_conversion"
+
+
+@pytest.fixture(scope="module")
+def fresh_captures():
+    names = (*AQE_ORDER_NOISE, CPU_PARALLEL_CONSUMER, EVENTS_ONLY)
+    return _capture(*names), _capture(*names)
+
+
+def test_plan_fingerprint_is_stable_across_processes(fresh_captures):
+    first, second = fresh_captures
+    for name in AQE_ORDER_NOISE:
+        assert first[name] == second[name], name
+
+
+def test_plan_fingerprint_sees_cpu_parallel_sizing(fresh_captures):
+    """A catalog-only change (the cpu_parallel fan-out target) moves the
+    fingerprint of a cpu_parallel consumer and of no events-only entry."""
+    base, _ = fresh_captures
+    patched = _capture(CPU_PARALLEL_CONSUMER, EVENTS_ONLY, target_bytes=1)
+    assert patched[CPU_PARALLEL_CONSUMER] != base[CPU_PARALLEL_CONSUMER]
+    assert patched[EVENTS_ONLY] == base[EVENTS_ONLY]
 
 
 def test_headline_set_frozen():
