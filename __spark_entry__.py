@@ -51,20 +51,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the driver scores only the FIRST 50 entries each round. Order as:
     #   1. entries with NO driver verdict yet (new this round or never
     #      scored because they landed past the cap),
-    #   2. entries whose executed plan changed since their last verdict
-    #      (mechanically: tools/verdict_freshness.py — the entry's plan
-    #      fingerprint in FINGERPRINTS.json, written by
+    #   2. entries whose executed plan or oracle SQL changed since their
+    #      last verdict (mechanically: tools/verdict_freshness.py — the
+    #      entry's fingerprint in FINGERPRINTS.json, written by
     #      tools/check_correctness.py, against its fingerprint at the
-    #      verdict round),
+    #      verdict round), oldest verdict first; when more than fit, the
+    #      youngest-verdict ones lead the region below the cap,
     #   3. everything else, OLDEST verdict first (re-verification rotation).
     # When adding an operator, insert it in group 1 — an entry appended at
     # the tail will NOT be scored this round. Enforced by
     # tests/test_plan_audit.py::test_stale_entries_sort_into_scored_window.
     return {
-        # -- group 2 (group 1, no verdict yet, is empty): executed plan
-        # changed since the last green verdict (68,
+        # -- group 2 (group 1, no verdict yet, is empty): executed plan or
+        # oracle changed since the last green verdict (75,
         # tools/verdict_freshness.py), oldest verdict first; those past
         # the cap lead the next round. -------------------------------
+        "unified_view_events": views_layer.unified_view,  # last green r08
         "unigram_lm_pieces": text.unigram_lm_pieces,  # last green r08
         "repeat_profile_automaton": dedup.repeat_profile_automaton,  # last green r09
         "vocab_coverage": text.vocab_coverage,  # last green r09
@@ -95,12 +97,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "containment_dup": dedup.containment_dup,  # last green r13
         "cross_lang_contamination": curation.cross_lang_contamination,  # last green r13
         "cross_source_overlap": corpus.cross_source_overlap,  # last green r13
+        "daily_deciles": rollups.daily_deciles,  # last green r13
         "dedup_impact_curve": dedup.dedup_impact_curve,  # last green r13
         "domain_mix_weights": packing.domain_mix_weights,  # last green r13
+        "geomean_by_type": lambda s, d: table_functions.metric_geomean(s, d, direction=None),  # last green r13
         "image_ahash_dup": multimodal.image_ahash_dup,  # last green r13
         "incremental_neardup": dedup.incremental_neardup,  # last green r13
         "ingest_front_door": dedup.ingest_front_door,  # last green r13
         "kmv_set_ops": sketches.kmv_set_ops,  # last green r13
+        "log_pdf_cdf": lambda s, d: table_functions.metric_pdf(s, d, direction=None),  # last green r13
         "multimodal_wav_energy": multimodal.multimodal_wav_energy,  # last green r13
         "pmi_cooccur_terms": text.pmi_cooccur_terms,  # last green r13
         "seasonal_baseline": analytics.seasonal_baseline,  # last green r13
@@ -111,14 +116,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "template_communities": graph.template_communities,  # last green r13
         "tfidf_top_terms": text.tfidf_top_terms,  # last green r13
         "ccnet_source_split": curation.ccnet_source_split,  # last green r14
+        # ---------------- 50-entry scoring cap lands here ----------------
         "dedup_aware_split": graph.dedup_aware_split,  # last green r14
+        "dedup_best_per_user": rollups.dedup_best_per_user,  # last green r14
         "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,  # last green r14
         "dup_cluster_stats": graph.dup_cluster_stats,  # last green r14
         "dup_components": graph.dup_components,  # last green r14
-        # ---------------- 50-entry scoring cap lands here ----------------
         "dup_pagerank": graph.dup_pagerank,  # last green r14
         "embedding_outliers": similarity.embedding_outliers,  # last green r14
         "epoch_shuffle": corpus.epoch_shuffle,  # last green r14
+        "fn_pdf_upload_2021": lambda s, d: table_functions.metric_pdf(s, d, direction="upload", fleet="2021"),  # last green r14
+        "hourly_rollup": rollups.hourly_rollup,  # last green r14
         "key_skew_profile": skew.key_skew_profile,  # last green r14
         "label_balance_sample": similarity.label_balance_sample,  # last green r14
         "mad_outliers": analytics.mad_outliers,  # last green r14
@@ -136,7 +144,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vocab_growth_curve": corpus.vocab_growth_curve,  # last green r14
         # -- group 3: everything else, oldest green verdict first. ------
         "streaming_topk_keys": streaming.streaming_topk_keys,  # last green r08
-        "unified_view_events": views_layer.unified_view,  # last green r08
         "user_transition_matrix": analytics.user_transition_matrix,  # last green r08
         "weighted_sample_ares": corpus.weighted_sample_ares,  # last green r08
         "zscore_outliers": analytics.zscore_outliers,  # last green r08
@@ -236,14 +243,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_attribution_join": streaming.streaming_attribution_join,  # last green r12
         "text_quality": text.text_quality,  # last green r12
         "corr_value_hour": analytics.corr_value_hour,  # last green r13
-        "daily_deciles": rollups.daily_deciles,  # last green r13
         "gapfill_interp": analytics.gapfill_interp,  # last green r13
         "gapfill_locf": analytics.gapfill_locf,  # last green r13
-        "geomean_by_type": lambda s, d: table_functions.metric_geomean(s, d, direction=None),  # last green r13
         "histogram_quantile_sketch": sketches.histogram_quantile_sketch,  # last green r13
         "json_extract_props": corpus.json_extract_props,  # last green r13
         "linear_trend": analytics.linear_trend,  # last green r13
-        "log_pdf_cdf": lambda s, d: table_functions.metric_pdf(s, d, direction=None),  # last green r13
         "multigrain_stats": analytics.multigrain_stats,  # last green r13
         "multistream_throughput": rollups.multistream_throughput,  # last green r13
         "reservoir_sample_per_key": corpus.reservoir_sample_per_key,  # last green r13
@@ -252,14 +256,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "topk_drift_weekly": drift.topk_drift_weekly,  # last green r13
         "autojoin_tiered_counts": view_families.autojoin_tiered_counts,  # last green r14
         "cross_source_dup_leakage": corpus.cross_source_dup_leakage,  # last green r14
-        "dedup_best_per_user": rollups.dedup_best_per_user,  # last green r14
         "dedup_editdistance": dedup.dedup_editdistance,  # last green r14
         "dedup_minhash_lsh": dedup.dedup_minhash_lsh,  # last green r14
         "dedup_minhash_portable": dedup.dedup_minhash_portable,  # last green r14
         "dsir_importance_weights": curation.dsir_importance_weights,  # last green r14
-        "fn_geomean_download_complete": lambda s, d: table_functions.metric_geomean( s, d, direction="download", fleet="complete" ),  # last green r14
-        "fn_pdf_upload_2021": lambda s, d: table_functions.metric_pdf( s, d, direction="upload", fleet="2021" ),  # last green r14
-        "hourly_rollup": rollups.hourly_rollup,  # last green r14
+        "fn_geomean_download_complete": lambda s, d: table_functions.metric_geomean(s, d, direction="download", fleet="complete"),  # last green r14
         "length_filter_sweep": curation.length_filter_sweep,  # last green r14
         "multimodal_meta": multimodal.multimodal_meta,  # last green r14
         "new_vs_returning": analytics.new_vs_returning,  # last green r14

@@ -269,9 +269,8 @@ def test_stale_entries_sort_into_scored_window():
     7, finished in r6): any entry whose executed-plan fingerprint
     (FINGERPRINTS.json, written by tools/check_correctness.py) differs from
     its fingerprint at the round of its latest green verdict MUST sort
-    inside the scored-50 window (when more than 50 changed: ahead of every
-    unchanged entry), so the driver re-scores the plan that actually runs.
-    embedding_cosine_dup carried an r2 verdict across an r5
+    inside the scored-50 window, so the driver re-scores the plan that
+    actually runs. embedding_cosine_dup carried an r2 verdict across an r5
     adaptive-banding rewrite precisely because this check did not exist
     (VERDICT r5's single `weak`). The committed map must describe the
     sources in this tree, or the check reads a stale plan."""
@@ -295,16 +294,44 @@ def test_stale_entries_sort_into_scored_window():
     spec.loader.exec_module(vf)
 
     names, _ = _registry_order_and_cap()
+    scored = set(names[:50])
     fresh = vf.freshness()
+    # A one-round defer, for a rotation that genuinely overflows the
+    # window: 75 entries changed since their verdicts (r14's cpu_parallel
+    # fan-out and rank/bucket rewrites, the pin coalescing conf, the
+    # rewritten validity oracles), so the 25 with the youngest verdicts
+    # (r14, the last scored round) wait one round and lead the below-cap
+    # region. It may hold only the overflow, only stale entries, and none
+    # with an older verdict than any in-window stale entry; it is empty
+    # whenever 50 or fewer entries changed.
+    DEFERRED_ONE_ROUND = {
+        "dedup_aware_split", "dedup_best_per_user", "dedup_ngram_jaccard",
+        "dup_cluster_stats", "dup_components", "dup_pagerank",
+        "embedding_outliers", "epoch_shuffle", "fn_pdf_upload_2021",
+        "hourly_rollup", "key_skew_profile", "label_balance_sample",
+        "mad_outliers", "minhash_pr_eval", "near_dup_keep_plan",
+        "pack_efficiency_sweep", "pack_fill_audit", "pack_sequences",
+        "perplexity_buckets", "source_token_budget",
+        "tail_latency_percentiles", "trimmed_mean_value", "triplet_mining",
+        "user_activity_gini", "vocab_growth_curve",
+    }
     stale = [k for k, v in fresh.items() if not v["fresh"]]
-    # with more than 50 changed entries the window holds only changed ones
-    # and the rest lead the below-cap region, to rotate in next round
-    window = set(names[: max(50, len(stale))])
-    outside = [k for k in stale if k not in window]
+    assert len(DEFERRED_ONE_ROUND) == max(0, len(stale) - 50), (
+        f"{len(stale)} entries changed since their last driver verdict: "
+        f"defer exactly the {max(0, len(stale) - 50)} past the window"
+    )
+    assert DEFERRED_ONE_ROUND <= set(stale), sorted(DEFERRED_ONE_ROUND - set(stale))
+    in_window = [fresh[k]["round"] or 0 for k in stale if k not in DEFERRED_ONE_ROUND]
+    for k in DEFERRED_ONE_ROUND:
+        assert fresh[k]["round"] >= max(in_window), f"{k} has an older verdict than an in-window entry"
+    outside = [k for k in stale if k not in scored and k not in DEFERRED_ONE_ROUND]
     assert not outside, (
         f"{len(outside)} entries changed since their last driver verdict "
-        f"but sit past the first {len(window)} entries: {sorted(outside)}"
+        f"but sit past the 50-entry scoring cap: {sorted(outside)}"
     )
+    # deferred entries must lead the below-cap region so the next round scores them
+    below_cap = names[50:]
+    assert set(below_cap[: len(DEFERRED_ONE_ROUND)]) == DEFERRED_ONE_ROUND
 
 
 def _capture(*names, target_bytes=None):

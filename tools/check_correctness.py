@@ -7,10 +7,12 @@ names, per-column Arrow types (both sides fetched as Arrow, so the
 DuckDB-HUGEINT-vs-Spark-BIGINT class is caught), and an order-insensitive
 value representation.
 
-The same pass fingerprints each entry's executed plan: the md5 of the
-final adaptive plan of every SQL execution the entry started (its eager
-build jobs and the result query), read from the session's SQL status
-store and normalised (see ``canonical``). A full run over an sf0.01 dir
+It runs them twice. The first pass is the driver's: registry order in one
+session. The second runs each entry from an empty cache and fingerprints
+its executed plan: the md5 of the final adaptive plan of every SQL
+execution the entry started (its eager build jobs and the result query),
+read from the session's SQL status store and normalised (see
+``canonical``), with its oracle SQL. A full run over an sf0.01 dir
 (the default) writes the map to FINGERPRINTS.json with a digest of the
 sources it ran on, and renders PLANS.md from the same plans;
 tools/verdict_freshness.py compares the map with the one at each entry's
@@ -114,12 +116,12 @@ _OPAQUE = re.compile(r"Python|Pandas|InArrow|LocalTableScan")
 _WORKER = re.compile(r"(?:Python|Pandas|InArrow)\w* \[?(\w+)\(")
 
 # Run-to-run noise in a plan node's text: ids Spark numbers per process
-# (expressions, lambda variables, exchanges, RDDs), object hashes, random
-# uuids, the random suffix of a temp dir, and a streaming batch's
-# processing-time timestamp (epoch ms within a day of now).
+# (expressions, lambda variables, common subexpressions, exchanges, RDDs),
+# object hashes, random uuids, the random suffix of a temp dir, and a
+# streaming batch's processing-time timestamp (epoch ms within a day of now).
 _NOISE = [
     (re.compile(r"#\d+L?"), "#"),
-    (re.compile(r"(lambda \w+?)_\d+#"), r"\1#"),
+    (re.compile(r"(lambda \w+?|_common_expr)_\d+#"), r"\1#"),
     (re.compile(r"(<'[a-z]+)_\d+'"), r"\1'"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"\[\d+\] at "), "[] at "),
@@ -231,12 +233,13 @@ def canonical(plan: str, fold: bool = True) -> list[str]:
     return out + [f"folded exchange widths {sorted(widths)}"] * bool(widths)
 
 
-def fingerprint(plans: list[str], fn) -> str:
+def fingerprint(plans: list[str], fn, oracle: str) -> str:
+    """md5 of the canonical plans and the oracle SQL a verdict compared."""
     text = "\n\n".join("\n".join(canonical(p)) for p in plans)
     if _OPAQUE.search(text):
         workers = None if "LocalTableScan" in text else set(_WORKER.findall(text))
         text += "\n" + closure_digest(fn, workers)
-    return hashlib.md5(text.encode()).hexdigest()
+    return hashlib.md5(f"{text}\n\n{oracle}".encode()).hexdigest()
 
 
 def source_digest() -> str:
@@ -382,50 +385,52 @@ def main():
     from etl_schema_spark.session import get_spark
 
     spark = get_spark("check_correctness")
-    # the captured plans elide no fields and truncate no scan metadata
-    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
 
-    qs = e.queries()
-    oracles = e.oracle_sql()
-    failures, prints, rows = [], {}, []
-    for name, fn in sorted(qs.items()):
-        if ONLY and name not in ONLY:
-            continue
-        # every entry starts from an empty cache, so its plan does not
-        # depend on which entries ran before it
-        release_pins()
-        spark.catalog.clearCache()
-        since = last_execution(spark)
-        try:
-            sdf = fn(spark, SF_DIR)
-            stypes = arrow_types(sdf.toArrow())
-            plans = final_plans(spark, since)
-            out = (sdf.columns, stypes, [tuple(r) for r in sdf.collect()])
-        except Exception as ex:
-            print(f"FAIL {name}: spark error: {ex}")
-            failures.append(name)
-            rows.append(plan_row(name, None))
-            continue
-        prints[name] = fingerprint(plans, fn)
-        rows.append(plan_row(name, plans))
-        err = compare(out, oracles[name], con) if name in oracles else None
-        if err:
-            failures.append(name)
-        verdict = f"FAIL {name}: {err}" if err else f"ok   {name}: {len(out[2])} rows"
-        print(f"{verdict} plan {prints[name]}")
-    n_run = len([n for n in qs if not ONLY or n in ONLY])
-    print(f"\n{n_run - len(failures)}/{n_run} ok" + (" (filtered)" if ONLY else ""))
+    qs, oracles = e.queries(), e.oracle_sql()
+    names = [n for n in qs if not ONLY or n in ONLY]
+    failures, prints, rows = set(), {}, []
+    # The first pass runs as the driver does: registry order, one session,
+    # so an entry may read a pin an earlier one left (kmv_distinct_estimate
+    # reads kmv_set_ops', mix_epoch_plan domain_mix_weights'). The second
+    # captures plans: each entry from an empty cache, so its fingerprint does
+    # not depend on which entries ran before it; it is compared again.
+    for cold in (False, True):
+        if cold:  # the captured plans elide no fields, truncate no metadata
+            spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
+            spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+        for name in sorted(names) if cold else names:
+            if cold:
+                release_pins()
+                spark.catalog.clearCache()
+            since = last_execution(spark)
+            try:
+                sdf = qs[name](spark, SF_DIR)
+                stypes = arrow_types(sdf.toArrow())
+                plans = final_plans(spark, since) if cold else None
+                out = (sdf.columns, stypes, [tuple(r) for r in sdf.collect()])
+            except Exception as ex:
+                print(f"FAIL {name}: spark error: {ex}")
+                failures.add(name)
+                if cold:
+                    rows.append(plan_row(name, None))
+                continue
+            err = compare(out, oracles[name], con) if name in oracles else None
+            if err:
+                failures.add(name)
+            verdict = f"FAIL {name}: {err}" if err else f"ok   {name}: {len(out[2])} rows"
+            if cold:
+                prints[name] = fingerprint(plans, qs[name], oracles.get(name, ""))
+                rows.append(plan_row(name, plans))
+                verdict += f" cold, plan {prints[name]}"
+            print(verdict)
+    print(f"\n{len(names) - len(failures)}/{len(names)} ok" + (" (filtered)" if ONLY else ""))
     if not ONLY and os.path.basename(os.path.normpath(SF_DIR)) == "sf0.01":  # the committed scale
         with open(os.path.join(REPO, "FINGERPRINTS.json"), "w") as f:
             doc = {"sources": source_digest(), "sf_dir": SF_DIR, "entries": prints}
-            json.dump(doc, f, indent=1, sort_keys=True)
-            f.write("\n")
+            f.write(json.dumps(doc, indent=1, sort_keys=True) + "\n")
         with open(os.path.join(REPO, "PLANS.md"), "w") as f:
             f.write(PLANS_HEADER.format(sf_dir=SF_DIR) + "\n".join(rows) + "\n")
     sys.exit(1 if failures else 0)
@@ -433,9 +438,8 @@ def main():
 
 PLANS_HEADER = """# Executed-plan summary
 
-Generated by tools/check_correctness.py from the final adaptive plans of
-each entry's SQL executions (its eager build jobs and the result query)
-at {sf_dir}: the plans FINGERPRINTS.json hashes. A cached body counts once.
+Generated by tools/check_correctness.py at {sf_dir} from the plans FINGERPRINTS.json
+hashes: each entry's final adaptive plans (eager builds, result). A cached body counts once.
 
 | query | exchanges | broadcast joins | SMJ | pushed filters | python ops |
 | --- | --- | --- | --- | --- | --- |

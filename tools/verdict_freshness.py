@@ -1,17 +1,19 @@
 """Per-entry verdict freshness: which registry entries' executed plans
-changed since their last green driver verdict.
+or oracle SQL changed since their last green driver verdict.
 
 The driver scores the first 50 ``queries()`` entries per round
-(CORRECTNESS_r{N}.json); an entry whose plan changed after its last green
-verdict carries a verdict about a plan that no longer runs. Its HEAD plan
-fingerprint (FINGERPRINTS.json, from tools/check_correctness.py) is
-compared with its fingerprint in the tree of that round's boundary commit
-("round N: verdict/advice/correctness/bench", which adds only verdict
-artifacts): that tree's FINGERPRINTS.json from round 15 on, and
+(CORRECTNESS_r{N}.json); an entry whose plan or oracle changed after its
+last green verdict carries a verdict about a comparison that no longer
+runs. Its HEAD fingerprint (FINGERPRINTS.json, from
+tools/check_correctness.py) is compared with its fingerprint in the tree
+of that round's boundary commit ("round N: verdict/advice/correctness/
+bench", which adds only verdict artifacts): that tree's
+FINGERPRINTS.json from round 15 on, and
 FINGERPRINTS_bootstrap.json (captured once from those trees) for rounds
 8-14. Prints {entry: {"round": N|null, "fresh": bool}}; fresh=False means
 changed since the verdict or never scored. tests/test_plan_audit.py
-asserts every non-fresh entry sorts inside the scored-50 window.
+asserts every non-fresh entry sorts inside the scored-50 window, but for a
+listed one-round overflow that leads the region below it.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import subprocess
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -36,11 +39,8 @@ def round_commits() -> dict[int, str]:
     rc = {}
     for line in out.splitlines():
         sha, _, subj = line.partition(" ")
-        if subj.startswith("round ") and ": verdict" in subj:
-            try:
-                rc[int(subj.split()[1].rstrip(":"))] = sha
-            except ValueError:
-                continue
+        if m := re.match(r"round (\d+): verdict", subj):
+            rc[int(m[1])] = sha
     return rc
 
 
@@ -78,10 +78,8 @@ def freshness() -> dict[str, dict]:
     then = {rnd: fingerprints_at(rnd, rc[rnd]) for rnd in set(verdicts.values()) if rnd in rc}
     out = {}
     for name in e.queries():
-        rnd = verdicts.get(name)
-        now = head.get(name)
-        fresh = now is not None and rnd in then and then[rnd].get(name) == now
-        out[name] = {"round": rnd, "fresh": fresh}
+        rnd, now = verdicts.get(name), head.get(name)
+        out[name] = {"round": rnd, "fresh": now is not None and then.get(rnd, {}).get(name) == now}
     return out
 
 
