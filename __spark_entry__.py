@@ -63,9 +63,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # tests/test_plan_audit.py::test_stale_entries_sort_into_scored_window.
     return {
         # -- group 2 (group 1, no verdict yet, is empty): executed plan or
-        # oracle changed since the last green verdict (75,
+        # oracle changed since the last green verdict (83,
         # tools/verdict_freshness.py), oldest verdict first; those past
         # the cap lead the next round. -------------------------------
+        "streaming_topk_keys": streaming.streaming_topk_keys,  # last green r08
         "unified_view_events": views_layer.unified_view,  # last green r08
         "unigram_lm_pieces": text.unigram_lm_pieces,  # last green r08
         "repeat_profile_automaton": dedup.repeat_profile_automaton,  # last green r09
@@ -75,6 +76,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_domain_perplexity": curation.lm_domain_perplexity,  # last green r10
         "quality_logreg_score": curation.quality_logreg_score,  # last green r10
         "quality_score_calibration": curation.quality_score_calibration,  # last green r10
+        "streaming_ingest_restore": streaming.streaming_ingest_restore,  # last green r10
         "audio_vad_segments": multimodal.audio_vad_segments,  # last green r11
         "bigram_surprisal": text.bigram_surprisal,  # last green r11
         "decontaminate_ngram_overlap": curation.decontaminate_ngram_overlap,  # last green r11
@@ -84,6 +86,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_decode_ppm": multimodal.multimodal_decode_ppm,  # last green r11
         "multimodal_frame_sample": multimodal.multimodal_frame_sample,  # last green r11
         "ngram_novelty_score": curation.ngram_novelty_score,  # last green r11
+        "streaming_ewma_flags": streaming.streaming_ewma_flags,  # last green r11
+        "streaming_session_windows": streaming.streaming_session_windows,  # last green r11
         "winnowing_fingerprint": dedup.winnowing_fingerprint,  # last green r11
         "zipf_term_stats": corpus.zipf_term_stats,  # last green r11
         "annotate_renest": views_layer.annotate_renest,  # last green r12
@@ -92,6 +96,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_resize": multimodal.multimodal_resize,  # last green r12
         "repetition_stats": curation.repetition_stats,  # last green r12
         "semdedup_clusters": similarity.semdedup_clusters,  # last green r12
+        "streaming_attribution_join": streaming.streaming_attribution_join,  # last green r12
         "streaming_quality_gated_publish": streaming.streaming_quality_gated_publish,  # last green r12
         "substring_repeat_ladder": dedup.substring_repeat_ladder,  # last green r12
         "containment_dup": dedup.containment_dup,  # last green r13
@@ -111,12 +116,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "seasonal_baseline": analytics.seasonal_baseline,  # last green r13
         "streaming_incremental_dedup": streaming.streaming_incremental_dedup,  # last green r13
         "streaming_ingest_front_door": streaming.streaming_ingest_front_door,  # last green r13
+        # ---------------- 50-entry scoring cap lands here ----------------
         "streaming_neardup": streaming.streaming_neardup,  # last green r13
         "streaming_rule_drift_gate": streaming.streaming_rule_drift_gate,  # last green r13
         "template_communities": graph.template_communities,  # last green r13
         "tfidf_top_terms": text.tfidf_top_terms,  # last green r13
         "ccnet_source_split": curation.ccnet_source_split,  # last green r14
-        # ---------------- 50-entry scoring cap lands here ----------------
         "dedup_aware_split": graph.dedup_aware_split,  # last green r14
         "dedup_best_per_user": rollups.dedup_best_per_user,  # last green r14
         "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,  # last green r14
@@ -137,13 +142,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences": packing.pack_sequences,  # last green r14
         "perplexity_buckets": text.perplexity_buckets,  # last green r14
         "source_token_budget": corpus.source_token_budget,  # last green r14
+        "streaming_distinct_keys": streaming.streaming_distinct_keys,  # last green r14
+        "streaming_hopping_counts": streaming.streaming_hopping_counts,  # last green r14
+        "streaming_hourly_counts": streaming.streaming_hourly_counts,  # last green r14
         "tail_latency_percentiles": analytics.tail_latency_percentiles,  # last green r14
         "trimmed_mean_value": analytics.trimmed_mean_value,  # last green r14
         "triplet_mining": similarity.triplet_mining,  # last green r14
         "user_activity_gini": analytics.user_activity_gini,  # last green r14
         "vocab_growth_curve": corpus.vocab_growth_curve,  # last green r14
         # -- group 3: everything else, oldest green verdict first. ------
-        "streaming_topk_keys": streaming.streaming_topk_keys,  # last green r08
         "user_transition_matrix": analytics.user_transition_matrix,  # last green r08
         "weighted_sample_ares": corpus.weighted_sample_ares,  # last green r08
         "zscore_outliers": analytics.zscore_outliers,  # last green r08
@@ -206,7 +213,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q21_suppliers_kept_waiting": relational_ext.q21_suppliers_kept_waiting,  # last green r10
         "q22_inactive_customers": transforms.q22_inactive_customers,  # last green r10
         "raw_view_events": views_layer.raw_view,  # last green r10
-        "streaming_ingest_restore": streaming.streaming_ingest_restore,  # last green r10
         "token_count": text.token_count,  # last green r10
         "trailing_window_view": view_families.trailing_window_view,  # last green r10
         "bloom_membership": sketches.bloom_membership,  # last green r11
@@ -226,8 +232,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scd2_history": analytics.scd2_history,  # last green r11
         "session_top_paths": sessions.session_top_paths,  # last green r11
         "sessionized_events": sessions.sessionized_events,  # last green r11
-        "streaming_ewma_flags": streaming.streaming_ewma_flags,  # last green r11
-        "streaming_session_windows": streaming.streaming_session_windows,  # last green r11
         "time_weighted_value": analytics.time_weighted_value,  # last green r11
         "token_count_bpe": text.token_count_bpe,  # last green r11
         "tokenizer_fertility": text.tokenizer_fertility,  # last green r11
@@ -240,7 +244,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q12_shipmode": relational_ext.q12_shipmode,  # last green r12
         "quality_rule_drift": drift.quality_rule_drift,  # last green r12
         "stratified_sample": corpus.stratified_sample,  # last green r12
-        "streaming_attribution_join": streaming.streaming_attribution_join,  # last green r12
         "text_quality": text.text_quality,  # last green r12
         "corr_value_hour": analytics.corr_value_hour,  # last green r13
         "gapfill_interp": analytics.gapfill_interp,  # last green r13
@@ -271,9 +274,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sliding_window_stats": rollups.sliding_window_stats,  # last green r14
         "source_quality_profile": curation.source_quality_profile,  # last green r14
         "static_mapping": transforms.static_mapping,  # last green r14
-        "streaming_distinct_keys": streaming.streaming_distinct_keys,  # last green r14
-        "streaming_hopping_counts": streaming.streaming_hopping_counts,  # last green r14
-        "streaming_hourly_counts": streaming.streaming_hourly_counts,  # last green r14
         "substring_dup_spans": dedup.substring_dup_spans,  # last green r14
         "switch_utilization": rollups.switch_utilization,  # last green r14
         "tiered_views": view_families.tiered_views,  # last green r14

@@ -14,19 +14,32 @@ Scale notes: watermark bounds state (late data beyond 1 hour is dropped —
 the knob a real deployment tunes); session-window state is per-user and
 expires at watermark + gap. File source here; on a cluster the same plans
 run unchanged over Kafka (`format("kafka")`) since everything downstream of
-the source is declarative.
+the source is declarative. Every query starts through `_start_sized`, which
+sizes the drain's state partitions from its file sources' bytes (the
+`cpu_parallel` rule, `catalog.partitions_for_bytes`) instead of the
+session's fixed `spark.sql.shuffle.partitions`: on 4 cores a 10k-event
+drain runs 4 state-store partitions, not 32, each paying provider init and
+commit per batch. A restarted query keeps the count its checkpoint recorded.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import itertools
 import json
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from etl_schema_spark.sources.catalog import normalize_nanos, physical_schema
+from etl_schema_spark.session import shuffle_partitions
+from etl_schema_spark.sources.catalog import (
+    normalize_nanos,
+    partitions_for_bytes,
+    physical_schema,
+)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,9 +194,69 @@ def streaming_session_windows_oracle() -> str:
     """
 
 
+def _state_partitions(df: DataFrame) -> int | None:
+    """The state-partition count for draining ``df``: its file sources'
+    bytes under the cpu_parallel rule, capped at the session's shuffle
+    partitions and at defaultParallelism. ``df.inputFiles()`` raises on a
+    streaming frame, so the sources come from the analyzed plan's
+    StreamingRelation leaves: the visible files (no ``_``/``.`` names,
+    as the source lists them) of their ``path`` directory that match
+    their ``pathGlobFilter``. None — keep the session count — when the
+    size is unknown: a leaf that is not a file source over a local
+    directory, an empty input, or any error."""
+    spark = df.sparkSession
+    try:
+        total = 0
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            if leaf.getClass().getSimpleName() != "StreamingRelation":
+                return None
+            opts = leaf.dataSource().options()
+            only = opts.get("pathGlobFilter")
+            only = only.get() if only.isDefined() else "*"
+            total += sum(
+                e.stat().st_size
+                for e in os.scandir(opts.get("path").get())
+                if e.is_file()
+                and not e.name.startswith(("_", "."))
+                and fnmatch.fnmatch(e.name, only)
+            )
+        cap = min(shuffle_partitions(spark), spark.sparkContext.defaultParallelism)
+    except Exception:
+        return None
+    return partitions_for_bytes(total, cap) if total else None
+
+
+def _start_sized(
+    df: DataFrame, configure: Callable[[DataStreamWriter], DataStreamWriter]
+) -> StreamingQuery:
+    """Start ``configure(df.writeStream)`` with ``_state_partitions(df)``
+    shuffle partitions — the one query start in this package.
+
+    The count is set on the session just before ``start()`` and the
+    previous value restored right after, also when ``start()`` raises:
+    the query clones the session as it starts and records the count in
+    its offset log, so the stream keeps it and the session keeps its own.
+    A restart against an existing checkpoint runs with the recorded
+    count, whatever the sizing says now."""
+    spark = df.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    n = _state_partitions(df)
+    if n is not None:
+        spark.conf.set(key, str(n))
+    try:
+        return configure(df.writeStream).start()
+    finally:
+        spark.conf.set(key, before)
+
+
 def run_available_now(df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
     """Drain the stream with Trigger.AvailableNow into a memory sink and
-    return the materialized result (test/ops harness).
+    return the materialized result (test/ops harness). The query starts
+    through ``_start_sized``, so its state partitions follow the input
+    size rather than the session's shuffle partitions.
 
     The memory-sink temp view is dropped before returning: each drain
     registers a driver-heap-resident table keyed by `name`, and a session
@@ -196,14 +269,13 @@ def run_available_now(df: DataFrame, name: str, mode: str = "complete") -> DataF
     frame is dereferenced.
     """
     spark = df.sparkSession
-    q = (
-        df.writeStream.format("memory")
+    _start_sized(
+        df,
+        lambda w: w.format("memory")
         .queryName(name)
         .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        .trigger(availableNow=True),
+    ).awaitTermination()
     out = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
     return out
@@ -225,6 +297,10 @@ def drain_exactly_once(
     batch whole, so ``per_batch`` must itself converge under a re-run — a
     key-merge (merge_upsert_batch) or batch-id-scoped overwrites.
     Underscore dirs stay invisible to parquet readers of ``target``.
+
+    The query starts through ``_start_sized``: a first drain sizes its
+    state partitions from the input's bytes, and a resumed drain keeps
+    the count its checkpoint recorded, whatever the input has grown to.
     """
     ledger = os.path.join(target, "_batches")
     os.makedirs(ledger, exist_ok=True)
@@ -237,14 +313,13 @@ def drain_exactly_once(
         with open(marker, "w") as f:
             json.dump({"outcome": outcome}, f)
 
-    (
-        stream.writeStream.foreachBatch(run)
+    _start_sized(
+        stream,
+        lambda w: w.foreachBatch(run)
         .outputMode(mode)
         .option("checkpointLocation", os.path.join(target, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+        .trigger(availableNow=True),
+    ).awaitTermination()
 
 
 def _arriving_docs(

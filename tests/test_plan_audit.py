@@ -174,6 +174,40 @@ def test_scans_prune_columns(spark, sf_dir):
     assert "l_returnflag" not in plan.split("ReadSchema")[-1], plan
 
 
+def test_stream_starts_are_sized():
+    """Every ``writeStream`` in the package sits inside
+    ``streaming.jobs._start_sized``, the one query start that sizes a
+    drain's state partitions from its input bytes. A writer started
+    anywhere else runs the session's shuffle.partitions (32 on the tuned
+    session) state-store partitions, each paying provider init and commit
+    per batch."""
+    import ast
+
+    bypass, sites = [], 0
+
+    def visit(node, path, inside):
+        nonlocal sites
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            inside = inside or node.name == "_start_sized"
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream" and not inside:
+            bypass.append(f"{path}:{node.lineno}")
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "_start_sized":
+            sites += 1
+        for child in ast.iter_child_nodes(node):
+            visit(child, path, inside)
+
+    pkg = os.path.join(REPO, "etl_schema_spark")
+    for d, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(d, f)
+                with open(path) as src:
+                    visit(ast.parse(src.read()), os.path.relpath(path, REPO), False)
+    assert not bypass, f"writeStream outside _start_sized: {bypass}"
+    # run_available_now and drain_exactly_once
+    assert sites >= 2, f"{sites} _start_sized call sites"
+
+
 def test_registry_contract():
     """Every oracle key pairs with a queries() entry; since round 5 every
     registry entry carries an oracle (dedup_minhash_lsh gained a portable
@@ -297,23 +331,28 @@ def test_stale_entries_sort_into_scored_window():
     scored = set(names[:50])
     fresh = vf.freshness()
     # A one-round defer, for a rotation that genuinely overflows the
-    # window: 75 entries changed since their verdicts (r14's cpu_parallel
+    # window: 83 entries changed since their verdicts (r14's cpu_parallel
     # fan-out and rank/bucket rewrites, the pin coalescing conf, the
-    # rewritten validity oracles), so the 25 with the youngest verdicts
-    # (r14, the last scored round) wait one round and lead the below-cap
-    # region. It may hold only the overflow, only stale entries, and none
-    # with an older verdict than any in-window stale entry; it is empty
-    # whenever 50 or fewer entries changed.
+    # rewritten validity oracles, the input-sized streaming state
+    # partitions), so the 33 with the youngest verdicts (all 29 from r14,
+    # the last scored round, and the last 4 of r13's 21 by name) wait one
+    # round and lead the below-cap region. It may hold only the overflow,
+    # only stale entries, and none with an older verdict than any
+    # in-window stale entry; it is empty whenever 50 or fewer entries
+    # changed.
     DEFERRED_ONE_ROUND = {
-        "dedup_aware_split", "dedup_best_per_user", "dedup_ngram_jaccard",
-        "dup_cluster_stats", "dup_components", "dup_pagerank",
-        "embedding_outliers", "epoch_shuffle", "fn_pdf_upload_2021",
-        "hourly_rollup", "key_skew_profile", "label_balance_sample",
-        "mad_outliers", "minhash_pr_eval", "near_dup_keep_plan",
-        "pack_efficiency_sweep", "pack_fill_audit", "pack_sequences",
-        "perplexity_buckets", "source_token_budget",
-        "tail_latency_percentiles", "trimmed_mean_value", "triplet_mining",
-        "user_activity_gini", "vocab_growth_curve",
+        "ccnet_source_split", "dedup_aware_split", "dedup_best_per_user",
+        "dedup_ngram_jaccard", "dup_cluster_stats", "dup_components",
+        "dup_pagerank", "embedding_outliers", "epoch_shuffle",
+        "fn_pdf_upload_2021", "hourly_rollup", "key_skew_profile",
+        "label_balance_sample", "mad_outliers", "minhash_pr_eval",
+        "near_dup_keep_plan", "pack_efficiency_sweep", "pack_fill_audit",
+        "pack_sequences", "perplexity_buckets", "source_token_budget",
+        "streaming_distinct_keys", "streaming_hopping_counts",
+        "streaming_hourly_counts", "streaming_neardup",
+        "streaming_rule_drift_gate", "tail_latency_percentiles",
+        "template_communities", "tfidf_top_terms", "trimmed_mean_value",
+        "triplet_mining", "user_activity_gini", "vocab_growth_curve",
     }
     stale = [k for k, v in fresh.items() if not v["fresh"]]
     assert len(DEFERRED_ONE_ROUND) == max(0, len(stale) - 50), (

@@ -352,3 +352,170 @@ def test_drain_exactly_once_skips_redelivered_batch(spark, tmp_path):
     assert output_bytes() == first
     with open(os.path.join(target, "_batches", "0.done")) as f:
         assert json.load(f) == {"outcome": "written"}
+
+
+def _state_partitions_seen(spark):
+    """(listener, {query name: state-operator partition counts}) over every
+    progress event posted while the listener is registered."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    seen: dict[str, set[int]] = {}
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if p.stateOperators:
+                seen.setdefault(p.name, set()).update(
+                    o.numShufflePartitions for o in p.stateOperators
+                )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    return Listener(), seen
+
+
+def _await(seen, *names, timeout=60):
+    """Progress reaches the listener asynchronously: wait for ``names``."""
+    import time
+
+    deadline = time.time() + timeout
+    while not set(names) <= set(seen) and time.time() < deadline:
+        time.sleep(0.1)
+    assert set(names) <= set(seen), seen
+
+
+def _write_src(spark, path, lo, hi):
+    """Append one parquet file of rows [lo, hi) with an incompressible pad,
+    so the file's size grows with its row count."""
+    spark.range(lo, hi).selectExpr(
+        "id", "id % 50 AS k", "md5(CAST(id AS STRING)) AS pad"
+    ).coalesce(1).write.mode("append").parquet(path)
+
+
+def test_drain_state_partitions_follow_input_size(spark, tmp_path, monkeypatch):
+    """A bounded drain runs as many state partitions as its input bytes
+    call for under the cpu_parallel rule, not the session's 32; the result
+    equals the same drain at 32, and the session reads 32 afterwards —
+    also when the query fails to start."""
+    import os
+
+    import pytest
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from etl_schema_spark.sources.catalog import partitions_for_bytes
+    from etl_schema_spark.streaming import jobs
+
+    key = "spark.sql.shuffle.partitions"
+    src = str(tmp_path / "src")
+    _write_src(spark, src, 0, 6000)
+    size = sum(
+        os.path.getsize(os.path.join(src, f))
+        for f in os.listdir(src)
+        if f.endswith(".parquet")
+    )
+    want = partitions_for_bytes(size, min(32, spark.sparkContext.defaultParallelism))
+    assert want < 32
+
+    def stream():
+        return (
+            spark.readStream.schema("id long, k long, pad string")
+            .parquet(src)
+            .groupBy("k")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("id").alias("s"))
+        )
+
+    before = spark.conf.get(key)
+    listener, seen = _state_partitions_seen(spark)
+    spark.conf.set(key, "32")
+    spark.streams.addListener(listener)
+    try:
+        sized = streaming.run_available_now(stream(), "t_sized").collect()
+        with monkeypatch.context() as m:
+            m.setattr(jobs, "_state_partitions", lambda df: None)
+            fixed = streaming.run_available_now(stream(), "t_fixed").collect()
+        _await(seen, "t_sized", "t_fixed")
+        assert seen["t_sized"] == {want}
+        assert seen["t_fixed"] == {32}
+        assert sorted(sized) == sorted(fixed) and len(sized) == 50
+        assert spark.conf.get(key) == "32"
+
+        during = []
+
+        def fail_start(self, *args, **kwargs):
+            during.append(spark.conf.get(key))
+            raise RuntimeError("start failed")
+
+        with monkeypatch.context() as m:
+            m.setattr(DataStreamWriter, "start", fail_start)
+            with pytest.raises(RuntimeError, match="start failed"):
+                streaming.run_available_now(stream(), "t_fail")
+        assert during == [str(want)]
+        assert spark.conf.get(key) == "32"
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, before)
+
+
+def test_drain_exactly_once_resume_keeps_recorded_partitions(spark, tmp_path):
+    """A resumed exactly-once drain runs with the state-partition count its
+    checkpoint recorded, even after its input grew past the next size
+    step: Spark restores the count from the offset log, and the state
+    store it reopens has exactly that many partitions."""
+    import json
+    import os
+
+    import pytest
+
+    from etl_schema_spark.streaming import jobs
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("a second size step needs defaultParallelism >= 2")
+    src, target = str(tmp_path / "src"), str(tmp_path / "sink")
+    _write_src(spark, src, 0, 500)
+
+    def stream():
+        return (
+            spark.readStream.schema("id long, k long, pad string")
+            .parquet(src)
+            .groupBy("k")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .withColumn("part", F.col("k") % 2)
+        )
+
+    def merge(batch_df, batch_id):
+        streaming.merge_upsert_batch(batch_df, target, ["k"], "part")
+        return "merged"
+
+    def recorded(batch_id):
+        with open(os.path.join(target, "_chk", "offsets", str(batch_id))) as f:
+            meta = json.loads(f.read().splitlines()[1])
+        return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+    first = jobs._state_partitions(stream())
+    streaming.drain_exactly_once(stream(), target, merge, "update")
+    assert recorded(0) == first
+    ledger = os.path.join(target, "_batches")
+    assert sorted(os.listdir(ledger)) == ["0.done"]
+
+    _write_src(spark, src, 500, 6000)
+    assert jobs._state_partitions(stream()) > first, "input did not grow a size step"
+    streaming.drain_exactly_once(stream(), target, merge, "update")
+
+    assert recorded(1) == first
+    state = os.path.join(target, "_chk", "state", "0")
+    parts = sorted(int(d) for d in os.listdir(state) if d.isdigit())
+    assert parts == list(range(first))
+    assert sorted(os.listdir(ledger)) == ["0.done", "1.done"]
+    got = {(r.k, r.n) for r in spark.read.parquet(target).collect()}
+    want = {
+        (r.k, r.n)
+        for r in spark.read.parquet(src).groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert got == want and len(got) == 50
