@@ -5,10 +5,10 @@ Scale notes (100 TB / 1000-executor target):
     and local-mode shuffle avoidance replace hand-tuned partition counts.
   - ``spark.sql.shuffle.partitions`` is a *ceiling* under AQE; on a real
     cluster set it to ~2-3x total cores (e.g. 8000 for 1000 executors x 4
-    cores) via `extra_conf` — AQE coalesces down. Streaming queries run
-    without AQE, so a bounded drain does not take this count as is:
-    ``streaming.jobs._start_sized`` derives its state partitions from the
-    input's bytes, capped here and at defaultParallelism.
+    cores) via `extra_conf` — AQE coalesces down. Streaming runs without
+    AQE: ``streaming.jobs.run_available_now`` sizes its state partitions
+    from its input under this cap, and ``drain_exactly_once``'s
+    checkpoints keep this count as is.
   - Session pins (``cachereg.swap_pin`` / ``memo_pin``) are AQE-coalesced
     like any other shuffle: ``canChangeCachedPlanOutputPartitioning`` lets
     the last shuffle of a persisted plan shrink to the data it holds.

@@ -38,16 +38,15 @@ TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-# The input-sized partition target (cpu_parallel's fan-out, a bounded
-# streaming drain's state partitions): input bytes of parquet per partition.
+# The input-sized partition target (cpu_parallel's fan-out, a memory-sink
+# drain's state partitions): input bytes of parquet per partition.
 CPU_PARALLEL_TARGET_BYTES = 64 * 1024
 
 
-def partitions_for_bytes(total: int, cap: int, floor: int = 1) -> int:
-    """One partition per CPU_PARALLEL_TARGET_BYTES of input, at least
-    ``floor`` and at most ``cap`` — the one sizing rule behind
-    cpu_parallel and streaming.jobs' drain starts."""
-    return min(cap, max(floor, -(-total // CPU_PARALLEL_TARGET_BYTES)))
+def partitions_for_bytes(total: int, cap: int) -> int:
+    """One partition per CPU_PARALLEL_TARGET_BYTES of input, at least 1
+    and at most ``cap``."""
+    return min(cap, max(1, -(-total // CPU_PARALLEL_TARGET_BYTES)))
 
 
 def _set_reader_confs(spark: SparkSession) -> None:
@@ -134,7 +133,7 @@ def cpu_parallel(df: DataFrame) -> DataFrame:
             for p in df.inputFiles()
         )
         if total:
-            n = partitions_for_bytes(total, n, cur)
+            n = partitions_for_bytes(total, n)
     except Exception:
         pass  # unknown input size: keep the defaultParallelism target
     if cur < n:

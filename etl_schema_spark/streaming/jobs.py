@@ -14,12 +14,9 @@ Scale notes: watermark bounds state (late data beyond 1 hour is dropped —
 the knob a real deployment tunes); session-window state is per-user and
 expires at watermark + gap. File source here; on a cluster the same plans
 run unchanged over Kafka (`format("kafka")`) since everything downstream of
-the source is declarative. Every query starts through `_start_sized`, which
-sizes the drain's state partitions from its file sources' bytes (the
-`cpu_parallel` rule, `catalog.partitions_for_bytes`) instead of the
-session's fixed `spark.sql.shuffle.partitions`: on 4 cores a 10k-event
-drain runs 4 state-store partitions, not 32, each paying provider init and
-commit per batch. A restarted query keeps the count its checkpoint recorded.
+the source is declarative. `run_available_now` sizes its state partitions
+from the input (see `_state_partitions`); `drain_exactly_once` keeps the
+session's count.
 """
 
 from __future__ import annotations
@@ -28,11 +25,9 @@ import fnmatch
 import itertools
 import json
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from etl_schema_spark.session import shuffle_partitions
 from etl_schema_spark.sources.catalog import (
@@ -196,14 +191,24 @@ def streaming_session_windows_oracle() -> str:
 
 def _state_partitions(df: DataFrame) -> int | None:
     """The state-partition count for draining ``df``: its file sources'
-    bytes under the cpu_parallel rule, capped at the session's shuffle
-    partitions and at defaultParallelism. ``df.inputFiles()`` raises on a
-    streaming frame, so the sources come from the analyzed plan's
-    StreamingRelation leaves: the visible files (no ``_``/``.`` names,
-    as the source lists them) of their ``path`` directory that match
-    their ``pathGlobFilter``. None — keep the session count — when the
-    size is unknown: a leaf that is not a file source over a local
-    directory, an empty input, or any error."""
+    bytes under the cpu_parallel rule (``catalog.partitions_for_bytes``),
+    capped at the session's shuffle partitions and at defaultParallelism.
+    Streaming plans run without AQE, so the session's fixed count (32 on
+    the tuned session) would otherwise be every drain's state-store width,
+    each partition paying provider init and commit per batch.
+
+    ``df.inputFiles()`` raises on a streaming frame, so the sources come
+    from the analyzed plan's StreamingRelation leaves: the visible files
+    (no ``_``/``.`` names, as the source lists them) of their ``path``
+    directory that match their ``pathGlobFilter``. None — keep the
+    session count — when the size is unknown: a leaf that is not a file
+    source over a local directory, an empty input, or any error.
+
+    Only a query that starts from a fresh checkpoint each time
+    (run_available_now's memory sink) takes this count. A checkpoint's
+    offset log records it for every restart, and foreachBatch jobs run
+    under it too, so a long-lived checkpoint sized from its first input
+    would keep that width for good."""
     spark = df.sparkSession
     try:
         total = 0
@@ -228,35 +233,9 @@ def _state_partitions(df: DataFrame) -> int | None:
     return partitions_for_bytes(total, cap) if total else None
 
 
-def _start_sized(
-    df: DataFrame, configure: Callable[[DataStreamWriter], DataStreamWriter]
-) -> StreamingQuery:
-    """Start ``configure(df.writeStream)`` with ``_state_partitions(df)``
-    shuffle partitions — the one query start in this package.
-
-    The count is set on the session just before ``start()`` and the
-    previous value restored right after, also when ``start()`` raises:
-    the query clones the session as it starts and records the count in
-    its offset log, so the stream keeps it and the session keeps its own.
-    A restart against an existing checkpoint runs with the recorded
-    count, whatever the sizing says now."""
-    spark = df.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    n = _state_partitions(df)
-    if n is not None:
-        spark.conf.set(key, str(n))
-    try:
-        return configure(df.writeStream).start()
-    finally:
-        spark.conf.set(key, before)
-
-
 def run_available_now(df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
     """Drain the stream with Trigger.AvailableNow into a memory sink and
-    return the materialized result (test/ops harness). The query starts
-    through ``_start_sized``, so its state partitions follow the input
-    size rather than the session's shuffle partitions.
+    return the materialized result (test/ops harness).
 
     The memory-sink temp view is dropped before returning: each drain
     registers a driver-heap-resident table keyed by `name`, and a session
@@ -269,13 +248,24 @@ def run_available_now(df: DataFrame, name: str, mode: str = "complete") -> DataF
     frame is dereferenced.
     """
     spark = df.sparkSession
-    _start_sized(
-        df,
-        lambda w: w.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True),
-    ).awaitTermination()
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    n = _state_partitions(df)
+    if n is not None:
+        spark.conf.set(key, str(n))
+    try:
+        # The query clones the session as it starts: it keeps ``n`` and
+        # the session gets its own count back, also when start() raises.
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, before)
+    q.awaitTermination()
     out = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
     return out
@@ -298,9 +288,8 @@ def drain_exactly_once(
     key-merge (merge_upsert_batch) or batch-id-scoped overwrites.
     Underscore dirs stay invisible to parquet readers of ``target``.
 
-    The query starts through ``_start_sized``: a first drain sizes its
-    state partitions from the input's bytes, and a resumed drain keeps
-    the count its checkpoint recorded, whatever the input has grown to.
+    The query runs the session's shuffle partitions, not
+    ``_state_partitions``: its checkpoint outlives the call.
     """
     ledger = os.path.join(target, "_batches")
     os.makedirs(ledger, exist_ok=True)
@@ -313,13 +302,14 @@ def drain_exactly_once(
         with open(marker, "w") as f:
             json.dump({"outcome": outcome}, f)
 
-    _start_sized(
-        stream,
-        lambda w: w.foreachBatch(run)
+    (
+        stream.writeStream.foreachBatch(run)
         .outputMode(mode)
         .option("checkpointLocation", os.path.join(target, "_chk"))
-        .trigger(availableNow=True),
-    ).awaitTermination()
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def _arriving_docs(

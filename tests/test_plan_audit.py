@@ -175,26 +175,28 @@ def test_scans_prune_columns(spark, sf_dir):
 
 
 def test_stream_starts_are_sized():
-    """Every ``writeStream`` in the package sits inside
-    ``streaming.jobs._start_sized``, the one query start that sizes a
-    drain's state partitions from its input bytes. A writer started
-    anywhere else runs the session's shuffle.partitions (32 on the tuned
-    session) state-store partitions, each paying provider init and commit
-    per batch."""
+    """Every ``writeStream`` in the package sits in one of the two drain
+    helpers of ``streaming.jobs``, and ``run_available_now`` sizes its
+    start with ``_state_partitions``. A writer started anywhere else runs
+    the session's shuffle.partitions (32 on the tuned session) state-store
+    partitions, each paying provider init and commit per batch.
+    ``drain_exactly_once`` keeps the session count on purpose: its
+    checkpoint records the count for every restart."""
     import ast
 
-    bypass, sites = [], 0
+    starts = {"run_available_now", "drain_exactly_once"}
+    bypass, sized = [], False
 
-    def visit(node, path, inside):
-        nonlocal sites
+    def visit(node, path, fn):
+        nonlocal sized
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            inside = inside or node.name == "_start_sized"
-        if isinstance(node, ast.Attribute) and node.attr == "writeStream" and not inside:
+            fn = fn or node.name
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream" and fn not in starts:
             bypass.append(f"{path}:{node.lineno}")
-        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "_start_sized":
-            sites += 1
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "_state_partitions":
+            sized = sized or fn == "run_available_now"
         for child in ast.iter_child_nodes(node):
-            visit(child, path, inside)
+            visit(child, path, fn)
 
     pkg = os.path.join(REPO, "etl_schema_spark")
     for d, _, files in os.walk(pkg):
@@ -202,10 +204,9 @@ def test_stream_starts_are_sized():
             if f.endswith(".py"):
                 path = os.path.join(d, f)
                 with open(path) as src:
-                    visit(ast.parse(src.read()), os.path.relpath(path, REPO), False)
-    assert not bypass, f"writeStream outside _start_sized: {bypass}"
-    # run_available_now and drain_exactly_once
-    assert sites >= 2, f"{sites} _start_sized call sites"
+                    visit(ast.parse(src.read()), os.path.relpath(path, REPO), None)
+    assert not bypass, f"writeStream outside {sorted(starts)}: {bypass}"
+    assert sized, "run_available_now no longer calls _state_partitions"
 
 
 def test_registry_contract():

@@ -464,10 +464,13 @@ def test_drain_state_partitions_follow_input_size(spark, tmp_path, monkeypatch):
 
 
 def test_drain_exactly_once_resume_keeps_recorded_partitions(spark, tmp_path):
-    """A resumed exactly-once drain runs with the state-partition count its
+    """An exactly-once drain runs the session's shuffle partitions, not
+    the input-sized count, and a resumed drain runs the count its
     checkpoint recorded, even after its input grew past the next size
-    step: Spark restores the count from the offset log, and the state
-    store it reopens has exactly that many partitions."""
+    step and the session's count changed: Spark restores the count from
+    the offset log, and the state store it reopens has that many
+    partitions. Sizing this drain from its first input would freeze that
+    width for the checkpoint's life."""
     import json
     import os
 
@@ -477,6 +480,7 @@ def test_drain_exactly_once_resume_keeps_recorded_partitions(spark, tmp_path):
 
     if spark.sparkContext.defaultParallelism < 2:
         pytest.skip("a second size step needs defaultParallelism >= 2")
+    key = "spark.sql.shuffle.partitions"
     src, target = str(tmp_path / "src"), str(tmp_path / "sink")
     _write_src(spark, src, 0, 500)
 
@@ -496,22 +500,30 @@ def test_drain_exactly_once_resume_keeps_recorded_partitions(spark, tmp_path):
     def recorded(batch_id):
         with open(os.path.join(target, "_chk", "offsets", str(batch_id))) as f:
             meta = json.loads(f.read().splitlines()[1])
-        return int(meta["conf"]["spark.sql.shuffle.partitions"])
+        return int(meta["conf"][key])
 
-    first = jobs._state_partitions(stream())
-    streaming.drain_exactly_once(stream(), target, merge, "update")
-    assert recorded(0) == first
-    ledger = os.path.join(target, "_batches")
-    assert sorted(os.listdir(ledger)) == ["0.done"]
+    before = spark.conf.get(key)
+    spark.conf.set(key, "6")
+    try:
+        first = jobs._state_partitions(stream())
+        assert first is not None and first < 6
+        streaming.drain_exactly_once(stream(), target, merge, "update")
+        assert recorded(0) == 6
+        ledger = os.path.join(target, "_batches")
+        assert sorted(os.listdir(ledger)) == ["0.done"]
 
-    _write_src(spark, src, 500, 6000)
-    assert jobs._state_partitions(stream()) > first, "input did not grow a size step"
-    streaming.drain_exactly_once(stream(), target, merge, "update")
+        _write_src(spark, src, 500, 6000)
+        assert jobs._state_partitions(stream()) > first, "input did not grow a size step"
+        spark.conf.set(key, "3")
+        streaming.drain_exactly_once(stream(), target, merge, "update")
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, before)
 
-    assert recorded(1) == first
+    assert recorded(1) == 6
     state = os.path.join(target, "_chk", "state", "0")
     parts = sorted(int(d) for d in os.listdir(state) if d.isdigit())
-    assert parts == list(range(first))
+    assert parts == list(range(6))
     assert sorted(os.listdir(ledger)) == ["0.done", "1.done"]
     got = {(r.k, r.n) for r in spark.read.parquet(target).collect()}
     want = {
