@@ -400,8 +400,9 @@ def _write_src(spark, path, lo, hi):
 
 
 def test_drain_state_partitions_follow_input_size(spark, tmp_path, monkeypatch):
-    """A bounded drain runs as many state partitions as its input bytes
-    call for under the cpu_parallel rule, not the session's 32; the result
+    """A memory-sink drain (run_available_now) runs as many state
+    partitions as its input bytes call for under the cpu_parallel rule,
+    not the session's 32; the result
     equals the same drain at 32, and the session reads 32 afterwards —
     also when the query fails to start."""
     import os
