@@ -20,12 +20,31 @@ Scale notes (100 TB / 1000-executor target):
     oracle (and are deterministic across cluster nodes).
   - ``maxPartitionBytes`` left at default 128 MB: at 100 TB that is ~800k
     input splits, the right granularity for dynamic allocation.
+
+Local file system: without libhadoop, Hadoop's local FileSystem forks
+``chmod`` for every file and directory it creates and ``readlink`` four
+times per checkpoint rename (356 child processes per ``ingest_write``
+warm pass). On a ``local[...]`` master ``get_spark`` compiles
+``jvm/NoForkLocalFileSystem.java`` once with ``javac`` (into
+``jvm/build/<source digest>/``), puts it on the driver classpath and sets
+``fs.file.impl`` / ``fs.AbstractFileSystem.file.impl`` to it; it does the
+same two calls through java.nio and is the stock class otherwise. The
+stock FileSystem stays when ``javac`` or the Hadoop jar is missing, on
+other masters (a cluster may have libhadoop, and executors would need the
+classes), and when the session joins a JVM started without the classes.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _DEFAULTS = {
@@ -86,6 +105,58 @@ STREAMING_STATE_CONF = {
 }
 
 
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_NO_FORK_SOURCE = os.path.join(_JVM_DIR, "NoForkLocalFileSystem.java")
+_NO_FORK_CLASS = "etl_schema_spark.jvm.NoForkLocalFileSystem"
+_NO_FORK_CONF = {
+    "spark.hadoop.fs.file.impl": _NO_FORK_CLASS + "$Local",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": _NO_FORK_CLASS + "$Fs",
+}
+
+
+def _no_fork_classes() -> str | None:
+    """The directory of the compiled NoForkLocalFileSystem classes,
+    compiled on first use against the Hadoop client jar the JVM will load;
+    None when ``javac`` or that jar is missing or the compile fails."""
+    with open(_NO_FORK_SOURCE, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:16]
+    out = os.path.join(_JVM_DIR, "build", digest)
+    if os.path.isdir(out):
+        return out
+    from pyspark.find_spark_home import _find_spark_home
+
+    javac = shutil.which("javac")
+    jars = glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    if javac is None or not jars:
+        return None
+    build = os.path.dirname(out)
+    try:
+        os.makedirs(build, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f"{digest}.", dir=build)
+        try:
+            # Spark 4 runs on Java 17+, so 17 bytecode loads in any JVM it uses
+            subprocess.run(
+                [javac, "--release", "17", "-nowarn", "-d", tmp, "-cp", jars[0], _NO_FORK_SOURCE],
+                check=True,
+                capture_output=True,
+            )
+            os.rename(tmp, out)  # a concurrent compile may have won: keep its copy
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    except (OSError, subprocess.CalledProcessError):
+        pass
+    return out if os.path.isdir(out) else None
+
+
+def _jvm_loads(name: str) -> bool:
+    """Whether the running gateway JVM can load class ``name``."""
+    try:
+        SparkContext._jvm.java.lang.Class.forName(name)
+        return True
+    except (AttributeError, Py4JError):  # no gateway, or the class is absent
+        return False
+
+
 def shuffle_partitions(spark: SparkSession, default: int = 200) -> int:
     """``spark.sql.shuffle.partitions`` as an int, falling back to
     ``default`` when the conf is absent OR non-numeric — ADVICE r12 (low):
@@ -116,6 +187,16 @@ def get_spark(
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    classes = _no_fork_classes() if master.startswith("local") else None
+    if classes is not None:
+        # the classpath counts only when this call launches the JVM (not
+        # when pyspark joins one through PYSPARK_GATEWAY_PORT)
+        launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+        key = "spark.driver.extraClassPath"
+        conf[key] = os.pathsep.join(p for p in (conf.get(key), classes) if p)
+        if launches or _jvm_loads(_NO_FORK_CLASS):
+            for k, v in _NO_FORK_CONF.items():
+                conf.setdefault(k, v)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -58,15 +58,15 @@ def write_partitioned(
 
     Repartitions on the partition columns first so each output partition is
     produced by a bounded number of tasks — the difference between O(days)
-    and O(days × tasks) files at 100 TB.
+    and O(days × tasks) files at 100 TB. Dynamic overwrite is this write's
+    option, so the session's own overwrite mode stays as it was.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     writer = df
     if partition_cols:
         writer = df.repartition(*[F.col(c) for c in partition_cols])
     (
         writer.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy(*partition_cols)
         .format(fmt)

@@ -78,8 +78,10 @@ def normalize_nanos(df: DataFrame, name: str) -> DataFrame:
 
 
 def physical_schema(spark: SparkSession, sf_dir: str, name: str):
-    """Footer-only schema probe (driver-side, no data scan) — the schema a
-    readStream must declare to read the same bytes the batch path reads."""
+    """The parquet schema a readStream must declare to read the same bytes
+    the batch path reads. Each call runs Spark's schema inference: a
+    one-task job that reads the file's footer (no row data), the
+    ``sources.catalog`` build job of every stream built on it."""
     _set_reader_confs(spark)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
 

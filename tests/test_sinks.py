@@ -24,11 +24,22 @@ def test_write_partitioned_prunes(spark, sf_dir, tmp_path):
 
 
 def test_dynamic_partition_overwrite_replaces_only_touched(spark, tmp_path):
-    out = str(tmp_path / "dyn")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, part string")
-    sinks.write_partitioned(df1, out, ["part"])
-    df2 = spark.createDataFrame([(99, "b")], "k int, part string")
-    sinks.write_partitioned(df2, out, ["part"])
+    """Dynamic overwrite is the write's own option: under a session left at
+    static overwrite, rewriting one partition keeps the others, and the
+    session still reads static afterwards (a session-wide flip would make
+    every later overwrite in it dynamic)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        out = str(tmp_path / "dyn")
+        df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, part string")
+        sinks.write_partitioned(df1, out, ["part"])
+        df2 = spark.createDataFrame([(99, "b")], "k int, part string")
+        sinks.write_partitioned(df2, out, ["part"])
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
     rows = {(r.k, r.part) for r in spark.read.parquet(out).collect()}
     # partition a untouched, partition b replaced
     assert rows == {(1, "a"), (99, "b")}

@@ -439,18 +439,24 @@ def test_minhash_pr_eval_consistency(spark, sf_dir):
     assert r.recall_ppm == r.n_verified * 1_000_000 // r.n_exact
 
 
+def _persisted_ids(spark) -> set[int]:
+    """Ids of the RDDs the session holds persisted. Tests compare id sets,
+    not counts: the ContextCleaner may release an RDD an earlier test
+    dropped at any time, which moves a count but never adds an id."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_minhash_banded_candidates_release_signature_cache(spark, sf_dir):
     """_minhash_banded_candidates persists the MinHash signature frame for
     its band self-join; repeated invocations in one session (bench runs
     minhash_pr_eval + dedup_minhash_portable back to back) must not
-    accumulate pinned cache entries — the same leak class as the r5
+    leave any RDD they persisted pinned — the same leak class as the r5
     streaming memory-sink drain fix (ADVICE r5)."""
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
+    before = _persisted_ids(spark)
     dedup.dedup_minhash_portable(spark, sf_dir).collect()
     dedup.dedup_minhash_portable(spark, sf_dir).collect()
     dedup.dedup_minhash_lsh(spark, sf_dir).collect()
-    assert jsc.getPersistentRDDs().size() == before, "signature cache leaked"
+    assert not _persisted_ids(spark) - before, "signature cache leaked"
 
 
 def test_registry_pins_do_not_accumulate(spark, sf_dir):
@@ -458,25 +464,24 @@ def test_registry_pins_do_not_accumulate(spark, sf_dir):
     frames, jaccard_estimate's signatures) go through cachereg.swap_pin:
     a repeat invocation RELEASES the previous invocation's pins, so the
     steady-state pin count is constant however many times the operators
-    run in one session, and release_pins() drops it to the baseline
+    run in one session, and release_pins() drops every pin they made
     (VERDICT r6 item 5 — the other half of the ADVICE-r5 leak class;
     substring_dup_spans' pin is gone entirely with the Arrow rewrite)."""
     from etl_schema_spark.operators.cachereg import release_pins
 
-    jsc = spark.sparkContext._jsc.sc()
     release_pins()
-    baseline = jsc.getPersistentRDDs().size()
+    baseline = _persisted_ids(spark)
     dedup.dedup_ngram_jaccard(spark, sf_dir).collect()
     dedup.substring_dup_spans(spark, sf_dir).collect()
-    after_one = jsc.getPersistentRDDs().size()
+    after_one = len(_persisted_ids(spark) - baseline)
     dedup.dedup_ngram_jaccard(spark, sf_dir).collect()
     dedup.substring_dup_spans(spark, sf_dir).collect()
     dedup.minhash_jaccard_estimate(spark, sf_dir).collect()
     dedup.minhash_jaccard_estimate(spark, sf_dir).collect()
     # repeats added jaccard_estimate's single pin but accumulated nothing
-    assert jsc.getPersistentRDDs().size() <= after_one + 1, "pins accumulate"
+    assert len(_persisted_ids(spark) - baseline) <= after_one + 1, "pins accumulate"
     assert release_pins() >= 3  # both jaccard pins + the signature pin
-    assert jsc.getPersistentRDDs().size() == baseline
+    assert not _persisted_ids(spark) - baseline
 
 
 def test_substring_repeat_ladder_oracle(spark, sf_dir, duck):
