@@ -436,8 +436,12 @@ def merge_upsert_batch(
         )
     else:
         kept = incoming
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    kept.write.mode("overwrite").partitionBy(part_col).parquet(target)
+    (
+        kept.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part_col)
+        .parquet(target)
+    )
 
 
 def upsert_hourly_sink(spark: SparkSession, sf_dir: str, target: str) -> DataFrame:

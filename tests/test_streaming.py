@@ -1,6 +1,8 @@
 """Structured Streaming twins validated against their batch operators
 (SURVEY §2D)."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from etl_schema_spark import streaming
@@ -178,6 +180,30 @@ def test_merge_upsert_updates_and_preserves(spark, tmp_path):
     streaming.merge_upsert_batch(upd, target, ["date", "k"])
     rows = spark.read.parquet(target).collect()
     assert len(rows) == 3
+
+
+def test_merge_upsert_leaves_session_overwrite_mode(spark, tmp_path):
+    """Dynamic overwrite is the merge's write option: under a session left
+    at static overwrite, a one-row batch keeps the partitions it does not
+    touch, and the session still reads static afterwards."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    target = str(tmp_path / "merge_static")
+    base = spark.createDataFrame(
+        [("2024-01-01", "a", 1), ("2024-01-02", "a", 2)], "date string, k string, n int"
+    ).withColumn("date", F.to_date("date"))
+    base.write.partitionBy("date").parquet(target)
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        one = spark.createDataFrame([("2024-01-01", "a", 10)], "date string, k string, n int")
+        streaming.merge_upsert_batch(one.withColumn("date", F.to_date("date")), target, ["date", "k"])
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+    parts = sorted(p for p in os.listdir(target) if p.startswith("date="))
+    assert parts == ["date=2024-01-01", "date=2024-01-02"]
+    got = {(str(r.date), r.k): r.n for r in spark.read.parquet(target).collect()}
+    assert got == {("2024-01-01", "a"): 10, ("2024-01-02", "a"): 2}
 
 
 def test_hopping_window_stream_matches_batch(spark, sf_dir):
