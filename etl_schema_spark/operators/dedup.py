@@ -854,8 +854,8 @@ def neardup_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The lake's persisted MinHash band-bucket index over the corpus
     slice (doc_id % NEW_BATCH_MOD != NEW_BATCH_MOD - 1): one narrow row
     per (doc, band) — (doc_id, 8-element signature, bucket key), in
-    EXPLODED capped form — built ONCE per session via memo_pin (keyed on
-    the corpus bytes) and shared by the batch front door
+    EXPLODED capped form — built ONCE per session via swap_pin's reuse
+    form (keyed on the corpus bytes) and shared by the batch front door
     (incremental_neardup) and its streaming twin (jobs.streaming_neardup).
     At cluster scale this is the bucketed signature table the lake
     maintains incrementally; no arriving batch ever re-shingles the
@@ -871,7 +871,7 @@ def neardup_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..sources.catalog import load_table_unique
-    from .cachereg import memo_pin
+    from .cachereg import swap_pin
 
     m = NEW_BATCH_MOD
 
@@ -900,11 +900,11 @@ def neardup_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_rn")
         )
 
-    return memo_pin(
+    return swap_pin(
         "neardup.band_index",
-        spark,
-        (sf_dir, MINHASH_SEEDS, LSH_BANDS, m, LSH_BUCKET_CAP),
         build,
+        spark=spark,
+        params=(sf_dir, MINHASH_SEEDS, LSH_BANDS, m, LSH_BUCKET_CAP),
         inputs=(os.path.join(sf_dir, "documents.parquet"),),
     )
 
@@ -2665,26 +2665,26 @@ def verified_pairs_pinned(
     materializes pairs ONCE before closure/ranking/calibration — this
     helper is that materialization for a long-lived session (~60% of
     dup_pagerank's warm cost was re-deriving pairs, VERDICT r8 item 6).
-    memo_pin returns the already-materialized frame on a repeat call
-    with the same (sf_dir, tau), the same on-disk documents bytes, and a
-    live session; a changed sf_dir/tau swaps the pin (steady state: ONE
-    pinned pair frame), and release_pins() at harness exit keeps the
-    ADVICE-r5 leak class closed. The documents file's fingerprint rides
-    in the memo identity (``inputs=``), so REWRITING the corpus at the
-    same path rebuilds the pairs instead of serving the stale set to all
-    five dup-graph consumers (VERDICT r10 item 4). At cluster scale the
+    swap_pin's reuse form returns the already-materialized frame on a
+    repeat call with the same (sf_dir, tau), the same on-disk documents
+    bytes, and a live session; a changed sf_dir/tau swaps the pin (steady
+    state: ONE pinned pair frame), and release_pins() at harness exit
+    keeps the ADVICE-r5 leak class closed. The documents file's
+    fingerprint rides in the reuse identity (``inputs=``), so REWRITING
+    the corpus at the same path rebuilds the pairs instead of serving the
+    stale set to all five dup-graph consumers (VERDICT r10 item 4). At cluster scale the
     equivalent is writing the verified pair table once to durable
     storage and reading it from all four consumers — the plan shape this
     pin models locally.
     """
     import os
 
-    from .cachereg import memo_pin
+    from .cachereg import swap_pin
 
-    return memo_pin(
+    return swap_pin(
         "dedup_ngram_jaccard.pairs",
-        spark,
-        (sf_dir, tau),
         lambda: dedup_ngram_jaccard(spark, sf_dir, tau).select("doc_a", "doc_b"),
+        spark=spark,
+        params=(sf_dir, tau),
         inputs=(os.path.join(sf_dir, "documents.parquet"),),
     )

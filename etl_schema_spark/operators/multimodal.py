@@ -53,12 +53,6 @@ def binary_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_image(payload: bytes) -> bytes:
-    """Real decoder hook — requires PIL/libjpeg, not present in this
-    container. The plumbing below uses _fake_decode_features instead."""
-    raise NotImplementedError("image decode requires PIL; stubbed in this environment")
-
-
 def _fake_decode_features(payload: bytes) -> tuple[int, int, int, int]:
     """STUB decode: deterministic stand-in for a real feature extractor —
     first four payload bytes as ints (so the SQL oracle can verify the

@@ -9,9 +9,9 @@ Scale notes (100 TB / 1000-executor target):
     AQE: ``streaming.jobs.run_available_now`` sizes its state partitions
     from its input under this cap, and ``drain_exactly_once``'s
     checkpoints keep this count as is.
-  - Session pins (``cachereg.swap_pin`` / ``memo_pin``) are AQE-coalesced
-    like any other shuffle: ``canChangeCachedPlanOutputPartitioning`` lets
-    the last shuffle of a persisted plan shrink to the data it holds.
+  - Session pins (``cachereg.swap_pin``) are AQE-coalesced like any
+    other shuffle: ``canChangeCachedPlanOutputPartitioning`` lets the last
+    shuffle of a persisted plan shrink to the data it holds.
   - Broadcast threshold raised to 64 MB: every dimension table in the star
     schema (region/nation/customer/supplier/part at any SF) and the bin /
     centroid tables our rollup + ANN operators build stay broadcast-able,
@@ -102,9 +102,9 @@ _DEFAULTS = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.shuffle.partitions": "32",
     # Let AQE coalesce the last shuffle inside a persisted plan too. Spark's
-    # default keeps a cached plan's output partitioning, so a swap_pin /
-    # memo_pin ending in a shuffle would hold all shuffle.partitions
-    # partitions and every stage reading it would run that many tasks.
+    # default keeps a cached plan's output partitioning, so a swap_pin
+    # ending in a shuffle would hold all shuffle.partitions partitions
+    # and every stage reading it would run that many tasks.
     # Results do not depend on a pin's width: a join over a coalesced pin
     # re-shuffles it when its layout no longer matches the other side.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",

@@ -44,6 +44,20 @@ def read_jsonl(
     )
 
 
+def _scanned_files(df: DataFrame) -> list[str]:
+    """The files ``df``'s file scans list, from its analyzed plan.
+    ``DataFrame.inputFiles`` reads the cache-substituted plan, where a read
+    the CacheManager already holds shows no files at all."""
+    files, leaves = [], df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            rel = leaf.relation()
+            if rel.getClass().getSimpleName() == "HadoopFsRelation":
+                files += list(rel.inputFiles())
+    return files
+
+
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Partition a PERMISSIVE read into (clean, quarantine) frames — the
     load path keeps flowing while bad lines are preserved for replay."""
@@ -51,17 +65,24 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         return df, df.limit(0)
     # Spark refuses plans over a raw json scan that reference only
     # _corrupt_record (QUERY_ONLY_CORRUPT_RECORD_COLUMN); the documented
-    # remedy is materializing the parse first. Caching here also means each
+    # remedy is materializing the parse first. Pinning also means each
     # archive line is parsed once, not once per output branch — load batches
-    # are bounded (one partition/day of archive per job), not the whole
-    # corpus, so the cache footprint is the batch. The cache entry belongs
-    # to the parse frame, which is not returned, so callers cannot release
-    # it: clean.unpersist() leaves the entry in Spark's CacheManager, and a
-    # later split_corrupt(read_jsonl(...)) of the same path plans an
-    # InMemoryRelation over it (an open ROADMAP item).
-    df = df.cache()
-    clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    bad = df.filter(F.col(CORRUPT_COL).isNotNull())
+    # are bounded (one partition/day of archive per job), so the pin holds a
+    # batch. One pin per read: the key is the plan's semantic hash (root
+    # paths, format, options), which a same-path rewrite keeps, and the pin
+    # is reused while the input files and read schema match. A warm re-split
+    # reads the cached parse, a rewrite parses again, and release_pins()
+    # drops it (a held quarantine frame then fails with the error above).
+    from ..operators.cachereg import swap_pin
+
+    key, files = f"sources.split_corrupt.{df.semanticHash()}", _scanned_files(df)
+    if files and all(f.startswith("file:") for f in files):
+        schema = df.schema.json()
+        parse = swap_pin(key, lambda: df, spark=df.sparkSession, params=(schema,), inputs=tuple(files))
+    else:  # no file scan seen, or a remote one os.stat cannot see: parse afresh
+        parse = swap_pin(key, df)
+    clean = parse.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    bad = parse.filter(F.col(CORRUPT_COL).isNotNull())
     return clean, bad
 
 

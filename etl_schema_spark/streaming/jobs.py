@@ -983,7 +983,7 @@ def neardup_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
     arriving documents flow through foreachBatch, each micro-batch is
     restored to one-row-per-doc_id, shingled + MinHash-signed + banded,
     and verdict-joined against the lake's persisted band-bucket index
-    (dedup.neardup_band_index — built once per session via memo_pin,
+    (dedup.neardup_band_index — built once per session via swap_pin,
     shared with the batch twin). This is the banding tier of
     incremental_dedup_sink's exact-hash gate: "is this arriving doc a
     NEAR duplicate of anything in the lake", answered before the write.
@@ -1064,7 +1064,7 @@ def drift_gated_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
 
     Incremental shape: the reference side is a PINNED metadata-sized
     cells table — |sources| x 4 rules x 2 buckets reference counts,
-    built once per session from the lake slice via memo_pin — and each
+    built once per session from the lake slice via swap_pin — and each
     batch contributes its own cells from one scan of the batch; the
     union of the two cell sets feeds the PSI tail. No micro-batch ever
     re-scans the reference corpus (at cluster scale the baseline cells
@@ -1076,7 +1076,7 @@ def drift_gated_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
     byte-for-byte on all three routes (ADVICE r12 medium: the previous
     plain appends were only at-least-once).
     """
-    from ..operators.cachereg import memo_pin
+    from ..operators.cachereg import swap_pin
     from ..operators.dedup import NEW_BATCH_MOD
     from ..operators.drift import _psi_cells_tail, rule_tagged
     from ..sources.catalog import load_table_unique, restore_unique
@@ -1093,11 +1093,11 @@ def drift_gated_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
             .agg(F.count(F.lit(1)).alias("cr"))
         )
 
-    baseline = memo_pin(
+    baseline = swap_pin(
         "drift_gate.baseline_cells",
-        spark,
-        (sf_dir, m),
         build_baseline,
+        spark=spark,
+        params=(sf_dir, m),
         inputs=(os.path.join(sf_dir, "documents.parquet"),),
     )
 

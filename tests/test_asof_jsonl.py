@@ -104,6 +104,43 @@ def test_jsonl_quarantines_corrupt_lines(spark, sf_dir, jsonl_dir, tmp_path):
     assert bad.count() == 2  # truncated object + garbage line both quarantined
 
 
+def test_split_corrupt_parse_pin_follows_rewrite(spark, tmp_path):
+    """The quarantine's parse is a session pin: a re-split of an unchanged
+    file reads it, a rewrite of the same path parses again (a path-matched
+    cache served the old 2/1 counts), and release_pins() leaves no cached
+    plan for the read."""
+    from etl_schema_spark.operators.cachereg import release_pins
+
+    path = tmp_path / "batch.jsonl"
+
+    def write(n_good, n_bad):
+        good = [
+            f'{{"event_id": {i}, "user_id": 1, "event_type": "view", "value": 1.0}}'
+            for i in range(n_good)
+        ]
+        path.write_text("\n".join(good + ["not json"] * n_bad) + "\n")
+
+    def read():
+        return jsonl.read_jsonl(spark, str(path), EVENT_SCHEMA)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    try:
+        write(2, 1)
+        clean, bad = jsonl.split_corrupt(read())
+        assert (clean.count(), bad.count()) == (2, 1)
+        clean, bad = jsonl.split_corrupt(read())
+        assert "InMemoryTableScan" in plan(clean)
+        write(4, 2)
+        clean, bad = jsonl.split_corrupt(read())
+        assert (clean.count(), bad.count()) == (4, 2)
+        release_pins()
+        assert "InMemoryTableScan" not in plan(read())
+    finally:
+        release_pins()
+
+
 def test_csv_roundtrip(spark, sf_dir, tmp_path):
     from etl_schema_spark.sources import csv as csv_src
 

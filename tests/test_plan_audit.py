@@ -322,6 +322,8 @@ def test_stale_entries_sort_into_scored_window():
         "`python tools/check_correctness.py` and commit FINGERPRINTS.json"
     )
 
+    if not os.path.exists(os.path.join(REPO, ".git")):
+        pytest.skip("needs the committed verdict history: this checkout has no .git")
     spec = importlib.util.spec_from_file_location(
         "verdict_freshness", os.path.join(REPO, "tools", "verdict_freshness.py")
     )

@@ -1,7 +1,8 @@
 """Round-11 pins: the VERDICT r10 punch-list devices.
 
-- memo_pin folds an input fingerprint into the memo identity, so a
-  same-path corpus rewrite rebuilds instead of serving stale data
+- swap_pin's reuse form folds an input fingerprint into the pin's
+  identity, so a same-path corpus rewrite rebuilds instead of serving
+  stale data
 - rare_shared_pairs (the shared containment/template candidate
   generator) matches the one-phase pair count exactly
 - running_totals / scd2_history stay deterministic under a planted
@@ -16,9 +17,9 @@ from tests.conftest import assert_matches_oracle
 SF = "/root/testdata/sf0.001"
 
 
-def test_memo_pin_rebuilds_on_same_path_rewrite(spark, tmp_path):
+def test_swap_pin_reuse_rebuilds_on_same_path_rewrite(spark, tmp_path):
     """VERDICT r10 item 4: rewriting the bytes under a memoized path must
-    invalidate the pin — a (path, params) memo alone is a stale-data
+    invalidate the pin — a (path, params) identity alone is a stale-data
     footgun for notebook/in-place-re-ingest sessions."""
     from etl_schema_spark.operators import cachereg
 
@@ -30,13 +31,14 @@ def test_memo_pin_rebuilds_on_same_path_rewrite(spark, tmp_path):
         calls.append(1)
         return spark.read.parquet(str(data))
 
-    key = "test_round11.memo"
+    key = "test_round11.reuse"
+    reuse = dict(spark=spark, params=("p",), inputs=(str(data),))
     try:
-        a = cachereg.memo_pin(key, spark, ("p",), build, inputs=(str(data),))
-        b = cachereg.memo_pin(key, spark, ("p",), build, inputs=(str(data),))
-        assert a is b and len(calls) == 1  # identical inputs: memo hit
+        a = cachereg.swap_pin(key, build, **reuse)
+        b = cachereg.swap_pin(key, build, **reuse)
+        assert a is b and len(calls) == 1  # identical inputs: reuse hit
         spark.range(9).write.mode("overwrite").parquet(str(data))
-        c = cachereg.memo_pin(key, spark, ("p",), build, inputs=(str(data),))
+        c = cachereg.swap_pin(key, build, **reuse)
         assert len(calls) == 2  # rewrite at the SAME path: rebuilt
         assert c.count() == 9
     finally:

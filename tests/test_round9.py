@@ -267,8 +267,8 @@ def test_psi_between_grouped_matches_entry_tail(spark):
 def test_verified_pairs_pinned_staged_helper(spark):
     """The shared pair materialization (wired in r10): same pairs as the
     operator, pinned once per session — a repeat call with the same
-    (sf_dir, tau) returns the SAME materialized frame (memo_pin), and a
-    changed param swaps the pin instead of accumulating."""
+    (sf_dir, tau) returns the SAME materialized frame (swap_pin's reuse
+    form), and a changed param swaps the pin instead of accumulating."""
     from etl_schema_spark.operators import cachereg, dedup
 
     sf = "/root/testdata/sf0.001"
@@ -278,13 +278,18 @@ def test_verified_pairs_pinned_staged_helper(spark):
         map(tuple, direct.collect())
     )
     assert "dedup_ngram_jaccard.pairs" in cachereg._PINS
+    shingles = cachereg._PINS["dedup_ngram_jaccard.shingles"][0]
     again = dedup.verified_pairs_pinned(spark, sf)
-    # memo hit: the consumer reuses the materialized frame, not a rebuild
+    # a hit builds nothing, so the operator's own pins are not swapped
+    assert cachereg._PINS["dedup_ngram_jaccard.shingles"][0] is shingles
+    # reuse hit: the consumer reuses the materialized frame, not a rebuild
     assert again is pinned
     # a changed tau swaps the pin — exactly one pinned pair frame survives
     swapped = dedup.verified_pairs_pinned(spark, sf, tau=0.9)
     assert swapped is not pinned
     assert list(cachereg._PINS).count("dedup_ngram_jaccard.pairs") == 1
+    # the single registry records the swapped frame with its new params
+    assert cachereg._PINS["dedup_ngram_jaccard.pairs"][0] is swapped
+    assert cachereg._PINS["dedup_ngram_jaccard.pairs"][1][0] == (sf, 0.9)
     cachereg.release_pins("dedup_ngram_jaccard.pairs")
     assert "dedup_ngram_jaccard.pairs" not in cachereg._PINS
-    assert "dedup_ngram_jaccard.pairs" not in cachereg._PIN_PARAMS

@@ -109,13 +109,6 @@ def test_multimodal_payload_schema(spark, sf_dir):
     assert row.byte_len == len(row.payload)
 
 
-def test_decode_stub_is_gated():
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\xff\xd8\xff")
-
-
 def test_tfidf_top_terms(spark, sf_dir, duck):
     from etl_schema_spark.operators import text
 
