@@ -63,7 +63,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # tests/test_plan_audit.py::test_stale_entries_sort_into_scored_window.
     return {
         # -- group 2 (group 1, no verdict yet, is empty): executed plan or
-        # oracle changed since the last green verdict (83,
+        # oracle changed since the last green verdict (85,
         # tools/verdict_freshness.py), oldest verdict first; those past
         # the cap lead the next round. -------------------------------
         "streaming_topk_keys": streaming.streaming_topk_keys,  # last green r08
@@ -94,6 +94,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lsh_tuning_curve": dedup.lsh_tuning_curve,  # last green r12
         "minhash_jaccard_estimate": dedup.minhash_jaccard_estimate,  # last green r12
         "multimodal_resize": multimodal.multimodal_resize,  # last green r12
+        "quality_rule_drift": drift.quality_rule_drift,  # last green r12
         "repetition_stats": curation.repetition_stats,  # last green r12
         "semdedup_clusters": similarity.semdedup_clusters,  # last green r12
         "streaming_attribution_join": streaming.streaming_attribution_join,  # last green r12
@@ -115,8 +116,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pmi_cooccur_terms": text.pmi_cooccur_terms,  # last green r13
         "seasonal_baseline": analytics.seasonal_baseline,  # last green r13
         "streaming_incremental_dedup": streaming.streaming_incremental_dedup,  # last green r13
-        "streaming_ingest_front_door": streaming.streaming_ingest_front_door,  # last green r13
         # ---------------- 50-entry scoring cap lands here ----------------
+        "streaming_ingest_front_door": streaming.streaming_ingest_front_door,  # last green r13
         "streaming_neardup": streaming.streaming_neardup,  # last green r13
         "streaming_rule_drift_gate": streaming.streaming_rule_drift_gate,  # last green r13
         "template_communities": graph.template_communities,  # last green r13
@@ -125,6 +126,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_aware_split": graph.dedup_aware_split,  # last green r14
         "dedup_best_per_user": rollups.dedup_best_per_user,  # last green r14
         "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,  # last green r14
+        "dsir_importance_weights": curation.dsir_importance_weights,  # last green r14
         "dup_cluster_stats": graph.dup_cluster_stats,  # last green r14
         "dup_components": graph.dup_components,  # last green r14
         "dup_pagerank": graph.dup_pagerank,  # last green r14
@@ -242,7 +244,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "incremental_dedup": dedup.incremental_dedup,  # last green r12
         "psi_value_drift": drift.psi_value_drift,  # last green r12
         "q12_shipmode": relational_ext.q12_shipmode,  # last green r12
-        "quality_rule_drift": drift.quality_rule_drift,  # last green r12
         "stratified_sample": corpus.stratified_sample,  # last green r12
         "text_quality": text.text_quality,  # last green r12
         "corr_value_hour": analytics.corr_value_hour,  # last green r13
@@ -262,7 +263,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_editdistance": dedup.dedup_editdistance,  # last green r14
         "dedup_minhash_lsh": dedup.dedup_minhash_lsh,  # last green r14
         "dedup_minhash_portable": dedup.dedup_minhash_portable,  # last green r14
-        "dsir_importance_weights": curation.dsir_importance_weights,  # last green r14
         "fn_geomean_download_complete": lambda s, d: table_functions.metric_geomean(s, d, direction="download", fleet="complete"),  # last green r14
         "length_filter_sweep": curation.length_filter_sweep,  # last green r14
         "multimodal_meta": multimodal.multimodal_meta,  # last green r14

@@ -735,7 +735,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "weeks_since",
             F.col("active_users").cast("bigint").alias("active_users"),
             F.col("cohort_users").cast("bigint").alias("cohort_users"),
-            (F.floor(F.col("active_users") / F.col("cohort_users") * 1e6) / 1e6).alias(
+            _trunc6(F.col("active_users") / F.col("cohort_users")).alias(
                 "retention"
             ),
         )
@@ -1090,8 +1090,8 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "n",
-            (F.floor(F.col("med_raw") * 1e6) / 1e6).alias("median"),
-            (F.floor(F.col("mad_raw") * 1e6) / 1e6).alias("mad"),
+            _trunc6(F.col("med_raw")).alias("median"),
+            _trunc6(F.col("mad_raw")).alias("mad"),
             "n_outliers",
         )
         .orderBy("event_type")
@@ -1212,7 +1212,7 @@ def tail_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.col("pct").cast("bigint").alias("pct"),
             F.col("n").cast("bigint").alias("n"),
-            (F.floor(F.col("value") * 1e6) / 1e6).alias("value_at_pct"),
+            _trunc6(F.col("value")).alias("value_at_pct"),
         )
         .orderBy("event_type", "pct")
     )
@@ -1288,7 +1288,7 @@ def user_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "n_users",
         "total_events",
-        (F.floor(gini * 1e6) / 1e6).alias("gini"),
+        _trunc6(gini).alias("gini"),
     )
 
 

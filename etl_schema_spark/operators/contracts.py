@@ -72,7 +72,7 @@ def vdec(col: str | Column = "value") -> Column:
     """Guarded order-independent exact lift: truncate to 6 dp, cast to
     DECIMAL(18,6); out-of-domain values degrade to NULL. CASE branches
     evaluate lazily in both engines, so the floor never sees Inf."""
-    return F.when(finite_value(col), F.floor(_c(col) * 1e6) / 1e6).cast(
+    return F.when(finite_value(col), _trunc6(_c(col))).cast(
         "decimal(18,6)"
     )
 

@@ -600,18 +600,9 @@ def source_quality_profile_oracle() -> str:
     # length() (characters), NOT strlen() (bytes) — the same char-true
     # expressions as gopher_quality_flags_oracle, whose flag columns this
     # rollup aggregates (edge fuzz wave 7, multibyte corpus)
-    words = "list_filter(string_split_regex(lower(text), '\\s+'), w -> w <> '')"
-    mean_wl = (
-        f"CASE WHEN len({words}) > 0 THEN "
-        f"list_sum([CAST(length(w) AS DOUBLE) for w in {words}]) / len({words}) "
-        f"ELSE 0.0 END"
-    )
-    n_symbol = "length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g'))"
-    symbol_ratio = (
-        f"CASE WHEN length(text) > 0 THEN {n_symbol} * 1.0 / length(text) ELSE 0.0 END"
-    )
-    stops = ", ".join(f"'{s}'" for s in _STOPS)
-    stop_hits = f"len(list_filter({words}, w -> w IN ({stops})))"
+    p = _gopher_sql_parts()
+    words, mean_wl = p["words"], p["mean_wl"]
+    symbol_ratio, stop_hits = p["symbol_ratio"], p["stop_hits"]
     return f"""
         WITH flags AS (
           SELECT source,
@@ -788,36 +779,20 @@ DSIR_BUCKETS = 1024
 DSIR_TARGET_SOURCES = ("src1", "src2", "src3")
 
 
-def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style importance weights (Xie et al. 2023, "Data Selection
-    for Language Models via Importance Resampling"): score every document
-    by how much more likely its hashed-bigram features are under a TARGET
-    distribution (here: the DSIR_TARGET_SOURCES slice — the
-    "high-quality domain" stand-in) than under the raw-pool distribution
-    (every other source). weight(doc) = Σ_f ln(p_target(b(f)) /
-    p_raw(b(f))) over the doc's word-bigram features hashed into
-    DSIR_BUCKETS md5 buckets, Laplace add-1 smoothed — the standard
-    pretraining-mix reweighting signal (resample ∝ exp(weight)).
+def _dsir_features(docs: DataFrame):
+    r"""(base, feats, bcounts, totals) of the hashed-bigram DSIR model
+    over ``docs(doc_id, text, source)``: per-doc target flag and bigram
+    list, one (doc_id, is_target, bucket) row per bigram, per-bucket
+    target/raw counts and the 1-row totals. Shared by
+    dsir_importance_weights and lm_domain_perplexity.
 
-    Determinism: each feature's log-ratio is floor-truncated to 6 dp and
-    summed as DECIMAL(18,6) — order-independent exact arithmetic (the
-    fleet _vdec discipline), so a 32-way shuffle and DuckDB's single
-    thread agree bit-for-bit; the ln argument is a ratio of exact
-    integer products. Docs with no bigram (0/1 tokens) stay in the
-    output with NULL weight — the wave-3 "empty aggregate leaves the
-    measurable domain" contract, not a silent drop.
-
-    Scale shape: one explode to (doc_id, bucket) feature rows (narrow:
-    two longs), ONE corpus aggregate over ≤ DSIR_BUCKETS groups, and the
-    1024-row ratio table BROADCASTS back onto the feature stream — the
-    per-doc sum is the only real shuffle, keyed on doc_id
-    (high-cardinality, naturally parallel). No vocabulary-sized state
-    anywhere: the hashing trick bounds model size at any corpus scale.
-    """
-    docs = cpu_parallel(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
+    Explicit whitespace class on BOTH sides (ADVICE r9): Java's ASCII \s
+    IS [ \t\n\x0b\f\r], but RE2's \s lacks \x0b — the oracle needs the
+    class spelled out or a vertical-tab document tokenizes differently
+    across engines (the repeat_profile_automaton precedent, dedup.py)."""
+    toks = F.filter(
+        F.split(F.lower("text"), r"[ \t\n\x0b\f\r]+"), lambda t: t != F.lit("")
     )
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != F.lit(""))
     n = F.size(toks)
     # guard n < 2: slice() throws on negative length (an empty/1-token
     # doc must yield zero features, not kill the scan — edge fuzz)
@@ -853,6 +828,76 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("is_target").cast("long")).alias("tt"),
         F.sum((~F.col("is_target")).cast("long")).alias("ts"),
     )
+    return base, feats, bcounts, totals
+
+
+def _dsir_features_sql() -> str:
+    """DuckDB twin of _dsir_features: the base/feats/bcounts/totals CTEs."""
+    targets = ", ".join(f"'{s}'" for s in DSIR_TARGET_SOURCES)
+    nb = DSIR_BUCKETS
+    return rf"""base AS (
+          SELECT doc_id,
+                 COALESCE(source IN ({targets}), FALSE) AS is_target,
+                 -- explicit whitespace class incl. \x0b (ADVICE r9):
+                 -- RE2's \s has no vertical tab, Java's ASCII \s does
+                 list_filter(string_split_regex(lower(text),
+                                                '[ \t\n\x0b\f\r]+'),
+                             t -> t <> '') AS tk
+          FROM documents
+        ),
+        feats AS (
+          SELECT doc_id, is_target,
+                 CAST(('0x' || substr(md5(f), 1, 8)) AS BIGINT) % {nb} AS bucket
+          FROM (
+            SELECT doc_id, is_target,
+                   unnest(list_transform(range(1, len(tk)),
+                                         i -> tk[i] || ' ' || tk[i + 1])) AS f
+            FROM base
+          )
+        ),
+        bcounts AS (
+          SELECT bucket,
+                 SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS ct,
+                 SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS cs
+          FROM feats GROUP BY bucket
+        ),
+        totals AS (
+          SELECT SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS tt,
+                 SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS ts
+          FROM feats
+        )"""
+
+
+def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR-style importance weights (Xie et al. 2023, "Data Selection
+    for Language Models via Importance Resampling"): score every document
+    by how much more likely its hashed-bigram features are under a TARGET
+    distribution (here: the DSIR_TARGET_SOURCES slice — the
+    "high-quality domain" stand-in) than under the raw-pool distribution
+    (every other source). weight(doc) = Σ_f ln(p_target(b(f)) /
+    p_raw(b(f))) over the doc's word-bigram features hashed into
+    DSIR_BUCKETS md5 buckets, Laplace add-1 smoothed — the standard
+    pretraining-mix reweighting signal (resample ∝ exp(weight)).
+
+    Determinism: each feature's log-ratio is floor-truncated to 6 dp and
+    summed as DECIMAL(18,6) — order-independent exact arithmetic (the
+    fleet _vdec discipline), so a 32-way shuffle and DuckDB's single
+    thread agree bit-for-bit; the ln argument is a ratio of exact
+    integer products. Docs with no bigram (0/1 tokens) stay in the
+    output with NULL weight — the wave-3 "empty aggregate leaves the
+    measurable domain" contract, not a silent drop.
+
+    Scale shape: one explode to (doc_id, bucket) feature rows (narrow:
+    two longs), ONE corpus aggregate over ≤ DSIR_BUCKETS groups, and the
+    1024-row ratio table BROADCASTS back onto the feature stream — the
+    per-doc sum is the only real shuffle, keyed on doc_id
+    (high-cardinality, naturally parallel). No vocabulary-sized state
+    anywhere: the hashing trick bounds model size at any corpus scale.
+    """
+    docs = cpu_parallel(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
+    )
+    base, feats, bcounts, totals = _dsir_features(docs)
     b = F.lit(DSIR_BUCKETS).cast("long")
     ratio = (
         bcounts.crossJoin(F.broadcast(totals))  # 1-row totals
@@ -889,37 +934,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dsir_importance_weights_oracle() -> str:
-    targets = ", ".join(f"'{s}'" for s in DSIR_TARGET_SOURCES)
     nb = DSIR_BUCKETS
     return rf"""
-        WITH base AS (
-          SELECT doc_id,
-                 COALESCE(source IN ({targets}), FALSE) AS is_target,
-                 list_filter(string_split_regex(lower(text), '\s+'),
-                             t -> t <> '') AS tk
-          FROM documents
-        ),
-        feats AS (
-          SELECT doc_id, is_target,
-                 CAST(('0x' || substr(md5(f), 1, 8)) AS BIGINT) % {nb} AS bucket
-          FROM (
-            SELECT doc_id, is_target,
-                   unnest(list_transform(range(1, len(tk)),
-                                         i -> tk[i] || ' ' || tk[i + 1])) AS f
-            FROM base
-          )
-        ),
-        bcounts AS (
-          SELECT bucket,
-                 SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS ct,
-                 SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS cs
-          FROM feats GROUP BY bucket
-        ),
-        totals AS (
-          SELECT SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS tt,
-                 SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS ts
-          FROM feats
-        ),
+        WITH {_dsir_features_sql()},
         ratio AS (
           SELECT bucket,
                  FLOOR(ln(CAST((ct + 1) * (ts + {nb}) AS DOUBLE)
@@ -1063,47 +1080,7 @@ def lm_domain_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = cpu_parallel(
         load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     )
-    # Explicit whitespace class on BOTH sides (ADVICE r9): Java's ASCII \s
-    # IS [ \t\n\x0b\f\r] so the Spark side is unchanged behaviorally, but
-    # RE2's \s lacks \x0b — the oracle needs the class spelled out or a
-    # vertical-tab document tokenizes differently across engines (the
-    # repeat_profile_automaton precedent, dedup.py).
-    toks = F.filter(
-        F.split(F.lower("text"), r"[ \t\n\x0b\f\r]+"), lambda t: t != F.lit("")
-    )
-    n = F.size(toks)
-    bigrams = F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(toks, 1, n - 1),
-            F.slice(toks, 2, n - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    is_target = F.coalesce(
-        F.col("source").isin(*DSIR_TARGET_SOURCES), F.lit(False)
-    ).alias("is_target")
-    base = docs.select("doc_id", is_target, bigrams.alias("bg"))
-    feats = base.select(
-        "doc_id",
-        "is_target",
-        F.explode("bg").alias("f"),
-    ).select(
-        "doc_id",
-        "is_target",
-        (
-            F.conv(F.substring(F.md5(F.col("f")), 1, 8), 16, 10).cast("bigint")
-            % DSIR_BUCKETS
-        ).alias("bucket"),
-    )
-    bcounts = feats.groupBy("bucket").agg(
-        F.sum(F.col("is_target").cast("long")).alias("ct"),
-        F.sum((~F.col("is_target")).cast("long")).alias("cs"),
-    )
-    totals = feats.groupBy().agg(
-        F.sum(F.col("is_target").cast("long")).alias("tt"),
-        F.sum((~F.col("is_target")).cast("long")).alias("ts"),
-    )
+    base, feats, bcounts, totals = _dsir_features(docs)
     b = F.lit(DSIR_BUCKETS).cast("long")
     model = bcounts.crossJoin(F.broadcast(totals)).select(
         "bucket",
@@ -1125,8 +1102,8 @@ def lm_domain_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("lpr6") / 1e6).cast("decimal(18,6)")).alias("sr"),
         )
     )
-    xent_t = F.floor(-F.col("st").cast("double") / F.col("n_feats") * 1e6) / 1e6
-    xent_r = F.floor(-F.col("sr").cast("double") / F.col("n_feats") * 1e6) / 1e6
+    xent_t = _trunc6(-F.col("st").cast("double") / F.col("n_feats"))
+    xent_r = _trunc6(-F.col("sr").cast("double") / F.col("n_feats"))
     return (
         base.select("doc_id", "is_target")
         .join(per_doc, "doc_id", "left")
@@ -1143,40 +1120,9 @@ def lm_domain_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lm_domain_perplexity_oracle() -> str:
-    targets = ", ".join(f"'{s}'" for s in DSIR_TARGET_SOURCES)
     nb = DSIR_BUCKETS
     return rf"""
-        WITH base AS (
-          SELECT doc_id,
-                 COALESCE(source IN ({targets}), FALSE) AS is_target,
-                 -- explicit whitespace class incl. \x0b (ADVICE r9):
-                 -- RE2's \s has no vertical tab, Java's ASCII \s does
-                 list_filter(string_split_regex(lower(text),
-                                                '[ \t\n\x0b\f\r]+'),
-                             t -> t <> '') AS tk
-          FROM documents
-        ),
-        feats AS (
-          SELECT doc_id, is_target,
-                 CAST(('0x' || substr(md5(f), 1, 8)) AS BIGINT) % {nb} AS bucket
-          FROM (
-            SELECT doc_id, is_target,
-                   unnest(list_transform(range(1, len(tk)),
-                                         i -> tk[i] || ' ' || tk[i + 1])) AS f
-            FROM base
-          )
-        ),
-        bcounts AS (
-          SELECT bucket,
-                 SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS ct,
-                 SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS cs
-          FROM feats GROUP BY bucket
-        ),
-        totals AS (
-          SELECT SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS tt,
-                 SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS ts
-          FROM feats
-        ),
+        WITH {_dsir_features_sql()},
         model AS (
           SELECT bucket,
                  FLOOR(LN((ct + 1) * 1.0 / (tt + {nb})) * 1e6) AS lpt6,

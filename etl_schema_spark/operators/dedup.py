@@ -27,11 +27,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import cpu_parallel, load_table
-from .contracts import observe_cap
+from .contracts import _trunc6, observe_cap
 
 JACCARD_TAU = 0.5
 MINHASH_SEEDS = 8
-LSH_BANDS = 4  # rows-per-band = MINHASH_SEEDS / LSH_BANDS = 2
+LSH_BANDS = 4
+ROWS_PER_BAND = MINHASH_SEEDS // LSH_BANDS  # = 2
 # Per-bucket occupancy cap for the ids-only LSH candidate paths. On a
 # degenerate/templated corpus near-identical docs collide in EVERY band
 # bucket, so one bucket row would hold an O(N) collect_list array and one
@@ -94,10 +95,101 @@ def _seeded_md5(i: int):
     return lambda s: F.md5(F.concat(F.lit(prefix), s))
 
 
-def _shingled_docs(spark: SparkSession, sf_dir: str):
-    docs = cpu_parallel(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+def _with_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles) of ``docs(doc_id, text)``; a doc with no
+    shingle (fewer than 3 tokens) cannot near-dup anything and is
+    dropped."""
     return docs.select(
         "doc_id", _shingles_of(F.split(F.col("text"), r"\s+")).alias("shingles")
+    ).filter(F.size("shingles") > 0)
+
+
+def _shingled_docs(spark: SparkSession, sf_dir: str):
+    return _with_shingles(
+        cpu_parallel(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    )
+
+
+def _md5_minhash(shingles: Column) -> Column:
+    """The portable MinHash signature: per seed i, the lexicographic MIN
+    of md5("i:" || shingle) — MINHASH_SEEDS hex strings."""
+    return F.array(
+        *[
+            F.array_min(F.transform(shingles, _seeded_md5(i)))
+            for i in range(MINHASH_SEEDS)
+        ]
+    )
+
+
+def _band_keys(mh: Column) -> Column:
+    """The LSH_BANDS band-bucket keys of a portable signature: md5 of the
+    band index ("b|") joined with the band's signature elements, so a
+    candidate join is a single-key equi-join on the bucket."""
+    return F.array(
+        *[
+            F.md5(
+                F.concat_ws(
+                    ",",
+                    F.lit(f"{b}|"),
+                    *[mh[b * ROWS_PER_BAND + r] for r in range(ROWS_PER_BAND)],
+                )
+            )
+            for b in range(LSH_BANDS)
+        ]
+    )
+
+
+def _capped_bucket_pairs(banded: DataFrame, keys: list[str], cap_name: str) -> DataFrame:
+    """Distinct (doc_a < doc_b) id pairs sharing a bucket of ``banded``
+    (doc_id, *keys): ids-only, occupancy hard-capped at LSH_BUCKET_CAP
+    min-doc_id keepers per bucket (observed as ``cap_name``), per-bucket
+    pairs from a sorted collect_list + double explode."""
+    w_bucket = Window.partitionBy(*keys).orderBy("doc_id")
+    return (
+        observe_cap(
+            banded.withColumn("_rn", F.row_number().over(w_bucket)),
+            cap_name,
+            "_rn",
+            LSH_BUCKET_CAP,
+        )
+        .filter(F.col("_rn") <= LSH_BUCKET_CAP)  # occupancy cap, see constant
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+        .filter(F.size("ids") >= 2)
+        .select(F.posexplode("ids").alias("_i", "doc_a"), F.col("ids"))
+        .select(
+            "doc_a",
+            F.explode(
+                F.slice(F.col("ids"), F.col("_i") + 2, F.size("ids"))
+            ).alias("doc_b"),
+        )
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
+def _with_pair_shingles(pairs: DataFrame, docs: DataFrame) -> DataFrame:
+    """``pairs(doc_a, doc_b)`` with both docs' shingle arrays (sh_a, sh_b)
+    re-attached by two doc_id equi-joins."""
+    sh_a = docs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    sh_b = docs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    return pairs.join(sh_a, "doc_a").join(sh_b, "doc_b")
+
+
+def _jaccard(a: str = "sh_a", b: str = "sh_b") -> tuple[Column, Column]:
+    """(|A ∩ B|, exact Jaccard) of two distinct-element array columns."""
+    common = F.size(F.array_intersect(a, b))
+    return common, common / (F.size(a) + F.size(b) - common)
+
+
+def _verified(pairs: DataFrame, tau: float) -> DataFrame:
+    """The exact-Jaccard verify tail over (doc_a, doc_b, sh_a, sh_b)
+    candidates: (doc_a, doc_b, common, jaccard) at jaccard >= tau."""
+    common, jac = _jaccard()
+    return (
+        pairs.withColumn("common", common)
+        .withColumn("jaccard", _trunc6(jac))
+        .filter(jac >= tau)
+        .select("doc_a", "doc_b", "common", "jaccard")
     )
 
 
@@ -170,9 +262,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str, tau: float = JACCARD_T
 
     docs = swap_pin(
         "dedup_ngram_jaccard.shingles",
-        _shingled_docs(spark, sf_dir)
-        .filter(F.size("shingles") > 0)
-        .select(
+        _shingled_docs(spark, sf_dir).select(
             "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("shingles")
         ),
     )
@@ -225,26 +315,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str, tau: float = JACCARD_T
         .select("doc_a", "doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sa = docs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = docs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    verified = candidates.join(sa, "doc_a").join(sb, "doc_b")
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = common / (F.size("sh_a") + F.size("sh_b") - common)
-    return (
-        verified.withColumn("common", common)
-        .withColumn("jaccard", F.floor(jac * 1e6) / 1e6)
-        .filter(jac >= tau)
-        .select("doc_a", "doc_b", "common", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    )
+    verified = _with_pair_shingles(candidates, docs)
+    return _verified(verified, tau).orderBy("doc_a", "doc_b")
 
 
 # DuckDB CTEs producing (doc_id, shingles) — shared by the jaccard oracle
 # and downstream consumers of near-dup pairs (graph.dup_components oracle).
-SHINGLE_CTES_SQL = r"""d AS (
-          SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents
-        ),
-        sh AS (
+_SH_CTE_SQL = """sh AS (
           SELECT doc_id,
                  CASE WHEN len(toks) >= 3
                       THEN list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -252,6 +329,66 @@ SHINGLE_CTES_SQL = r"""d AS (
                       ELSE [] END AS shingles
           FROM d
         )"""
+SHINGLE_CTES_SQL = rf"""d AS (
+          SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents
+        ),
+        {_SH_CTE_SQL}"""
+
+# DuckDB twins of _md5_minhash and _band_keys: the signature list over a
+# ``shingles`` column and the band-bucket list over an ``mh`` column.
+_MINHASH_SIG_SQL = ", ".join(
+    f"list_min([md5('{i}:' || x) for x in shingles])" for i in range(MINHASH_SEEDS)
+)
+_BAND_KEYS_SQL = ", ".join(
+    "md5(concat_ws(',', '{b}|', {parts}))".format(
+        b=b,
+        parts=", ".join(
+            f"mh[{b * ROWS_PER_BAND + r + 1}]" for r in range(ROWS_PER_BAND)
+        ),
+    )
+    for b in range(LSH_BANDS)
+)
+# shingled docs -> (doc_id, shingles, mh) signatures over a prior sh CTE
+_SIG_CTES_SQL = f"""s AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
+        sig AS (
+          SELECT doc_id, shingles, [{_MINHASH_SIG_SQL}] AS mh FROM s
+        )"""
+
+
+def _banded_cand_ctes_sql() -> str:
+    """Signatures -> capped band buckets -> distinct candidate pairs with
+    both shingle arrays (the dedup_minhash_portable candidate set), over a
+    prior sh CTE. Rendered per call, so the cap follows LSH_BUCKET_CAP."""
+    return f"""{_SIG_CTES_SQL},
+        banded_all AS (
+          SELECT doc_id, shingles, unnest([{_BAND_KEYS_SQL}]) AS bucket FROM sig
+        ),
+        banded AS (
+          SELECT * FROM banded_all
+          QUALIFY row_number() OVER (PARTITION BY bucket ORDER BY doc_id)
+                  <= {LSH_BUCKET_CAP}
+        ),
+        cand AS (
+          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                          a.shingles AS sh_a, b.shingles AS sh_b
+          FROM banded a JOIN banded b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
+        )"""
+
+
+# shingled docs -> signatures -> ids-only band buckets over a prior sh
+# CTE, the form the front-door oracles band with
+_SIG_BANDED_CTES_SQL = f"""s AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
+        sig AS (SELECT doc_id, [{_MINHASH_SIG_SQL}] AS mh FROM s),
+        banded AS (SELECT doc_id, unnest([{_BAND_KEYS_SQL}]) AS bucket FROM sig)"""
+
+
+def _agree_sql(a: str, b: str) -> str:
+    """Matching positions of two portable signatures (the MinHash
+    agreement count)."""
+    return (
+        f"list_sum([CASE WHEN {a}[i + 1] = {b}[i + 1] THEN 1 ELSE 0 END "
+        f"for i in range(0, {MINHASH_SEEDS})])"
+    )
 
 
 # Posting-intersection CTEs (r14): |A ∩ B| via an equi-join on exploded
@@ -328,8 +465,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, tau: float = JACCARD_TAU
     at ingest; observable via quality_expectation_report's unique rules
     (SURVEY §7 item 23).
     """
-    docs = _shingled_docs(spark, sf_dir).filter(F.size("shingles") > 0)
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
+    docs = _shingled_docs(spark, sf_dir)
     minhash = F.array(
         *[
             F.array_min(
@@ -350,8 +486,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, tau: float = JACCARD_TAU
                         F.concat_ws(
                             ",",
                             *[
-                                minhash[b * rows_per_band + r].cast("string")
-                                for r in range(rows_per_band)
+                                minhash[b * ROWS_PER_BAND + r].cast("string")
+                                for r in range(ROWS_PER_BAND)
                             ],
                         )
                     )
@@ -360,39 +496,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, tau: float = JACCARD_TAU
             )
         ).alias("band", "bucket"),
     )
-    w_bucket = Window.partitionBy("band", "bucket").orderBy("doc_id")
-    pairs = (
-        observe_cap(
-            banded.withColumn("_rn", F.row_number().over(w_bucket)),
-            "lsh_bucket_cap",
-            "_rn",
-            LSH_BUCKET_CAP,
-        )
-        .filter(F.col("_rn") <= LSH_BUCKET_CAP)  # occupancy cap, see constant
-        .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.posexplode("ids").alias("_i", "doc_a"), F.col("ids"))
-        .select(
-            "doc_a",
-            F.explode(
-                F.slice(F.col("ids"), F.col("_i") + 2, F.size("ids"))
-            ).alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sh_a = docs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sh_b = docs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    candidates = pairs.join(sh_a, "doc_a").join(sh_b, "doc_b")
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = common / (F.size("sh_a") + F.size("sh_b") - common)
-    return (
-        candidates.withColumn("common", common)
-        .withColumn("jaccard", F.floor(jac * 1e6) / 1e6)
-        .filter(jac >= tau)
-        .select("doc_a", "doc_b", "common", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    )
+    pairs = _capped_bucket_pairs(banded, ["band", "bucket"], "lsh_bucket_cap")
+    return _verified(_with_pair_shingles(pairs, docs), tau).orderBy("doc_a", "doc_b")
 
 
 def _minhash_banded_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,60 +520,13 @@ def _minhash_banded_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Now the expensive MinHash map stage runs exactly once, nothing is
     persisted, and the candidate shuffles carry 16-byte id pairs.
     """
-    docs = _shingled_docs(spark, sf_dir).filter(F.size("shingles") > 0)
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
-    minhash = F.array(
-        *[
-            F.array_min(F.transform(F.col("shingles"), _seeded_md5(i)))
-            for i in range(MINHASH_SEEDS)
-        ]
-    )
+    docs = _shingled_docs(spark, sf_dir)
     banded = docs.select(
         "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            F.lit(f"{b}|"),
-                            *[
-                                minhash[b * rows_per_band + r]
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bucket"),
+        F.explode(_band_keys(_md5_minhash(F.col("shingles")))).alias("bucket"),
     )
-    w_bucket = Window.partitionBy("bucket").orderBy("doc_id")
-    pairs = (
-        observe_cap(
-            banded.withColumn("_rn", F.row_number().over(w_bucket)),
-            "minhash_band_cap",
-            "_rn",
-            LSH_BUCKET_CAP,
-        )
-        .filter(F.col("_rn") <= LSH_BUCKET_CAP)  # occupancy cap, see constant
-        .groupBy("bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.posexplode("ids").alias("_i", "doc_a"), F.col("ids"))
-        .select(
-            "doc_a",
-            F.explode(
-                F.slice(F.col("ids"), F.col("_i") + 2, F.size("ids"))
-            ).alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sh_a = docs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sh_b = docs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    return pairs.join(sh_a, "doc_a").join(sh_b, "doc_b").select(
-        "doc_a", "doc_b", "sh_a", "sh_b"
-    )
+    pairs = _capped_bucket_pairs(banded, ["bucket"], "minhash_band_cap")
+    return _with_pair_shingles(pairs, docs).select("doc_a", "doc_b", "sh_a", "sh_b")
 
 
 def dedup_minhash_portable(
@@ -492,50 +550,13 @@ def dedup_minhash_portable(
     restore_unique_docs / catalog.load_table_unique at ingest; observable
     via quality_expectation_report's unique rules (SURVEY §7 item 23).
     """
-    candidates = _minhash_banded_candidates(spark, sf_dir)
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = common / (F.size("sh_a") + F.size("sh_b") - common)
-    return (
-        candidates.withColumn("common", common)
-        .withColumn("jaccard", F.floor(jac * 1e6) / 1e6)
-        .filter(jac >= tau)
-        .select("doc_a", "doc_b", "common", "jaccard")
-    )
+    return _verified(_minhash_banded_candidates(spark, sf_dir), tau)
 
 
 def dedup_minhash_portable_oracle(tau: float = JACCARD_TAU) -> str:
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
-    sig_list = ", ".join(
-        f"list_min([md5('{i}:' || x) for x in shingles])" for i in range(MINHASH_SEEDS)
-    )
-    bucket_list = ", ".join(
-        "md5(concat_ws(',', '{b}|', {parts}))".format(
-            b=b,
-            parts=", ".join(
-                f"mh[{b * rows_per_band + r + 1}]" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(LSH_BANDS)
-    )
     return rf"""
         WITH {SHINGLE_CTES_SQL},
-        s AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
-        sig AS (
-          SELECT doc_id, shingles, [{sig_list}] AS mh FROM s
-        ),
-        banded_all AS (
-          SELECT doc_id, shingles, unnest([{bucket_list}]) AS bucket FROM sig
-        ),
-        banded AS (
-          SELECT * FROM banded_all
-          QUALIFY row_number() OVER (PARTITION BY bucket ORDER BY doc_id)
-                  <= {LSH_BUCKET_CAP}
-        ),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                          a.shingles AS sh_a, b.shingles AS sh_b
-          FROM banded a JOIN banded b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-        )
+        {_banded_cand_ctes_sql()}
         SELECT doc_a, doc_b,
                len(list_intersect(sh_a, sh_b)) AS common,
                FLOOR(len(list_intersect(sh_a, sh_b)) * 1.0
@@ -827,27 +848,8 @@ def _sig_banded(docs: DataFrame) -> DataFrame:
     keys — the columns a persisted fingerprint index carries per doc.
     Same hash family / banding as dedup_minhash_portable (dedup.py:459),
     so a DuckDB oracle reproduces signatures and buckets bit-for-bit."""
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
-    minhash = F.array(
-        *[
-            F.array_min(F.transform(F.col("shingles"), _seeded_md5(i)))
-            for i in range(MINHASH_SEEDS)
-        ]
-    )
-    sig = docs.select("doc_id", minhash.alias("mh"))
-    buckets = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.lit(f"{b}|"),
-                    *[F.col("mh")[b * rows_per_band + r] for r in range(rows_per_band)],
-                )
-            )
-            for b in range(LSH_BANDS)
-        ]
-    )
-    return sig.select("doc_id", "mh", buckets.alias("buckets"))
+    sig = docs.select("doc_id", _md5_minhash(F.col("shingles")).alias("mh"))
+    return sig.select("doc_id", "mh", _band_keys(F.col("mh")).alias("buckets"))
 
 
 def neardup_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -876,14 +878,10 @@ def neardup_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = NEW_BATCH_MOD
 
     def build() -> DataFrame:
-        docs = (
-            load_table_unique(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % m != m - 1)
-            .select(
-                "doc_id",
-                _shingles_of(F.split(F.col("text"), r"\s+")).alias("shingles"),
+        docs = _with_shingles(
+            load_table_unique(spark, sf_dir, "documents").filter(
+                F.col("doc_id") % m != m - 1
             )
-            .filter(F.size("shingles") > 0)
         )
         exploded = _sig_banded(docs).select(
             "doc_id", "mh", F.explode("buckets").alias("bucket")
@@ -985,13 +983,11 @@ def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     m = NEW_BATCH_MOD
     arriving = _sig_banded(
-        load_table_unique(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % m == m - 1)
-        .select(
-            "doc_id",
-            _shingles_of(F.split(F.col("text"), r"\s+")).alias("shingles"),
+        _with_shingles(
+            load_table_unique(spark, sf_dir, "documents").filter(
+                F.col("doc_id") % m == m - 1
+            )
         )
-        .filter(F.size("shingles") > 0)
     )
     index = neardup_band_index(spark, sf_dir)
     return neardup_verdicts(index, arriving).orderBy("doc_id")
@@ -1001,40 +997,13 @@ def incremental_neardup_oracle() -> str:
     from ..sources.catalog import unique_scan_sql
 
     m = NEW_BATCH_MOD
-    n = MINHASH_SEEDS
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
-    sig_list = ", ".join(
-        f"list_min([md5('{i}:' || x) for x in shingles])" for i in range(MINHASH_SEEDS)
-    )
-    bucket_list = ", ".join(
-        "md5(concat_ws(',', '{b}|', {parts}))".format(
-            b=b,
-            parts=", ".join(
-                f"mh[{b * rows_per_band + r + 1}]" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(LSH_BANDS)
-    )
-    agree = (
-        f"list_sum([CASE WHEN si.mh[i + 1] = sn.mh[i + 1] THEN 1 ELSE 0 END "
-        f"for i in range(0, {n})])"
-    )
     return rf"""
         WITH d AS (
           SELECT doc_id, string_split_regex(text, '\s+') AS toks
           FROM {unique_scan_sql("documents")} documents
         ),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) >= 3
-                      THEN list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                          for i in range(1, len(toks) - 1)])
-                      ELSE [] END AS shingles
-          FROM d
-        ),
-        s AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
-        sig AS (SELECT doc_id, [{sig_list}] AS mh FROM s),
-        banded AS (SELECT doc_id, unnest([{bucket_list}]) AS bucket FROM sig),
+        {_SH_CTE_SQL},
+        {_SIG_BANDED_CTES_SQL},
         new_b AS (SELECT * FROM banded WHERE doc_id % {m} = {m - 1}),
         -- build-time occupancy cap mirror (ADVICE r12): min-doc_id
         -- keepers per bucket, same rule as neardup_band_index
@@ -1046,7 +1015,7 @@ def incremental_neardup_oracle() -> str:
           FROM new_b nb JOIN idx_b ib USING (bucket)
         ),
         scored AS (
-          SELECT c.new_doc_id, c.cand_id, {agree} AS n_agree
+          SELECT c.new_doc_id, c.cand_id, {_agree_sql("si.mh", "sn.mh")} AS n_agree
           FROM cand c
           JOIN sig sn ON sn.doc_id = c.new_doc_id
           JOIN sig si ON si.doc_id = c.cand_id
@@ -1106,11 +1075,7 @@ def front_door_verdicts(
 
     # near tier (the banding gate, witness only; shingle-empty docs
     # cannot near-dup and simply have no row here)
-    arriving_sigs = _sig_banded(
-        batch.select(
-            "doc_id", _shingles_of(F.split(F.col("text"), r"\s+")).alias("shingles")
-        ).filter(F.size("shingles") > 0)
-    )
+    arriving_sigs = _sig_banded(_with_shingles(batch))
     near = (
         neardup_verdicts(band_index, arriving_sigs)
         .filter(F.col("is_near_dup"))
@@ -1206,25 +1171,7 @@ def ingest_front_door_oracle() -> str:
     from ..sources.catalog import unique_scan_sql
 
     m = NEW_BATCH_MOD
-    n = MINHASH_SEEDS
     langs = ", ".join(f"'{v}'" for v in STANDARD_LANGS)
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
-    sig_list = ", ".join(
-        f"list_min([md5('{i}:' || x) for x in shingles])" for i in range(MINHASH_SEEDS)
-    )
-    bucket_list = ", ".join(
-        "md5(concat_ws(',', '{b}|', {parts}))".format(
-            b=b,
-            parts=", ".join(
-                f"mh[{b * rows_per_band + r + 1}]" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(LSH_BANDS)
-    )
-    agree = (
-        f"list_sum([CASE WHEN si.mh[i + 1] = sn.mh[i + 1] THEN 1 ELSE 0 END "
-        f"for i in range(0, {n})])"
-    )
     return rf"""
         WITH u AS (
           SELECT doc_id, text, lang, n_chars
@@ -1240,17 +1187,8 @@ def ingest_front_door_oracle() -> str:
           GROUP BY 1
         ),
         d AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM u),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) >= 3
-                      THEN list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                          for i in range(1, len(toks) - 1)])
-                      ELSE [] END AS shingles
-          FROM d
-        ),
-        s AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
-        sig AS (SELECT doc_id, [{sig_list}] AS mh FROM s),
-        banded AS (SELECT doc_id, unnest([{bucket_list}]) AS bucket FROM sig),
+        {_SH_CTE_SQL},
+        {_SIG_BANDED_CTES_SQL},
         cand AS (
           SELECT DISTINCT nb.doc_id AS new_doc_id, ib.doc_id AS cand_id
           FROM (SELECT * FROM banded WHERE doc_id % {m} = {m - 1}) nb
@@ -1261,7 +1199,7 @@ def ingest_front_door_oracle() -> str:
         ),
         near AS (
           SELECT new_doc_id, MIN(cand_id) AS near_dup_of FROM (
-            SELECT c.new_doc_id, c.cand_id, {agree} AS n_agree
+            SELECT c.new_doc_id, c.cand_id, {_agree_sql("si.mh", "sn.mh")} AS n_agree
             FROM cand c
             JOIN sig sn ON sn.doc_id = c.new_doc_id
             JOIN sig si ON si.doc_id = c.cand_id
@@ -1373,13 +1311,8 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("is_dup") * F.col("n_win_in_doc"))
         .cast("bigint")
         .alias("n_dup_windows"),
-        (
-            F.floor(
-                F.sum(F.col("is_dup") * F.col("n_win_in_doc"))
-                / F.sum("n_win_in_doc")
-                * 1e6
-            )
-            / 1e6
+        _trunc6(
+            F.sum(F.col("is_dup") * F.col("n_win_in_doc")) / F.sum("n_win_in_doc")
         ).alias("dup_frac"),
     )
 
@@ -1425,7 +1358,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .cachereg import swap_pin
 
-    docs = _shingled_docs(spark, sf_dir).filter(F.size("shingles") > 0)
+    docs = _shingled_docs(spark, sf_dir)
     # signature frame feeds the band explode AND both estimate re-joins;
     # registry-pinned so repeat invocations release the previous frame
     # (ADVICE r5 leak class)
@@ -1434,34 +1367,11 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "shingles",
-            F.array(
-                *[
-                    F.array_min(F.transform(F.col("shingles"), _seeded_md5(i)))
-                    for i in range(MINHASH_SEEDS)
-                ]
-            ).alias("minhash"),
+            _md5_minhash(F.col("shingles")).alias("minhash"),
         ),
     )
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
     banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            F.lit(f"{b}|"),
-                            *[
-                                F.col("minhash")[b * rows_per_band + r]
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bucket"),
+        "doc_id", F.explode(_band_keys(F.col("minhash"))).alias("bucket")
     )
     cand = (
         banded.select(F.col("doc_id").alias("doc_a"), "bucket")
@@ -1485,10 +1395,8 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    exact = common / (F.size("sh_a") + F.size("sh_b") - common)
+    _, exact = _jaccard()
     est = F.col("sig_matches") / F.lit(float(MINHASH_SEEDS))
-    t6 = lambda c: F.floor(c * 1e6) / 1e6  # noqa: E731
     return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -1498,44 +1406,25 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             "sig_matches",
-            t6(est).alias("est_jaccard"),
-            t6(F.col("exact_j")).alias("jaccard"),
-            t6(F.abs(est - F.col("exact_j"))).alias("abs_err"),
+            _trunc6(est).alias("est_jaccard"),
+            _trunc6(F.col("exact_j")).alias("jaccard"),
+            _trunc6(F.abs(est - F.col("exact_j"))).alias("abs_err"),
         )
     )
 
 
 def minhash_jaccard_estimate_oracle() -> str:
     n = MINHASH_SEEDS
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
-    sig_list = ", ".join(
-        f"list_min([md5('{i}:' || x) for x in shingles])" for i in range(MINHASH_SEEDS)
-    )
-    bucket_list = ", ".join(
-        "md5(concat_ws(',', '{b}|', {parts}))".format(
-            b=b,
-            parts=", ".join(
-                f"mh[{b * rows_per_band + r + 1}]" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(LSH_BANDS)
-    )
-    matches = (
-        f"list_sum([CASE WHEN mh_a[i + 1] = mh_b[i + 1] THEN 1 ELSE 0 END "
-        f"for i in range(0, {n})])"
-    )
+    matches = _agree_sql("mh_a", "mh_b")
     exact = (
         "(len(list_intersect(sh_a, sh_b)) * 1.0"
         " / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))))"
     )
     return rf"""
         WITH {SHINGLE_CTES_SQL},
-        s AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
-        sig AS (
-          SELECT doc_id, shingles, [{sig_list}] AS mh FROM s
-        ),
+        {_SIG_CTES_SQL},
         banded AS (
-          SELECT doc_id, unnest([{bucket_list}]) AS bucket FROM sig
+          SELECT doc_id, unnest([{_BAND_KEYS_SQL}]) AS bucket FROM sig
         ),
         cand AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1929,7 +1818,7 @@ def containment_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality_expectation_report's unique rules (SURVEY §7 item 23);
     --wave9-restored: green.
     """
-    sh = _shingled_docs(spark, sf_dir).filter(F.size("shingles") > 0)
+    sh = _shingled_docs(spark, sf_dir)
     posting = sh.select("doc_id", F.explode("shingles").alias("shingle"))
     # >= CONT_MIN_RARE_SHARED shared rare shingles, not >= 1: a single
     # rare-shingle coincidence admits C(df_cap, 2) pairs per shingle and
@@ -2083,8 +1972,7 @@ def minhash_pr_eval(
         .agg(F.count(F.lit(1)).alias("n_exact"))
     )
     cands = _minhash_banded_candidates(spark, sf_dir)
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = common / (F.size("sh_a") + F.size("sh_b") - common)
+    _, jac = _jaccard()
     cand_n = cands.agg(
         F.count(F.lit(1)).alias("n_candidates"),
         F.sum(F.when(jac >= tau, 1).otherwise(0)).alias("n_verified"),
@@ -2112,38 +2000,9 @@ def minhash_pr_eval(
 
 
 def minhash_pr_eval_oracle(tau: float = JACCARD_TAU) -> str:
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
-    sig_list = ", ".join(
-        f"list_min([md5('{i}:' || x) for x in shingles])" for i in range(MINHASH_SEEDS)
-    )
-    bucket_list = ", ".join(
-        "md5(concat_ws(',', '{b}|', {parts}))".format(
-            b=b,
-            parts=", ".join(
-                f"mh[{b * rows_per_band + r + 1}]" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(LSH_BANDS)
-    )
     return rf"""
         WITH {jaccard_pairs_ctes_sql(tau)},
-        s AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
-        sig AS (
-          SELECT doc_id, shingles, [{sig_list}] AS mh FROM s
-        ),
-        banded_all AS (
-          SELECT doc_id, shingles, unnest([{bucket_list}]) AS bucket FROM sig
-        ),
-        banded AS (
-          SELECT * FROM banded_all
-          QUALIFY row_number() OVER (PARTITION BY bucket ORDER BY doc_id)
-                  <= {LSH_BUCKET_CAP}
-        ),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                          a.shingles AS sh_a, b.shingles AS sh_b
-          FROM banded a JOIN banded b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-        ),
+        {_banded_cand_ctes_sql()},
         counts AS (
           SELECT
             (SELECT COUNT(*) FROM jpairs) AS n_exact,
@@ -2279,7 +2138,7 @@ def substring_repeat_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct(F.when(F.col("is_dup") == 1, F.col("doc_id")))
             .cast("bigint")
             .alias("docs_with_dup"),
-            (F.floor(F.sum("is_dup") / F.count(F.lit(1)) * 1e6) / 1e6).alias(
+            _trunc6(F.sum("is_dup") / F.count(F.lit(1))).alias(
                 "dup_frac"
             ),
         )
@@ -2586,12 +2445,12 @@ def lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         LSH_TUNE_CONFIGS,
         F.lit(None).cast("double"),
     )
-    p6 = (F.floor(collide * 1e6) / 1e6).cast("decimal(18,6)")
+    p6 = _trunc6(collide).cast("decimal(18,6)")
     return (
         ex.groupBy("bands", "rows_per_band")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_true_pairs"),
-            (F.floor(F.sum(p6).cast("double") / F.count(F.lit(1)) * 1e6) / 1e6).alias(
+            _trunc6(F.sum(p6).cast("double") / F.count(F.lit(1))).alias(
                 "expected_recall"
             ),
         )
@@ -2600,12 +2459,8 @@ def lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rows_per_band",
             "n_true_pairs",
             "expected_recall",
-            (
-                F.floor(
-                    F.exp(F.log(F.lit(1.0) / F.col("bands")) / F.col("rows_per_band"))
-                    * 1e6
-                )
-                / 1e6
+            _trunc6(
+                F.exp(F.log(F.lit(1.0) / F.col("bands")) / F.col("rows_per_band"))
             ).alias("s50"),
         )
         .orderBy("bands")

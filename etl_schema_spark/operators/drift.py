@@ -187,16 +187,18 @@ LOG_BUCKET_SQL = """CAST(CASE WHEN {v} >= 0
                       AS BIGINT)"""
 
 
-def _psi_report_sql(gcol: str) -> str:
+def _psi_report_sql(*gcols: str) -> str:
     """DuckDB twin of _psi_report: the cells → window-partials → ppm-terms
-    → per-group PSI tail over a prior ``tagged({gcol}, bucket, is_cur)``
-    CTE. Both PSI oracles (events values, document lengths) end here, so
-    the two SQL forms cannot drift apart — mirroring how both Spark
-    entries share _psi_report itself."""
+    → per-group PSI tail over a prior ``tagged(*gcols, bucket, is_cur)``
+    CTE. Every PSI oracle (events values, document lengths, rule
+    pass-rates) ends here, so the SQL forms cannot drift apart —
+    mirroring how the Spark entries share _psi_report itself."""
+    gcol = ", ".join(gcols)
+    ordinals = ", ".join(str(i) for i in range(1, len(gcols) + 2))
     return f"""cells AS (
           SELECT {gcol}, bucket,
                  SUM(1 - is_cur) AS cr, SUM(is_cur) AS cc
-          FROM tagged GROUP BY 1, 2
+          FROM tagged GROUP BY {ordinals}
         ),
         enriched AS (
           -- window partials, not a JOIN USING (ADVICE r9): a NULL
@@ -551,24 +553,22 @@ def rule_tagged(docs: DataFrame, is_cur: Column) -> DataFrame:
     )
 
 
-def quality_rule_drift_oracle() -> str:
+def rule_tagged_sql(is_cur: str, docs: str = "documents") -> str:
+    """DuckDB twin of rule_tagged: the ``base`` flags CTE over ``docs``
+    (a FROM clause) and its four-rule ``tagged`` unpivot, with ``is_cur``
+    as the reference/current tag."""
     from ..quality import STANDARD_LANGS
 
     langs = ", ".join(f"'{v}'" for v in STANDARD_LANGS)
-    # the PSI tail is _psi_report_sql's shape with an explicit two-column
-    # group (the shared template's GROUP BY 1, 2 is single-group-col)
-    return f"""
-        WITH base AS (
+    return f"""base AS (
           SELECT source,
                  CAST(text IS NOT NULL AS BIGINT) AS p_nn,
                  CAST(COALESCE(length(text) = n_chars, FALSE) AS BIGINT)
                    AS p_len,
                  CAST(n_chars IS NULL OR n_chars >= 0 AS BIGINT) AS p_neg,
                  CAST(lang IS NULL OR lang IN ({langs}) AS BIGINT) AS p_lang,
-                 CAST(CAST(('0x' || substr(md5('{QRD_SALT}' ||
-                                           CAST(doc_id AS VARCHAR)), 1, 8))
-                           AS BIGINT) % 2 AS INT) AS is_cur
-          FROM documents
+                 {is_cur} AS is_cur
+          FROM {docs}
         ),
         tagged AS (
           SELECT source, 'accepted_lang' AS rule, p_lang AS bucket, is_cur
@@ -579,36 +579,14 @@ def quality_rule_drift_oracle() -> str:
           SELECT source, 'non_negative_n_chars', p_neg, is_cur FROM base
           UNION ALL
           SELECT source, 'not_null_text', p_nn, is_cur FROM base
-        ),
-        cells AS (
-          SELECT source, rule, bucket,
-                 SUM(1 - is_cur) AS cr, SUM(is_cur) AS cc
-          FROM tagged GROUP BY 1, 2, 3
-        ),
-        enriched AS (
-          SELECT source, rule, cr, cc,
-                 SUM(cr) OVER (PARTITION BY source, rule) AS nr,
-                 SUM(cc) OVER (PARTITION BY source, rule) AS nc,
-                 COUNT(*) OVER (PARTITION BY source, rule) AS nb
-          FROM cells
-        ),
-        terms AS (
-          SELECT source, rule, nr, nc, nb,
-                 CAST(FLOOR(
-                   ((cc + 1) * 1.0 / (nc + nb)
-                    - (cr + 1) * 1.0 / (nr + nb))
-                   * LN(((cc + 1) * 1.0 / (nc + nb))
-                        / ((cr + 1) * 1.0 / (nr + nb)))
-                   * 1e6) AS BIGINT) AS term6
-          FROM enriched
-        )
-        SELECT source, rule,
-               CAST(nr AS BIGINT) AS n_ref,
-               CAST(nc AS BIGINT) AS n_cur,
-               CAST(nb AS BIGINT) AS n_buckets,
-               SUM(term6) / 1e6 AS psi,
-               SUM(term6) / 1e6 > {PSI_DRIFT_LINE} AS drifted
-        FROM terms
-        GROUP BY source, rule, nr, nc, nb
-        ORDER BY source, rule
+        )"""
+
+
+def quality_rule_drift_oracle() -> str:
+    half = f"""CAST(CAST(('0x' || substr(md5('{QRD_SALT}' ||
+                                           CAST(doc_id AS VARCHAR)), 1, 8))
+                           AS BIGINT) % 2 AS INT)"""
+    return f"""
+        WITH {rule_tagged_sql(half)},
+        {_psi_report_sql("source", "rule")}
     """

@@ -45,6 +45,42 @@ CHUNK_TOKENS = 32  # tokens per retrieval chunk
 CHUNK_STRIDE = 24  # chunk stride (8-token overlap)
 
 
+def _packed_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, n_tok, cum_tok): each doc's whitespace-token
+    count and its source's running token total in doc_id order, from the
+    distributed two-phase running sum.
+
+    NULL-text and NULL-source docs are excluded from the packing domain
+    (edge fuzz wave 6, same contract as doc_chunks / source_token_budget):
+    split(NULL) yields a NULL token count that poisons the running
+    offset, and a NULL source has no per-source shard to pack into.
+    isNotNull pushes to the parquet scan."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull() & F.col("source").isNotNull())
+        .select("doc_id", "source", F.size(F.split("text", r"\s+")).alias("n_tok"))
+    )
+    return grouped_running_sum(docs, "source", "doc_id", "n_tok", "cum_tok")
+
+
+def _pack_offsets_sql(off: str) -> str:
+    """DuckDB twin of _packed_offsets: CTE c(doc_id, source, n_tok,
+    {off}) with each doc's start offset in its source's token stream."""
+    return rf"""t AS (
+          SELECT doc_id, source,
+                 len(string_split_regex(text, '\s+')) AS n_tok
+          FROM documents
+          WHERE text IS NOT NULL AND source IS NOT NULL
+        ), c AS (
+          SELECT doc_id, source, n_tok,
+                 SUM(n_tok) OVER (
+                   PARTITION BY source ORDER BY doc_id
+                   ROWS UNBOUNDED PRECEDING
+                 ) - n_tok AS {off}
+          FROM t
+        )"""
+
+
 def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack documents into fixed-token-budget training sequences.
 
@@ -61,17 +97,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern (grouped_running_sum) — never ``Window.partitionBy(source)``,
     which would sort an entire source in one task at 100 TB.
     """
-    # NULL-text and NULL-source docs are excluded from the packing
-    # domain (edge fuzz wave 6, same contract as doc_chunks /
-    # source_token_budget): split(NULL) yields a NULL token count that
-    # poisons the running offset, and a NULL source has no per-source
-    # shard to pack into. isNotNull pushes to the parquet scan.
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & F.col("source").isNotNull())
-        .select("doc_id", "source", F.size(F.split("text", r"\s+")).alias("n_tok"))
-    )
-    cum = grouped_running_sum(docs, "source", "doc_id", "n_tok", "cum_tok")
+    cum = _packed_offsets(spark, sf_dir)
     start_off = F.col("cum_tok") - F.col("n_tok")
     return (
         cum.withColumn("bin_id", F.floor(start_off / PACK_BUDGET))
@@ -96,19 +122,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pack_sequences_oracle() -> str:
     return rf"""
-        WITH t AS (
-          SELECT doc_id, source,
-                 len(string_split_regex(text, '\s+')) AS n_tok
-          FROM documents
-          WHERE text IS NOT NULL AND source IS NOT NULL
-        ), c AS (
-          SELECT doc_id, source, n_tok,
-                 SUM(n_tok) OVER (
-                   PARTITION BY source ORDER BY doc_id
-                   ROWS UNBOUNDED PRECEDING
-                 ) - n_tok AS start_off
-          FROM t
-        )
+        WITH {_pack_offsets_sql("start_off")}
         SELECT source,
                CAST(FLOOR(start_off * 1.0 / {PACK_BUDGET}) AS BIGINT) AS bin_id,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -398,17 +412,7 @@ def pack_efficiency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     each budget's bin id is pure arithmetic over the same cum column —
     |budgets| cheap aggregations, not |budgets| repacking runs.
     """
-    # NULL-text and NULL-source docs are excluded from the packing
-    # domain (edge fuzz wave 6, same contract as doc_chunks /
-    # source_token_budget): split(NULL) yields a NULL token count that
-    # poisons the running offset, and a NULL source has no per-source
-    # shard to pack into. isNotNull pushes to the parquet scan.
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & F.col("source").isNotNull())
-        .select("doc_id", "source", F.size(F.split("text", r"\s+")).alias("n_tok"))
-    )
-    cum = grouped_running_sum(docs, "source", "doc_id", "n_tok", "cum_tok")
+    cum = _packed_offsets(spark, sf_dir)
     start_off = F.col("cum_tok") - F.col("n_tok")
     swept = cum.select(
         "source",
@@ -437,19 +441,7 @@ def pack_efficiency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pack_efficiency_sweep_oracle() -> str:
     budgets = ", ".join(str(b) for b in SWEEP_BUDGETS)
     return rf"""
-        WITH t AS (
-          SELECT doc_id, source,
-                 len(string_split_regex(text, '\s+')) AS n_tok
-          FROM documents
-          WHERE text IS NOT NULL AND source IS NOT NULL
-        ), c AS (
-          SELECT doc_id, source, n_tok,
-                 SUM(n_tok) OVER (
-                   PARTITION BY source ORDER BY doc_id
-                   ROWS UNBOUNDED PRECEDING
-                 ) - n_tok AS off
-          FROM t
-        ),
+        WITH {_pack_offsets_sql("off")},
         swept AS (
           SELECT source, n_tok, off, unnest([{budgets}]) AS budget FROM c
         ),

@@ -38,6 +38,7 @@ from .contracts import (
     FINITE_VALUE_SQL,
     VCLEAN_SQL,
     VDEC4_SQL,
+    _trunc6,
     finite_value,
     vclean,
     vdec4,
@@ -161,8 +162,7 @@ def sidestream_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             # try_divide mirrors DuckDB's x/0 -> NULL should k_value be -1.
             F.when(
                 finite_value("value"),
-                F.floor(F.try_divide(F.col("value"), F.col("k_value") + 1) * 1e6)
-                / 1e6,
+                _trunc6(F.try_divide(F.col("value"), F.col("k_value") + 1)),
             ).alias("rate"),
             "k_value",
         )
@@ -300,21 +300,17 @@ def multistream_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_snapshots"),
             F.any_value("test_start").alias("test_start"),
             F.max("ts").alias("last_snapshot"),
-            (
-                F.floor(
-                    # guarded lift (contracts.py, fuzz wave 5)
-                    F.sum(vdec4("value")).cast("double")
-                    / (
-                        (
-                            F.unix_micros(F.max("ts"))
-                            - F.unix_micros(F.any_value("test_start"))
-                        ).cast("double")
-                        / 1e6
-                        + 1
-                    )
-                    * 1e6
+            _trunc6(
+                # guarded lift (contracts.py, fuzz wave 5)
+                F.sum(vdec4("value")).cast("double")
+                / (
+                    (
+                        F.unix_micros(F.max("ts"))
+                        - F.unix_micros(F.any_value("test_start"))
+                    ).cast("double")
+                    / 1e6
+                    + 1
                 )
-                / 1e6
             ).alias("rate"),
         )
         .orderBy("user_id", "event_type")
@@ -456,7 +452,7 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day",
             F.col("dau").cast("bigint").alias("dau"),
             F.col("wau").cast("bigint").alias("wau"),
-            (F.floor(F.col("dau") / F.col("wau") * 1e6) / 1e6).alias("stickiness"),
+            _trunc6(F.col("dau") / F.col("wau")).alias("stickiness"),
         )
     )
 

@@ -209,11 +209,42 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COS_SQL = (
-    "list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
-    " / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))"
-    " * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))"
-)
+def _cos_sql(x: str, y: str) -> str:
+    """DuckDB cosine of two DOUBLE[] expressions (the _dot/_norm order)."""
+    return (
+        f"list_dot_product({x}, {y})"
+        f" / (sqrt(list_dot_product({x}, {x})) * sqrt(list_dot_product({y}, {y})))"
+    )
+
+
+# The IVF-family oracles' codebook: per-label decimal-exact centroid means
+# (c_label, centroid), the DuckDB twin of the Spark centroid build.
+_IVF_CENT_SQL = """cent AS (
+          SELECT label AS c_label, list(cx ORDER BY dim) AS centroid FROM (
+            SELECT label, dim,
+                   FLOOR(CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1e6) / 1e6
+                                       AS DECIMAL(18,6))) AS DOUBLE)
+                         / COUNT(*) * 1e6) / 1e6 AS cx
+            FROM (SELECT label, generate_subscripts(embedding, 1) AS dim,
+                         unnest(embedding) AS val FROM embeddings)
+            GROUP BY label, dim
+          ) GROUP BY label
+        )"""
+
+
+_COS_SQL = _cos_sql("CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])")
+
+
+# per-query top-TOP_K tail over a prior scored(query_id, neighbor_id,
+# cosine) CTE: cosine descending, neighbor_id ascending on ties
+_TOPK_TAIL_SQL = f"""ranked AS (
+          SELECT *, ROW_NUMBER() OVER (
+              PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
+          FROM scored
+        )
+        SELECT query_id, neighbor_id, cosine, rank
+        FROM ranked WHERE rank <= {TOP_K}
+        ORDER BY query_id, rank"""
 
 
 def ann_bruteforce_topk_oracle() -> str:
@@ -224,14 +255,7 @@ def ann_bruteforce_topk_oracle() -> str:
           FROM embeddings a JOIN embeddings b ON b.vec_id != a.vec_id
           WHERE a.vec_id < {N_QUERIES}
         ),
-        ranked AS (
-          SELECT *, ROW_NUMBER() OVER (
-              PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-          FROM scored
-        )
-        SELECT query_id, neighbor_id, cosine, rank
-        FROM ranked WHERE rank <= {TOP_K}
-        ORDER BY query_id, rank
+        {_TOPK_TAIL_SQL}
     """)
 
 
@@ -694,11 +718,7 @@ def ann_lsh_topk_oracle() -> str:
     bit_exprs = _lsh_bit_exprs_sql()
     key_exprs = _lsh_key_exprs_sql()
     band_match = " OR ".join(f"q.k{b} = c.k{b}" for b in range(LSH_BANDS))
-    cos = (
-        "list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))"
-        " / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))"
-        " * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))))"
-    )
+    cos = _cos_sql("CAST(q.embedding AS DOUBLE[])", "CAST(c.embedding AS DOUBLE[])")
     return finite_scan(f"""
         WITH sig AS (
           SELECT vec_id, embedding,
@@ -715,14 +735,7 @@ def ann_lsh_topk_oracle() -> str:
           JOIN keys c ON c.vec_id <> q.vec_id AND ({band_match})
           WHERE q.vec_id < {N_QUERIES}
         ),
-        ranked AS (
-          SELECT *, ROW_NUMBER() OVER (
-              PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-          FROM scored
-        )
-        SELECT query_id, neighbor_id, cosine, rank
-        FROM ranked WHERE rank <= {TOP_K}
-        ORDER BY query_id, rank
+        {_TOPK_TAIL_SQL}
     """)
 
 
@@ -1005,27 +1018,10 @@ def kmeans_clusters_oracle(k: int = None, iters: int = None) -> str:
 def ann_ivf_topk_oracle() -> str:
     """Exact twin of ann_ivf_topk: decimal-exact codebook means, argmax
     centroid probe, in-bucket cosine top-k — every stage bit-portable."""
-    q_cent_cos = (
-        "list_dot_product(qe, centroid)"
-        " / (sqrt(list_dot_product(qe, qe))"
-        " * sqrt(list_dot_product(centroid, centroid)))"
-    )
-    b_cos = (
-        "list_dot_product(qe, be)"
-        " / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(be, be)))"
-    )
+    q_cent_cos = _cos_sql("qe", "centroid")
+    b_cos = _cos_sql("qe", "be")
     return finite_scan(f"""
-        WITH cent AS (
-          SELECT label AS c_label, list(cx ORDER BY dim) AS centroid FROM (
-            SELECT label, dim,
-                   FLOOR(CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1e6) / 1e6
-                                       AS DECIMAL(18,6))) AS DOUBLE)
-                         / COUNT(*) * 1e6) / 1e6 AS cx
-            FROM (SELECT label, generate_subscripts(embedding, 1) AS dim,
-                         unnest(embedding) AS val FROM embeddings)
-            GROUP BY label, dim
-          ) GROUP BY label
-        ),
+        WITH {_IVF_CENT_SQL},
         q AS (
           SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
           FROM embeddings WHERE vec_id < {N_QUERIES}
@@ -1346,27 +1342,10 @@ def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def semdedup_clusters_oracle() -> str:
-    a_cos = (
-        "list_dot_product(a.de, b.de)"
-        " / (sqrt(list_dot_product(a.de, a.de)) * sqrt(list_dot_product(b.de, b.de)))"
-    )
-    assign_cos = (
-        "list_dot_product(e.de, c.centroid)"
-        " / (sqrt(list_dot_product(e.de, e.de))"
-        " * sqrt(list_dot_product(c.centroid, c.centroid)))"
-    )
+    a_cos = _cos_sql("a.de", "b.de")
+    assign_cos = _cos_sql("e.de", "c.centroid")
     return finite_scan(f"""
-        WITH cent AS (
-          SELECT label AS c_label, list(cx ORDER BY dim) AS centroid FROM (
-            SELECT label, dim,
-                   FLOOR(CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1e6) / 1e6
-                                       AS DECIMAL(18,6))) AS DOUBLE)
-                         / COUNT(*) * 1e6) / 1e6 AS cx
-            FROM (SELECT label, generate_subscripts(embedding, 1) AS dim,
-                         unnest(embedding) AS val FROM embeddings)
-            GROUP BY label, dim
-          ) GROUP BY label
-        ),
+        WITH {_IVF_CENT_SQL},
         e AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS de FROM embeddings
         ),
@@ -1441,23 +1420,9 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def embedding_outliers_oracle() -> str:
-    assign_cos = (
-        "list_dot_product(e.de, c.centroid)"
-        " / (sqrt(list_dot_product(e.de, e.de))"
-        " * sqrt(list_dot_product(c.centroid, c.centroid)))"
-    )
+    assign_cos = _cos_sql("e.de", "c.centroid")
     return finite_scan(f"""
-        WITH cent AS (
-          SELECT label AS c_label, list(cx ORDER BY dim) AS centroid FROM (
-            SELECT label, dim,
-                   FLOOR(CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1e6) / 1e6
-                                       AS DECIMAL(18,6))) AS DOUBLE)
-                         / COUNT(*) * 1e6) / 1e6 AS cx
-            FROM (SELECT label, generate_subscripts(embedding, 1) AS dim,
-                         unnest(embedding) AS val FROM embeddings)
-            GROUP BY label, dim
-          ) GROUP BY label
-        ),
+        WITH {_IVF_CENT_SQL},
         e AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS de FROM embeddings
         ),
@@ -1711,16 +1676,8 @@ def triplet_mining_oracle() -> str:
         f"SELECT vec_id, label, {b} AS band, k{b} AS key FROM keys"
         for b in range(LSH_BANDS)
     )
-    cos_ap = (
-        "list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[]))"
-        " / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))"
-        " * sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[]))))"
-    )
-    cos_xy = (
-        "list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(en.embedding AS DOUBLE[]))"
-        " / (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(ea.embedding AS DOUBLE[])))"
-        " * sqrt(list_dot_product(CAST(en.embedding AS DOUBLE[]), CAST(en.embedding AS DOUBLE[]))))"
-    )
+    cos_ap = _cos_sql("CAST(a.embedding AS DOUBLE[])", "CAST(p.embedding AS DOUBLE[])")
+    cos_xy = _cos_sql("CAST(ea.embedding AS DOUBLE[])", "CAST(en.embedding AS DOUBLE[])")
     return finite_scan(f"""
         WITH hashed AS (
           SELECT vec_id, label, embedding,
@@ -2523,32 +2480,11 @@ def ann_graph_expand_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_graph_expand_topk_oracle() -> str:
     """ann_ivf_topk_oracle's CTE chain with the centroid neighbor graph
     and probe expansion spliced between assignment and scoring."""
-    q_cent_cos = (
-        "list_dot_product(qe, centroid)"
-        " / (sqrt(list_dot_product(qe, qe))"
-        " * sqrt(list_dot_product(centroid, centroid)))"
-    )
-    c_c_cos = (
-        "list_dot_product(a.centroid, b.centroid)"
-        " / (sqrt(list_dot_product(a.centroid, a.centroid))"
-        " * sqrt(list_dot_product(b.centroid, b.centroid)))"
-    )
-    b_cos = (
-        "list_dot_product(qe, be)"
-        " / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(be, be)))"
-    )
+    q_cent_cos = _cos_sql("qe", "centroid")
+    c_c_cos = _cos_sql("a.centroid", "b.centroid")
+    b_cos = _cos_sql("qe", "be")
     return finite_scan(f"""
-        WITH cent AS (
-          SELECT label AS c_label, list(cx ORDER BY dim) AS centroid FROM (
-            SELECT label, dim,
-                   FLOOR(CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1e6) / 1e6
-                                       AS DECIMAL(18,6))) AS DOUBLE)
-                         / COUNT(*) * 1e6) / 1e6 AS cx
-            FROM (SELECT label, generate_subscripts(embedding, 1) AS dim,
-                         unnest(embedding) AS val FROM embeddings)
-            GROUP BY label, dim
-          ) GROUP BY label
-        ),
+        WITH {_IVF_CENT_SQL},
         cgraph AS (
           SELECT src, dst FROM (
             SELECT a.c_label AS src, b.c_label AS dst,
@@ -2716,10 +2652,7 @@ def centroid_shift_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def centroid_shift_drift_oracle() -> str:
-    cos = (
-        "list_dot_product(a.c, b.c)"
-        " / (sqrt(list_dot_product(a.c, a.c)) * sqrt(list_dot_product(b.c, b.c)))"
-    )
+    cos = _cos_sql("a.c", "b.c")
     return finite_scan(f"""
         WITH sp AS (
           SELECT label, embedding,

@@ -24,7 +24,7 @@ shuffle keys).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
@@ -667,6 +667,39 @@ _HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)  # bias constant for m >= 128
 _HLL_VBITS = 52  # rho bits: md5 chars 3..15 = 52 bits, double-exact
 
 
+def _hll_register_rho() -> tuple[Column, Column]:
+    """(register, rho) of the md5-portable HLL family over ``user_id``:
+    the first 8 md5 bits pick the register, rho is the leading-1-bit
+    position in the next 52 bits (+1)."""
+    h = F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string")))
+    reg = F.conv(F.substring(h, 1, 2), 16, 10).cast("bigint").alias("register")
+    v = F.conv(F.substring(h, 3, 13), 16, 10).cast("bigint")
+    rho = (
+        F.when(v == 0, F.lit(_HLL_VBITS + 1))
+        .otherwise(F.lit(_HLL_VBITS + 1) - F.length(F.bin(v)))
+        .alias("rho")
+    )
+    return reg, rho
+
+
+def _hll_estimate(regs: DataFrame) -> tuple[DataFrame, Column]:
+    """Per-event_type register sums of ``regs(event_type, register,
+    max_rho)`` and the HLL estimate over them, linear-counting corrected
+    when E <= 2.5m and empty registers exist."""
+    per = regs.groupBy("event_type").agg(
+        F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("s_present"),
+        F.count(F.lit(1)).alias("n_present"),
+    )
+    s = F.col("s_present") + (F.lit(HLL_M) - F.col("n_present")) * F.lit(1.0)
+    raw = F.lit(_HLL_ALPHA * HLL_M * HLL_M) / s
+    zeros = F.lit(HLL_M) - F.col("n_present")
+    est = F.when(
+        (raw <= F.lit(2.5 * HLL_M)) & (zeros > 0),
+        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / zeros.cast("double")),
+    ).otherwise(raw)
+    return per, est
+
+
 def hll_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-user estimate per event_type — the
     industry-standard counter beside KMV, built md5-portable so the whole
@@ -689,30 +722,13 @@ def hll_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB) rides along so the error is visible, as in kmv.
     """
     ev = load_table(spark, sf_dir, "events")
-    h = F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string")))
-    reg = F.conv(F.substring(h, 1, 2), 16, 10).cast("bigint").alias("register")
-    v = F.conv(F.substring(h, 3, 13), 16, 10).cast("bigint")
-    rho = (
-        F.when(v == 0, F.lit(_HLL_VBITS + 1))
-        .otherwise(F.lit(_HLL_VBITS + 1) - F.length(F.bin(v)))
-        .alias("rho")
-    )
+    reg, rho = _hll_register_rho()
     regs = (
         ev.select("event_type", reg, rho)
         .groupBy("event_type", "register")
         .agg(F.max("rho").alias("max_rho"))
     )
-    per_type = regs.groupBy("event_type").agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("s_present"),
-        F.count(F.lit(1)).alias("n_present"),
-    )
-    s = F.col("s_present") + (F.lit(HLL_M) - F.col("n_present")) * F.lit(1.0)
-    raw = F.lit(_HLL_ALPHA * HLL_M * HLL_M) / s
-    zeros = F.lit(HLL_M) - F.col("n_present")
-    est = F.when(
-        (raw <= F.lit(2.5 * HLL_M)) & (zeros > 0),
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / zeros.cast("double")),
-    ).otherwise(raw)
+    per_type, est = _hll_estimate(regs)
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("distinct_exact")
     )
@@ -793,14 +809,7 @@ def hll_daily_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     family as hll_distinct_estimate, so every step is hash-checked.
     """
     ev = load_table(spark, sf_dir, "events")
-    h = F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string")))
-    reg = F.conv(F.substring(h, 1, 2), 16, 10).cast("bigint").alias("register")
-    v = F.conv(F.substring(h, 3, 13), 16, 10).cast("bigint")
-    rho = (
-        F.when(v == 0, F.lit(_HLL_VBITS + 1))
-        .otherwise(F.lit(_HLL_VBITS + 1) - F.length(F.bin(v)))
-        .alias("rho")
-    )
+    reg, rho = _hll_register_rho()
     base = ev.select("event_type", F.to_date("ts").alias("day"), reg, rho)
     daily = base.groupBy("event_type", "day", "register").agg(
         F.max("rho").alias("day_rho")
@@ -811,17 +820,7 @@ def hll_daily_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     direct = base.groupBy("event_type", "register").agg(F.max("rho").alias("max_rho"))
 
     def estimate(regs: DataFrame, out: str) -> DataFrame:
-        per = regs.groupBy("event_type").agg(
-            F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("s_present"),
-            F.count(F.lit(1)).alias("n_present"),
-        )
-        s = F.col("s_present") + (F.lit(HLL_M) - F.col("n_present")) * F.lit(1.0)
-        raw = F.lit(_HLL_ALPHA * HLL_M * HLL_M) / s
-        zeros = F.lit(HLL_M) - F.col("n_present")
-        est = F.when(
-            (raw <= F.lit(2.5 * HLL_M)) & (zeros > 0),
-            F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / zeros.cast("double")),
-        ).otherwise(raw)
+        per, est = _hll_estimate(regs)
         return per.select("event_type", (F.floor(est * 1e4) / 1e4).alias(out))
 
     days = base.groupBy("event_type").agg(F.countDistinct("day").alias("n_days"))

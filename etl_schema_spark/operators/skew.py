@@ -27,6 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .contracts import _trunc6
+
 DEFAULT_SALT = 16
 
 
@@ -219,16 +221,15 @@ def key_skew_profile(spark, sf_dir: str) -> DataFrame:
         - (F.col("n_keys") + 1).cast(dec) * F.col("n_events").cast(dec)
     )
     gini_den = F.col("n_keys").cast(dec) * F.col("n_events").cast(dec)
-    trunc6 = lambda c: F.floor(c * 1e6) / 1e6  # noqa: E731
     return prof.select(
         "event_type",
         "n_keys",
         "n_events",
         "max_cnt",
-        trunc6(max_share).alias("max_share"),
-        trunc6(F.col("_topk").cast("double") / ne_d).alias("topk_share"),
-        trunc6(F.col("_ss").cast("double") / (ne_d * ne_d)).alias("hhi"),
-        trunc6(gini_num.cast("double") / gini_den.cast("double")).alias("gini"),
+        _trunc6(max_share).alias("max_share"),
+        _trunc6(F.col("_topk").cast("double") / ne_d).alias("topk_share"),
+        _trunc6(F.col("_ss").cast("double") / (ne_d * ne_d)).alias("hhi"),
+        _trunc6(gini_num.cast("double") / gini_den.cast("double")).alias("gini"),
         "p50_cnt",
         "p99_cnt",
         (max_share >= SKEW_FLAG_SHARE).cast("int").alias("salt_flag"),

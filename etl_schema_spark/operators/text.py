@@ -1084,7 +1084,7 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_terms_hit"),
-            (F.floor(F.sum("part") * 1e6) / 1e6).alias("score"),
+            _trunc6(F.sum("part")).alias("score"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))

@@ -566,6 +566,7 @@ def streaming_ewma_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as kmeans' unrolled Lloyd rounds. (Bounded source -> one
     micro-batch -> each user's full history through one state pass.)
     """
+    from ..operators.contracts import _trunc6
     from .stateful import ewma_anomaly_stream
 
     out = run_available_now(
@@ -574,7 +575,7 @@ def streaming_ewma_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "user_id",
         "n_events",
-        (F.floor(F.col("ewma_value") * 1e6) / 1e6).alias("ewma_value"),
+        _trunc6(F.col("ewma_value")).alias("ewma_value"),
         "n_anomalies",
     ).orderBy("user_id")
 
@@ -1000,8 +1001,8 @@ def neardup_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
     at-least-once across a crash window).
     """
     from ..operators.dedup import (
-        _shingles_of,
         _sig_banded,
+        _with_shingles,
         neardup_band_index,
         neardup_verdicts,
     )
@@ -1010,12 +1011,7 @@ def neardup_sink(spark: SparkSession, sf_dir: str, target: str) -> None:
     index = neardup_band_index(spark, sf_dir)
 
     def verdicts(batch_df: DataFrame, batch_id: int) -> str:
-        arriving = _sig_banded(
-            restore_unique(batch_df, "documents").select(
-                "doc_id",
-                _shingles_of(F.split(F.col("text"), r"\s+")).alias("shingles"),
-            ).filter(F.size("shingles") > 0)
-        )
+        arriving = _sig_banded(_with_shingles(restore_unique(batch_df, "documents")))
         neardup_verdicts(index, arriving).write.mode("overwrite").parquet(
             os.path.join(target, "out", f"batch={batch_id}")
         )
@@ -1162,66 +1158,16 @@ def streaming_rule_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_rule_drift_gate_oracle() -> str:
     from ..operators.dedup import NEW_BATCH_MOD
-    from ..quality import STANDARD_LANGS
+    from ..operators.drift import _psi_report_sql, rule_tagged_sql
     from ..sources.catalog import unique_scan_sql
 
     m = NEW_BATCH_MOD
-    langs = ", ".join(f"'{v}'" for v in STANDARD_LANGS)
-    from ..operators.drift import PSI_DRIFT_LINE
-
+    docs = f"""{unique_scan_sql("documents")} documents
+          WHERE doc_id IS NOT NULL"""
     return f"""
-        WITH base AS (
-          SELECT source,
-                 CAST(text IS NOT NULL AS BIGINT) AS p_nn,
-                 CAST(COALESCE(length(text) = n_chars, FALSE) AS BIGINT)
-                   AS p_len,
-                 CAST(n_chars IS NULL OR n_chars >= 0 AS BIGINT) AS p_neg,
-                 CAST(lang IS NULL OR lang IN ({langs}) AS BIGINT) AS p_lang,
-                 CAST(doc_id % {m} = {m - 1} AS INT) AS is_cur
-          FROM {unique_scan_sql("documents")} documents
-          WHERE doc_id IS NOT NULL
-        ),
-        tagged AS (
-          SELECT source, 'accepted_lang' AS rule, p_lang AS bucket, is_cur
-          FROM base
-          UNION ALL
-          SELECT source, 'n_chars_matches_text', p_len, is_cur FROM base
-          UNION ALL
-          SELECT source, 'non_negative_n_chars', p_neg, is_cur FROM base
-          UNION ALL
-          SELECT source, 'not_null_text', p_nn, is_cur FROM base
-        ),
-        cells AS (
-          SELECT source, rule, bucket,
-                 SUM(1 - is_cur) AS cr, SUM(is_cur) AS cc
-          FROM tagged GROUP BY 1, 2, 3
-        ),
-        enriched AS (
-          SELECT source, rule, cr, cc,
-                 SUM(cr) OVER (PARTITION BY source, rule) AS nr,
-                 SUM(cc) OVER (PARTITION BY source, rule) AS nc,
-                 COUNT(*) OVER (PARTITION BY source, rule) AS nb
-          FROM cells
-        ),
-        terms AS (
-          SELECT source, rule, nr, nc, nb,
-                 CAST(FLOOR(
-                   ((cc + 1) * 1.0 / (nc + nb)
-                    - (cr + 1) * 1.0 / (nr + nb))
-                   * LN(((cc + 1) * 1.0 / (nc + nb))
-                        / ((cr + 1) * 1.0 / (nr + nb)))
-                   * 1e6) AS BIGINT) AS term6
-          FROM enriched
-        ),
-        report AS (
-          SELECT source, rule,
-                 CAST(nr AS BIGINT) AS n_ref,
-                 CAST(nc AS BIGINT) AS n_cur,
-                 CAST(nb AS BIGINT) AS n_buckets,
-                 SUM(term6) / 1e6 AS psi,
-                 SUM(term6) / 1e6 > {PSI_DRIFT_LINE} AS drifted
-          FROM terms
-          GROUP BY source, rule, nr, nc, nb
+        WITH report AS (
+          WITH {rule_tagged_sql(f"CAST(doc_id % {m} = {m - 1} AS INT)", docs)},
+          {_psi_report_sql("source", "rule")}
         )
         SELECT *, NOT BOOL_OR(drifted) OVER () AS published
         FROM report
@@ -1278,8 +1224,8 @@ def ingest_front_door_sink(
     from ..operators.dedup import (
         NEW_BATCH_MOD,
         _normalized,
-        _shingles_of,
         _sig_banded,
+        _with_shingles,
         front_door_verdicts,
         neardup_band_index,
     )
@@ -1331,12 +1277,7 @@ def ingest_front_door_sink(
             os.path.join(md5_delta_dir, f"batch={batch_id}")
         )
         (
-            _sig_banded(
-                admitted.select(
-                    "doc_id",
-                    _shingles_of(F.split(F.col("text"), r"\s+")).alias("shingles"),
-                ).filter(F.size("shingles") > 0)
-            )
+            _sig_banded(_with_shingles(admitted))
             .select("doc_id", "mh", F.explode("buckets").alias("bucket"))
             .write.mode("overwrite")
             .parquet(os.path.join(band_delta_dir, f"batch={batch_id}"))

@@ -332,21 +332,12 @@ def test_minhash_signature_seeds_are_distinct(spark, sf_dir):
 
     from etl_schema_spark.operators.dedup import (
         MINHASH_SEEDS,
-        _seeded_md5,
+        _md5_minhash,
         _shingled_docs,
     )
 
-    docs = _shingled_docs(spark, sf_dir).filter(F.size("shingles") > 0).limit(5)
-    sig = docs.select(
-        "doc_id",
-        "shingles",
-        F.array(
-            *[
-                F.array_min(F.transform(F.col("shingles"), _seeded_md5(i)))
-                for i in range(MINHASH_SEEDS)
-            ]
-        ).alias("mh"),
-    )
+    docs = _shingled_docs(spark, sf_dir).limit(5)
+    sig = docs.select("doc_id", "shingles", _md5_minhash(F.col("shingles")).alias("mh"))
     for r in sig.collect():
         want = [
             min(hashlib.md5((f"{i}:" + s).encode()).hexdigest() for s in r.shingles)

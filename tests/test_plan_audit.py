@@ -209,6 +209,43 @@ def test_stream_starts_are_sized():
     assert sized, "run_available_now no longer calls _state_partitions"
 
 
+# Ceiling on the copied-code census below. Lower it when a change folds
+# copies; a change that adds copies must fold them into a helper instead.
+DUPLICATE_WINDOW_CEILING = 143
+
+
+def test_duplicate_window_census_ratchet():
+    """No helper should be copied: count the distinct 5-line windows of
+    package code that occur two or more times across
+    ``etl_schema_spark/**/*.py``. Blank lines and lines starting with
+    ``#`` or ``--`` (Python and SQL comments) are dropped and runs of
+    whitespace collapse to one space before windowing."""
+    import collections
+    import glob
+    import re
+
+    where = collections.defaultdict(list)
+    pkg = os.path.join(REPO, "etl_schema_spark")
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as src:
+            lines = [
+                (no, re.sub(r"\s+", " ", text.strip()))
+                for no, text in enumerate(src, 1)
+                if text.strip() and not text.strip().startswith(("#", "--"))
+            ]
+        rel = os.path.relpath(path, REPO)
+        for i in range(len(lines) - 4):
+            window = "\n".join(text for _, text in lines[i : i + 5])
+            where[window].append(f"{rel}:{lines[i][0]}")
+    repeated = sorted((locs for locs in where.values() if len(locs) > 1), key=len, reverse=True)
+    top = "\n".join(", ".join(locs) for locs in repeated[:10])
+    assert len(repeated) <= DUPLICATE_WINDOW_CEILING, (
+        f"{len(repeated)} repeated 5-line windows (ceiling "
+        f"{DUPLICATE_WINDOW_CEILING}); fold the copies into one helper. "
+        f"Most repeated:\n{top}"
+    )
+
+
 def test_registry_contract():
     """Every oracle key pairs with a queries() entry; since round 5 every
     registry entry carries an oracle (dedup_minhash_lsh gained a portable
@@ -334,25 +371,27 @@ def test_stale_entries_sort_into_scored_window():
     scored = set(names[:50])
     fresh = vf.freshness()
     # A one-round defer, for a rotation that genuinely overflows the
-    # window: 83 entries changed since their verdicts (r14's cpu_parallel
+    # window: 85 entries changed since their verdicts (r14's cpu_parallel
     # fan-out and rank/bucket rewrites, the pin coalescing conf, the
     # rewritten validity oracles, the input-sized streaming state
-    # partitions), so the 33 with the youngest verdicts (all 29 from r14,
-    # the last scored round, and the last 4 of r13's 21 by name) wait one
-    # round and lead the below-cap region. It may hold only the overflow,
+    # partitions, the shared PSI oracle tail and the DSIR tokenizer), so
+    # the 35 with the youngest verdicts (all 30 from r14, the last scored
+    # round, and the last 5 of r13's 21 by name) wait one round and lead
+    # the below-cap region. It may hold only the overflow,
     # only stale entries, and none with an older verdict than any
     # in-window stale entry; it is empty whenever 50 or fewer entries
     # changed.
     DEFERRED_ONE_ROUND = {
         "ccnet_source_split", "dedup_aware_split", "dedup_best_per_user",
-        "dedup_ngram_jaccard", "dup_cluster_stats", "dup_components",
-        "dup_pagerank", "embedding_outliers", "epoch_shuffle",
-        "fn_pdf_upload_2021", "hourly_rollup", "key_skew_profile",
-        "label_balance_sample", "mad_outliers", "minhash_pr_eval",
-        "near_dup_keep_plan", "pack_efficiency_sweep", "pack_fill_audit",
-        "pack_sequences", "perplexity_buckets", "source_token_budget",
-        "streaming_distinct_keys", "streaming_hopping_counts",
-        "streaming_hourly_counts", "streaming_neardup",
+        "dedup_ngram_jaccard", "dsir_importance_weights", "dup_cluster_stats",
+        "dup_components", "dup_pagerank", "embedding_outliers",
+        "epoch_shuffle", "fn_pdf_upload_2021", "hourly_rollup",
+        "key_skew_profile", "label_balance_sample", "mad_outliers",
+        "minhash_pr_eval", "near_dup_keep_plan", "pack_efficiency_sweep",
+        "pack_fill_audit", "pack_sequences", "perplexity_buckets",
+        "source_token_budget", "streaming_distinct_keys",
+        "streaming_hopping_counts", "streaming_hourly_counts",
+        "streaming_ingest_front_door", "streaming_neardup",
         "streaming_rule_drift_gate", "tail_latency_percentiles",
         "template_communities", "tfidf_top_terms", "trimmed_mean_value",
         "triplet_mining", "user_activity_gini", "vocab_growth_curve",

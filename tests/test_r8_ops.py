@@ -145,12 +145,18 @@ def test_dsir_weights_separate_target_like_docs(spark, tmp_path):
     out = {r.doc_id: r for r in curation.dsir_importance_weights(spark, d).collect()}
     assert out[100].weight > out[101].weight
     assert not out[100].is_target and out[12 % 12].is_target is not None
-    # docs with no bigram leave the measurable domain (NULL weight)
-    rows2 = rows + [(102, "single", "en", "srcZ", 6), (103, "", "en", "srcZ", 0)]
+    # docs with no bigram leave the measurable domain (NULL weight); a
+    # vertical tab separates tokens on both engines
+    rows2 = rows + [
+        (102, "single", "en", "srcZ", 6),
+        (103, "", "en", "srcZ", 0),
+        (104, "a\x0bb c\x0bd", "en", "srcZ", 7),
+    ]
     d2, con2 = _docs_corpus(spark, tmp_path / "w", rows2)
     out2 = {r.doc_id: r for r in curation.dsir_importance_weights(spark, d2).collect()}
     assert out2[102].weight is None and out2[102].n_feats == 0
     assert out2[103].weight is None
+    assert out2[104].n_feats == 3
     assert_matches_oracle(
         curation.dsir_importance_weights(spark, d2),
         con2,
