@@ -14,8 +14,10 @@ state is one frame per key, and ``release_pins()`` drops everything
 (bench harnesses and sweeps call it at exit). Unpersisting a frame an
 earlier returned DataFrame still references is safe: Spark recomputes
 the subtree instead of reading cache. A call that also passes what the
-frame is built from opts into cross-call reuse (the dup-graph family's
-one verified pair table, a warm re-split of an unchanged JSONL batch).
+frame is built from opts into cross-call reuse: ``dedup_ngram_jaccard``'s
+shingle and prefix pins, the dup-graph family's one verified pair table,
+the near-dup band index, the drift gate's baseline, and a warm re-split
+of an unchanged JSONL batch.
 
 At real cluster scale the equivalent is stage materialization to durable
 storage (a bucketed temp table); MEMORY_AND_DISK persist is the local

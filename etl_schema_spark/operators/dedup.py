@@ -253,55 +253,70 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str, tau: float = JACCARD_T
     cost; without the persist Spark recomputes it per reference (measured
     ~2.5x the operator wall time at sf0.1). At cluster scale this is the
     standard stage-materialization of a set-similarity join. Both pins go
-    through the cachereg registry (ADVICE r5 leak class): a repeat
-    invocation releases the previous frames, so a long session holds at
-    most one pinned pair, and bench/sweep harnesses release_pins() at
-    exit.
+    through swap_pin's reuse form, keyed on the documents file's
+    fingerprint: a repeat call over the unchanged file reuses them and
+    runs only the candidate self-join and the verify tail, a changed tau
+    swaps only the prefix pin, and a rewrite of the file swaps both. A
+    long session holds at most one pinned pair (ADVICE r5 leak class), and
+    bench/sweep harnesses release_pins() at exit.
     """
+    import os
+
     from .cachereg import swap_pin
 
+    src = (os.path.join(sf_dir, "documents.parquet"),)
     docs = swap_pin(
         "dedup_ngram_jaccard.shingles",
-        _shingled_docs(spark, sf_dir).select(
+        lambda: _shingled_docs(spark, sf_dir).select(
             "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("shingles")
         ),
+        spark=spark,
+        params=(sf_dir,),
+        inputs=src,
     )
-    posting = docs.select(
-        "doc_id", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("shingle")
-    )
-    # Global order: rarest first, shingle hash as tie-break (total order).
-    # df attaches by a shingle-keyed equi-join, NOT by carrying a
-    # collect_list postings array through the df aggregate: a corpus-
-    # common shingle (stopword trigram) holds O(docs-with-shingle) rows,
-    # and the fused groupBy(shingle).collect_list(docs) form concentrated
-    # that whole postings list into ONE agg buffer / task — the same
-    # single-row blowup class as the LSH bucket cap (ADVICE r6), except
-    # unbounded by banding. The count aggregate is fixed-state with
-    # map-side partials, and the df join distributes the hot shingle's
-    # rows across tasks (AQE skew-split handles the residual imbalance).
-    dfreq = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    ordered = (
-        posting.join(dfreq, "shingle")
-        .groupBy("doc_id")
-        .agg(
-            F.any_value(F.col("n_sh")).alias("n_sh"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("df", "shingle"))),
-                lambda s: s["shingle"],
-            ).alias("by_rarity"),
+
+    def prefix() -> DataFrame:
+        posting = docs.select(
+            "doc_id", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("shingle")
         )
-        .select(
-            "doc_id",
-            "n_sh",
-            F.slice(
-                "by_rarity",
-                1,
-                (F.size("by_rarity") - F.ceil(F.size("by_rarity") * tau) + 1).cast("int"),
-            ).alias("prefix"),
+        # Global order: rarest first, shingle hash as tie-break (total order).
+        # df attaches by a shingle-keyed equi-join, NOT by carrying a
+        # collect_list postings array through the df aggregate: a corpus-
+        # common shingle (stopword trigram) holds O(docs-with-shingle) rows,
+        # and the fused groupBy(shingle).collect_list(docs) form concentrated
+        # that whole postings list into ONE agg buffer / task — the same
+        # single-row blowup class as the LSH bucket cap (ADVICE r6), except
+        # unbounded by banding. The count aggregate is fixed-state with
+        # map-side partials, and the df join distributes the hot shingle's
+        # rows across tasks (AQE skew-split handles the residual imbalance).
+        dfreq = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+        return (
+            posting.join(dfreq, "shingle")
+            .groupBy("doc_id")
+            .agg(
+                F.any_value(F.col("n_sh")).alias("n_sh"),
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("df", "shingle"))),
+                    lambda s: s["shingle"],
+                ).alias("by_rarity"),
+            )
+            .select(
+                "doc_id",
+                "n_sh",
+                F.slice(
+                    "by_rarity",
+                    1,
+                    (
+                        F.size("by_rarity") - F.ceil(F.size("by_rarity") * tau) + 1
+                    ).cast("int"),
+                ).alias("prefix"),
+            )
         )
-    )
+
     # feeds both sides of the self-join; registry-pinned (no accumulation)
-    ordered = swap_pin("dedup_ngram_jaccard.prefix", ordered)
+    ordered = swap_pin(
+        "dedup_ngram_jaccard.prefix", prefix, spark=spark, params=(sf_dir, tau), inputs=src
+    )
     pref = ordered.select("doc_id", "n_sh", F.explode("prefix").alias("shingle"))
     a = pref.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"), "shingle")
     b = pref.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"), "shingle")

@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.cachereg import input_fingerprint
+
 # Columns that may arrive as parquet TIMESTAMP(NANOS), which Spark's
 # vectorized reader rejects unless nanos are surfaced as raw INT64. We read
 # them as longs and rebuild micro-precision timestamps (truncation, matching
@@ -77,20 +79,41 @@ def normalize_nanos(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
+# path -> (session, input_fingerprint, the StructType Spark inferred there)
+_SCHEMAS: dict[str, tuple] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    unchanged file. Inference is a one-task Spark job reading the footer;
+    the inferred StructType is remembered per path with the path's
+    ``cachereg.input_fingerprint``, and while the session and the
+    fingerprint match the read declares it instead, so no job runs. A
+    rewrite at the same path changes the fingerprint and infers again.
+    The reader confs are set before every read, so a declared schema was
+    always inferred under the confs the read runs with."""
+    _set_reader_confs(spark)
+    fp = input_fingerprint(path)  # before the read: a racing rewrite re-infers
+    sess, seen, schema = _SCHEMAS.get(path, (None, None, None))
+    if sess is spark and seen == fp:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (spark, fp, df.schema)
+    return df
+
+
 def physical_schema(spark: SparkSession, sf_dir: str, name: str):
     """The parquet schema a readStream must declare to read the same bytes
-    the batch path reads. Each call runs Spark's schema inference: a
-    one-task job that reads the file's footer (no row data), the
-    ``sources.catalog`` build job of every stream built on it."""
-    _set_reader_confs(spark)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+    the batch path reads: the schema ``load_table`` reads with, inferred
+    by a one-task footer job the first time a file is read and remembered
+    until the file changes."""
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet")).schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Column pruning + predicate pushdown are preserved by
     returning the raw scan (no .cache, no collect)."""
-    _set_reader_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     return normalize_nanos(df, name)
 
 
@@ -109,7 +132,9 @@ def cpu_parallel(df: DataFrame) -> DataFrame:
     Master gate: the partition-count probe builds the DataFrame→RDD
     lineage eagerly, which is worth paying only on single-file local
     scans, so it runs on local[...] masters only and cluster plans never
-    touch ``df.rdd``.
+    touch ``df.rdd``. It is also skipped when the byte target below is 1
+    partition: a scan of non-empty files has at least one, so that target
+    cannot repartition.
 
     Fan-out sizing (r14, guide §2.2/§2.5 scale-adaptive partitioning): the
     target is no longer a flat ``defaultParallelism`` — on a tiny input
@@ -126,19 +151,19 @@ def cpu_parallel(df: DataFrame) -> DataFrame:
     if not sess.conf.get("spark.master", "").startswith("local"):
         return df
     n = sess.sparkContext.defaultParallelism
-    cur = df.rdd.getNumPartitions()
-    if cur >= n:
-        return df
+    total = 0
     try:
         total = sum(
             os.path.getsize(p[len("file:"):] if p.startswith("file:") else p)
             for p in df.inputFiles()
         )
-        if total:
-            n = partitions_for_bytes(total, n)
     except Exception:
         pass  # unknown input size: keep the defaultParallelism target
-    if cur < n:
+    if total:
+        n = partitions_for_bytes(total, n)
+        if n == 1:
+            return df  # non-empty files scan as at least one partition
+    if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df
 

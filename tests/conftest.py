@@ -58,6 +58,24 @@ def duck():
     return con
 
 
+def jobs_started(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` starts from this thread: it runs
+    under a fresh job group, read back once the listener bus has
+    delivered every job start to the status store."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_started-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    spark._jsparkSession.sparkContext().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_matches_oracle(sdf, con, sql):
     """Order-insensitive compare of a Spark DF against a DuckDB query —
     the same contract as the driver's t2 gate."""

@@ -1,11 +1,11 @@
-"""Source-catalog behavior: the cpu_parallel master gate and the
-exactly-once restore."""
+"""Source-catalog behavior: the cpu_parallel master gate, the schema
+read once per unchanged file, and the exactly-once restore."""
 
 import os
 
 from etl_schema_spark.sources.catalog import cpu_parallel, load_table
 
-from .conftest import REPO
+from .conftest import REPO, jobs_started
 
 
 def test_cpu_parallel_auto_probes_local(spark, sf_dir):
@@ -13,6 +13,30 @@ def test_cpu_parallel_auto_probes_local(spark, sf_dir):
     out = cpu_parallel(df)  # local[...] master → probe allowed
     n = spark.sparkContext.defaultParallelism
     assert out.rdd.getNumPartitions() >= min(n, df.rdd.getNumPartitions())
+
+
+def test_load_table_infers_schema_once_per_unchanged_file(spark, sf_dir, tmp_path):
+    """Schema inference (a one-task footer job) runs on the first read of
+    a file only: a second load_table of the unchanged file starts no job,
+    and a same-path rewrite that adds a column is read with that column
+    by both physical_schema and load_table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_schema_spark.sources.catalog import physical_schema
+
+    d, path = str(tmp_path), str(tmp_path / "region.parquet")
+    base = pq.read_table(os.path.join(sf_dir, "region.parquet"))
+    pq.write_table(base, path)
+    assert jobs_started(spark, lambda: load_table(spark, d, "region"))
+    assert jobs_started(spark, lambda: load_table(spark, d, "region")) == []
+
+    extra = pa.array(range(base.num_rows), pa.int64())
+    pq.write_table(base.append_column("r_extra", extra), path)
+    assert "r_extra" in physical_schema(spark, d, "region").fieldNames()
+    df = load_table(spark, d, "region")
+    assert df.columns == base.column_names + ["r_extra"]
+    assert sorted(r.r_extra for r in df.collect()) == list(range(base.num_rows))
 
 
 def test_load_table_unique_restores_pk_uniqueness(spark, tmp_path_factory):

@@ -15,7 +15,7 @@ import pytest
 
 import __spark_entry__ as entry
 
-from .conftest import REPO, SF_DIR
+from .conftest import REPO, SF_DIR, jobs_started
 
 # all-pairs by definition (exactness baselines or deliberate small-side
 # cross joins): ann brute force broadcasts a tiny query set against the
@@ -105,6 +105,18 @@ def test_no_cartesian_or_rowudf(name, spark, sf_dir):
         assert "CartesianProduct" not in plan, f"{name}: cartesian product\n{plan}"
         assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested loop join\n{plan}"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF\n{plan}"
+
+
+@pytest.mark.parametrize(
+    "name", ["dedup_ngram_jaccard", "pack_sequences", "multimodal_decode_ppm"]
+)
+def test_warm_build_starts_no_job(name, spark, sf_dir):
+    """A repeat build over unchanged inputs starts no eager side job: no
+    schema inference, no pin rebuild, no partition probe that runs one.
+    The entries are perfbench's llm_curation set; the build call is
+    checked, not the action on its result."""
+    QUERIES[name](spark, sf_dir)
+    assert jobs_started(spark, lambda: QUERIES[name](spark, sf_dir)) == []
 
 
 @pytest.mark.parametrize("name", ["pack_sequences", "source_token_budget"])

@@ -293,3 +293,46 @@ def test_verified_pairs_pinned_staged_helper(spark):
     assert cachereg._PINS["dedup_ngram_jaccard.pairs"][1][0] == (sf, 0.9)
     cachereg.release_pins("dedup_ngram_jaccard.pairs")
     assert "dedup_ngram_jaccard.pairs" not in cachereg._PINS
+
+
+def test_dedup_ngram_jaccard_pins_follow_documents_file(spark, sf_dir, tmp_path):
+    """Both of dedup_ngram_jaccard's pins take swap_pin's reuse form keyed
+    on the documents file: a repeat call reuses the same frames, a changed
+    tau swaps only the prefix pin, and rewriting the file at the same path
+    swaps both, so the pairs are the rewritten corpus's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_schema_spark.operators import cachereg
+
+    def pins():
+        return [cachereg._PINS[f"dedup_ngram_jaccard.{k}"][0] for k in ("shingles", "prefix")]
+
+    d, path = str(tmp_path), str(tmp_path / "documents.parquet")
+    corpus = pq.read_table(f"{sf_dir}/documents.parquet")
+    pq.write_table(corpus, path)
+    try:
+        dedup.dedup_ngram_jaccard(spark, d)
+        shingles, prefix = pins()
+        dedup.dedup_ngram_jaccard(spark, d)
+        assert pins()[0] is shingles and pins()[1] is prefix
+        dedup.dedup_ngram_jaccard(spark, d, tau=0.9)
+        assert pins()[0] is shingles and pins()[1] is not prefix
+        dedup.dedup_ngram_jaccard(spark, d)
+        shingles, prefix = pins()
+
+        # the last 5 docs become copies of the first 5: five new exact pairs
+        pdf = corpus.to_pandas()
+        pdf.loc[pdf.index[-5:], "text"] = pdf["text"].iloc[:5].to_numpy()
+        rewritten = pa.Table.from_pandas(pdf, schema=corpus.schema, preserve_index=False)
+        pq.write_table(rewritten, path)
+        out = dedup.dedup_ngram_jaccard(spark, d)
+        assert pins()[0] is not shingles and pins()[1] is not prefix
+        ids = pdf["doc_id"].tolist()
+        got = {(r.doc_a, r.doc_b) for r in out.collect()}
+        assert {(min(a, b), max(a, b)) for a, b in zip(ids[:5], ids[-5:])} <= got
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+        assert_matches_oracle(out, con, dedup.dedup_ngram_jaccard_oracle())
+    finally:
+        cachereg.release_pins("dedup_ngram_jaccard.shingles", "dedup_ngram_jaccard.prefix")
