@@ -59,15 +59,43 @@ dir in effect holds a file other than ``*.template`` (Spark would read
 it), there is no ``java`` to key on, or the dump failed (a
 ``cds-<key>.failed`` marker stops retries for that key). The JVM itself
 maps nothing, silently, if the archive no longer matches its classpath.
+
+Collector: the same launch adds ``-XX:+UseParallelGC`` to
+``spark.driver.defaultJavaOptions``. G1 takes eden regions from anywhere
+in the committed heap and gives every humongous array (>= half a region:
+Arrow and task-result buffers) regions of its own, so the heap pages it
+has ever touched grow toward the committed size; the Parallel collector
+keeps eden and the survivor spaces in one fixed address range. Polling
+``/proc/<jvm>/smaps`` through one ``ingest_write`` perfbench run per
+collector (4 cores, ``-Xms2g -Xmn512m``, 6 passes), the peak resident
+memory of the heap's range went 1021 -> 569 MB, of other anonymous
+mappings (G1's remembered sets and marking structures among them)
+325 -> 255 MB, and file-backed memory stayed at 191 MB. That needs a
+fixed heap: on the default one (16g maximum, no ``-Xms``) the Parallel
+collector's throughput-driven sizing let a full
+``tools/check_correctness.py`` driver reach 8.5-9.2 GB resident against
+G1's 5.8-7.1 GB. The dynamic archive, dumped under G1, still maps: only the base archive's heap
+objects are skipped. A collector the caller picks (``-XX:+Use<name>GC``
+in the driver's ``defaultJavaOptions`` or ``extraJavaOptions``) or the
+environment picks (``JAVA_TOOL_OPTIONS``, ``JDK_JAVA_OPTIONS``,
+``_JAVA_OPTIONS``, ``SPARK_SUBMIT_OPTS``) wins: the flag is then left
+out, as the JVM refuses to start with two.
+
+Cluster masters: on a master that is not local, the session ships this
+package to the executors' Python workers (``addPyFile`` of a zip of its
+``.py`` files, once per SparkContext), so Pandas UDFs import it without
+``PYTHONPATH`` or ``--py-files``.
 """
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import fcntl
 import glob
 import hashlib
 import os
+import re
 import shutil
 import signal
 import subprocess
@@ -152,6 +180,16 @@ _NO_FORK_CONF = {
 _TRAIN = "import sys; from etl_schema_spark.session import _train; sys.exit(_train(*sys.argv[1:]))"
 # a dump takes ~40 s on 4 cores; one that hangs must not hold the launch
 _DUMP_TIMEOUT_S = 600
+# a JVM option that selects a garbage collector (``-XX:-Use…GC`` selects none)
+_COLLECTOR = re.compile(r"-XX:\+Use\w*GC\b")
+# environment variables whose options the local driver JVM also gets
+_JVM_OPTION_VARS = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
+_PACKAGE_ZIP = "etl_schema_spark.zip"
+
+
+def _is_local(master: str) -> bool:
+    """Whether ``master`` runs the executors inside the driver JVM."""
+    return master == "local" or master.startswith("local[")
 
 
 def _no_fork_jar() -> str | None:
@@ -342,23 +380,54 @@ def _warm_up(spark: SparkSession, work: str) -> None:
     ranked.select("k", F.explode(F.split("s", " ")).alias("w")).distinct().count()
 
 
+def _collector_selected(conf: dict) -> bool:
+    """Whether the driver's java options in ``conf`` or the JVM's option
+    environment variables already select a garbage collector."""
+    opts = [conf.get("spark.driver.defaultJavaOptions"), conf.get("spark.driver.extraJavaOptions")]
+    opts += [os.environ.get(v) for v in _JVM_OPTION_VARS]
+    return any(_COLLECTOR.search(o) for o in opts if o)
+
+
 def _start(app_name: str, master: str, conf: dict, conf_dir: str | None = None) -> SparkSession:
     """``getOrCreate`` a session with ``conf``; a JVM it launches reads
-    ``conf_dir`` as ``SPARK_CONF_DIR`` when one is given."""
+    ``conf_dir`` as ``SPARK_CONF_DIR`` when one is given. On a master that
+    is not local, the executors get this package (``_ship_package``)."""
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in conf.items():
         builder = builder.config(k, v)
     if conf_dir is None:
-        return builder.getOrCreate()
-    before = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = conf_dir
-    try:
-        return builder.getOrCreate()
-    finally:
-        if before is None:
-            del os.environ["SPARK_CONF_DIR"]
-        else:
-            os.environ["SPARK_CONF_DIR"] = before
+        spark = builder.getOrCreate()
+    else:
+        before = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            if before is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = before
+    if not _is_local(master):
+        _ship_package(spark.sparkContext)
+    return spark
+
+
+def _ship_package(sc: SparkContext) -> None:
+    """Add a zip of this package's ``.py`` files to ``sc`` with
+    ``addPyFile``, unless it holds one already: Spark refuses a second
+    file of the same name. The zip stays until this process exits, for
+    executors that join later."""
+    if any(os.path.basename(f) == _PACKAGE_ZIP for f in sc.listFiles):
+        return
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    tmp = tempfile.mkdtemp(prefix="etl-py.")
+    atexit.register(shutil.rmtree, tmp, True)
+    out = os.path.join(tmp, _PACKAGE_ZIP)
+    with zipfile.ZipFile(out, "w") as z:
+        for d, _, files in os.walk(pkg):
+            for p in (os.path.join(d, name) for name in sorted(files) if name.endswith(".py")):
+                z.write(p, os.path.relpath(p, os.path.dirname(pkg)))
+    sc.addPyFile(out)
 
 
 def _jvm_loads(name: str) -> bool:
@@ -399,7 +468,7 @@ def get_spark(
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
-    jar = _no_fork_jar() if master == "local" or master.startswith("local[") else None
+    jar = _no_fork_jar() if _is_local(master) else None
     archive = None
     if jar is not None:
         # the classpath and the archive count only when this call launches
@@ -412,7 +481,9 @@ def get_spark(
                 conf.setdefault(k, v)
         archive = _archive(conf[key], jar) if launches else None
     if archive is not None:
-        # defaultJavaOptions, so the caller's extraJavaOptions still apply
+        # defaultJavaOptions, so the caller's extraJavaOptions still apply;
+        # the JVM refuses to start with a second collector
         key = "spark.driver.defaultJavaOptions"
-        conf[key] = " ".join(p for p in (conf.get(key), f'-XX:SharedArchiveFile="{archive}"') if p)
+        gc = None if _collector_selected(conf) else "-XX:+UseParallelGC"
+        conf[key] = " ".join(p for p in (conf.get(key), f'-XX:SharedArchiveFile="{archive}"', gc) if p)
     return _start(app_name, master, conf, _EMPTY_CONF if archive is not None else None)

@@ -1,6 +1,8 @@
 """The class-data archive session.get_spark starts a local driver from:
-Spark's classes load from it, a conf dir Spark reads keeps the stock
-launch, and only an archive whose dump exited cleanly is ever used."""
+Spark's classes load from it, the driver runs the Parallel collector
+unless the caller or the environment picks one, a conf dir Spark reads
+keeps the stock launch, and only an archive whose dump exited cleanly is
+ever used."""
 
 import json
 import os
@@ -8,6 +10,8 @@ import shutil
 import subprocess
 import sys
 import threading
+import types
+import zipfile
 
 import pytest
 
@@ -23,28 +27,30 @@ import json, os, sys
 sys.path.insert(0, os.getcwd())
 from etl_schema_spark.session import get_spark
 
-log = sys.argv[1]
+log, java_opts = sys.argv[1:3]
 env_before = os.environ.get("SPARK_CONF_DIR")
 spark = get_spark("cds_child", master="local[2]", extra_conf={
     "spark.ui.enabled": "false",
-    "spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={log}",
+    "spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={log} {java_opts}",
 })
 jvm = spark._jvm
+mf = jvm.java.lang.management.ManagementFactory
 print(json.dumps({
     "rows": spark.range(0, 100, 1, 4).selectExpr("sum(id)").first()[0],
     "env": [env_before, os.environ.get("SPARK_CONF_DIR")],
     "marker": spark.conf.get("spark.etl.marker", None),
     "class_path": str(jvm.java.lang.System.getProperty("java.class.path")).split(os.pathsep),
-    "jvm_args": list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
+    "jvm_args": list(mf.getRuntimeMXBean().getInputArguments()),
+    "collectors": [b.getName() for b in mf.getGarbageCollectorMXBeans()],
 }))
 spark.stop()
 """
 
 
-def _child(tmp_path, **env):
+def _child(tmp_path, java_opts="", **env):
     log = tmp_path / "class-load.log"
     proc = subprocess.run(
-        [sys.executable, "-c", CHILD, str(log)],
+        [sys.executable, "-c", CHILD, str(log), java_opts],
         cwd=REPO, env=dict(os.environ, SPARK_GRAFT_DRIVER_MEMORY="1g", **env),
         capture_output=True, text=True, timeout=900,
     )
@@ -61,13 +67,51 @@ def _source(log: str, cls: str) -> str:
 
 def test_local_driver_loads_spark_from_archive(tmp_path, monkeypatch):
     """A fresh local[2] session loads SparkContext from the archive (the
-    top layer of shared objects), keeps the caller's extraJavaOptions and
-    leaves this process's SPARK_CONF_DIR as it was."""
+    top layer of shared objects) on the Parallel collector, keeps the
+    caller's extraJavaOptions and leaves this process's SPARK_CONF_DIR as
+    it was."""
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     got, log = _child(tmp_path)
     assert _source(log, "org.apache.spark.SparkContext") == "shared objects file (top)"
     assert got["env"] == [None, None]
     assert sum(a.startswith("-XX:SharedArchiveFile=") for a in got["jvm_args"]) == 1
+    assert sorted(got["collectors"]) == ["PS MarkSweep", "PS Scavenge"]
+    assert got["jvm_args"].count("-XX:+UseParallelGC") == 1
+
+
+def test_caller_or_environment_collector_wins(tmp_path, monkeypatch):
+    """A collector in the caller's extraJavaOptions, JAVA_TOOL_OPTIONS or
+    SPARK_SUBMIT_OPTS is the one the driver runs: no second one is added
+    (the JVM would refuse to start), and the archive still loads."""
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    for var in session._JVM_OPTION_VARS:
+        monkeypatch.delenv(var, raising=False)
+    got, log = _child(tmp_path, "-XX:+UseG1GC")
+    assert "G1 Young Generation" in got["collectors"]
+    assert "-XX:+UseParallelGC" not in got["jvm_args"]
+    assert _source(log, "org.apache.spark.SparkContext") == "shared objects file (top)"
+    for var in ("JAVA_TOOL_OPTIONS", "SPARK_SUBMIT_OPTS"):
+        got, _ = _child(tmp_path, **{var: "-XX:+UseSerialGC"})
+        assert sorted(got["collectors"]) == ["Copy", "MarkSweepCompact"]
+        assert "-XX:+UseParallelGC" not in got["jvm_args"]
+
+
+def test_collector_detection(monkeypatch):
+    """Any ``-XX:+Use…GC`` in the driver's java options or the JVM's option
+    variables selects a collector; ``-XX:-Use…GC`` and other GC flags do
+    not."""
+    for var in session._JVM_OPTION_VARS:
+        monkeypatch.delenv(var, raising=False)
+    selected = session._collector_selected
+    assert selected({"spark.driver.extraJavaOptions": "-Xmx1g -XX:+UseZGC"})
+    assert selected({"spark.driver.defaultJavaOptions": "-XX:+UseShenandoahGC -Xss4m"})
+    assert not selected({"spark.driver.extraJavaOptions": "-XX:-UseG1GC"})
+    assert not selected({"spark.driver.extraJavaOptions": "-XX:+UseGCOverheadLimit -Xmn512m"})
+    assert not selected({})
+    for var in session._JVM_OPTION_VARS:
+        monkeypatch.setenv(var, "-XX:+UseG1GC")
+        assert selected({})
+        monkeypatch.delenv(var)
 
 
 def test_conf_dir_spark_reads_gives_stock_launch(tmp_path):
@@ -168,3 +212,31 @@ def test_no_javac_or_no_local_master_means_no_archive(build, monkeypatch):
         _, conf, conf_dir = session.get_spark("x", master=master)
         assert conf_dir is None and "spark.driver.defaultJavaOptions" not in conf
     assert calls == []
+
+
+def test_cluster_master_ships_the_package(build, monkeypatch):
+    """A master that is not local gets one zip of the package's sources
+    through addPyFile, however often get_spark joins its context; a local
+    master gets none."""
+    monkeypatch.setattr(session.shutil, "which", lambda name: None)
+    sc = types.SimpleNamespace(listFiles=[])
+    sc.addPyFile = sc.listFiles.append
+
+    class Builder:
+        def __getattr__(self, name):  # appName, master, config
+            return lambda *a: self
+
+        def getOrCreate(self):
+            return types.SimpleNamespace(sparkContext=sc)
+
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=Builder()))
+    session.get_spark("x", master="local[2]")
+    assert sc.listFiles == []
+    for master in ("local-cluster[1,1,1024]", "spark://host:7077"):
+        session.get_spark("x", master=master)
+    [shipped] = sc.listFiles
+    with zipfile.ZipFile(shipped) as z:
+        names = z.namelist()
+    assert {"etl_schema_spark/__init__.py", "etl_schema_spark/session.py",
+            "etl_schema_spark/operators/cachereg.py"} <= set(names)
+    assert all(n.endswith(".py") for n in names)
