@@ -60,26 +60,23 @@ it), there is no ``java`` to key on, or the dump failed (a
 ``cds-<key>.failed`` marker stops retries for that key). The JVM itself
 maps nothing, silently, if the archive no longer matches its classpath.
 
-Collector: the same launch adds ``-XX:+UseParallelGC`` to
+Collector: when the driver's java options start the heap at its maximum
+(the last ``-Xms`` is spelled as ``spark.driver.memory``, which Spark
+passes as ``-Xmx``), the same launch adds ``-XX:+UseParallelGC`` to
 ``spark.driver.defaultJavaOptions``. G1 takes eden regions from anywhere
 in the committed heap and gives every humongous array (>= half a region:
 Arrow and task-result buffers) regions of its own, so the heap pages it
 has ever touched grow toward the committed size; the Parallel collector
-keeps eden and the survivor spaces in one fixed address range. Polling
-``/proc/<jvm>/smaps`` through one ``ingest_write`` perfbench run per
-collector (4 cores, ``-Xms2g -Xmn512m``, 6 passes), the peak resident
-memory of the heap's range went 1021 -> 569 MB, of other anonymous
-mappings (G1's remembered sets and marking structures among them)
-325 -> 255 MB, and file-backed memory stayed at 191 MB. That needs a
-fixed heap: on the default one (16g maximum, no ``-Xms``) the Parallel
-collector's throughput-driven sizing let a full
-``tools/check_correctness.py`` driver reach 8.5-9.2 GB resident against
-G1's 5.8-7.1 GB. The dynamic archive, dumped under G1, still maps: only the base archive's heap
-objects are skipped. A collector the caller picks (``-XX:+Use<name>GC``
-in the driver's ``defaultJavaOptions`` or ``extraJavaOptions``) or the
-environment picks (``JAVA_TOOL_OPTIONS``, ``JDK_JAVA_OPTIONS``,
-``_JAVA_OPTIONS``, ``SPARK_SUBMIT_OPTS``) wins: the flag is then left
-out, as the JVM refuses to start with two.
+keeps eden and the survivor spaces in one fixed address range. On a heap
+that may still grow (``get_spark``'s default: no ``-Xms``) Parallel's
+throughput-driven sizing grows it further than G1 does, so the launch
+keeps G1 there. The dynamic archive, dumped under G1, still maps under
+Parallel: only the base archive's heap objects are skipped. A collector
+the caller picks (``-XX:+Use<name>GC`` in the driver's
+``defaultJavaOptions`` or ``extraJavaOptions``) or the environment picks
+(``JAVA_TOOL_OPTIONS``, ``JDK_JAVA_OPTIONS``, ``_JAVA_OPTIONS``,
+``SPARK_SUBMIT_OPTS``, ``PYSPARK_SUBMIT_ARGS``) wins: the flag is then
+left out, as the JVM refuses to start with two.
 
 Cluster masters: on a master that is not local, the session ships this
 package to the executors' Python workers (``addPyFile`` of a zip of its
@@ -183,7 +180,11 @@ _DUMP_TIMEOUT_S = 600
 # a JVM option that selects a garbage collector (``-XX:-Use…GC`` selects none)
 _COLLECTOR = re.compile(r"-XX:\+Use\w*GC\b")
 # environment variables whose options the local driver JVM also gets
-_JVM_OPTION_VARS = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
+_JVM_OPTION_VARS = (
+    "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS", "PYSPARK_SUBMIT_ARGS",
+)
+# a JVM option that sets the initial heap size
+_INITIAL_HEAP = re.compile(r"-Xms(\S+)")
 _PACKAGE_ZIP = "etl_schema_spark.zip"
 
 
@@ -388,28 +389,34 @@ def _collector_selected(conf: dict) -> bool:
     return any(_COLLECTOR.search(o) for o in opts if o)
 
 
+def _heap_fixed(conf: dict) -> bool:
+    """Whether the driver's java options in ``conf`` start the heap at its
+    maximum: their last ``-Xms`` (the one the JVM takes) is spelled as
+    ``spark.driver.memory``, which Spark launches the driver with as
+    ``-Xmx``. The same size in other units (``1024m`` for ``1g``) does
+    not count."""
+    opts = [conf.get("spark.driver.defaultJavaOptions"), conf.get("spark.driver.extraJavaOptions")]
+    initial = _INITIAL_HEAP.findall(" ".join(o for o in opts if o))
+    return bool(initial) and initial[-1].lower() == conf.get("spark.driver.memory", "1g").lower()
+
+
 def _start(app_name: str, master: str, conf: dict, conf_dir: str | None = None) -> SparkSession:
     """``getOrCreate`` a session with ``conf``; a JVM it launches reads
-    ``conf_dir`` as ``SPARK_CONF_DIR`` when one is given. On a master that
-    is not local, the executors get this package (``_ship_package``)."""
+    ``conf_dir`` as ``SPARK_CONF_DIR`` when one is given."""
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in conf.items():
         builder = builder.config(k, v)
     if conf_dir is None:
-        spark = builder.getOrCreate()
-    else:
-        before = os.environ.get("SPARK_CONF_DIR")
-        os.environ["SPARK_CONF_DIR"] = conf_dir
-        try:
-            spark = builder.getOrCreate()
-        finally:
-            if before is None:
-                del os.environ["SPARK_CONF_DIR"]
-            else:
-                os.environ["SPARK_CONF_DIR"] = before
-    if not _is_local(master):
-        _ship_package(spark.sparkContext)
-    return spark
+        return builder.getOrCreate()
+    before = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        return builder.getOrCreate()
+    finally:
+        if before is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = before
 
 
 def _ship_package(sc: SparkContext) -> None:
@@ -482,8 +489,12 @@ def get_spark(
         archive = _archive(conf[key], jar) if launches else None
     if archive is not None:
         # defaultJavaOptions, so the caller's extraJavaOptions still apply;
-        # the JVM refuses to start with a second collector
+        # Parallel only on a fixed heap, and never as a second collector
+        # (the JVM refuses to start with two)
         key = "spark.driver.defaultJavaOptions"
-        gc = None if _collector_selected(conf) else "-XX:+UseParallelGC"
+        gc = "-XX:+UseParallelGC" if _heap_fixed(conf) and not _collector_selected(conf) else None
         conf[key] = " ".join(p for p in (conf.get(key), f'-XX:SharedArchiveFile="{archive}"', gc) if p)
-    return _start(app_name, master, conf, _EMPTY_CONF if archive is not None else None)
+    spark = _start(app_name, master, conf, _EMPTY_CONF if archive is not None else None)
+    if not _is_local(master):
+        _ship_package(spark.sparkContext)
+    return spark

@@ -1,8 +1,8 @@
 """The class-data archive session.get_spark starts a local driver from:
-Spark's classes load from it, the driver runs the Parallel collector
-unless the caller or the environment picks one, a conf dir Spark reads
-keeps the stock launch, and only an archive whose dump exited cleanly is
-ever used."""
+Spark's classes load from it, on a fixed heap the driver runs the
+Parallel collector unless the caller or the environment picks one, a conf
+dir Spark reads keeps the stock launch, and only an archive whose dump
+exited cleanly is ever used."""
 
 import json
 import os
@@ -11,7 +11,6 @@ import subprocess
 import sys
 import threading
 import types
-import zipfile
 
 import pytest
 
@@ -57,7 +56,7 @@ def _child(tmp_path, java_opts="", **env):
     assert proc.returncode == 0, proc.stderr[-3000:]
     got = json.loads(proc.stdout.strip().splitlines()[-1])
     assert got["rows"] == 4950
-    return got, log.read_text()
+    return got, log.read_text() if log.exists() else None
 
 
 def _source(log: str, cls: str) -> str:
@@ -66,12 +65,14 @@ def _source(log: str, cls: str) -> str:
 
 
 def test_local_driver_loads_spark_from_archive(tmp_path, monkeypatch):
-    """A fresh local[2] session loads SparkContext from the archive (the
-    top layer of shared objects) on the Parallel collector, keeps the
-    caller's extraJavaOptions and leaves this process's SPARK_CONF_DIR as
-    it was."""
+    """A fresh local[2] session on a fixed heap (``-Xms`` equal to
+    ``spark.driver.memory``) loads SparkContext from the archive (the top
+    layer of shared objects) on the Parallel collector, keeps the caller's
+    extraJavaOptions and leaves this process's SPARK_CONF_DIR as it was."""
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
-    got, log = _child(tmp_path)
+    for var in session._JVM_OPTION_VARS:
+        monkeypatch.delenv(var, raising=False)
+    got, log = _child(tmp_path, "-Xms1g")
     assert _source(log, "org.apache.spark.SparkContext") == "shared objects file (top)"
     assert got["env"] == [None, None]
     assert sum(a.startswith("-XX:SharedArchiveFile=") for a in got["jvm_args"]) == 1
@@ -80,38 +81,30 @@ def test_local_driver_loads_spark_from_archive(tmp_path, monkeypatch):
 
 
 def test_caller_or_environment_collector_wins(tmp_path, monkeypatch):
-    """A collector in the caller's extraJavaOptions, JAVA_TOOL_OPTIONS or
-    SPARK_SUBMIT_OPTS is the one the driver runs: no second one is added
-    (the JVM would refuse to start), and the archive still loads."""
+    """On a fixed heap, a collector in the caller's extraJavaOptions,
+    JAVA_TOOL_OPTIONS, SPARK_SUBMIT_OPTS or PYSPARK_SUBMIT_ARGS is the one
+    the driver runs: no second one is added (the JVM would refuse to
+    start), and the archive still loads."""
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     for var in session._JVM_OPTION_VARS:
         monkeypatch.delenv(var, raising=False)
-    got, log = _child(tmp_path, "-XX:+UseG1GC")
+    got, log = _child(tmp_path, "-Xms1g -XX:+UseG1GC")
     assert "G1 Young Generation" in got["collectors"]
     assert "-XX:+UseParallelGC" not in got["jvm_args"]
     assert _source(log, "org.apache.spark.SparkContext") == "shared objects file (top)"
     for var in ("JAVA_TOOL_OPTIONS", "SPARK_SUBMIT_OPTS"):
-        got, _ = _child(tmp_path, **{var: "-XX:+UseSerialGC"})
+        got, _ = _child(tmp_path, "-Xms1g", **{var: "-XX:+UseSerialGC"})
         assert sorted(got["collectors"]) == ["Copy", "MarkSweepCompact"]
         assert "-XX:+UseParallelGC" not in got["jvm_args"]
-
-
-def test_collector_detection(monkeypatch):
-    """Any ``-XX:+Use…GC`` in the driver's java options or the JVM's option
-    variables selects a collector; ``-XX:-Use…GC`` and other GC flags do
-    not."""
-    for var in session._JVM_OPTION_VARS:
-        monkeypatch.delenv(var, raising=False)
-    selected = session._collector_selected
-    assert selected({"spark.driver.extraJavaOptions": "-Xmx1g -XX:+UseZGC"})
-    assert selected({"spark.driver.defaultJavaOptions": "-XX:+UseShenandoahGC -Xss4m"})
-    assert not selected({"spark.driver.extraJavaOptions": "-XX:-UseG1GC"})
-    assert not selected({"spark.driver.extraJavaOptions": "-XX:+UseGCOverheadLimit -Xmn512m"})
-    assert not selected({})
-    for var in session._JVM_OPTION_VARS:
-        monkeypatch.setenv(var, "-XX:+UseG1GC")
-        assert selected({})
-        monkeypatch.delenv(var)
+    # pyspark appends these after the session's confs, so this replaces the
+    # child's extraJavaOptions (and its class-load log) but not the
+    # defaultJavaOptions the archive flag goes into
+    submit = tmp_path / "submit"
+    submit.mkdir()
+    args = "--driver-java-options -XX:+UseSerialGC pyspark-shell"
+    got, _ = _child(submit, "-Xms1g", PYSPARK_SUBMIT_ARGS=args)
+    assert sorted(got["collectors"]) == ["Copy", "MarkSweepCompact"]
+    assert sum(a.startswith("-XX:SharedArchiveFile=") for a in got["jvm_args"]) == 1
 
 
 def test_conf_dir_spark_reads_gives_stock_launch(tmp_path):
@@ -207,36 +200,12 @@ def test_no_javac_or_no_local_master_means_no_archive(build, monkeypatch):
     assert session._no_fork_jar() is None
     calls = []
     monkeypatch.setattr(session, "_archive", lambda *a: calls.append(a))
-    monkeypatch.setattr(session, "_start", lambda app, master, conf, conf_dir=None: (master, conf, conf_dir))
+    monkeypatch.setattr(session, "_start", lambda app, master, conf, conf_dir=None: types.SimpleNamespace(
+        conf=conf, conf_dir=conf_dir, sparkContext=None,
+    ))
+    monkeypatch.setattr(session, "_ship_package", lambda sc: None)
     for master in ("local[2]", "local-cluster[1,1,1024]"):
-        _, conf, conf_dir = session.get_spark("x", master=master)
-        assert conf_dir is None and "spark.driver.defaultJavaOptions" not in conf
+        got = session.get_spark("x", master=master)
+        assert got.conf_dir is None and "spark.driver.defaultJavaOptions" not in got.conf
     assert calls == []
 
-
-def test_cluster_master_ships_the_package(build, monkeypatch):
-    """A master that is not local gets one zip of the package's sources
-    through addPyFile, however often get_spark joins its context; a local
-    master gets none."""
-    monkeypatch.setattr(session.shutil, "which", lambda name: None)
-    sc = types.SimpleNamespace(listFiles=[])
-    sc.addPyFile = sc.listFiles.append
-
-    class Builder:
-        def __getattr__(self, name):  # appName, master, config
-            return lambda *a: self
-
-        def getOrCreate(self):
-            return types.SimpleNamespace(sparkContext=sc)
-
-    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=Builder()))
-    session.get_spark("x", master="local[2]")
-    assert sc.listFiles == []
-    for master in ("local-cluster[1,1,1024]", "spark://host:7077"):
-        session.get_spark("x", master=master)
-    [shipped] = sc.listFiles
-    with zipfile.ZipFile(shipped) as z:
-        names = z.namelist()
-    assert {"etl_schema_spark/__init__.py", "etl_schema_spark/session.py",
-            "etl_schema_spark/operators/cachereg.py"} <= set(names)
-    assert all(n.endswith(".py") for n in names)
